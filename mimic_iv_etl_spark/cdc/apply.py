@@ -22,20 +22,18 @@ or Structured Streaming ``foreachBatch``). Dataflow per batch:
    (batch × source partition × offset range) and a throughput metrics row are
    appended.
 
-Offset-range bookkeeping, cheapest first:
+Offset-range bookkeeping rides an aggregate the batch already runs:
 
 - ``manifest_ranges`` — the log's manifest declares DENSE per-partition offset
   ranges (the WAL contract: offsets are a gapless per-partition sequence), so
-  the applied ranges are pure window arithmetic: ZERO runtime aggregation,
-  no extra Spark action, and a fully-stale batch skips without any scan.
-  The manifest is verified, not blindly trusted: two Observation counters
-  ride the batch's first job and any row outside the declared ranges — or a
-  count short of what the manifest claims — aborts before commit
-  (``validate_manifest``; measured cost: a few percent).
-- ``source_partitions`` — the universe of partition ids is known but ranges
-  are not: per-partition (count, min, max) ride the write job as
-  ``Observation`` metrics — one Spark action per batch.
-- neither — a fallback ≤P-row aggregate runs first.
+  the applied ranges are pure window arithmetic and a fully-stale batch skips
+  without any scan. The manifest is verified, not blindly trusted: on the
+  ``locator`` kernel two per-key counters (rows, rows outside the declared
+  ranges) ride the locator HashAggregate and are summed from its Arrow
+  transfer; on every other kernel the ranges aggregate below must reproduce
+  the declared ranges exactly. Any mismatch aborts before the write.
+- no manifest — the ≤P-row ``groupBy(partition)`` ranges aggregate runs first
+  and IS the bookkeeping; a NULL partition aborts before the write.
 
 Either way the driver never sees data rows (contrast: the reference collects
 key lists to the driver, ``ml_readmission_risk.ipynb`` cells 14/21/31,
@@ -64,28 +62,9 @@ META_COLS = ("op", "offset", "partition", "payload")
 # a win over a broadcast-join filter (expression size, codegen limits)
 _HWM_PREDICATE_CAP = 64
 
-_OBS_LOCK_GUARD = __import__("threading").Lock()
-
-
-def _obs_session_lock(spark):
-    """Per-SparkSession mutex serializing the Observation-bearing section of
-    a batch (observe → write job → get → scrub). The Spark 4.1.x scrub
-    (session.scrub_observation_manager) tears down the session-global
-    ObservationManager, so a concurrent applier's pending ``Observation.get``
-    on the SAME session would block forever once another batch scrubs
-    (measured: multi-source fan-in deadlock). Sessions are the isolation
-    unit — ``spark.newSession()`` has its own ObservationManager, so giving
-    each ingest stream its own session keeps fan-in fully parallel; sharing
-    one session serializes the observed region (correct, alternating
-    batches)."""
-    import threading
-
-    with _OBS_LOCK_GUARD:
-        lk = getattr(spark, "_cdc_obs_lock", None)
-        if lk is None:
-            lk = threading.Lock()
-            spark._cdc_obs_lock = lk
-        return lk
+# Arrow bytes per locator row on the driver: p, o and the two manifest
+# counters, 8 B each after the pandas conversion
+_LOCATOR_ROW_BYTES = 32
 
 
 def _locator_supported(ranges: list[dict]) -> bool:
@@ -111,11 +90,17 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
 
     1. Winner locators ``(partition, offset)`` per key via the packed-stamp
        HashAggregate (`lake/merge.py::lww_winner_locators`) — the scan is
-       column-pruned to keys+stamp, payloads never leave their scan.
+       column-pruned to keys+stamp, payloads never leave their scan. The
+       same aggregate counts each key's rows and the rows OUTSIDE the
+       declared ranges (NULL partition, undeclared partition, offset outside
+       its partition's ``[lo, hi]``) — the manifest cross-check.
     2. The locators land driver-side as one Arrow transfer — O(winners per
        batch), bounded by ``batch_offsets``, the same order of driver traffic
        as any broadcast-join build (this is the one deliberate driver
-       round-trip in the apply path).
+       round-trip in the apply path). Summing the two counters from it
+       costs no job: any row outside the declared ranges, or a row count
+       other than the dense ranges' size, aborts before anything is
+       written.
     3. Because the WAL contract makes per-partition offsets DENSE, the
        locator set becomes an EXACT bitmap (1 bit per in-window offset — no
        hashing, no false positives). The bitmap — plus per-partition
@@ -135,7 +120,7 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
        rows ever reach the decode/normalize UDFs.
     4. The filter passes exactly one row per key, so no further reduce runs.
 
-    Driver memory peak ≈ winner locators (16 B/winner Arrow transfer) +
+    Driver memory peak ≈ winner locators (``_LOCATOR_ROW_BYTES``/winner) +
     the PACKED bitmap (window_bits/8 — built packed via ``bitwise_or.at``,
     never unpacked to byte-per-bit) + 3 lookup arrays (≤ 8 B × 2^16 each)
     — the quantity ``apply_batch`` pre-checks against
@@ -148,39 +133,41 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    by_p = {}
+    total_bits = 0
+    for r in sorted(ranges, key=lambda r: r["partition"]):
+        by_p[r["partition"]] = (r["min_offset"], r["max_offset"], total_bits)
+        total_bits += r["max_offset"] - r["min_offset"] + 1
+    max_p = max(by_p)
+    lo_arr = np.zeros(max_p + 1, dtype=np.int64)
+    hi_arr = np.full(max_p + 1, -1, dtype=np.int64)
+    base_arr = np.zeros(max_p + 1, dtype=np.int64)
+    for p, (lo, hi, b) in by_p.items():
+        lo_arr[p], hi_arr[p], base_arr[p] = lo, hi, b
+
+    def _lit(arr) -> str:
+        # one string literal parsed into an array constant: the expression
+        # stays three nodes for any partition count (constant-folded)
+        return f"CAST(split('{','.join(map(str, arr.tolist()))}', ',') AS array<bigint>)"
+
+    # `get` yields NULL for a NULL or out-of-array partition and BETWEEN is
+    # NULL for a NULL offset; coalesce counts every such row as outside
+    outside = (f"NOT coalesce(_lww_offset BETWEEN get({_lit(lo_arr)}, _lww_partition)"
+               f" AND get({_lit(hi_arr)}, _lww_partition), false)")
     with phase("locator_collect"):
-        pdf = lww_winner_locators(candidates, key_cols).toPandas()
-        if len(pdf) and pdf[["p", "o"]].isna().any().any():
-            # a NULL (partition, offset) stamp violates the WAL contract the
-            # dense-offset arithmetic rests on; indexing with NaN would raise
-            # an opaque IndexError below — fail loudly instead
+        pdf = lww_winner_locators(candidates, key_cols, outside=outside).toPandas()
+        n_total, n_out = int(pdf["n"].sum()), int(pdf["n_out"].sum())
+        # dense ranges: the window's bit count IS the declared event count
+        if n_out or n_total != total_bits:
             raise RuntimeError(
-                "locator kernel: winner rows with NULL (partition, offset) — "
-                "the change log violates the WAL stamp contract")
-        by_p = {}
-        total_bits = 0
-        for r in sorted(ranges, key=lambda r: r["partition"]):
-            by_p[r["partition"]] = (r["min_offset"], r["max_offset"], total_bits)
-            total_bits += r["max_offset"] - r["min_offset"] + 1
-        max_p = max(by_p)
-        lo_arr = np.zeros(max_p + 1, dtype=np.int64)
-        hi_arr = np.full(max_p + 1, -1, dtype=np.int64)
-        base_arr = np.zeros(max_p + 1, dtype=np.int64)
-        for p, (lo, hi, b) in by_p.items():
-            lo_arr[p], hi_arr[p], base_arr[p] = lo, hi, b
+                "manifest_ranges cross-check failed — "
+                f"{n_out} events outside the declared ranges (NULL partition, "
+                f"undeclared partition or offset outside its [lo, hi]), "
+                f"{n_total} present vs {total_bits} declared; committing "
+                "would desync applied_offsets from the actually-applied events")
+        # every row is inside the declared ranges, so no winner stamp is NULL
         pi = pdf["p"].to_numpy()
         oi = pdf["o"].to_numpy()
-        # free driver-side half of the manifest cross-check: a winner outside
-        # the declared (partition, offset) ranges proves the batch holds rows
-        # the manifest doesn't claim — abort before any write
-        pc = np.clip(pi, 0, max_p)
-        bad = (pi < 0) | (pi > max_p) | (oi < lo_arr[pc]) | (oi > hi_arr[pc])
-        if bad.any():
-            raise RuntimeError(
-                f"manifest_ranges cross-check failed — {int(bad.sum())} LWW "
-                "winners land outside the declared per-partition offset "
-                "ranges; committing would desync applied_offsets from the "
-                "actually-applied events")
         # build the bitmap PACKED (uint64 words) — peak memory window_bits/8,
         # matching the pre-flight budget; a byte-per-bit intermediate would
         # transiently cost 8× the budgeted size. Winner (p, o) pairs are
@@ -281,12 +268,9 @@ def apply_batch(
     dedup_mode: str = "agg",
     commit_noop: bool = False,
     write_salt: int = 1,
-    cache_batch: bool = False,
     decode_payload: bool = False,
     normalize: bool = False,
-    source_partitions: list[int] | None = None,
     manifest_ranges: dict[int, tuple[int, int]] | None = None,
-    validate_manifest: bool = True,
     locator_driver_budget: int = 512 << 20,
     log_tail: dict[int, int] | None = None,
 ) -> dict:
@@ -322,34 +306,27 @@ def apply_batch(
     ``manifest_ranges`` — per-source-partition ``(min, max)`` offset ranges
     present in ``batch_df``, DENSE per the WAL contract (gapless per-partition
     sequences; ``changelog.py`` stamps ``dense_offsets: true``). With it the
-    exactly-once bookkeeping is window arithmetic: no Observation, no extra
-    aggregate, and a fully-stale batch is skipped without reading any data.
+    exactly-once bookkeeping is window arithmetic and a fully-stale batch is
+    skipped without reading any data. The ranges are always verified before
+    the write: a batch holding rows OUTSIDE them (NULL partition, undeclared
+    partition, offset past the declared hi) or MISSING rows they claim
+    (truncated/corrupt file) would otherwise advance ``applied_offsets`` past
+    never-applied events — silent data loss. The locator kernel counts both
+    inside its own aggregate; the other kernels compare the ranges
+    aggregate against the declared ranges. Any mismatch aborts with nothing
+    written.
 
-    ``source_partitions`` (the universe of source-partition ids, no ranges)
-    switches the bookkeeping to ``Observation`` metrics collected DURING the
-    write job — still exactly one Spark action per batch. A batch containing
-    a partition outside the list aborts before commit (staged files are
-    discarded) — silently applying it would leave the offset high-water mark
-    unrecorded and break exactly-once on redelivery.
-
-    ``validate_manifest`` (default True): the manifest-arithmetic path fully
-    trusts ``manifest_ranges`` — a batch holding rows OUTSIDE the declared
-    ranges (unknown partition, NULL partition, offset past the declared hi)
-    or MISSING rows the manifest claims (truncated/corrupt file) would
-    otherwise advance ``applied_offsets`` past never-applied events: silent
-    data loss. With validation on, two counters (rows total / rows outside
-    the declared ranges) ride the batch's first job as ``Observation``
-    metrics and are cross-checked against the arithmetic ``events_applied``
-    before commit; any mismatch aborts with staged files discarded —
-    mirroring the ``source_partitions`` guard. Skipped (with the same loud
-    fallback as the scrub guard) on Spark versions where the Observation
-    scrub is unavailable.
+    Without ``manifest_ranges`` a ≤P-row ``groupBy(partition)`` aggregate
+    records whatever partitions the batch holds; a NULL partition aborts
+    before the write (its offsets could never be recorded, so exactly-once
+    would break on redelivery).
 
     ``locator_driver_budget`` bounds the locator kernel's one deliberate
     driver round-trip (winner locators + offset bitmap). The pre-flight
-    bound ``events_in_window × 16B + window_bits / 8`` is checked against
-    it; a batch over budget (misconfigured huge ``batch_offsets``) degrades
-    to ``dedup_mode='agg'`` instead of OOMing the driver.
+    bound ``events_in_window × _LOCATOR_ROW_BYTES + window_bits / 8`` is
+    checked against it; a batch over budget (misconfigured huge
+    ``batch_offsets``) degrades to ``dedup_mode='agg'`` instead of OOMing
+    the driver.
 
     ``log_tail`` — per-source-partition FINAL offset of the log being
     consumed (replay: from the manifest; a live tail: the broker's
@@ -367,7 +344,6 @@ def apply_batch(
             for p, hi in log_tail.items()
         )
     t0 = time.monotonic()
-    spark = table.spark
 
     _prelude_t0 = time.monotonic()
     late_decode = decode_payload and "payload" in batch_df.columns
@@ -404,12 +380,7 @@ def apply_batch(
         append_metrics(table.path, stats)
         return stats
 
-    obs = None
-    obs_lock = None  # held from observe() through the post-commit scrub
     ranges: list[dict] | None = None
-    events_applied: int | None = None
-    new_applied: dict[str, int] | None = None
-
     if manifest_ranges is not None:
         # -- dense-offset arithmetic: applied range = window ∩ (hwm, ...] --
         ranges = []
@@ -418,195 +389,101 @@ def apply_batch(
             if lo <= int(hi):
                 ranges.append({"partition": int(p), "events": int(hi) - lo + 1,
                                "min_offset": lo, "max_offset": int(hi)})
-        events_applied = sum(r["events"] for r in ranges)
-        if events_applied == 0:
+        if not ranges:
             return _skipped_stats()  # no scan, no job — resume is metadata-only
-        new_applied = {str(p): o for p, o in applied.items()}
-        for r in ranges:
-            p = str(r["partition"])
-            new_applied[p] = max(int(new_applied.get(p, -1)), int(r["max_offset"]))
 
     # -- exactly-once: keep only offsets beyond the committed high-water mark --
     fresh = _hwm_filter(batch_df, applied)
 
-    # Optional: cache the filtered batch so the range aggregate and the
-    # dedup+write job share one source scan. Usually unnecessary — the ranges
-    # job reads only (offset, partition) after column pruning, so the second
-    # scan is cheap — and at high core counts cache materialization costs
-    # more than it saves (measured). MEMORY_AND_DISK so oversized batches
-    # spill instead of OOMing.
-    cached = None
-    if cache_batch:
-        from pyspark import StorageLevel
+    if dedup_mode == "locator":
+        # locator needs the dense-manifest arithmetic ranges, the packed
+        # stamp's bit budget, and a bounded driver transfer; outside them the
+        # classic kernel is the answer. Winners ≤ events in the window, and
+        # the ranges are dense, so window_bits == events too.
+        window = sum(r["events"] for r in ranges) if ranges else 0
+        if not (ranges and _locator_supported(ranges)
+                and window * _LOCATOR_ROW_BYTES + window // 8
+                <= locator_driver_budget):
+            dedup_mode = "agg"
 
-        fresh = cached = fresh.persist(StorageLevel.MEMORY_AND_DISK)
+    if dedup_mode != "locator":
+        # the single bookkeeping aggregate: per-source-partition ranges
+        # (≤P rows) — with a manifest, its exact cross-check
+        with phase("ranges_aggregate"):
+            collected = (
+                fresh.groupBy("partition")
+                .agg(
+                    F.count("*").alias("events"),
+                    F.min("offset").alias("min_offset"),
+                    F.max("offset").alias("max_offset"),
+                )
+                .collect()
+            )
+        n_null = sum(r["events"] for r in collected if r["partition"] is None)
+        if n_null:
+            raise RuntimeError(
+                f"batch {batch_id} holds {n_null} events with a NULL partition "
+                "— their offsets cannot be recorded, so exactly-once would "
+                "break on redelivery")
+        observed = sorted(
+            ({"partition": int(r["partition"]), "events": int(r["events"]),
+              "min_offset": int(r["min_offset"]),
+              "max_offset": int(r["max_offset"])} for r in collected),
+            key=lambda r: r["partition"])
+        if ranges is None:
+            ranges = observed
+            if not ranges:
+                return _skipped_stats()
+        elif observed != ranges:
+            # the declared ranges are dense (events = hi - lo + 1), so the
+            # same partitions, bounds and counts must come back
+            want = {r["partition"]: r for r in ranges}
+            got = {r["partition"]: r for r in observed}
+            diff = sorted(p for p in want.keys() | got.keys()
+                          if want.get(p) != got.get(p))
+            raise RuntimeError(
+                f"batch {batch_id}: manifest_ranges cross-check failed — "
+                f"partitions {diff[:8]} differ from the declared dense "
+                "ranges; committing would desync applied_offsets from the "
+                "actually-applied events")
+    events_applied = sum(r["events"] for r in ranges)
+    new_applied = {str(p): o for p, o in applied.items()}
+    for r in ranges:
+        p = str(r["partition"])
+        new_applied[p] = max(int(new_applied.get(p, -1)), int(r["max_offset"]))
 
-    from mimic_iv_etl_spark.session import observation_scrub_available
+    # -- internal candidate rows: data cols aligned to merged schema + stamps
+    # (selectExpr over SQL strings — one Py4J call instead of ~5 per column)
+    have = set(batch_df.columns)
+    decode_names = {"role", "text", "tool"} if late_decode else set()
+    data_exprs = [
+        (f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+         if f.name in have
+         else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
+        for f in merged.fields
+        if f.name not in decode_names
+    ]
+    if late_decode:
+        data_exprs.append("`payload`")
+    candidates = fresh.selectExpr(
+        *data_exprs,
+        "(op = 'D') AS _deleted",
+        "CAST(offset AS bigint) AS _lww_offset",
+        "CAST(partition AS int) AS _lww_partition",
+    )
+    # driver-side plan construction up to this point (schema merge, hwm
+    # filter, candidate projection) — pure Py4J/analysis work, no Spark job
+    # except the ranges aggregate; a per-micro-batch fixed cost worth watching
+    from mimic_iv_etl_spark.cdc.profiling import record as _record
 
-    # ONE try/finally covers everything from (potential) lock acquisition
-    # through commit: the locator staging dir and the Observation
-    # session-poisoning scrub (Spark 4.1.x ObservationManager serialization
-    # bug — see session.scrub_observation_manager) must be cleaned up on
-    # EVERY exit — including a locator abort (manifest cross-check,
-    # NULL-stamp guard) or any Spark error — or later jobs capturing the
-    # session fail with NotSerializableException and _staging/lww-bitmap-*
-    # dirs leak (ADVICE r04). The obs session lock is acquired INSIDE the
-    # try: the old structure acquired it before the protected region, so a
-    # Py4J/analysis error while building the observe or candidate plans
-    # leaked the lock and permanently deadlocked every later
-    # Observation-bearing batch on the session (ADVICE r05). Batches are
-    # sequential on a session, so no other observation is in flight when
-    # the scrub runs.
-    obs_val = None
+    _record("plan_prelude", time.monotonic() - _prelude_t0)
+
+    # the locator staging dir must be removed on EVERY exit — including a
+    # cross-check abort or any Spark error — or _staging/lww-bitmap-* dirs
+    # leak (ADVICE r04)
     locator_cleanup = None
     pre_partitioned = dedup_mode == "bucket"
     try:
-        if (manifest_ranges is not None and validate_manifest
-                and observation_scrub_available()):
-            # -- manifest cross-check: counters ride the batch's first job --
-            import uuid
-
-            from pyspark.sql import Observation
-
-            drop_rng = ()
-            if len(ranges) <= _HWM_PREDICATE_CAP:
-                # single-expr SQL build for the same Py4J-chatter reason as
-                # _hwm_filter (measured ~230 ms/batch as chained Columns)
-                known = F.expr(" OR ".join(
-                    f"(partition = {int(r['partition'])} AND offset BETWEEN "
-                    f"{int(r['min_offset'])} AND {int(r['max_offset'])})"
-                    for r in ranges))
-            else:
-                # beyond the chained-predicate cap the range check rides a
-                # broadcast-joined (partition → lo, hi) lookup instead of
-                # degrading to membership-only — a corrupt batch whose
-                # out-of-range offsets in declared partitions numerically
-                # cancel missing in-range rows would pass a membership+count
-                # check but is caught here (ADVICE r04); same shape as
-                # _hwm_filter's fallback, one broadcast-hash-join stage on
-                # the batch's first job
-                rng = spark.createDataFrame(
-                    [(int(r["partition"]), int(r["min_offset"]),
-                      int(r["max_offset"])) for r in ranges],
-                    "partition int, _rlo long, _rhi long")
-                fresh = fresh.join(F.broadcast(rng), "partition", "left")
-                known = (F.col("_rlo").isNotNull()
-                         & (F.col("offset") >= F.col("_rlo"))
-                         & (F.col("offset") <= F.col("_rhi")))
-                drop_rng = ("_rlo", "_rhi")
-            obs_lock = _obs_session_lock(spark)
-            obs_lock.acquire()
-            obs_val = Observation(f"validate_manifest_{uuid.uuid4().hex[:8]}")
-            fresh = fresh.observe(
-                obs_val,
-                F.count(F.lit(1)).alias("n_total"),
-                F.count(F.when(F.col("partition").isNull() | ~known, True))
-                .alias("n_unknown"),
-            )
-            if drop_rng:
-                fresh = fresh.drop(*drop_rng)
-
-        if (manifest_ranges is None and source_partitions is not None
-                and observation_scrub_available()):
-            # per-partition ranges observed during the write job — no extra
-            # action
-            import uuid
-
-            from pyspark.sql import Observation
-
-            obs_lock = _obs_session_lock(spark)
-            obs_lock.acquire()
-            obs = Observation(f"apply_ranges_{uuid.uuid4().hex[:8]}")
-            # NULL partitions must count as unknown too: `~isin` alone
-            # evaluates to NULL for them, silently exempting such rows from
-            # the guard
-            aggs = [F.count(F.when(
-                F.col("partition").isNull()
-                | ~F.col("partition").isin([int(p) for p in source_partitions]),
-                True
-            )).alias("n_unknown")]
-            for p in source_partitions:
-                cond = F.col("partition") == int(p)
-                aggs += [
-                    F.count(F.when(cond, True)).alias(f"n_{p}"),
-                    F.min(F.when(cond, F.col("offset"))).alias(f"lo_{p}"),
-                    F.max(F.when(cond, F.col("offset"))).alias(f"hi_{p}"),
-                ]
-            fresh = fresh.observe(obs, *aggs)
-        elif manifest_ranges is None:
-            # the single driver-side aggregate: per-source-partition ranges
-            # (≤P rows)
-            with phase("ranges_aggregate"):
-                collected = (
-                    fresh.groupBy("partition")
-                    .agg(
-                        F.count("*").alias("events"),
-                        F.min("offset").alias("min_offset"),
-                        F.max("offset").alias("max_offset"),
-                    )
-                    .collect()
-                )
-            ranges = [{"partition": int(r["partition"]),
-                       "events": int(r["events"]),
-                       "min_offset": int(r["min_offset"]),
-                       "max_offset": int(r["max_offset"])} for r in collected]
-            events_applied = sum(r["events"] for r in ranges)
-            if events_applied == 0:
-                if cached is not None:
-                    cached.unpersist()
-                return _skipped_stats()
-            new_applied = {str(p): o for p, o in applied.items()}
-            for r in ranges:
-                p = str(r["partition"])
-                new_applied[p] = max(int(new_applied.get(p, -1)),
-                                     int(r["max_offset"]))
-
-        # -- internal candidate rows: data cols aligned to merged schema +
-        # stamps (selectExpr over SQL strings — one Py4J call instead of ~5
-        # per column)
-        have = set(batch_df.columns)
-        decode_names = {"role", "text", "tool"} if late_decode else set()
-        data_exprs = [
-            (f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
-             if f.name in have
-             else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
-            for f in merged.fields
-            if f.name not in decode_names
-        ]
-        if late_decode:
-            data_exprs.append("`payload`")
-        candidates = fresh.selectExpr(
-            *data_exprs,
-            "(op = 'D') AS _deleted",
-            "CAST(offset AS bigint) AS _lww_offset",
-            "CAST(partition AS int) AS _lww_partition",
-        )
-        # driver-side plan construction up to this point (schema merge, hwm
-        # filter, validation observe, candidate projection) — pure
-        # Py4J/analysis work, no Spark job; a per-micro-batch fixed cost
-        # worth watching
-        from mimic_iv_etl_spark.cdc.profiling import record as _record
-
-        _record("plan_prelude", time.monotonic() - _prelude_t0)
-
-        if dedup_mode == "locator":
-            # locator needs the dense-manifest arithmetic ranges, the packed
-            # stamp's bit budget, and a bounded driver transfer; outside
-            # them the classic kernel is the answer
-            usable = (manifest_ranges is not None and ranges
-                      and _locator_supported(ranges))
-            if usable:
-                window_bits = sum(
-                    r["max_offset"] - r["min_offset"] + 1 for r in ranges)
-                # winners ≤ events in the window → events_applied × 16B
-                # bounds the locator Arrow transfer; window_bits/8 is the
-                # exact bitmap
-                if (events_applied * 16 + window_bits // 8
-                        > locator_driver_budget):
-                    usable = False
-            if not usable:
-                dedup_mode = "agg"
-
         if pre_partitioned:
             # bucket computed BEFORE the (single) shuffle so the LWW agg and
             # the partitioned write share one exchange
@@ -639,78 +516,17 @@ def apply_batch(
             winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
         _record("winners_plan", time.monotonic() - _wplan_t0)
 
-        if obs is not None:
-            with phase("append_delta"):
-                entries, schema_id, schemas = table.stage_delta(
-                    winners, new_schema=merged if evolved else None,
-                    write_salt=write_salt, pre_partitioned=pre_partitioned)
-                m = obs.get  # blocks on the write job just run
-                if m["n_unknown"]:
-                    table.discard_staged(entries)
-                    raise RuntimeError(
-                        f"batch {batch_id} holds {m['n_unknown']} events from "
-                        f"partitions outside source_partitions={source_partitions}"
-                        " — offset bookkeeping would miss them")
-                ranges = [
-                    {"partition": int(p), "events": int(m[f"n_{p}"]),
-                     "min_offset": int(m[f"lo_{p}"]), "max_offset": int(m[f"hi_{p}"])}
-                    for p in source_partitions if m[f"n_{p}"]
-                ]
-                events_applied = sum(r["events"] for r in ranges)
-                if events_applied == 0:
-                    table.discard_staged(entries)
-                    if cached is not None:
-                        cached.unpersist()
-                    return _skipped_stats()
-                new_applied = {str(p): o for p, o in applied.items()}
-                for r in ranges:
-                    p = str(r["partition"])
-                    new_applied[p] = max(int(new_applied.get(p, -1)),
-                                         int(r["max_offset"]))
-                table.commit_delta(
-                    entries, schema_id, schemas,
-                    summary={"applied_offsets": new_applied, "batch_id": batch_id})
-        elif obs_val is not None:
-            with phase("append_delta"):
-                entries, schema_id, schemas = table.stage_delta(
-                    winners, new_schema=merged if evolved else None,
-                    write_salt=write_salt, pre_partitioned=pre_partitioned)
-                m = obs_val.get  # resolved by the batch's first job
-                if m["n_unknown"] or int(m["n_total"]) != int(events_applied):
-                    table.discard_staged(entries)
-                    raise RuntimeError(
-                        f"batch {batch_id}: manifest_ranges cross-check failed "
-                        f"— {m['n_unknown']} events outside the declared "
-                        f"ranges, {m['n_total']} present vs {events_applied} "
-                        "declared; committing would desync applied_offsets "
-                        "from the actually-applied events")
-                table.commit_delta(
-                    entries, schema_id, schemas,
-                    summary={"applied_offsets": new_applied,
-                             "batch_id": batch_id})
-        else:
-            with phase("append_delta"):
-                table.append_delta(
-                    winners,
-                    new_schema=merged if evolved else None,
-                    summary={"applied_offsets": new_applied, "batch_id": batch_id},
-                    write_salt=write_salt,
-                    pre_partitioned=pre_partitioned,
-                )
+        with phase("append_delta"):
+            table.append_delta(
+                winners,
+                new_schema=merged if evolved else None,
+                summary={"applied_offsets": new_applied, "batch_id": batch_id},
+                write_salt=write_salt,
+                pre_partitioned=pre_partitioned,
+            )
     finally:
         if locator_cleanup is not None:
             locator_cleanup()
-        try:
-            if obs is not None or obs_val is not None:
-                from mimic_iv_etl_spark.session import scrub_observation_manager
-
-                with phase("observation_scrub"):
-                    scrub_observation_manager(spark)
-        finally:
-            if obs_lock is not None:
-                obs_lock.release()
-    if cached is not None:
-        cached.unpersist()
 
     new_files = table.last_new_entries
     n_winners = sum(e.get("rows", 0) for e in new_files)

@@ -4,8 +4,8 @@ Replays a change log (directory of ``tranche-*/part-*.parquet``, see
 ``changelog.py``) through :func:`apply_batch` in per-source-partition offset
 order — the engine-side equivalent of tailing a binlog/WAL.
 
-Replay metadata (offset bounds, source-partition universe, dense
-per-partition ranges, tranche schema) comes from the log's ``manifest.json``
+Replay metadata (offset bounds, dense per-partition ranges, tranche
+schema) comes from the log's ``manifest.json``
 plus ONE pyarrow footer read per tranche; the O(files) parquet-footer sweep
 and Spark's schema-inference job are fallbacks for manifests written by
 older generators (``upgrade_manifest`` backfills those in place). At
@@ -113,30 +113,6 @@ def _offset_bounds(tranche_dir: str) -> tuple[int, int]:
     return int(lo), int(hi)
 
 
-def _partition_ids(tranche_dir: str, cap: int = 64) -> list[int] | None:
-    """Source-partition universe of a tranche from parquet footer stats only
-    (no data IO). Lets apply_batch fold the offset-range bookkeeping into the
-    write job as Observation metrics (one Spark action per batch). Returns
-    None — the separate-aggregate fallback — when stats are missing or the
-    id range is too wide for conditional aggregates."""
-    lo, hi = None, None
-    for f in sorted(glob.glob(os.path.join(tranche_dir, "*.parquet"))):
-        md = pq.read_metadata(f)
-        try:
-            idx = md.schema.names.index("partition")
-        except ValueError:
-            return None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or st.min is None:
-                return None
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    if lo is None or hi - lo + 1 > cap:
-        return None
-    return list(range(int(lo), int(hi) + 1))
-
-
 def replay_log(
     spark: SparkSession,
     log_dir: str,
@@ -152,7 +128,6 @@ def replay_log(
     decode_payload: bool = False,
     normalize: bool = False,
     flush_sidecars_every: int | None = 256,
-    validate_manifest: bool = True,
 ) -> dict:
     """Replay the whole log into the table at ``table_path`` (created with
     ``schema`` if absent). ``batch_offsets`` sets the per-partition offset
@@ -192,20 +167,16 @@ def replay_log(
             part_offsets = None
             if t_meta is not None:
                 lo, hi = int(t_meta["offset_lo"]), int(t_meta["offset_hi"])
-                pids = [int(p) for p in t_meta["partitions"]]
                 if t_meta.get("dense_offsets") and "partition_offsets" in t_meta:
                     # dense per-partition ranges → apply_batch does offset
-                    # bookkeeping as pure window arithmetic (no Observation,
-                    # no aggregate, no per-row conditional counters)
+                    # bookkeeping as window arithmetic, verified inside the
+                    # batch's own dedup aggregate
                     part_offsets = {
                         int(p): (int(r[0]), int(r[1]))
                         for p, r in t_meta["partition_offsets"].items()
                     }
-                if len(pids) > 64:  # conditional-agg fan-out cap, as below
-                    pids = None
             else:
                 lo, hi = _offset_bounds(tranche)
-                pids = _partition_ids(tranche)
             df = spark.read.schema(_tranche_schema(tranche)).parquet(tranche)
         late_decode = decode_payload and "payload" in df.columns
         if late_decode:
@@ -248,9 +219,7 @@ def replay_log(
                                    dedup_mode=mode, write_salt=write_salt,
                                    decode_payload=late_decode,
                                    normalize=normalize and late_decode,
-                                   source_partitions=pids,
                                    manifest_ranges=window_ranges,
-                                   validate_manifest=validate_manifest,
                                    log_tail=log_tail)
 
             try:

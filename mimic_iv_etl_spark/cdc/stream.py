@@ -30,8 +30,8 @@ def _tranche_file_offsets(tranche_dir: str) -> dict[str, dict[int, tuple[int, in
     (``changelog.py`` stamps them at write time; ``upgrade_manifest`` backfills
     and density-verifies older logs). Keyed by file basename. None when the
     manifest is absent, predates the field, or the log failed the per-file
-    density check — the streaming path then falls back to Observation-based
-    bookkeeping and the ``agg`` LWW kernel."""
+    density check — the streaming path then falls back to the ranges
+    aggregate bookkeeping and the ``agg`` LWW kernel."""
     log_dir = os.path.dirname(tranche_dir.rstrip("/"))
     path = os.path.join(log_dir, "manifest.json")
     if not os.path.exists(path):
@@ -82,7 +82,7 @@ def _batch_ranges(names: set[str] | None,
                   ) -> dict[int, tuple[int, int]] | None:
     """Dense per-partition (min, max) offset ranges of one file-source
     micro-batch, derived from the manifest's per-file ranges and the batch's
-    file set. Returns None — the Observation fallback — when any batch
+    file set. Returns None — the ranges-aggregate fallback — when any batch
     file is missing from the manifest or the merged ranges fail the density
     cross-check (files of one partition must tile a gapless offset span)."""
     if not file_offsets:
@@ -126,15 +126,14 @@ def stream_tranche(
     dense per-partition offset ranges are looked up from the manifest's
     per-file ranges (``_batch_ranges``), so foreachBatch runs the same
     locator LWW kernel + arithmetic offset bookkeeping as ``replay_log`` —
-    no SortAggregate, no Observation on the hot path. Batches whose files
-    aren't manifest-covered fall back to Observation bookkeeping (universe
-    from the tranche's parquet footer stats) and the ``agg`` kernel.
+    no SortAggregate, no extra job on the hot path. Batches whose files
+    aren't manifest-covered fall back to the ≤P-row ranges aggregate for
+    their bookkeeping and the ``agg`` kernel.
 
     ``on_batch(epoch_id, stats)`` is a test hook (e.g. to crash mid-stream).
     """
-    from mimic_iv_etl_spark.cdc.replay import _log_tail, _partition_ids
+    from mimic_iv_etl_spark.cdc.replay import _log_tail
 
-    pids = _partition_ids(tranche_dir)
     file_offsets = _tranche_file_offsets(tranche_dir)
     log_tail = _log_tail(os.path.dirname(tranche_dir.rstrip("/")))
     sample = sorted(glob.glob(os.path.join(tranche_dir, "*.parquet")))
@@ -167,7 +166,6 @@ def stream_tranche(
                                dedup_mode=mode,
                                decode_payload=late_decode,
                                normalize=normalize,
-                               source_partitions=pids,
                                manifest_ranges=ranges,
                                log_tail=log_tail)
 

@@ -132,22 +132,28 @@ def lww_winner_locators(
     ts_col: str = "ts",
     offset_col: str = "_lww_offset",
     partition_col: str = "_lww_partition",
+    outside: str = "false",
 ) -> DataFrame:
     """Per-key winner LOCATOR ``(p, o)`` — the source coordinates of the LWW
-    winning row — via hash aggregation over the packed stamp. The plan reads
-    ONLY the key/stamp columns (payloads are column-pruned out of the scan)
-    and its aggregation buffer is one 16-byte decimal, so a change batch is
-    reduced without sorting and without a single payload byte on the wire."""
+    winning row — via hash aggregation over the packed stamp, plus the key's
+    row count ``n`` and ``n_out``, its rows matching the boolean SQL
+    predicate ``outside`` (the apply path's manifest cross-check). The plan
+    reads ONLY the key/stamp columns (payloads are column-pruned out of the
+    scan) and its aggregation buffer is one 16-byte decimal and two longs, so
+    a change batch is reduced without sorting and without a single payload
+    byte on the wire."""
     keys = list(key_cols)
     pack = lww_pack_stamp(ts_col, offset_col, partition_col)
     low = F.pmod(F.col("_w"), F.lit(PACK_TS_SHIFT).cast("decimal(38,0)")).cast("long")
     return (
         df.groupBy(*keys)
-        .agg(F.max(pack).alias("_w"))
-        .select(low.alias("_low"))
+        .agg(F.max(pack).alias("_w"), F.count(F.lit(1)).alias("n"),
+             F.expr(f"count_if({outside})").alias("n_out"))
+        .select(low.alias("_low"), "n", "n_out")
         .select(
             F.col("_low").bitwiseAND(F.lit(PACK_OFF_SHIFT - 1)).cast("int").alias("p"),
             F.shiftright(F.col("_low"), 16).alias("o"),
+            "n", "n_out",
         )
     )
 

@@ -780,9 +780,8 @@ class LakeTable:
         delta files in ``data/`` WITHOUT committing a snapshot. Returns
         ``(entries, schema_id, schemas)`` for :meth:`commit_delta`. Until that
         commit the files are unreferenced (invisible to readers, reclaimable
-        by :meth:`vacuum`) — callers use the gap to inspect metrics observed
-        during the write (e.g. the apply path's per-partition offset ranges)
-        and may abandon a zero-row stage at no cost."""
+        by :meth:`vacuum`), so a caller may still abandon the stage with
+        :meth:`discard_staged` at no cost."""
         public, schema_id, schemas = self._next_schema(new_schema)
         entries = self._stage_write(winners_df, public, schema_id, "delta",
                                     write_salt=write_salt,
@@ -1253,6 +1252,22 @@ def _write_snapshot(meta_dir: str, snap: dict) -> None:
                 return _write_snapshot(meta_dir, snap)  # another writer healed it
         os.remove(tmp)
         raise CommitConflict(f"snapshot v{snap['version']} already exists") from e
+    except FileNotFoundError as e:
+        # a concurrent vacuum reclaimed the tmp past its grace (a writer
+        # paused that long): nothing was committed, so retake the commit
+        raise CommitConflict(
+            f"snapshot tmp for v{snap['version']} vanished before its link "
+            "(reclaimed by a concurrent vacuum)") from e
+    except OSError as e:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+        raise OSError(
+            e.errno,
+            f"snapshot commit needs hardlinks, but os.link failed in "
+            f"{meta_dir} — the filesystem lacks hardlinks (or refuses them): "
+            f"{e.strerror}") from e
     os.remove(tmp)
     tmp = os.path.join(meta_dir, f".hint.{uuid.uuid4().hex}")
     with open(tmp, "w") as f:

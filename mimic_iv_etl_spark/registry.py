@@ -456,7 +456,10 @@ def q_scaled_features(spark, sf):
     full toPandas)."""
     from mimic_iv_etl_spark.compat.ml_utils import scale_features
 
-    out = scale_features(_t(spark, sf, "lineitem"),
+    # no spread, as in q_correlation: the moments are ONE global group of
+    # float64 sums, and a repartition reorders their merge — the rounded
+    # z-scores could flip vs the oracle's sequential scan
+    out = scale_features(_t(spark, sf, "lineitem", spread=False),
                          ["l_quantity", "l_extendedprice"], round_to=6)
     return out.select("l_orderkey", "l_linenumber", "l_quantity_z",
                       "l_extendedprice_z")

@@ -110,91 +110,3 @@ def get_spark_session(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-# the Spark feature-version line the scrub reflection was validated against
-_SCRUB_PINNED_PREFIX = "4.1."
-_warned_scrub_version = False
-
-
-def observation_scrub_available() -> bool:
-    """Whether this Spark version is one the scrub reflection is pinned to.
-    The apply path consults this BEFORE choosing Observation-based offset
-    bookkeeping: on an unpinned version using Observation would poison the
-    session permanently (no safe scrub), so it prefers the separate-aggregate
-    fallback — a loud-graceful degradation instead of a silent breakage."""
-    import pyspark
-
-    return pyspark.__version__.startswith(_SCRUB_PINNED_PREFIX)
-
-
-def scrub_observation_manager(spark: SparkSession) -> bool:
-    """Undo the session poisoning caused by ``pyspark.sql.Observation`` use
-    (Spark 4.1.x): the first observed DataFrame lazily constructs
-    ``classic.SparkSession.observationManager``, whose constructor registers a
-    non-serializable ``Listener`` with the ExecutionListenerManager and leaves
-    the (non-transient) ``observationManager`` field set on the session.
-    After that, ANY job whose task closure captures the SparkSession — e.g.
-    every ``pyspark.ml`` model ``transform`` — dies with
-    ``NotSerializableException: ObservationManager`` (reproduced: one
-    completed observe → ``LogisticRegressionModel.transform(...).collect()``
-    fails; before it, passes).
-
-    This resets the session to its pre-observation state: unregister the
-    listener, null the field, clear the lazy-val bitmap bit so the next
-    ``observe`` reconstructs cleanly (verified: observe → scrub → MLlib →
-    observe → scrub cycles all green). Reflection against Spark internals is
-    version-specific, so every step is best-effort: on any failure the
-    session is simply left as Spark made it (the upstream behavior) and
-    False is returned.
-
-    Caller contract: only scrub when no OTHER Observation is mid-flight on
-    this session (a pending ``Observation.get`` would block forever once its
-    listener is gone). The CDC apply path runs batches sequentially, so it
-    scrubs after every ``obs.get``.
-
-    Version pin: the lazy-val bitmap bit (``bitmap$0 & ~4``) was located for
-    Spark 4.1.x specifically; on any other feature version a reordered lazy
-    val could make the clear *succeed while clearing the wrong bit* — the one
-    failure mode the try/except cannot catch (ADVICE r02). So on a
-    non-pinned version the scrub refuses up front (one loud warning), and
-    callers degrade to the fallback separate-aggregate bookkeeping path.
-    """
-    import pyspark
-
-    if not pyspark.__version__.startswith(_SCRUB_PINNED_PREFIX):
-        global _warned_scrub_version
-        if not _warned_scrub_version:
-            _warned_scrub_version = True
-            import warnings
-
-            warnings.warn(
-                f"scrub_observation_manager validated against Spark "
-                f"{_SCRUB_PINNED_PREFIX}x only (running "
-                f"{pyspark.__version__}); skipping the reflection scrub — "
-                "Observation-based offset bookkeeping will fall back to the "
-                "separate-aggregate path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return False
-    try:
-        jss = spark._jsparkSession  # noqa: SLF001 — intentionally internal
-        cls = jss.getClass()
-        if not cls.getName().endswith("classic.SparkSession"):
-            return False
-        omf = cls.getDeclaredField("observationManager")
-        omf.setAccessible(True)
-        om = omf.get(jss)
-        if om is not None:
-            lf = om.getClass().getDeclaredField("Listener$module")
-            lf.setAccessible(True)
-            listener = lf.get(om)
-            if listener is not None:
-                jss.listenerManager().unregister(listener)
-            omf.set(jss, None)
-        bf = cls.getDeclaredField("bitmap$0")
-        bf.setAccessible(True)
-        bf.setByte(jss, bf.getByte(jss) & ~4)
-        return True
-    except Exception:  # pragma: no cover — future-Spark reflection drift
-        return False

@@ -133,40 +133,29 @@ def test_schema_evolution_mid_log(spark, evolved_log, tmp_path):
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
 
 
-def test_observed_ranges_mode_matches_oracle_and_guards_universe(
+def test_ranges_aggregate_mode_matches_oracle_and_skips_stale(
         spark, small_log, tmp_path):
-    """source_partitions mode: offset bookkeeping observed during the write
-    job. Wrong universe → abort before commit with staged files discarded;
-    right universe → oracle-equal state; stale redelivery → skipped no-op."""
-    import pytest
-
+    """No manifest: the ≤P-row ranges aggregate is the offset bookkeeping.
+    Oracle-equal state; stale redelivery → skipped no-op with nothing
+    committed or staged; the session stays usable for MLlib afterwards."""
     d, spec, _ = small_log
     tbl = LakeTable.create(spark, str(tmp_path / "t_obs"), TRANSCRIPT_SCHEMA,
                            n_buckets=8)
     log = _load_log(spark, d).drop("payload")
 
-    with pytest.raises(RuntimeError, match="outside source_partitions"):
-        apply_batch(tbl, log, batch_id=0, source_partitions=[0, 1])
-    assert tbl.refresh().version == 0, "aborted batch must not commit"
-    assert tbl.vacuum(grace_seconds=0.0)["data_files"] == 0, \
-        "aborted batch must discard its staged files"
-
-    universe = list(range(spec.n_partitions))
-    stats = apply_batch(tbl, log, batch_id=1, source_partitions=universe)
+    stats = apply_batch(tbl, log, batch_id=1)
     assert stats["events_applied"] == spec.n_events
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
 
     v = tbl.version
-    stats2 = apply_batch(tbl, log, batch_id=2, source_partitions=universe)
+    stats2 = apply_batch(tbl, log, batch_id=2)
     assert stats2["skipped"] and stats2["events_applied"] == 0
     assert tbl.refresh().version == v, "stale redelivery must not commit"
     assert tbl.vacuum(grace_seconds=0.0)["data_files"] == 0
 
-    # Spark 4.1.x: Observation use poisons the session — every later job
-    # whose task closure captures the SparkSession (all pyspark.ml model
-    # transforms) dies with NotSerializableException: ObservationManager.
-    # apply_batch must scrub that state (session.scrub_observation_manager),
-    # or the engine silently breaks unrelated ML workloads session-wide.
+    # a job whose task closure captures the SparkSession (every pyspark.ml
+    # model transform) must still run after an apply: the apply path leaves
+    # no session-global state behind
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 
@@ -176,6 +165,40 @@ def test_observed_ranges_mode_matches_oracle_and_guards_universe(
     feats = VectorAssembler(inputCols=["x1"], outputCol="features").transform(df)
     model = LogisticRegression(labelCol="label", maxIter=5).fit(feats)
     assert model.transform(feats).groupBy("prediction").count().count() == 2
+
+
+@pytest.mark.parametrize("mode", ["locator", "agg"])
+def test_null_partition_aborts_before_write(spark, small_log, tmp_path, mode):
+    """A NULL source partition can never be recorded in applied_offsets, so
+    the batch must abort with an error naming it — before any write — on
+    both bookkeeping paths: the locator counters (with a manifest) and the
+    ranges aggregate (without one)."""
+    import glob
+
+    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+
+    d, spec, _ = small_log
+    tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
+    df = spark.read.parquet(tranche).drop("payload")
+    stray = (df.limit(1)
+             .withColumn("conv_id", F.lit("conv-null-partition"))
+             .withColumn("partition", F.lit(None).cast("int")))
+    batch = df.unionByName(stray)
+    manifest = None
+    if mode == "locator":
+        t_meta = _manifest_tranches(d)[tranche]
+        manifest = {int(p): (int(r[0]), int(r[1]))
+                    for p, r in t_meta["partition_offsets"].items()}
+    tp = str(tmp_path / f"t_nullpart_{mode}")
+    tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
+    v0 = tbl.version
+    with pytest.raises(RuntimeError, match="NULL partition"):
+        apply_batch(tbl, batch, batch_id=0, dedup_mode=mode,
+                    manifest_ranges=manifest)
+    tbl2 = LakeTable(spark, tp)
+    assert tbl2.version == v0
+    assert tbl2.applied_offsets == {}
+    assert tbl2.vacuum(grace_seconds=0.0)["data_files"] == 0
 
 
 def test_flush_sidecars_leaves_live_claims_alone(spark, tmp_path):

@@ -356,10 +356,10 @@ def test_multi_source_fan_in(spark, tmp_path, topology):
     over the UNION of both logs (overlapping conv ids resolved by the
     global (ts, offset, partition) total order).
 
-    Both deployment topologies: a SHARED SparkSession (the per-session
-    observation lock serializes the observe→scrub window; batches alternate)
-    and a session PER STREAM (isolated ObservationManagers — the fully
-    parallel shape; also how separate driver processes would behave)."""
+    Both deployment topologies: a SHARED SparkSession (both appliers run
+    their batches concurrently on it — the apply path holds no per-session
+    lock or session-global state) and a session PER STREAM (also how
+    separate driver processes would behave)."""
     import os
     import threading
 
@@ -604,4 +604,57 @@ def test_link_commit_cannot_tear_and_orphan_tmp_is_vacuumed(spark, tmp_path):
     fresh.vacuum(grace_seconds=1.0)
     assert not glob.glob(os.path.join(meta, ".v*.tmp")), "orphan tmp kept"
     # no stray tmp files leak from successful commits either
+    assert not glob.glob(os.path.join(meta, ".v*.tmp"))
+
+
+def test_link_commit_retakes_after_vacuumed_tmp(spark, tmp_path, monkeypatch):
+    """A writer paused past vacuum's grace finds its snapshot tmp gone at
+    ``os.link`` (FileNotFoundError). Nothing was committed, so it is a
+    retryable conflict: the retry loop writes a fresh tmp and commits."""
+    import glob
+    import os
+
+    path = str(tmp_path / "t_link_vacuumed")
+    t1 = _mk_table(spark, path)
+    v = t1.version
+    real_link = os.link
+    calls = []
+
+    def link(src, dst):
+        calls.append(src)
+        if len(calls) == 1:
+            os.remove(src)  # the concurrent vacuum reclaimed it
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", link)
+    t1.commit_summary({"batch_id": 11})
+    assert len(calls) == 2
+    assert t1.version == v + 1 and t1.summary["batch_id"] == 11
+    assert LakeTable(spark, path).version == v + 1
+    assert not glob.glob(os.path.join(path, "metadata", ".v*.tmp"))
+
+
+def test_link_commit_without_hardlinks_is_a_clear_error(spark, tmp_path,
+                                                        monkeypatch):
+    """On a filesystem that refuses hardlinks (``os.link`` → EPERM) the
+    commit fails loudly, naming the metadata dir, leaves no tmp behind, and
+    commits nothing."""
+    import errno
+    import glob
+    import os
+
+    path = str(tmp_path / "t_link_nolinks")
+    t1 = _mk_table(spark, path)
+    v = t1.version
+
+    def link(src, dst):
+        raise OSError(errno.EPERM, "Operation not permitted")
+
+    monkeypatch.setattr(os, "link", link)
+    meta = os.path.join(path, "metadata")
+    with pytest.raises(OSError, match="lacks hardlinks") as exc:
+        t1.commit_summary({"batch_id": 12})
+    assert meta in str(exc.value)
+    monkeypatch.undo()
+    assert LakeTable(spark, path).version == v
     assert not glob.glob(os.path.join(meta, ".v*.tmp"))

@@ -35,8 +35,8 @@ from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal
 def test_replay_uses_manifest_arithmetic_and_matches_oracle(
         spark, small_log, tmp_path, mode):
     """The generator's manifest carries dense per-partition offset ranges, so
-    the whole replay does its exactly-once bookkeeping with no Observation
-    and no ranges aggregate — and still lands oracle-equal state with exact
+    the whole replay does its exactly-once bookkeeping with no extra job
+    ('auto': the cross-check rides the locator aggregate) — and still lands oracle-equal state with exact
     per-partition lineage. 'auto' resolves to the packed-stamp locator
     kernel, so this run IS the locator correctness gate (ties, late
     arrivals, deletes, hot keys — all through the independent oracle)."""
@@ -270,30 +270,6 @@ def test_replay_autoflushes_sidecars(spark, small_log, tmp_path):
     assert not os.path.exists(os.path.join(tp, "_metrics", "metrics.jsonl"))
 
 
-def test_scrub_version_guard(spark, small_log, tmp_path, monkeypatch):
-    """On a non-pinned Spark version the reflection scrub refuses (one loud
-    warning) and apply_batch's bookkeeping degrades to the separate-aggregate
-    path instead of poisoning the session via Observation."""
-    import pyspark
-
-    from mimic_iv_etl_spark import session as session_mod
-
-    monkeypatch.setattr(pyspark, "__version__", "4.2.0")
-    monkeypatch.setattr(session_mod, "_warned_scrub_version", False)
-    assert not session_mod.observation_scrub_available()
-    with pytest.warns(RuntimeWarning, match="validated against Spark"):
-        assert session_mod.scrub_observation_manager(spark) is False
-
-    d, spec, _ = small_log
-    log = spark.read.parquet(*sorted(glob.glob(f"{d}/tranche-*"))).drop("payload")
-    tbl = LakeTable.create(spark, str(tmp_path / "t_guard"), TRANSCRIPT_SCHEMA,
-                           n_buckets=4)
-    stats = apply_batch(tbl, log, batch_id=0,
-                        source_partitions=list(range(spec.n_partitions)))
-    assert stats["events_applied"] == spec.n_events
-    assert_final_state_equal(tbl.read(), duckdb_final_state(d))
-
-
 def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
     """VERDICT r03 item 5: a batch whose estimated locator driver transfer
     (winner locators + offset bitmap) exceeds the configured budget must
@@ -397,8 +373,9 @@ def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
     assert tbl2.applied_offsets == {}
     assert tbl2.read().count() == 0
     # ADVICE r04: the abort path must not leak the locator staging dir, and
-    # the Observation scrub must have run (field nulled) — otherwise later
-    # jobs capturing the session die with NotSerializableException
+    # must leave no session-global listener state (Spark's lazily-built
+    # observation manager stays unset) — otherwise later jobs capturing the
+    # session die with NotSerializableException
     assert not glob.glob(os.path.join(tp, "_staging", "lww-bitmap-*"))
     jss = spark._jsparkSession  # noqa: SLF001
     fld = jss.getClass().getDeclaredField("observationManager")

@@ -269,6 +269,17 @@ def test_minhash_dedup_finds_near_dups(spark):
     assert all(p in {(1, 2)} or 3 not in p for p in got)
 
 
+def test_minhash_hash_rows_skip_null_text(spark):
+    """A NULL-text doc has no shingles: it emits zero hash rows (not one
+    hash of an empty shingle), so it can never share a band with another
+    empty or NULL doc."""
+    df = spark.createDataFrame(
+        [(1, None), (2, "alpha beta gamma delta")], "doc_id long, text string")
+    rows = dedup._minhash_hash_rows(df).collect()
+    assert {r["_id"] for r in rows} == {2}
+    assert len(rows) == 2  # two 3-token shingles from four tokens
+
+
 def test_fused_paths_match_rowwise_apis(spark):
     """The fused explode+agg hot paths (minhash_band_buckets, _simhash_by_id)
     must produce exactly what the row-wise API surface produces — one hash

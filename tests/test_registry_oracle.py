@@ -102,3 +102,18 @@ def test_registry_holds_exactly_fifty_oracled_entries():
     Every entry must carry an oracle (no rows-only waivers)."""
     assert len(registry.oracle_sql()) == 50
     assert len(registry.queries()) == 50
+
+
+def test_scaled_features_moments_read_lineitem_unspread(spark, monkeypatch):
+    """The z-score moments are one global float64 aggregate; an id-hash
+    spread of its input reorders the partial-sum merge and can flip the
+    rounded z-scores vs the oracle's sequential scan (the hazard that
+    already flipped group_stats). With every scan forced to qualify for the
+    spread, the moment aggregate's input must still carry no repartition on
+    l_orderkey."""
+    monkeypatch.setattr(registry, "_scan_units", lambda path: (1, 0))
+    df = registry.queries()["scaled_features"](spark, SF)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    spreads = [ln for ln in plan.splitlines()
+               if "RepartitionByExpression" in ln and "l_orderkey" in ln]
+    assert not spreads, plan

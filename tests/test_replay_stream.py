@@ -89,14 +89,14 @@ def test_stream_micro_batches_run_locator_kernel(spark, small_log, tmp_path,
     micro-batch must derive dense ranges from the manifest's per-file offsets
     and run the packed-stamp locator kernel — a HashAggregate plan with no
     SortAggregate — exactly like batch replay, with the arithmetic offset
-    bookkeeping (no Observation on the hot path)."""
+    bookkeeping (no extra job on the hot path)."""
     import mimic_iv_etl_spark.cdc.apply as apply_mod
     from mimic_iv_etl_spark.lake.merge import lww_winner_locators as real
 
     plans: list[str] = []
 
-    def spy(candidates, key_cols):
-        out = real(candidates, key_cols)
+    def spy(candidates, key_cols, **kw):
+        out = real(candidates, key_cols, **kw)
         plans.append(out._jdf.queryExecution().executedPlan().toString())
         return out
 
@@ -153,7 +153,8 @@ def test_stream_multi_file_batches_merge_ranges(spark, small_log, tmp_path):
 def test_stream_without_file_manifest_falls_back_to_agg(spark, small_log,
                                                         tmp_path):
     """A log whose manifest predates (or failed) per-file ranges streams
-    through the Observation-bookkeeping + agg path, same final state."""
+    through the ranges-aggregate bookkeeping + agg path, same final
+    state."""
     import json
     import os
     import shutil
@@ -181,7 +182,7 @@ def test_stream_without_file_manifest_falls_back_to_agg(spark, small_log,
 def test_batch_ranges_density_cross_check():
     """_batch_ranges only returns ranges when the batch's files tile a
     gapless per-partition span; gappy unions and unmanifested files fall
-    back to None (→ Observation bookkeeping)."""
+    back to None (→ ranges-aggregate bookkeeping)."""
     from mimic_iv_etl_spark.cdc.stream import _batch_ranges
 
     fo = {
