@@ -132,14 +132,13 @@ def stream_tranche(
 
     ``on_batch(epoch_id, stats)`` is a test hook (e.g. to crash mid-stream).
     """
-    from mimic_iv_etl_spark.cdc.replay import _log_tail
+    from mimic_iv_etl_spark.cdc.replay import _log_tail, _tranche_schema
 
     file_offsets = _tranche_file_offsets(tranche_dir)
     log_tail = _log_tail(os.path.dirname(tranche_dir.rstrip("/")))
-    sample = sorted(glob.glob(os.path.join(tranche_dir, "*.parquet")))
-    if not sample:
+    if not glob.glob(os.path.join(tranche_dir, "*.parquet")):
         raise FileNotFoundError(tranche_dir)
-    schema = spark.read.parquet(sample[0]).schema
+    schema = _tranche_schema(tranche_dir)
 
     src = (
         spark.readStream.schema(schema)

@@ -454,12 +454,12 @@ class LakeTable:
 
         At 100 TB this is the "fetch these conversations" path: bucket ids
         are computed with the SAME JVM hash expression as the write path
-        (one no-IO local job over the key list — never a table scan), the
-        snapshot's file list is pruned to those buckets at metadata level,
-        and the key IN-predicate is pushed BELOW the merge-on-read LWW
-        reduce into every parquet scan (sound because a key's winner depends
-        only on that key's rows) — so the scan cost is O(selected buckets)
-        files with row-group skipping, not O(table)."""
+        (folded over a local relation of the keys — no Spark job, never a
+        table scan), the snapshot's file list is pruned to those buckets at
+        metadata level, and the key IN-predicate is pushed BELOW the
+        merge-on-read LWW reduce into every parquet scan (sound because a
+        key's winner depends only on that key's rows) — so the scan cost is
+        O(selected buckets) files with row-group skipping, not O(table)."""
         keys = list(keys)
         if not keys:
             return self.read(buckets=set(), internal=internal)
@@ -470,11 +470,17 @@ class LakeTable:
             raise ValueError(
                 f"read_keys requires bucket_by ({col!r}) to be a key column "
                 f"({self.key_cols}); use read().filter() instead")
+        import pandas as pd
+
         ktype = {f.name: f.dataType for f in self.schema.fields}[col]
+        # a pandas-built frame is a LocalRelation: the optimizer folds the
+        # bucket projection into it, so the collect runs no Spark job (an
+        # object column keeps wide ints exact — no float64 detour)
         kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField(col, ktype)]))
+            pd.DataFrame({col: pd.Series(keys, dtype=object)}),
+            T.StructType([T.StructField(col, ktype)]))
         bids = {int(r["b"]) for r in
-                kdf.select(self.bucket_expr(col).alias("b")).distinct().collect()}
+                kdf.select(self.bucket_expr(col).alias("b")).collect()}
         return self.read(buckets=bids, internal=internal,
                          pre_filter=F.col(col).isin(keys))
 

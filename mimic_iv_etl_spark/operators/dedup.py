@@ -15,6 +15,11 @@ higher-order array functions are CodegenFallback (interpreted), so the
 row-wise array-signature APIs kept for callers who persist signatures are
 NOT the fast path (measured 4×+ slower at sf0.1). The explode is pipelined
 inside whole-stage codegen and the shuffle carries one row per document.
+Expression families (per-bit votes, per-hash minima, per-band hashes) are
+built as server-parsed SQL strings, not Column chains: a Column node costs
+one or more Py4J round-trips to build, so a 64-wide family built node by
+node took ~10k round-trips (~1-2 s) per plan, while one SQL string costs a
+fixed handful whatever ``bits``/``k``/``bands`` are.
 Scale notes: every operator keys its shuffle on a hash-uniform value
 (signature band, text hash) so hot documents don't skew, and the bucket
 self-joins carry a frequent-bucket cap so degenerate buckets can't square.
@@ -22,10 +27,9 @@ self-joins carry a frequent-bucket cap so degenerate buckets can't square.
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import add
+from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mimic_iv_etl_spark.operators.text import _shingles, normalize_text_expr, tokens
@@ -44,10 +48,10 @@ def _cap_bucket_size(buckets: DataFrame, key_cols: list[str],
     join shuffles on, so the cap adds no new shuffle key."""
     if max_bucket is None:
         return buckets
-    w = Window.partitionBy(*key_cols)
+    keys = ", ".join(key_cols)
     return (
-        buckets.withColumn("_bsz", F.count("*").over(w))
-        .filter(F.col("_bsz") <= max_bucket)
+        buckets.selectExpr("*", f"count(*) OVER (PARTITION BY {keys}) AS _bsz")
+        .where(f"_bsz <= {int(max_bucket)}")
         .drop("_bsz")
     )
 
@@ -66,12 +70,20 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-def _rotl64(c: Column, r: int) -> Column:
-    """Bitwise 64-bit rotate-left (shift ops carry no ANSI overflow checks)."""
+def _long_sql(v: int) -> str:
+    """A BIGINT constant as SQL text: a ``L``-suffixed literal, sign
+    included, so -2^63 parses as one literal (not a negated 2^63) and the
+    expression stays non-nullable, as ``lit(v).cast("long")`` was."""
+    return f"({v}L)"
+
+
+def _rotl_sql(c: str, r: int) -> str:
+    """Bitwise 64-bit rotate-left of SQL expression ``c`` (shift ops carry no
+    ANSI overflow checks)."""
     r = r % 64
     if r == 0:
         return c
-    return F.shiftleft(c, r).bitwiseOR(F.shiftrightunsigned(c, 64 - r))
+    return f"(shiftleft({c}, {r}) | shiftrightunsigned({c}, {64 - r}))"
 
 
 # Seeded per-function mixing constants for the 2-base-hash minhash family
@@ -86,6 +98,15 @@ def _mix_params(k: int) -> list[tuple[int, int, int]]:
          rng.randrange(-(1 << 63), 1 << 63))
         for _ in range(k)
     ]
+
+
+def _minhash_fn_sqls(h1: str, h2: str, k: int) -> list[str]:
+    """The k derived hash functions over base hashes ``h1``/``h2`` (SQL
+    expressions): ``rotl(h1, r_i) XOR rotl(h2, s_i) XOR c_i``. The one
+    definition of the family — the row-wise signature and the fused bucket
+    path both render it from here."""
+    return [f"(({_rotl_sql(h1, r)} ^ {_rotl_sql(h2, s)}) ^ {_long_sql(c)})"
+            for r, s, c in _mix_params(k)]
 
 
 def minhash_signature(df: DataFrame, text_col: str = "text", n: int = 3,
@@ -103,8 +124,6 @@ def minhash_signature(df: DataFrame, text_col: str = "text", n: int = 3,
     fast path is :func:`minhash_band_buckets` — HOFs here are interpreted
     (CodegenFallback), where expression-node count dominates cost.
     """
-    max_long = (1 << 63) - 1
-    params = _mix_params(k)
     # ONE traversal of the shingle array; the two base hashes are bound to a
     # lambda variable (struct), so the k derived hashes are variable reads +
     # bitwise ops, not k hash evaluations.
@@ -115,35 +134,26 @@ def minhash_signature(df: DataFrame, text_col: str = "text", n: int = 3,
             F.xxhash64(F.concat(F.lit("\x01|"), s)).alias("h2"),
         ),
     )
-    sig = F.aggregate(
-        base,
-        F.array_repeat(F.lit(max_long).cast("long"), k),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[
-                _rotl64(h["h1"], r).bitwiseXOR(_rotl64(h["h2"], s))
-                .bitwiseXOR(F.lit(c).cast("long"))
-                for r, s, c in params
-            ]),
-            lambda a, x: F.least(a, x),
-        ),
-    )
-    return df.withColumn(alias, sig)
+    fns = ", ".join(_minhash_fn_sqls("_h.h1", "_h.h2", k))
+    sig = F.expr(
+        f"aggregate(_mhb, array_repeat({_long_sql((1 << 63) - 1)}, {k}), "
+        f"(_acc, _h) -> zip_with(_acc, array({fns}), (_a, _x) -> least(_a, _x)))")
+    return df.withColumn("_mhb", base).withColumn(alias, sig).drop("_mhb")
 
 
-def _band_hash_cols(element_at, bands: int, k: int) -> list[Column]:
-    """One hash column per LSH band; ``element_at(j)`` yields signature slot j
+def _band_hashes_sql(slot: Callable[[int], str], bands: int, k: int) -> str:
+    """``posexplode`` of one hash per LSH band as ONE SQL expression yielding
+    ``(band, band_hash)``; ``slot(j)`` is the SQL text of signature slot j
     (0-based). Unrolled with literal indices — no runtime slice."""
     r = max(1, k // bands)
-    return [
-        F.xxhash64(
-            F.concat_ws(
-                ",", *[element_at(j).cast("string")
-                       for j in range(b * r, min((b + 1) * r, k))]
-            )
-        )
+    hashes = (
+        "xxhash64(concat_ws(',', "
+        + ", ".join(f"CAST({slot(j)} AS STRING)"
+                    for j in range(b * r, min((b + 1) * r, k)))
+        + "))"
         for b in range(bands)
-    ]
+    )
+    return f"posexplode(array({', '.join(hashes)})) AS (band, band_hash)"
 
 
 def _bucket_pairs(buckets: DataFrame, bucket_keys: list[str],
@@ -151,12 +161,10 @@ def _bucket_pairs(buckets: DataFrame, bucket_keys: list[str],
     """Self-join per LSH bucket → distinct candidate id pairs (a < b), with
     the frequent-bucket cap applied first."""
     buckets = _cap_bucket_size(buckets, bucket_keys, max_bucket)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
     return (
-        a.join(b, bucket_keys)
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+        buckets.alias("a").join(buckets.alias("b"), bucket_keys)
+        .where("a._id < b._id")
+        .selectExpr("a._id AS id_a", "b._id AS id_b")
         .distinct()
     )
 
@@ -174,12 +182,10 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     The fused text→candidates hot path is :func:`minhash_band_buckets` (fully
     codegen'd); this entry point exists for callers holding persisted
     signatures."""
-    band_cols = _band_hash_cols(
-        lambda j: F.element_at(F.col(sig_col), j + 1), bands, k
-    )
-    buckets = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.array(*band_cols)).alias("band", "band_hash"),
+    buckets = (
+        df.select(F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig"))
+        .selectExpr("_id", _band_hashes_sql(
+            lambda j: f"element_at(_sig, {j + 1})", bands, k))
     )
     return _bucket_pairs(buckets, ["band", "band_hash"], max_bucket)
 
@@ -240,19 +246,15 @@ def minhash_band_buckets(df: DataFrame, id_col: str = "doc_id",
     interpreted — ``aggregate``/``transform`` are CodegenFallback — and per-
     element node count dominated; this agg shape cut minhash_near_dups from
     11.7s/28s to ~3s end-to-end.)"""
-    params = _mix_params(k)
     ex = (hash_rows if hash_rows is not None
           else _minhash_hash_rows(df, id_col, text_col, n))
-    mins = ex.groupBy("_id").agg(*[
-        F.min(
-            _rotl64(F.col("_h1"), r).bitwiseXOR(_rotl64(F.col("_h2"), s))
-            .bitwiseXOR(F.lit(c).cast("long"))
-        ).alias(f"_mh{i}")
-        for i, (r, s, c) in enumerate(params)
-    ])
-    band_cols = _band_hash_cols(lambda j: F.col(f"_mh{j}"), bands, k)
-    return mins.select(
-        "_id", F.posexplode(F.array(*band_cols)).alias("band", "band_hash")
+    # k min aggregates in ONE server-parsed struct (still a HashAggregate:
+    # k fixed-width long buffers; the struct is built after the final merge)
+    mins = ", ".join(f"min({f}) AS m{i}" for i, f in
+                     enumerate(_minhash_fn_sqls("_h1", "_h2", k)))
+    return (
+        ex.groupBy("_id").agg(F.expr(f"struct({mins}) AS _mh"))
+        .selectExpr("_id", _band_hashes_sql(lambda j: f"_mh.m{j}", bands, k))
     )
 
 
@@ -291,11 +293,20 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     ``localCheckpoint`` (guide §3.3: truncate the plan when an intermediate
     is reused) makes every consumer read the same computed rows — the
     candidate set is small by construction (bucket-capped), and it is
-    recomputed fresh on every invocation, so nothing is cached across runs."""
+    recomputed fresh on every invocation, so nothing is cached across runs.
+
+    This makes the function EAGER: calling it runs Spark jobs (the pair
+    candidates and the shingle sets are computed on the spot) before the
+    returned DataFrame is ever acted on, and so does :func:`minhash_dedup`,
+    which ends in it. ``localCheckpoint`` blocks live in executor storage
+    without lineage: if an executor holding one is lost before the result
+    is consumed, the plan cannot recompute the block and the action fails —
+    rebuild the DataFrame (call this function again). Streaming ``pairs``
+    skip both checkpoints and stay lazy."""
     if not pairs.isStreaming:
         pairs = pairs.localCheckpoint(eager=True)
-    ids = (pairs.select(F.col("id_a").alias("_cid"))
-           .unionAll(pairs.select(F.col("id_b").alias("_cid")))
+    ids = (pairs.selectExpr("id_a AS _cid")
+           .unionAll(pairs.selectExpr("id_b AS _cid"))
            .distinct())
     pruned = df.join(ids, df[id_col] == ids["_cid"], "leftsemi")
     sets = (F.array_distinct(F.transform(_shingles(text_col, n),
@@ -327,11 +338,12 @@ def _pair_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
         .join(F.broadcast(sh.withColumnRenamed("_sh", "sh_b").alias("s2")),
               pairs.id_b == F.col("s2._id")).drop("_id")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return out.select(
+    inter = "size(array_intersect(sh_a, sh_b))"
+    union = "size(array_union(sh_a, sh_b))"
+    return out.selectExpr(
         "id_a", "id_b",
-        F.round(F.when(union > 0, inter / union).otherwise(0.0), 6).alias("jaccard"),
+        f"round(CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END, 6) "
+        "AS jaccard",
     )
 
 
@@ -357,49 +369,41 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _sign_vote_sql(h: str, i: int) -> str:
+    """The ±1 vote of 64-bit hash ``h`` (SQL expression) for output bit i."""
+    return f"CASE WHEN (shiftright({h}, {i}) & 1) = 1 THEN 1 ELSE -1 END"
+
+
+def _pack_sign_sql(vote: Callable[[int], str], bits: int) -> str:
+    """Pack per-bit vote signs into one 64-bit long; ``vote(i)`` is the SQL
+    text of the Σ±1 vote for bit i. The ``+`` chain is left-associated, so
+    the sign bit (63, the -2^63 constant) is added last to a non-negative
+    sum of disjoint lower bits — never an ANSI overflow."""
+    return " + ".join(
+        f"CASE WHEN {vote(i)} > 0 THEN "
+        f"{_long_sql((1 << i) if i < 63 else -(1 << 63))} ELSE {_long_sql(0)} END"
+        for i in range(bits)
+    )
+
+
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 64,
             alias: str = "simhash") -> DataFrame:
     """SimHash: per-token 64-bit hash; each output bit is the sign of the
     Σ±1 vote across tokens. Row-wise array API (``aggregate`` over the token
     array — interpreted, no shuffle); the fast path for bulk scoring is
     :func:`_simhash_by_id`."""
-    # bit counts for shiftright/shiftleft must be Python ints, so the per-bit
-    # expressions unroll over range(bits) — 64 codegen'd terms, still no UDF.
-    votes = F.aggregate(
-        F.transform(tokens(text_col), lambda t: F.xxhash64(t)),
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1)
-                    .otherwise(-1)
-                    .cast("long")
-                    for i in range(bits)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    df = df.withColumn("_votes", votes)
-    packed = _pack_sign_bits(lambda i: F.element_at("_votes", i + 1), bits)
-    return df.withColumn(alias, packed).drop("_votes")
-
-
-def _pack_sign_bits(vote_col, bits: int) -> Column:
-    """Pack per-bit vote signs into one 64-bit long. ``vote_col(i)`` yields
-    the Σ±1 vote for bit i. Bit 63 is the sign bit: 1<<63 overflows int64,
-    use its two's-complement value."""
-    return reduce(
-        add,
-        [
-            F.when(
-                vote_col(i) > 0,
-                F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long"),
-            )
-            .otherwise(F.lit(0).cast("long"))
-            for i in range(bits)
-        ],
+    votes = ", ".join(f"CAST({_sign_vote_sql('_x', i)} AS BIGINT)"
+                      for i in range(bits))
+    return (
+        df.withColumn("_tok", tokens(text_col))
+        .selectExpr(
+            "*",
+            f"aggregate(transform(_tok, _t -> xxhash64(_t)), "
+            f"array_repeat({_long_sql(0)}, {bits}), (_acc, _x) -> "
+            f"zip_with(_acc, array({votes}), (_a, _v) -> _a + _v)) AS _votes")
+        .withColumn(alias, F.expr(
+            _pack_sign_sql(lambda i: f"element_at(_votes, {i + 1})", bits)))
+        .drop("_tok", "_votes")
     )
 
 
@@ -411,26 +415,21 @@ def _simhash_by_id(df: DataFrame, id_col: str = "doc_id",
     docs drop out of the explode: byte-identical empties are
     :func:`exact_dedup`'s job, not a Hamming neighborhood. (Measured note,
     sf0.1 local[32]: the row-wise HOF ``aggregate`` in :func:`simhash` runs
-    interpreted; this shape cut simhash_near_dups 9.8s → ~1.5s.)"""
+    interpreted; this shape cut simhash_near_dups 9.8s → ~1.5s.)
+
+    The 64 sums are one server-parsed struct (still a HashAggregate: fixed-
+    width long buffers) and the pack one SQL string — ~150 Py4J round-trips
+    for the whole plan instead of ~10k."""
     ex = df.select(
         F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("_t")
-    ).select("_id", F.xxhash64("_t").alias("_h"))
-    votes = ex.groupBy("_id").agg(*[
-        F.sum(
-            F.when(F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"_v{i}")
-        for i in range(bits)
-    ])
-    return votes.select(
-        "_id",
-        _pack_sign_bits(lambda i: F.col(f"_v{i}"), bits).alias("simhash"),
+    ).selectExpr("_id", "xxhash64(_t) AS _h")
+    sums = ", ".join(f"sum({_sign_vote_sql('_h', i)}) AS v{i}"
+                     for i in range(bits))
+    return (
+        ex.groupBy("_id").agg(F.expr(f"struct({sums}) AS _v"))
+        .selectExpr("_id", _pack_sign_sql(lambda i: f"_v.v{i}", bits)
+                    + " AS simhash")
     )
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit simhashes (popcount via bit_count)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
@@ -452,22 +451,12 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     over-cap buckets that are byte-near-identical, which is
     :func:`exact_dedup`'s job, pinned by the cap-vs-recall test). Past the
     bound, shard the corpus or raise ``max_bucket``."""
-    n_bands = 64 // band_bits
-    s = _simhash_by_id(df, id_col=id_col, text_col=text_col)
-    bands = s.select(
-        "_id", "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), i * band_bits)
-                    .bitwiseAND(F.lit((1 << band_bits) - 1))
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
-    )
+    mask = (1 << band_bits) - 1
+    split = ", ".join(f"shiftrightunsigned(simhash, {i * band_bits}) & {mask}"
+                      for i in range(64 // band_bits))
+    bands = _simhash_by_id(df, id_col=id_col, text_col=text_col).selectExpr(
+        "_id", "simhash", f"posexplode(array({split})) AS (band, band_val)")
     bands = _cap_bucket_size(bands, ["band", "band_val"], max_bucket)
-    a, b = bands.alias("a"), bands.alias("b")
     # Hamming filter BEFORE the distinct: unlike minhash's 64-bit band
     # hashes, low-bit band values collide for plenty of far-apart docs, so
     # the band join emits ~n²/2^band_bits pairs per band — the popcount
@@ -475,10 +464,10 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     # the distinct's shuffle to carry only actual near-dup pairs (measured
     # at sf0.1 10×6: the swap removes a multi-million-row distinct exchange)
     return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-                hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"))
-        .filter(F.col("hamming") <= max_distance)
+        bands.alias("a").join(bands.alias("b"), ["band", "band_val"])
+        .where("a._id < b._id")
+        .selectExpr("a._id AS id_a", "b._id AS id_b",
+                    "bit_count(a.simhash ^ b.simhash) AS hamming")
+        .where(f"hamming <= {int(max_distance)}")
         .distinct()
     )

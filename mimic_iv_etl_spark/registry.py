@@ -20,6 +20,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mimic_iv_etl_spark.lake.merge import lww_reduce
 from mimic_iv_etl_spark.operators import dedup, labeling, relational, similarity, text, windows
@@ -36,21 +37,34 @@ _SPREAD_KEYS = {
 }
 
 
-def _scan_units(path: str) -> tuple[int, int]:
-    """(independently-readable parquet chunks, total bytes) for a table path.
-    A scan task can only start at a row-group boundary, so files × row-groups
-    bounds the achievable scan parallelism regardless of split size."""
+def _scan_footer(path: str) -> tuple[StructType, int, int]:
+    """(Spark schema, independently-readable parquet chunks, total bytes) for
+    a local table path, from ONE ``pq.read_metadata`` per file. A scan task
+    can only start at a row-group boundary, so files × row-groups bounds the
+    achievable scan parallelism regardless of split size. The schema is the
+    first footer's, mapped the way replay maps tranche footers
+    (``prefer_timestamp_ntz``: naive parquet timestamps are TIMESTAMP_NTZ,
+    as Spark infers them) — handing it to the reader skips Spark's one-task
+    schema-inference job per read."""
     import glob
 
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     files = (sorted(glob.glob(os.path.join(path, "*.parquet")))
              if os.path.isdir(path) else [path])
+    schema = None
     units = nbytes = 0
     for f in files:
-        units += pq.read_metadata(f).num_row_groups
+        md = pq.read_metadata(f)
+        if schema is None:
+            schema = from_arrow_schema(md.schema.to_arrow_schema(),
+                                       prefer_timestamp_ntz=True)
+        units += md.num_row_groups
         nbytes += os.path.getsize(f)
-    return units, nbytes
+    if schema is None:
+        raise FileNotFoundError(path)
+    return schema, units, nbytes
 
 
 # Never spread a table bigger than this: at real scale a large table has
@@ -83,17 +97,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
     therefore every float64 partial sum — is exactly the sequential order
     the oracle's single-threaded scan uses, so the rounded results stay
     bit-identical (verified: an id-hash spread flipped group_stats
-    value_mean 58.5557→58.5558 at sf0.01; the group-key spread does not)."""
+    value_mean 58.5557→58.5558 at sf0.01; the group-key spread does not).
+
+    The footer read (:func:`_scan_footer`) also yields the schema, so no
+    read runs Spark's schema-inference job. When pyarrow cannot open the
+    path (a non-local filesystem, a missing table) the read falls back to
+    Spark's own inference and is NEVER spread — there is no chunk count to
+    decide on."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    if not spread:
-        return df
-    cpus = spark.sparkContext.defaultParallelism
     try:
-        units, nbytes = _scan_units(path)
-    except Exception:
-        return df
-    if units < cpus and nbytes < _SPREAD_MAX_BYTES:
+        schema, units, nbytes = _scan_footer(path)
+    except (OSError, ValueError, TypeError):  # unreadable footer / unmapped type
+        return spark.read.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
+    cpus = spark.sparkContext.defaultParallelism
+    if spread and units < cpus and nbytes < _SPREAD_MAX_BYTES:
         key = spread_key if spread_key is not None else _SPREAD_KEYS.get(name)
         if key is not None:
             cols = [F.col(k) for k in (key if isinstance(key, list) else [key])]
@@ -808,7 +826,8 @@ def q_media_features(spark, sf):
     not expressible in DuckDB 1.0) stays pytest-pinned."""
     from mimic_iv_etl_spark.operators import multimodal
 
-    media = spark.read.parquet(_ensure_media())
+    path = _ensure_media()
+    media = spark.read.schema(_scan_footer(path)[0]).parquet(path)
     feats = multimodal.decode_media(media, decoder=multimodal.fake_decoder)
     return feats.select(
         "media_id", "kind", "n_bytes",
@@ -821,10 +840,11 @@ def q_payload_decode(spark, sf):
     """U3 (input_hint mandate): vectorized JSON payload decode — JVM from_json
     and the Arrow pandas-UDF path must agree; returns the decoded columns.
     Oracle: DuckDB json_extract_string over the same generated log."""
+    from mimic_iv_etl_spark.cdc.replay import _tranche_schema
     from mimic_iv_etl_spark.functions import decode_payload_json
 
-    work = _ensure_decode_log()
-    raw = spark.read.parquet(os.path.join(work, "tranche-0"))
+    tranche = os.path.join(_ensure_decode_log(), "tranche-0")
+    raw = spark.read.schema(_tranche_schema(tranche)).parquet(tranche)
     out = decode_payload_json(raw)
     return out.select("conv_id", "turn_idx", "offset", "partition",
                       "role_decoded", "text_decoded", "tool_decoded")

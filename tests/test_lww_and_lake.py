@@ -247,6 +247,26 @@ def test_read_keys_point_lookup_prunes_and_pushes_down(spark, small_log, tmp_pat
     assert tbl.read_keys([]).count() == 0
 
 
+def test_read_keys_builds_without_spark_job(spark, small_log, tmp_path):
+    """read_keys routes its keys to buckets over a local relation: building
+    the point-lookup frame starts no Spark job, and it still returns
+    exactly read().filter(isin) — duplicate keys included."""
+    from mimic_iv_etl_spark.cdc.replay import replay_log
+    from tests.util import jobs_started
+
+    d, _, _ = small_log
+    tp = str(tmp_path / "t_keys_nojob")
+    replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA, batch_offsets=4000,
+               n_buckets=4)
+    tbl = LakeTable(spark, tp)
+    keys = ["conv-000000", "conv-000007", "conv-000007", "conv-999999"]
+    before = jobs_started(spark)
+    got = tbl.read_keys(keys)
+    assert jobs_started(spark) == before
+    want = tbl.read().filter(F.col("conv_id").isin(keys))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
 def test_manifest_segments_make_commits_o_batch(spark, tmp_path):
     """Iceberg-style manifest segments: an append commit writes ONE new
     segment holding exactly its staged entries and references prior segments

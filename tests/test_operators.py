@@ -302,6 +302,48 @@ def test_fused_paths_match_rowwise_apis(spark):
     assert fused == rowwise  # no empty docs here; fused drops token-less rows
 
 
+def _py4j_commands(spark, build) -> int:
+    """Py4J commands the driver sends while ``build()`` runs, with the
+    garbage collector paused so no JVM-reference release lands inside."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counted(*args, **kwargs):
+        nonlocal n
+        n += 1
+        return send(*args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        del client.send_command
+        gc.enable()
+    return n
+
+
+def test_near_dup_plans_build_in_constant_py4j_calls(spark, docs):
+    """The per-hash/per-band/per-bit expression families are SQL strings, so
+    plan construction costs a fixed number of Py4J round-trips whatever
+    ``k``/``bands``/``bits`` are (Column-chain builds took ~5k-20k), and
+    both signature aggregates stay HashAggregates."""
+    small = _py4j_commands(
+        spark, lambda: dedup.minhash_band_buckets(docs, k=32, bands=16))
+    wide = _py4j_commands(
+        spark, lambda: dedup.minhash_band_buckets(docs, k=128, bands=32))
+    assert wide <= small + 10, (small, wide)
+    assert _py4j_commands(spark, lambda: dedup._simhash_by_id(docs)) < 500
+    for df in (dedup.minhash_band_buckets(docs, k=128, bands=32),
+               dedup._simhash_by_id(docs)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+
+
 def test_minhash_family_estimates_jaccard(spark):
     """Guards the 2-base-hash rotate-XOR family (ANSI-safe recombination of
     xxhash64 pairs): signature agreement must estimate true shingle Jaccard

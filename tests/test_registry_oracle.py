@@ -4,11 +4,14 @@ query on Spark AND DuckDB at sf0.01 and compare row count + values exactly
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pandas as pd
 import pytest
 
 from mimic_iv_etl_spark import registry
+from tests.util import jobs_started
 
 SF = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -111,9 +114,71 @@ def test_scaled_features_moments_read_lineitem_unspread(spark, monkeypatch):
     already flipped group_stats). With every scan forced to qualify for the
     spread, the moment aggregate's input must still carry no repartition on
     l_orderkey."""
-    monkeypatch.setattr(registry, "_scan_units", lambda path: (1, 0))
+    footer = registry._scan_footer
+    monkeypatch.setattr(registry, "_scan_footer",
+                        lambda path: (footer(path)[0], 1, 0))
     df = registry.queries()["scaled_features"](spark, SF)
     plan = df._jdf.queryExecution().analyzed().toString()
     spreads = [ln for ln in plan.splitlines()
                if "RepartitionByExpression" in ln and "l_orderkey" in ln]
     assert not spreads, plan
+
+
+# Entries whose construction runs Spark jobs, each with the reason. Every
+# other entry must build its DataFrame without starting a job.
+BUILD_JOBS_ALLOWED = {
+    "ngram_jaccard_pairs": "ngram_jaccard localCheckpoints the candidate "
+                           "pairs and shingle sets eagerly",
+    "minhash_near_dups": "ngram_jaccard verify (eager localCheckpoint)",
+    "simhash_near_dups": "ngram_jaccard verify (eager localCheckpoint)",
+    "ivf_ann": "collects the pinned centroid vectors to the driver",
+    "embedding_near_dups": "counts the corpus up front to refuse an "
+                           "over-cap O(n²) cross join (max_rows)",
+    "csv_roundtrip": "writes the CSV it then reads back",
+}
+
+
+@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
+def test_registry_build_starts_no_spark_job(spark, name):
+    """Building a registry query is plan construction only: ``fn()`` starts
+    no Spark job (no schema-inference read, no eager action), except for
+    the allow-listed entries, which must still start one — so the list
+    stays exact and an entry that turns lazy comes off it. The measured
+    build is the second one: a first call may still materialize a generated
+    fixture (``cdc_replay`` replays its log into a fresh table)."""
+    registry.REGISTRY[name].fn(spark, SF)
+    before = jobs_started(spark)
+    registry.REGISTRY[name].fn(spark, SF)
+    started = jobs_started(spark) - before
+    if name in BUILD_JOBS_ALLOWED:
+        assert started > 0, f"{name} now builds lazily: drop it from the list"
+    else:
+        assert started == 0, f"{name}: {started} Spark job(s) while building"
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_matches_spark_inference(spark, sf):
+    """``_t`` hands the reader the schema mapped from the parquet footer; it
+    must be exactly the schema Spark's own inference yields, table by
+    table (names, types, nullability)."""
+    base = os.path.join(os.path.dirname(SF), sf)
+    for t in TABLES:
+        path = f"{base}/{t}.parquet"
+        assert registry._scan_footer(path)[0] == spark.read.parquet(path).schema, t
+
+
+def test_t_without_footer_falls_back_to_inference_unspread(spark, monkeypatch):
+    """When pyarrow cannot read the footer (a non-local filesystem), ``_t``
+    reads with Spark's inference and never spreads: same rows and schema
+    as the footer-schema read, and no repartition in the plan."""
+    want = registry._t(spark, SF, "events")
+
+    def unreadable(path):
+        raise OSError(f"cannot open {path}")
+
+    monkeypatch.setattr(registry, "_scan_footer", unreadable)
+    got = registry._t(spark, SF, "events")
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    plan = got._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression" not in plan, plan

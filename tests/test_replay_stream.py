@@ -214,3 +214,21 @@ def test_stream_evolved_log_locator_all_the_way(spark, evolved_log, tmp_path):
                                                           "latency_ms"]
     assert modes and all(m == "locator" for m in modes), modes
     assert_final_state_equal(table.read(), duckdb_final_state(d))
+
+
+def test_tranche_schema_matches_spark_inference(spark, evolved_log):
+    """Stream and replay take each tranche's schema from one pyarrow footer
+    read instead of a Spark inference job; on an evolving log with JSON
+    payloads it must equal Spark's inferred schema tranche by tranche."""
+    import glob
+    import os
+
+    from mimic_iv_etl_spark.cdc.replay import _tranche_schema
+
+    d, _, _ = evolved_log
+    tranches = sorted(glob.glob(os.path.join(d, "tranche-*")))
+    assert len(tranches) == 2
+    for t in tranches:
+        schema = _tranche_schema(t)
+        assert "payload" in schema.fieldNames()
+        assert schema == spark.read.parquet(t).schema, t

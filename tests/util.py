@@ -40,3 +40,12 @@ def assert_final_state_equal(engine_df, oracle_pdf: pd.DataFrame) -> None:
     want = normalize_pdf(oracle_pdf)
     assert list(got.columns) == list(want.columns), (got.columns, want.columns)
     pdt.assert_frame_equal(got, want, check_dtype=False)
+
+
+def jobs_started(spark) -> int:
+    """Highest Spark job id the status tracker has seen (-1: none yet), read
+    after the listener bus drains so a job a call just ran is counted. The
+    difference across a call is the number of jobs it started."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
