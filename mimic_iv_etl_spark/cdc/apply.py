@@ -11,12 +11,12 @@ or Structured Streaming ``foreachBatch``). Dataflow per batch:
    (union-by-name, int→long/float→double widening) *before* apply
    (SURVEY.md §4.3 item 5).
 3. **LWW dedup** — one winner per ``(conv_id, turn_idx)`` by
-   ``(ts, offset, partition)``. Default on dense-manifest logs: the
-   ``locator`` kernel (packed-stamp HashAggregate + exact bitmap fetch — no
-   sort, no wide shuffle; :func:`_locator_winners`). Fallbacks: skew-proof
-   ``max_by`` partial aggregation (reference precedent:
-   latest-record-per-key, ``feature_engineering.py:238-240``) and the
-   bucket-fused single-shuffle variant (``dedup_mode='bucket'``).
+   ``(ts, offset, partition)``, by one of two kernels chosen from the batch:
+   ``locator`` (packed-stamp HashAggregate + exact bitmap fetch — no sort,
+   no wide shuffle; :func:`_locator_winners`) whenever dense manifest ranges
+   are present and fit its bit and driver budgets, else ``agg`` (skew-proof
+   ``max_by`` partial aggregation; reference precedent:
+   latest-record-per-key, ``feature_engineering.py:238-240``).
 4. **Commit** — winners land as merge-on-read delta files (O(batch) IO),
    snapshot tagged with the updated applied-offset map; lineage rows
    (batch × source partition × offset range) and a throughput metrics row are
@@ -30,7 +30,7 @@ Offset-range bookkeeping rides an aggregate the batch already runs:
   without any scan. The manifest is verified, not blindly trusted: on the
   ``locator`` kernel two per-key counters (rows, rows outside the declared
   ranges) ride the locator HashAggregate and are summed from its Arrow
-  transfer; on every other kernel the ranges aggregate below must reproduce
+  transfer; on the ``agg`` kernel the ranges aggregate below must reproduce
   the declared ranges exactly. Any mismatch aborts before the write.
 - no manifest — the ≤P-row ``groupBy(partition)`` ranges aggregate runs first
   and IS the bookkeeping; a NULL partition aborts before the write.
@@ -51,8 +51,7 @@ from pyspark.sql import functions as F
 from mimic_iv_etl_spark.cdc.metrics import append_lineage, append_metrics
 from mimic_iv_etl_spark.cdc.profiling import phase
 from mimic_iv_etl_spark.lake.merge import (PACK_MAX_OFFSET, PACK_MAX_PARTITION,
-                                           lww_bucket_fused, lww_reduce,
-                                           lww_winner_locators)
+                                           lww_reduce, lww_winner_locators)
 from mimic_iv_etl_spark.lake.schema import merge_schemas, schemas_equal
 from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
 
@@ -265,7 +264,6 @@ def apply_batch(
     table: LakeTable,
     batch_df: DataFrame,
     batch_id: int,
-    dedup_mode: str = "agg",
     commit_noop: bool = False,
     write_salt: int = 1,
     decode_payload: bool = False,
@@ -289,19 +287,18 @@ def apply_batch(
     scaler: allocation-heavy parsing contends at high core counts).
     ``normalize=True`` likewise NFC-normalizes winner text only.
 
-    ``dedup_mode='locator'`` (requires ``manifest_ranges``) determines each
-    key's winning row by a narrow packed-stamp HashAggregate and then fetches
-    exactly those rows through an exact dense-offset bitmap probe — no sort,
-    no wide aggregate, no payload bytes on any shuffle (see
-    :func:`_locator_winners`). Falls back to ``'agg'`` when the manifest
-    ranges are absent or exceed the packed stamp's bit budget.
+    The LWW kernel is chosen from the batch, and ``stats["dedup_mode"]``
+    records which one ran. With ``manifest_ranges`` inside the packed
+    stamp's bit budget and ``locator_driver_budget``, the ``locator`` kernel
+    determines each key's winning row by a narrow packed-stamp HashAggregate
+    and then fetches exactly those rows through an exact dense-offset bitmap
+    probe — no sort, no wide aggregate, no payload bytes on any shuffle (see
+    :func:`_locator_winners`). Otherwise the ``agg`` kernel runs
+    (:func:`~mimic_iv_etl_spark.lake.merge.lww_reduce`: ``max_by`` with
+    map-side partial combine, skew-proof).
 
-    ``dedup_mode='bucket'`` fuses LWW dedup onto a bucket-aligned shuffle:
-    candidates are hash-partitioned once by the table's bucket expression
-    (plus a key-derived salt when ``write_salt > 1`` — hot-conversation
-    splitting), the per-key ``max_by`` runs in-partition with no further
-    exchange, and winners land in the writer ALREADY partitioned — exactly
-    ONE wide shuffle per batch instead of two.
+    ``write_salt > 1`` splits each bucket's write across that many tasks by
+    a hash of the full key — hot-conversation splitting on the write side.
 
     ``manifest_ranges`` — per-source-partition ``(min, max)`` offset ranges
     present in ``batch_df``, DENSE per the WAL contract (gapless per-partition
@@ -312,7 +309,7 @@ def apply_batch(
     partition, offset past the declared hi) or MISSING rows they claim
     (truncated/corrupt file) would otherwise advance ``applied_offsets`` past
     never-applied events — silent data loss. The locator kernel counts both
-    inside its own aggregate; the other kernels compare the ranges
+    inside its own aggregate; the agg kernel compares the ranges
     aggregate against the declared ranges. Any mismatch aborts with nothing
     written.
 
@@ -325,8 +322,8 @@ def apply_batch(
     driver round-trip (winner locators + offset bitmap). The pre-flight
     bound ``events_in_window × _LOCATOR_ROW_BYTES + window_bits / 8`` is
     checked against it; a batch over budget (misconfigured huge
-    ``batch_offsets``) degrades to ``dedup_mode='agg'`` instead of OOMing
-    the driver.
+    ``batch_offsets``) runs the ``agg`` kernel instead of OOMing the
+    driver.
 
     ``log_tail`` — per-source-partition FINAL offset of the log being
     consumed (replay: from the manifest; a live tail: the broker's
@@ -395,18 +392,16 @@ def apply_batch(
     # -- exactly-once: keep only offsets beyond the committed high-water mark --
     fresh = _hwm_filter(batch_df, applied)
 
-    if dedup_mode == "locator":
-        # locator needs the dense-manifest arithmetic ranges, the packed
-        # stamp's bit budget, and a bounded driver transfer; outside them the
-        # classic kernel is the answer. Winners ≤ events in the window, and
-        # the ranges are dense, so window_bits == events too.
-        window = sum(r["events"] for r in ranges) if ranges else 0
-        if not (ranges and _locator_supported(ranges)
-                and window * _LOCATOR_ROW_BYTES + window // 8
-                <= locator_driver_budget):
-            dedup_mode = "agg"
+    # -- LWW kernel, chosen from the batch: locator needs the dense-manifest
+    # arithmetic ranges, the packed stamp's bit budget, and a bounded driver
+    # transfer; outside them the agg kernel is the answer. Winners ≤ events
+    # in the window, and the ranges are dense, so window_bits == events too.
+    window = sum(r["events"] for r in ranges) if ranges else 0
+    dedup_mode = ("locator" if ranges and _locator_supported(ranges)
+                  and window * _LOCATOR_ROW_BYTES + window // 8
+                  <= locator_driver_budget else "agg")
 
-    if dedup_mode != "locator":
+    if dedup_mode == "agg":
         # the single bookkeeping aggregate: per-source-partition ranges
         # (≤P rows) — with a manifest, its exact cross-check
         with phase("ranges_aggregate"):
@@ -482,21 +477,12 @@ def apply_batch(
     # cross-check abort or any Spark error — or _staging/lww-bitmap-* dirs
     # leak (ADVICE r04)
     locator_cleanup = None
-    pre_partitioned = dedup_mode == "bucket"
     try:
-        if pre_partitioned:
-            # bucket computed BEFORE the (single) shuffle so the LWW agg and
-            # the partitioned write share one exchange
-            candidates = candidates.withColumn(BUCKET_COL, table.bucket_expr())
-            winners = lww_bucket_fused(
-                candidates, table.key_cols, bucket_col=BUCKET_COL,
-                num_buckets=table.n_buckets, salt=write_salt,
-            )
-        elif dedup_mode == "locator":
+        if dedup_mode == "locator":
             winners, locator_cleanup = _locator_winners(
                 candidates, table.key_cols, ranges, table.path)
         else:
-            winners = lww_reduce(candidates, table.key_cols, mode=dedup_mode)
+            winners = lww_reduce(candidates, table.key_cols)
         _wplan_t0 = time.monotonic()
         if late_decode:
             from mimic_iv_etl_spark.functions.textfns import decode_payload_json
@@ -512,8 +498,7 @@ def apply_batch(
             from mimic_iv_etl_spark.functions.textfns import normalize_text
 
             winners = winners.withColumn("text", normalize_text(F.col("text")))
-        if not pre_partitioned:
-            winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
+        winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
         _record("winners_plan", time.monotonic() - _wplan_t0)
 
         with phase("append_delta"):
@@ -522,7 +507,6 @@ def apply_batch(
                 new_schema=merged if evolved else None,
                 summary={"applied_offsets": new_applied, "batch_id": batch_id},
                 write_salt=write_salt,
-                pre_partitioned=pre_partitioned,
             )
     finally:
         if locator_cleanup is not None:

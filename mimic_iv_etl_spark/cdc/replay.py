@@ -120,7 +120,6 @@ def replay_log(
     schema=None,
     batch_offsets: int = 100_000,
     n_buckets: int = 32,
-    dedup_mode: str = "auto",
     compact_every: int | None = None,
     drop_payload: bool = True,
     write_salt: int = 1,
@@ -139,11 +138,10 @@ def replay_log(
     once at the end of the replay (one tiny Spark job per flush, amortized
     off the apply hot path); ``None`` disables.
 
-    ``dedup_mode='auto'`` (default) picks the packed-stamp ``locator`` LWW
-    kernel when the log manifest carries verified dense per-partition offset
-    ranges, and the classic ``agg`` kernel otherwise; explicit modes
-    (``agg`` / ``window`` / ``salted_window`` / ``bucket`` / ``locator``)
-    are passed through.
+    When the log manifest carries dense per-partition offset ranges, each
+    window's ranges go to ``apply_batch``, which then runs the packed-stamp
+    ``locator`` LWW kernel (verified inside its aggregate); without them it
+    runs the ``agg`` kernel.
     """
     if LakeTable.exists(table_path):
         table = LakeTable(spark, table_path)
@@ -211,12 +209,9 @@ def replay_log(
                     w_lo, w_hi = max(p_lo, start), min(p_hi, end - 1)
                     if w_lo <= w_hi:
                         window_ranges[p] = (w_lo, w_hi)
-            mode = dedup_mode
-            if mode == "auto":
-                mode = "locator" if window_ranges else "agg"
             def _apply_once():
                 return apply_batch(table, batch, batch_id=batch_seq,
-                                   dedup_mode=mode, write_salt=write_salt,
+                                   write_salt=write_salt,
                                    decode_payload=late_decode,
                                    normalize=normalize and late_decode,
                                    manifest_ranges=window_ranges,

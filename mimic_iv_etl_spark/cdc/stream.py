@@ -110,7 +110,6 @@ def stream_tranche(
     table: LakeTable,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    dedup_mode: str = "auto",
     on_batch: Callable[[int, dict], None] | None = None,
     drop_payload: bool = True,
     decode_payload: bool = False,
@@ -122,10 +121,9 @@ def stream_tranche(
     ``decode_payload``/``normalize`` run on LWW winners only inside
     ``apply_batch`` (the encoded-ingest shape).
 
-    ``dedup_mode='auto'`` (default) mirrors batch replay: each micro-batch's
-    dense per-partition offset ranges are looked up from the manifest's
-    per-file ranges (``_batch_ranges``), so foreachBatch runs the same
-    locator LWW kernel + arithmetic offset bookkeeping as ``replay_log`` —
+    Mirrors batch replay: each micro-batch's dense per-partition offset
+    ranges are looked up from the manifest's per-file ranges
+    (``_batch_ranges``), so foreachBatch runs the same locator LWW kernel + arithmetic offset bookkeeping as ``replay_log`` —
     no SortAggregate, no extra job on the hot path. Batches whose files
     aren't manifest-covered fall back to the ≤P-row ranges aggregate for
     their bookkeeping and the ``agg`` kernel.
@@ -157,12 +155,8 @@ def stream_tranche(
         if file_offsets:
             ranges = _batch_ranges(_batch_files(checkpoint_dir, epoch_id),
                                    file_offsets)
-        mode = dedup_mode
-        if mode == "auto":
-            mode = "locator" if ranges else "agg"
         def _apply_once():
             return apply_batch(table, batch_df, batch_id=epoch_id,
-                               dedup_mode=mode,
                                decode_payload=late_decode,
                                normalize=normalize,
                                manifest_ranges=ranges,
@@ -198,7 +192,6 @@ def stream_log(
     schema=None,
     n_buckets: int = 32,
     max_files_per_trigger: int = 1,
-    dedup_mode: str = "auto",
     on_batch: Callable[[int, dict], None] | None = None,
     decode_payload: bool = False,
     normalize: bool = False,
@@ -220,7 +213,6 @@ def stream_log(
             table,
             ckpt,
             max_files_per_trigger=max_files_per_trigger,
-            dedup_mode=dedup_mode,
             on_batch=on_batch,
             decode_payload=decode_payload,
             normalize=normalize,

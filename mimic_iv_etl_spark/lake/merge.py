@@ -1,36 +1,29 @@
-"""LWW reduction kernel — the engine's core dedup/merge primitive.
+"""LWW reduction kernels — the engine's core dedup/merge primitive.
 
 Semantics pinned by the reference's latest-record-per-key idiom
 (``feature_engineering.py:238-240``, SURVEY.md J7/W4), hardened with a total
 tiebreak: winner per key = max by ``(ts, _lww_offset, _lww_partition)``.
 
-Five interchangeable physical strategies (tests assert equivalence). The
-apply path's default on dense-manifest logs is the *locator* kernel
-(:func:`lww_winner_locators` + the bitmap fetch in ``cdc/apply.py``): a
-packed-decimal HashAggregate that never sorts and never moves payload bytes.
-The rest are :func:`lww_reduce` modes plus :func:`lww_bucket_fused`:
+Two kernels, chosen by ``cdc/apply.py::apply_batch`` from the batch itself:
 
-- ``agg`` (default): ``groupBy(keys).agg(max_by(struct(*), stamp))``.
-  **Map-side partial combine** — a hot key is reduced inside every map task
-  before the shuffle, so per-key skew cannot create a straggler. Caveat
-  discovered in round 3: because the aggregation buffer carries strings it is
-  not fixed-width, so Catalyst plans this as SortAggregate (partial sort per
-  map partition), not HashAggregate — correct and skew-proof, but the
-  sort+GC cost is why the locator kernel exists and is preferred.
-- ``window``: ``row_number() OVER (PARTITION BY keys ORDER BY stamp DESC)=1``
-  — the literal Spark translation of the reference idiom; shuffles every row
-  of a key to one task (skew-sensitive; kept for parity testing).
-- ``salted_window``: two-phase window with an explicit salt derived from the
-  LWW stamp — splits a hot key across ``salt_buckets`` tasks, reduces per
-  (key, salt), then re-reduces the (tiny) per-salt winners. The north rule's
-  "salted-key splitting" made concrete.
+- *locator* (:func:`lww_winner_locators` + the bitmap fetch in
+  ``cdc/apply.py``): a packed-decimal HashAggregate that never sorts and
+  never moves payload bytes. Needs the log manifest's dense offset ranges,
+  inside the packed stamp's bit budget and the driver-transfer budget.
+- *agg* (:func:`lww_reduce`): ``groupBy(keys).agg(max_by(struct, stamp))``
+  with **map-side partial combine** — a hot key is reduced inside every map
+  task before the shuffle, so per-key skew cannot create a straggler. The
+  aggregation buffer carries strings, so Catalyst plans SortAggregate (a
+  partial sort per map partition), not HashAggregate: correct and
+  skew-proof, but the sort+GC cost is why the locator kernel is preferred
+  wherever it applies.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_STAMP = ("ts", "_lww_offset", "_lww_partition")
@@ -40,59 +33,25 @@ def lww_reduce(
     df: DataFrame,
     key_cols: Sequence[str],
     stamp_cols: Sequence[str] = DEFAULT_STAMP,
-    mode: str = "agg",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """One winning row per ``key_cols``, chosen by lexicographic max of
     ``stamp_cols``. Column set/order of the input is preserved."""
     keys = list(key_cols)
     stamp = F.struct(*[F.col(c) for c in stamp_cols])
     cols = df.columns
-
-    if mode == "agg":
-        # key columns ride as the grouping key; duplicating them inside the
-        # max_by payload struct would re-shuffle the same bytes (~10% of the
-        # wide-row width for the transcript key) for nothing
-        nonkey = [c for c in cols if c not in keys]
-        payload = F.struct(*[F.col(c) for c in nonkey])
-        return (
-            df.groupBy(*keys)
-            .agg(F.max_by(payload, stamp).alias("_w"))
-            .select(*[
-                F.col(c) if c in keys else F.col(f"_w.{c}").alias(c)
-                for c in cols
-            ])
-        )
-
-    if mode == "window":
-        w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in stamp_cols])
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*cols)
-        )
-
-    if mode == "salted_window":
-        # salt is a pure function of the stamp → rows of one key spread over
-        # salt_buckets groups; winner-of-winners is exact because max is
-        # associative/commutative over disjoint row subsets.
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in stamp_cols]), F.lit(salt_buckets))
-        w1 = Window.partitionBy(*keys, "_salt").orderBy(
-            *[F.col(c).desc() for c in stamp_cols]
-        )
-        per_salt = (
-            df.withColumn("_salt", salt)
-            .withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-        )
-        w2 = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in stamp_cols])
-        return (
-            per_salt.withColumn("_rn2", F.row_number().over(w2))
-            .filter(F.col("_rn2") == 1)
-            .select(*cols)
-        )
-
-    raise ValueError(f"unknown lww mode: {mode}")
+    # key columns ride as the grouping key; duplicating them inside the
+    # max_by payload struct would re-shuffle the same bytes (~10% of the
+    # wide-row width for the transcript key) for nothing
+    nonkey = [c for c in cols if c not in keys]
+    payload = F.struct(*[F.col(c) for c in nonkey])
+    return (
+        df.groupBy(*keys)
+        .agg(F.max_by(payload, stamp).alias("_w"))
+        .select(*[
+            F.col(c) if c in keys else F.col(f"_w.{c}").alias(c)
+            for c in cols
+        ])
+    )
 
 
 # Packed-stamp layout: ts_micros × 2^52 + offset × 2^16 + partition, as
@@ -155,52 +114,4 @@ def lww_winner_locators(
             F.shiftright(F.col("_low"), 16).alias("o"),
             "n", "n_out",
         )
-    )
-
-
-def lww_bucket_fused(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    bucket_col: str,
-    num_buckets: int,
-    salt: int = 1,
-    stamp_cols: Sequence[str] = DEFAULT_STAMP,
-) -> DataFrame:
-    """LWW reduce fused onto a bucket-aligned shuffle — ONE wide exchange.
-
-    ``df`` must already carry ``bucket_col`` (a pure function of the first key
-    column). Rows are hash-partitioned by ``(bucket[, key-salt])``; because the
-    partitioning expressions are a subset of the grouping keys
-    ``(bucket[, salt], *keys)``, Catalyst inserts NO further exchange for the
-    aggregation, and the winners leave this function still partitioned by
-    bucket — a downstream bucket-partitioned writer needs no repartition
-    either. Net: the classic plan's two wide shuffles (hash-by-key aggregate
-    exchange + bucket write exchange) collapse into one.
-
-    ``salt > 1`` splits hot buckets: the salt is a deterministic function of
-    the FULL key, so every row of one key stays in one partition (LWW remains
-    exact) while a hot conversation's many turns spread over ``salt``
-    partitions — the north rule's salted-key splitting.
-    """
-    keys = list(key_cols)
-    stamp = F.struct(*[F.col(c) for c in stamp_cols])
-    cols = [c for c in df.columns if c != bucket_col]
-    nonkey = [c for c in cols if c not in keys]
-    payload = F.struct(*[F.col(c) for c in nonkey])
-
-    group = [bucket_col, *keys]
-    if salt > 1:
-        df = df.withColumn(
-            "_wsalt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(salt)).cast("int"),
-        )
-        parts = df.repartition(num_buckets * salt, F.col(bucket_col), F.col("_wsalt"))
-        group = [bucket_col, "_wsalt", *keys]
-    else:
-        parts = df.repartition(num_buckets, F.col(bucket_col))
-
-    out = parts.groupBy(*group).agg(F.max_by(payload, stamp).alias("_w"))
-    return out.select(
-        F.col(bucket_col),
-        *[F.col(c) if c in keys else F.col(f"_w.{c}").alias(c) for c in cols],
     )

@@ -12,11 +12,15 @@ chunk of file entries: path, bucket, schema_id, rows — see the manifest
 comment block below; an append commit writes O(batch) metadata, never the
 full O(table) list), the schema history, and a free-form ``summary`` dict.
 Commits are optimistic:
-``v{N}.json`` is created with O_EXCL, so a lost race surfaces as
-``CommitConflict`` instead of silent corruption; crash *between* staging data
-files and writing the snapshot leaves only unreferenced orphans (the commit
-point is one atomic file creation) — this is the idempotent-commit foundation
-for the engine's exactly-once story (SURVEY.md §4.3 item 4).
+the snapshot is written and fsynced to a hidden tmp file, then ``os.link``ed
+to its ``v{N}.json`` name, so a lost race surfaces as ``CommitConflict``
+(EEXIST) instead of silent corruption, and the name only ever appears with
+complete content. A crash *between* staging data files and linking the
+snapshot leaves only unreferenced orphans (the commit point is one atomic
+link) — this is the idempotent-commit foundation for the engine's
+exactly-once story (SURVEY.md §4.3 item 4). The metadata directory must be
+on a filesystem with hardlinks; without them every commit raises a clear
+``OSError``.
 
 Reads prune at bucket granularity (the file list is bucket-keyed) and handle
 per-file schema ids: files written before a schema evolution are read with
@@ -211,32 +215,20 @@ class LakeTable:
 
     def refresh(self) -> "LakeTable":
         """Load the current snapshot. ``version-hint.txt`` is a HINT, not
-        the commit point (the v{N}.json O_EXCL create is): a crash between
-        snapshot fsync and hint replace leaves the hint one behind, and
-        trusting it would wedge every later commit in O_EXCL conflicts on
-        the already-committed version. So probe forward from the hint —
-        one extra stat per refresh in the common case, and the next
-        successful commit repairs the hint."""
+        the commit point (the ``os.link`` of v{N}.json is): a crash between
+        the link and the hint replace leaves the hint one behind, and
+        trusting it would wedge every later commit in link conflicts on the
+        already-committed version. So probe forward from the hint — one
+        extra stat per refresh in the common case, and the next successful
+        commit repairs the hint. A linked name always holds complete
+        content, so the newest one found is read as is."""
         hint = os.path.join(self._meta_dir, "version-hint.txt")
         with open(hint) as f:
-            hinted = int(f.read().strip())
-        version = hinted
+            version = int(f.read().strip())
         while os.path.exists(os.path.join(self._meta_dir,
                                           f"v{version + 1}.json")):
             version += 1
-        while version > hinted:
-            # a probed-forward file may be a concurrent writer's in-flight
-            # creation (exists before its fsync completes) — fall back to
-            # the newest fully-parseable snapshot; the hinted one always
-            # parses (it was fsynced before the hint moved)
-            try:
-                with open(os.path.join(self._meta_dir,
-                                       f"v{version}.json")) as f:
-                    self.snapshot = json.load(f)
-                return self
-            except (json.JSONDecodeError, FileNotFoundError):
-                version -= 1
-        with open(os.path.join(self._meta_dir, f"v{hinted}.json")) as f:
+        with open(os.path.join(self._meta_dir, f"v{version}.json")) as f:
             self.snapshot = json.load(f)
         return self
 
@@ -549,7 +541,6 @@ class LakeTable:
     def _stage_write(
         self, state_df: DataFrame, public: T.StructType, schema_id: int, kind: str,
         write_salt: int = 1, n_buckets: int | None = None,
-        pre_partitioned: bool = False,
         cluster_by: list[str] | None = None, split: int = 1,
     ) -> list[dict]:
         """Write ``state_df`` (internal schema + ``_bucket`` routing column) as
@@ -569,15 +560,11 @@ class LakeTable:
         # (file explosion is the classic MoR ingest killer at scale).
         # write_salt > 1 splits a bucket across that many writer tasks — the
         # north rule's salted-key splitting applied to hot-conversation
-        # buckets (salt derives from the second key column, so rows of one
-        # conversation still land in one bucket dir, just in ≤salt files).
+        # buckets (salt hashes all key columns; the bucket itself derives
+        # from ``bucket_by`` alone, so rows of one conversation still land
+        # in one bucket dir, just in ≤salt files).
         n_buckets = self.n_buckets if n_buckets is None else n_buckets
-        if pre_partitioned:
-            # caller guarantees the rows are already hash-partitioned by
-            # BUCKET_COL (e.g. the fused LWW plan) — repartitioning again
-            # would re-shuffle every winner byte for an identical layout
-            pass
-        elif cluster_by:
+        if cluster_by:
             # clustered layout (compaction's data-skipping path): range-
             # partition on (bucket, cluster cols) — each task holds one
             # contiguous cluster-key range of (mostly) one bucket, so with
@@ -723,7 +710,7 @@ class LakeTable:
         rebase=None,
     ) -> "LakeTable":
         """Optimistic snapshot commit. ``rebase`` (zero-arg → base segment
-        list) is the concurrent-writer story: on a lost O_EXCL race the
+        list) is the concurrent-writer story: on a lost link race the
         handle refreshes to the winner, revalidates layout invariants
         (:meth:`_rebase_guard`), recomputes the base segments against the
         winner's snapshot, and re-points the SAME already-written new-entry
@@ -780,7 +767,6 @@ class LakeTable:
         winners_df: DataFrame,
         new_schema: T.StructType | None = None,
         write_salt: int = 1,
-        pre_partitioned: bool = False,
     ) -> tuple[list[dict], int, dict]:
         """First half of :meth:`append_delta`: run the write job and land the
         delta files in ``data/`` WITHOUT committing a snapshot. Returns
@@ -790,8 +776,7 @@ class LakeTable:
         :meth:`discard_staged` at no cost."""
         public, schema_id, schemas = self._next_schema(new_schema)
         entries = self._stage_write(winners_df, public, schema_id, "delta",
-                                    write_salt=write_salt,
-                                    pre_partitioned=pre_partitioned)
+                                    write_salt=write_salt)
         return entries, schema_id, schemas
 
     def commit_delta(
@@ -844,15 +829,13 @@ class LakeTable:
         new_schema: T.StructType | None = None,
         summary: dict | None = None,
         write_salt: int = 1,
-        pre_partitioned: bool = False,
     ) -> "LakeTable":
         """Merge-on-read upsert commit: append per-batch LWW winners (internal
         schema + ``_bucket``) as delta files. Never reads existing data —
         ingest cost is O(batch). ``summary['applied_offsets']`` must be the
         full updated map (the exactly-once source of truth)."""
         entries, schema_id, schemas = self.stage_delta(
-            winners_df, new_schema=new_schema, write_salt=write_salt,
-            pre_partitioned=pre_partitioned)
+            winners_df, new_schema=new_schema, write_salt=write_salt)
         return self.commit_delta(entries, schema_id, schemas, summary)
 
     def overwrite_buckets(
@@ -1010,24 +993,15 @@ class LakeTable:
         live_manifests: set[str] = set()
         for fn in os.listdir(self._meta_dir):
             if fn.startswith("v") and fn.endswith(".json"):
-                try:
-                    with open(os.path.join(self._meta_dir, fn)) as f:
-                        snap = json.load(f)
-                except json.JSONDecodeError:
-                    # a torn snapshot (dead writer, not yet quarantined by
-                    # the next commit): it never committed — the O_EXCL
-                    # winner is only durable once parseable — so it anchors
-                    # no references; its staged files age out below
-                    continue
+                with open(os.path.join(self._meta_dir, fn)) as f:
+                    snap = json.load(f)
                 live_manifests |= set(snap.get("manifests", []))
                 referenced |= {e["path"]
                                for e in _files_of(self._meta_dir, snap)}
-            elif ".json.corrupt-" in fn or (fn.startswith(".v")
-                                            and fn.endswith(".tmp")):
+            elif fn.startswith(".v") and fn.endswith(".tmp"):
                 p = os.path.join(self._meta_dir, fn)
                 if now - os.path.getmtime(p) >= grace_seconds:
-                    # quarantined torn snapshots and crash-orphaned link-
-                    # commit tmp files age out
+                    # crash-orphaned link-commit tmp files age out
                     try:
                         os.remove(p)
                     except FileNotFoundError:
@@ -1215,24 +1189,11 @@ def _align(df: DataFrame, target: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
-# age beyond which an UNPARSEABLE snapshot file is judged a dead writer's
-# torn create (crash between O_EXCL open and fsync) rather than a concurrent
-# writer mid-fsync; generous vs the ms-scale write of a KB-scale JSON
-_TORN_SNAPSHOT_GRACE_S = 60.0
-
-
 def _write_snapshot(meta_dir: str, snap: dict) -> None:
     """Atomic commit point: the snapshot is fully written and fsynced to a
     hidden tmp file, then ``os.link``ed to its ``v{N}.json`` name — EEXIST
     IS the conflict signal, and the commit name only ever appears with
-    complete content, so torn snapshots cannot exist (ADVICE r05: the old
-    O_EXCL-create-then-write protocol made content durability a separate
-    step, and the torn-file quarantine it required could steal the slot of
-    a live writer paused longer than the grace between create and write —
-    an exactly-once violation). The quarantine below remains only to HEAL
-    tables holding a corpse from a pre-link-protocol writer crash; with the
-    link commit no new writer can produce one, so taking such a slot no
-    longer races a paused-but-alive writer."""
+    complete content, so torn snapshots cannot exist."""
     path = os.path.join(meta_dir, f"v{snap['version']}.json")
     tmp = os.path.join(meta_dir, f".v{snap['version']}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
@@ -1242,20 +1203,6 @@ def _write_snapshot(meta_dir: str, snap: dict) -> None:
     try:
         os.link(tmp, path)
     except FileExistsError as e:
-        try:
-            with open(path) as f:
-                json.load(f)
-        except (json.JSONDecodeError, FileNotFoundError):
-            # legacy torn corpse (unparseable AND old): quarantine + retake
-            try:
-                age = time.time() - os.path.getmtime(path)
-                if age > _TORN_SNAPSHOT_GRACE_S:
-                    os.replace(path, path + f".corrupt-{uuid.uuid4().hex}")
-                    os.remove(tmp)
-                    return _write_snapshot(meta_dir, snap)
-            except FileNotFoundError:
-                os.remove(tmp)
-                return _write_snapshot(meta_dir, snap)  # another writer healed it
         os.remove(tmp)
         raise CommitConflict(f"snapshot v{snap['version']} already exists") from e
     except FileNotFoundError as e:

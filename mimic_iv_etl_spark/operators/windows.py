@@ -56,7 +56,7 @@ def latest_record_per_key(df: DataFrame, key_cols: Sequence[str],
     emulates this with a max-aggregate + join-back + equality filter — two
     shuffles and wrong under ties). Single skew-proof ``max_by`` partial agg:
     the same kernel the CDC engine uses for LWW dedup."""
-    return lww_reduce(df, key_cols, stamp_cols=order_cols, mode="agg")
+    return lww_reduce(df, key_cols, stamp_cols=order_cols)
 
 
 def ratio_to_group_total(df: DataFrame, group_cols: Sequence[str],

@@ -310,7 +310,7 @@ def q_lww_state(spark, sf):
     out = lww_reduce(_t(spark, sf, "events",
                         spread_key=["user_id", "event_type"]),
                      ["user_id", "event_type"],
-                     stamp_cols=("ts", "event_id"), mode="agg")
+                     stamp_cols=("ts", "event_id"))
     return out.select("user_id", "event_type", "event_id", "value", "ts")
 
 

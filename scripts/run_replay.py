@@ -36,9 +36,6 @@ def main() -> None:
     p.add_argument("--batch-offsets", type=int, default=1_000_000)
     p.add_argument("--buckets", type=int, default=32)
     p.add_argument("--compact-every", type=int, default=None)
-    p.add_argument("--dedup-mode", default="auto",
-                   choices=["auto", "agg", "window", "salted_window", "bucket",
-                            "locator"])
     p.add_argument("--decode-payload", action="store_true",
                    help="events arrive JSON-encoded; decode winners post-LWW")
     p.add_argument("--normalize", action="store_true",
@@ -72,7 +69,6 @@ def main() -> None:
         schema=schema,
         batch_offsets=args.batch_offsets,
         n_buckets=args.buckets,
-        dedup_mode=args.dedup_mode,
         compact_every=args.compact_every,
         decode_payload=args.decode_payload,
         normalize=args.normalize,

@@ -34,11 +34,21 @@ def _batches(df, n_batches, n_partitions, total):
     ]
 
 
-@pytest.mark.parametrize("mode", ["agg", "salted_window"])
-def test_single_batch_replay_matches_oracle(spark, small_log, tmp_path, mode):
-    d, spec, _ = small_log
-    tbl = LakeTable.create(spark, str(tmp_path / f"t_{mode}"), TRANSCRIPT_SCHEMA, n_buckets=8)
-    stats = apply_batch(tbl, _load_log(spark, d).drop("payload"), batch_id=0, dedup_mode=mode)
+@pytest.mark.parametrize("kernel", ["agg", "locator"])
+def test_single_batch_replay_matches_oracle(spark, small_log, tmp_path, kernel):
+    """The LWW kernel follows the input: without manifest ranges the batch
+    runs ``agg``; with the log's dense per-partition ranges it runs
+    ``locator``. Both land the oracle state."""
+    d, spec, manifest = small_log
+    ranges = None
+    if kernel == "locator":
+        (tranche,) = manifest["tranches"]  # small_log has no evolution point
+        ranges = {int(p): (int(lo), int(hi))
+                  for p, (lo, hi) in tranche["partition_offsets"].items()}
+    tbl = LakeTable.create(spark, str(tmp_path / f"t_{kernel}"), TRANSCRIPT_SCHEMA, n_buckets=8)
+    stats = apply_batch(tbl, _load_log(spark, d).drop("payload"), batch_id=0,
+                        manifest_ranges=ranges)
+    assert stats["dedup_mode"] == kernel
     assert stats["events_applied"] == spec.n_events
     assert stats["winners"] > 0
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -193,8 +203,7 @@ def test_null_partition_aborts_before_write(spark, small_log, tmp_path, mode):
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     v0 = tbl.version
     with pytest.raises(RuntimeError, match="NULL partition"):
-        apply_batch(tbl, batch, batch_id=0, dedup_mode=mode,
-                    manifest_ranges=manifest)
+        apply_batch(tbl, batch, batch_id=0, manifest_ranges=manifest)
     tbl2 = LakeTable(spark, tp)
     assert tbl2.version == v0
     assert tbl2.applied_offsets == {}

@@ -515,49 +515,6 @@ def test_stale_hint_recovery(spark, tmp_path):
         assert int(f.read().strip()) == v + 1  # hint repaired by the commit
 
 
-def test_torn_snapshot_recovery(spark, tmp_path):
-    """A writer that died between O_EXCL create and fsync leaves an
-    unparseable snapshot that would otherwise block the chain forever.
-    Readers fall back to the newest parseable snapshot; the next commit
-    quarantines the old corpse and takes its slot. A FRESH unparseable file
-    (a concurrent writer mid-fsync) is NOT stolen."""
-    import glob
-    import os
-    import time as _time
-
-    from mimic_iv_etl_spark.lake.table import (_TORN_SNAPSHOT_GRACE_S,
-                                               _write_snapshot)
-
-    path = str(tmp_path / "t_torn")
-    t1 = _mk_table(spark, path)
-    v = t1.version
-    corpse = os.path.join(path, "metadata", f"v{v + 1}.json")
-    with open(corpse, "w") as f:
-        f.write("{")  # torn mid-write
-    old = _time.time() - _TORN_SNAPSHOT_GRACE_S - 30
-    os.utime(corpse, (old, old))
-
-    t2 = LakeTable(spark, path)
-    assert t2.version == v  # reader falls back past the corpse
-    t2.commit_summary({"batch_id": 7})  # quarantines + takes the slot
-    assert t2.version == v + 1
-    assert t2.summary["batch_id"] == 7
-    assert glob.glob(corpse + ".corrupt-*"), "corpse not quarantined"
-
-    # fresh unparseable file = concurrent writer mid-fsync → plain conflict
-    inflight = os.path.join(path, "metadata", f"v{v + 2}.json")
-    with open(inflight, "w") as f:
-        f.write("{")
-    with pytest.raises(CommitConflict):
-        _write_snapshot(os.path.join(path, "metadata"),
-                        {"version": v + 2})
-
-    # vacuum neither crashes on the live torn file nor keeps old corpses
-    t2.vacuum(grace_seconds=0.0)
-    assert not glob.glob(corpse + ".corrupt-*")
-    os.remove(inflight)
-
-
 def test_pinned_handle_never_rebases(spark, tmp_path):
     """Time-travel handles are read-only: they raise immediately instead of
     joining the retry loop (a pinned snapshot must never silently advance)."""

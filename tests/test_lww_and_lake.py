@@ -1,4 +1,4 @@
-"""Unit tests: LWW reduce strategies, lake table commits, schema merge."""
+"""Unit tests: LWW reduce, lake table commits, schema merge."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mimic_iv_etl_spark.lake.merge import lww_reduce
+from mimic_iv_etl_spark.lake.merge import lww_reduce, lww_winner_locators
 from mimic_iv_etl_spark.lake.schema import merge_schemas, widen
 from mimic_iv_etl_spark.lake.table import BUCKET_COL, CommitConflict, LakeTable
 from tests.util import TRANSCRIPT_SCHEMA
@@ -44,30 +44,20 @@ EXPECT = {("a", 0): ("v2", False), ("a", 1): ("t2", False),
           ("b", 0): (None, True), ("c", 0): ("p1", False)}
 
 
-@pytest.mark.parametrize("mode", ["agg", "window", "salted_window"])
-def test_lww_reduce_semantics(spark, mode):
-    out = lww_reduce(_cand(spark, ROWS), ["conv_id", "turn_idx"], mode=mode, salt_buckets=3)
-    got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["_deleted"]) for r in out.collect()}
+@pytest.mark.parametrize("kernel", ["agg", "locator"])
+def test_lww_reduce_semantics(spark, kernel):
+    """Both LWW kernels pick the same winners on the tie cases: the agg
+    kernel returns the rows, the locator kernel their (partition, offset)
+    coordinates, which are unique in ROWS."""
+    keys = ["conv_id", "turn_idx"]
+    if kernel == "agg":
+        out = lww_reduce(_cand(spark, ROWS), keys).collect()
+        got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["_deleted"]) for r in out}
+    else:
+        by_loc = {(p, o): ((c, t), (x, d)) for (c, t, x, _, o, p, d) in ROWS}
+        got = dict(by_loc[(r["p"], r["o"])]
+                   for r in lww_winner_locators(_cand(spark, ROWS), keys).collect())
     assert got == EXPECT
-
-
-def test_lww_modes_equivalent_on_random_data(spark, small_log):
-    d, _, _ = small_log
-    df = (
-        spark.read.parquet(f"{d}/tranche-0")
-        .withColumnRenamed("offset", "_lww_offset")
-        .withColumnRenamed("partition", "_lww_partition")
-        .withColumn("_deleted", F.col("op") == "D")
-        .drop("op", "payload")
-    )
-    outs = [
-        lww_reduce(df, ["conv_id", "turn_idx"], mode=m)
-        .orderBy("conv_id", "turn_idx")
-        .collect()
-        for m in ("agg", "window", "salted_window")
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) > 0
 
 
 def test_widen_rules():

@@ -1,6 +1,7 @@
 """Round-3 apply-path mechanics: manifest-driven arithmetic offset
-bookkeeping, the bucket-fused single-shuffle LWW plan, the literal-predicate
-exactly-once filter, manifest backfill, and sidecar auto-flush.
+bookkeeping, the locator LWW kernel and its fallback to agg, the
+literal-predicate exactly-once filter, manifest backfill, and sidecar
+auto-flush.
 
 All end-state assertions go through the independent DuckDB oracle
 (``cdc/oracle.py``) — the same per-turn text-equality gate as the rest of the
@@ -26,25 +27,25 @@ from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
 from mimic_iv_etl_spark.cdc.metrics import read_lineage, read_metrics
 from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.cdc.replay import replay_log
-from mimic_iv_etl_spark.lake.merge import lww_bucket_fused, lww_reduce
-from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
+from mimic_iv_etl_spark.lake.merge import lww_reduce
+from mimic_iv_etl_spark.lake.table import LakeTable
 from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal
 
 
-@pytest.mark.parametrize("mode", ["auto", "agg"])
 def test_replay_uses_manifest_arithmetic_and_matches_oracle(
-        spark, small_log, tmp_path, mode):
+        spark, small_log, tmp_path):
     """The generator's manifest carries dense per-partition offset ranges, so
     the whole replay does its exactly-once bookkeeping with no extra job
-    ('auto': the cross-check rides the locator aggregate) — and still lands oracle-equal state with exact
-    per-partition lineage. 'auto' resolves to the packed-stamp locator
-    kernel, so this run IS the locator correctness gate (ties, late
-    arrivals, deletes, hot keys — all through the independent oracle)."""
+    (the cross-check rides the locator aggregate) — and still lands
+    oracle-equal state with exact per-partition lineage. The manifest
+    selects the packed-stamp locator kernel, so this run IS the locator
+    correctness gate (ties, late arrivals, deletes, hot keys — all through
+    the independent oracle)."""
     d, spec, manifest = small_log
     assert all(t["dense_offsets"] for t in manifest["tranches"])
-    tp = str(tmp_path / f"t_manifest_{mode}")
+    tp = str(tmp_path / "t_manifest")
     out = replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA,
-                     batch_offsets=700, n_buckets=8, dedup_mode=mode)
+                     batch_offsets=700, n_buckets=8)
     assert out["events_applied"] == spec.n_events
     tbl = LakeTable(spark, tp)
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -85,7 +86,7 @@ def test_locator_kernel_is_hash_aggregate_and_matches_agg(spark, small_log):
     assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
 
     got = {(r["p"], r["o"]) for r in locs.collect()}
-    agg = lww_reduce(cand, ["conv_id", "turn_idx"], mode="agg")
+    agg = lww_reduce(cand, ["conv_id", "turn_idx"])
     want = {(r["_lww_partition"], r["_lww_offset"]) for r in agg.collect()}
     assert got == want
 
@@ -112,7 +113,8 @@ def test_locator_resume_with_different_windows(spark, small_log, tmp_path):
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     df = spark.read.parquet(tranche).drop("payload")
     stats1 = apply_batch(tbl, df.filter(F.col("offset") < 1100), batch_id=0,
-                         dedup_mode="locator", manifest_ranges=window0)
+                         manifest_ranges=window0)
+    assert stats1["dedup_mode"] == "locator"
     assert 0 < stats1["events_applied"] < spec.n_events
     # resume with 700-wide windows: window [700, 1400) straddles the
     # committed high-water marks — 700..1099 stale, 1100..1399 fresh
@@ -134,58 +136,6 @@ def test_locator_bit_budget_fallback():
         [{"partition": 70_000, "min_offset": 0, "max_offset": 10}])
     assert not _locator_supported(
         [{"partition": 0, "min_offset": 0, "max_offset": 1 << 37}])
-
-
-@pytest.mark.parametrize("salt", [1, 4])
-def test_bucket_fused_dedup_matches_oracle(spark, small_log, tmp_path, salt):
-    """dedup_mode='bucket': one wide shuffle, winners land pre-partitioned;
-    final state identical to the classic agg plan and the oracle; file count
-    stays bounded by the partition layout."""
-    d, spec, _ = small_log
-    tp = str(tmp_path / f"t_fused_{salt}")
-    out = replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA,
-                     batch_offsets=1_000, n_buckets=8,
-                     dedup_mode="bucket", write_salt=salt)
-    assert out["events_applied"] == spec.n_events
-    tbl = LakeTable(spark, tp)
-    assert_final_state_equal(tbl.read(), duckdb_final_state(d))
-    # every commit stages at most n_buckets × salt files (the pre-partitioned
-    # write must not explode into tasks × buckets tiny files)
-    history = sorted(tbl.history(), key=lambda s: s["version"])
-    for prev, cur in zip(history, history[1:]):
-        prev_paths = {e["path"]
-                      for e in tbl.at_version(prev["version"]).files}
-        added = [e for e in tbl.at_version(cur["version"]).files
-                 if e["path"] not in prev_paths]
-        assert len(added) <= 8 * salt
-
-
-def test_bucket_fused_is_single_exchange(spark):
-    """The fused plan's physical signature: exactly ONE Exchange between scan
-    and winners (vs two in the classic agg + bucket-repartition chain)."""
-    df = spark.range(1000).select(
-        F.concat(F.lit("c"), (F.col("id") % 37).cast("string")).alias("conv_id"),
-        (F.col("id") % 5).cast("int").alias("turn_idx"),
-        F.col("id").cast("timestamp").alias("ts"),
-        F.lit(False).alias("_deleted"),
-        F.col("id").alias("_lww_offset"),
-        F.lit(0).cast("int").alias("_lww_partition"),
-    ).withColumn(BUCKET_COL,
-                 F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int"))
-    fused = lww_bucket_fused(df, ["conv_id", "turn_idx"], BUCKET_COL, 8)
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-
-    classic = lww_reduce(df.drop(BUCKET_COL), ["conv_id", "turn_idx"]) \
-        .withColumn(BUCKET_COL, F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")) \
-        .repartition(8, F.col(BUCKET_COL))
-    classic_plan = classic._jdf.queryExecution().executedPlan().toString()
-    assert classic_plan.count("Exchange") == 2, classic_plan
-
-    # and the two plans agree row-for-row
-    a = {tuple(r) for r in fused.drop(BUCKET_COL).collect()}
-    b = {tuple(r) for r in classic.drop(BUCKET_COL).collect()}
-    assert a == b
 
 
 def test_hwm_literal_predicate_equals_join_path(spark, small_log, tmp_path,
@@ -285,7 +235,7 @@ def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_budget")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    stats = apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
+    stats = apply_batch(tbl, df, batch_id=0,
                         manifest_ranges=ranges, locator_driver_budget=1024)
     assert stats["dedup_mode"] == "agg"
     assert stats["events_applied"] == spec.n_events
@@ -319,8 +269,7 @@ def test_locator_handles_more_than_64_partitions(spark, tmp_path):
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_manyparts")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    stats = apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                        manifest_ranges=ranges)
+    stats = apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
     assert stats["dedup_mode"] == "locator"
     assert stats["events_applied"] == spec.n_events
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -366,8 +315,7 @@ def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     v0 = tbl.version
     with pytest.raises(RuntimeError, match="cross-check"):
-        apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                    manifest_ranges=ranges)
+        apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
     tbl2 = LakeTable(spark, tp)
     assert tbl2.version == v0
     assert tbl2.applied_offsets == {}
@@ -389,8 +337,9 @@ def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
     degrade to membership-plus-count. Corruption scenario: one in-range row
     missing and one out-of-range row added in the same declared partition —
     n_total matches and partition membership passes, so a membership-only
-    check would commit a desynced applied_offsets map. Exercised in agg mode
-    (no driver-side winner cross-check to catch it instead)."""
+    check would commit a desynced applied_offsets map. Exercised on the agg
+    kernel, reached with a zero locator driver budget (no driver-side
+    winner cross-check to catch it instead)."""
     from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
 
     d = str(tmp_path / "log_valcap")
@@ -412,8 +361,8 @@ def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
     tp = str(tmp_path / "t_valcap")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     with pytest.raises(RuntimeError, match="cross-check"):
-        apply_batch(tbl, bad, batch_id=0, dedup_mode="agg",
-                    manifest_ranges=ranges)
+        apply_batch(tbl, bad, batch_id=0, manifest_ranges=ranges,
+                    locator_driver_budget=0)
     tbl2 = LakeTable(spark, tp)
     assert tbl2.applied_offsets == {}
     assert tbl2.read().count() == 0
@@ -432,12 +381,12 @@ def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
               for p, r in t_meta["partition_offsets"].items()}
     del ranges[max(ranges)]  # data still holds this partition's rows
     df = spark.read.parquet(tranche).drop("payload")
-    for mode in ("locator", "agg"):
+    # the default budget selects locator; a zero budget forces agg
+    for mode, kw in (("locator", {}), ("agg", {"locator_driver_budget": 0})):
         tp = str(tmp_path / f"t_val_undecl_{mode}")
         tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
         with pytest.raises(RuntimeError, match="cross-check"):
-            apply_batch(tbl, df, batch_id=0, dedup_mode=mode,
-                        manifest_ranges=ranges)
+            apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges, **kw)
         tbl2 = LakeTable(spark, tp)
         assert tbl2.applied_offsets == {}
         assert tbl2.read().count() == 0

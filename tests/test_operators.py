@@ -303,17 +303,23 @@ def test_fused_paths_match_rowwise_apis(spark):
 
 
 def _py4j_commands(spark, build) -> int:
-    """Py4J commands the driver sends while ``build()`` runs, with the
-    garbage collector paused so no JVM-reference release lands inside."""
+    """Py4J commands the calling thread sends while ``build()`` runs, with
+    the garbage collector paused so no JVM-reference release lands inside.
+    Only the calling thread counts: Py4J's finalizer thread sends its
+    memory-release commands whenever it runs, and those are not plan
+    construction."""
     import gc
+    import threading
 
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     n = 0
 
     def counted(*args, **kwargs):
         nonlocal n
-        n += 1
+        if threading.get_ident() == caller:
+            n += 1
         return send(*args, **kwargs)
 
     gc.collect()

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 
 from mimic_iv_etl_spark.cdc.changelog import ChangeLogSpec, generate_change_log
+from mimic_iv_etl_spark.cdc.metrics import read_metrics
 from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.cdc.replay import replay_log
 from mimic_iv_etl_spark.lake.table import CommitConflict, LakeTable
@@ -21,14 +25,24 @@ def skewed_log(tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("mode,salt", [("agg", 1), ("salted_window", 4), ("agg", 4)])
-def test_skewed_replay_correct_under_salting(spark, skewed_log, tmp_path, mode, salt):
-    tp = str(tmp_path / f"t_{mode}_{salt}")
-    out = replay_log(spark, skewed_log, tp, schema=TRANSCRIPT_SCHEMA,
-                     batch_offsets=2_000, n_buckets=8,
-                     dedup_mode=mode, write_salt=salt)
+@pytest.mark.parametrize("kernel,salt", [("locator", 1), ("locator", 4),
+                                         ("agg", 1), ("agg", 4)])
+def test_skewed_replay_correct_under_salting(spark, skewed_log, tmp_path, kernel, salt):
+    """Both LWW kernels under a 60% hot key, each with and without write
+    salting. The kernel follows the input: the log's manifest selects
+    ``locator``; a copy of the log without it runs ``agg``."""
+    log = skewed_log
+    if kernel == "agg":
+        log = str(tmp_path / "log_no_manifest")
+        shutil.copytree(skewed_log, log)
+        os.remove(os.path.join(log, "manifest.json"))
+    tp = str(tmp_path / f"t_{kernel}_{salt}")
+    out = replay_log(spark, log, tp, schema=TRANSCRIPT_SCHEMA,
+                     batch_offsets=2_000, n_buckets=8, write_salt=salt)
     assert out["events_applied"] == 10_000
     assert_final_state_equal(LakeTable(spark, tp).read(), duckdb_final_state(skewed_log))
+    modes = read_metrics(spark, tp).toPandas()["dedup_mode"]
+    assert len(modes) > 0 and (modes == kernel).all(), modes.tolist()
 
 
 def test_write_salt_splits_hot_bucket_files(spark, skewed_log, tmp_path):

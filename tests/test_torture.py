@@ -161,15 +161,13 @@ def test_manifest_tamper_never_commits_wrong_state(spark, small_log, tmp_path,
         # negative_lo is auto-repaired: the hwm clip lo = max(lo, hwm+1)
         # raises the claimed -5 back to 0 on a fresh table, so the batch
         # commits the exact oracle state — the acceptable outcome
-        stats = apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                            manifest_ranges=ranges)
+        stats = apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
         assert stats["events_applied"] == spec.n_events
         assert_final_state_equal(LakeTable(spark, tp).read(),
                                  duckdb_final_state(d))
     else:
         with pytest.raises(RuntimeError, match="cross-check"):
-            apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                        manifest_ranges=ranges)
+            apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
         tbl2 = LakeTable(spark, tp)
         assert tbl2.applied_offsets == {}
         assert tbl2.read().count() == 0
