@@ -33,7 +33,8 @@ Offset-range bookkeeping rides an aggregate the batch already runs:
   transfer; on the ``agg`` kernel the ranges aggregate below must reproduce
   the declared ranges exactly. Any mismatch aborts before the write.
 - no manifest — the ≤P-row ``groupBy(partition)`` ranges aggregate runs first
-  and IS the bookkeeping; a NULL partition aborts before the write.
+  and IS the bookkeeping; a NULL partition or offset aborts before the
+  write.
 
 Either way the driver never sees data rows (contrast: the reference collects
 key lists to the driver, ``ml_readmission_risk.ipynb`` cells 14/21/31,
@@ -49,7 +50,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mimic_iv_etl_spark.cdc.metrics import append_lineage, append_metrics
-from mimic_iv_etl_spark.cdc.profiling import phase
 from mimic_iv_etl_spark.lake.merge import (PACK_MAX_OFFSET, PACK_MAX_PARTITION,
                                            lww_reduce, lww_winner_locators)
 from mimic_iv_etl_spark.lake.schema import merge_schemas, schemas_equal
@@ -57,13 +57,17 @@ from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
 
 META_COLS = ("op", "offset", "partition", "payload")
 
-# above this many committed partitions the literal hwm predicate stops being
-# a win over a broadcast-join filter (expression size, codegen limits)
-_HWM_PREDICATE_CAP = 64
-
 # Arrow bytes per locator row on the driver: p, o and the two manifest
 # counters, 8 B each after the pandas conversion
 _LOCATOR_ROW_BYTES = 32
+
+
+def _bigint_array_sql(values) -> str:
+    """Per-partition constants as SQL: one string literal parsed into an
+    ``array<bigint>`` constant. The expression stays three nodes for any
+    partition count and constant-folds, so predicates built on it cost the
+    same to build and to codegen at 8 or 8,000 partitions."""
+    return f"CAST(split('{','.join(map(str, values))}', ',') AS array<bigint>)"
 
 
 def _locator_supported(ranges: list[dict]) -> bool:
@@ -91,8 +95,9 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
        HashAggregate (`lake/merge.py::lww_winner_locators`) — the scan is
        column-pruned to keys+stamp, payloads never leave their scan. The
        same aggregate counts each key's rows and the rows OUTSIDE the
-       declared ranges (NULL partition, undeclared partition, offset outside
-       its partition's ``[lo, hi]``) — the manifest cross-check.
+       declared ranges (NULL partition or offset, undeclared partition,
+       offset outside its partition's ``[lo, hi]``) — the manifest
+       cross-check.
     2. The locators land driver-side as one Arrow transfer — O(winners per
        batch), bounded by ``batch_offsets``, the same order of driver traffic
        as any broadcast-join build (this is the one deliberate driver
@@ -144,120 +149,104 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
     for p, (lo, hi, b) in by_p.items():
         lo_arr[p], hi_arr[p], base_arr[p] = lo, hi, b
 
-    def _lit(arr) -> str:
-        # one string literal parsed into an array constant: the expression
-        # stays three nodes for any partition count (constant-folded)
-        return f"CAST(split('{','.join(map(str, arr.tolist()))}', ',') AS array<bigint>)"
-
     # `get` yields NULL for a NULL or out-of-array partition and BETWEEN is
     # NULL for a NULL offset; coalesce counts every such row as outside
-    outside = (f"NOT coalesce(_lww_offset BETWEEN get({_lit(lo_arr)}, _lww_partition)"
-               f" AND get({_lit(hi_arr)}, _lww_partition), false)")
-    with phase("locator_collect"):
-        pdf = lww_winner_locators(candidates, key_cols, outside=outside).toPandas()
-        n_total, n_out = int(pdf["n"].sum()), int(pdf["n_out"].sum())
-        # dense ranges: the window's bit count IS the declared event count
-        if n_out or n_total != total_bits:
-            raise RuntimeError(
-                "manifest_ranges cross-check failed — "
-                f"{n_out} events outside the declared ranges (NULL partition, "
-                f"undeclared partition or offset outside its [lo, hi]), "
-                f"{n_total} present vs {total_bits} declared; committing "
-                "would desync applied_offsets from the actually-applied events")
-        # every row is inside the declared ranges, so no winner stamp is NULL
-        pi = pdf["p"].to_numpy()
-        oi = pdf["o"].to_numpy()
-        # build the bitmap PACKED (uint64 words) — peak memory window_bits/8,
-        # matching the pre-flight budget; a byte-per-bit intermediate would
-        # transiently cost 8× the budgeted size. Winner (p, o) pairs are
-        # distinct rows, so indices are unique; bitwise_or.at handles the
-        # many-bits-per-word collisions an unbuffered |= cannot.
-        gidx = base_arr[pi] + (oi - lo_arr[pi])
-        words_arr = np.zeros((total_bits + 63) // 64, dtype=np.uint64)
-        np.bitwise_or.at(words_arr, gidx >> 6,
-                         np.uint64(1) << (gidx & 63).astype(np.uint64))
-        words = words_arr.view(np.int64)
+    lo_sql, hi_sql = (_bigint_array_sql(a.tolist()) for a in (lo_arr, hi_arr))
+    outside = (f"NOT coalesce(_lww_offset BETWEEN get({lo_sql}, _lww_partition)"
+               f" AND get({hi_sql}, _lww_partition), false)")
+    pdf = lww_winner_locators(candidates, key_cols, outside=outside).toPandas()
+    n_total, n_out = int(pdf["n"].sum()), int(pdf["n_out"].sum())
+    # dense ranges: the window's bit count IS the declared event count
+    if n_out or n_total != total_bits:
+        raise RuntimeError(
+            "manifest_ranges cross-check failed — "
+            f"{n_out} events outside the declared ranges (NULL partition, "
+            "NULL offset, undeclared partition or offset outside its "
+            f"[lo, hi]), {n_total} present vs {total_bits} declared; "
+            "committing would desync applied_offsets from the "
+            "actually-applied events")
+    # every row is inside the declared ranges, so no winner stamp is NULL
+    pi = pdf["p"].to_numpy()
+    oi = pdf["o"].to_numpy()
+    # build the bitmap PACKED (uint64 words) — peak memory window_bits/8,
+    # matching the pre-flight budget; a byte-per-bit intermediate would
+    # transiently cost 8× the budgeted size. Winner (p, o) pairs are
+    # distinct rows, so indices are unique; bitwise_or.at handles the
+    # many-bits-per-word collisions an unbuffered |= cannot.
+    gidx = base_arr[pi] + (oi - lo_arr[pi])
+    words_arr = np.zeros((total_bits + 63) // 64, dtype=np.uint64)
+    np.bitwise_or.at(words_arr, gidx >> 6,
+                     np.uint64(1) << (gidx & 63).astype(np.uint64))
+    words = words_arr.view(np.int64)
 
-        stage_dir = os.path.join(table_path, "_staging",
-                                 f"lww-bitmap-{uuid.uuid4().hex}")
-        os.makedirs(stage_dir, exist_ok=True)
-        try:
-            bm_path = os.path.join(stage_dir, "bitmap.parquet")
-            pq.write_table(
-                pa.table({
-                    "_bm": pa.array([words], type=pa.list_(pa.int64())),
-                    "_lo": pa.array([lo_arr], type=pa.list_(pa.int64())),
-                    "_hi": pa.array([hi_arr], type=pa.list_(pa.int64())),
-                    "_base": pa.array([base_arr], type=pa.list_(pa.int64())),
-                }),
-                bm_path)
-        except BaseException:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            raise
+    stage_dir = os.path.join(table_path, "_staging",
+                             f"lww-bitmap-{uuid.uuid4().hex}")
+    os.makedirs(stage_dir, exist_ok=True)
+    try:
+        bm_path = os.path.join(stage_dir, "bitmap.parquet")
+        pq.write_table(
+            pa.table({
+                "_bm": pa.array([words], type=pa.list_(pa.int64())),
+                "_lo": pa.array([lo_arr], type=pa.list_(pa.int64())),
+                "_hi": pa.array([hi_arr], type=pa.list_(pa.int64())),
+                "_base": pa.array([base_arr], type=pa.list_(pa.int64())),
+            }),
+            bm_path)
+    except BaseException:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        raise
 
     spark = candidates.sparkSession
-    with phase("locator_probe_build"):
-        # explicit schema (skips footer-based inference: 109→18 ms measured)
-        bm = spark.read.schema(
-            "_bm array<bigint>, _lo array<bigint>, _hi array<bigint>, "
-            "_base array<bigint>").parquet(bm_path)
-        # partition-count-independent probe, built as ONE server-side-parsed
-        # SQL expression (chained Column ops cost ~2 ms of Py4J per call —
-        # a real slice of the per-micro-batch fixed cost). Semantics:
-        # `get` is 0-based and yields NULL for out-of-range/NULL indices, so
-        # unknown partitions fail the lo/hi bounds without any ANSI error
-        # (hi defaults to -1 for in-array but undeclared partitions);
-        # try_element_at (not element_at) so a corrupt batch's out-of-window
-        # bit index yields NULL→false instead of an ANSI index error if the
-        # optimizer ever reorders the conjuncts. AND short-circuits left to
-        # right, so the bit probe only runs on rows inside the window.
-        gidx = ("(_lww_offset + (get(_base, _lww_partition)"
-                " - get(_lo, _lww_partition)))")
-        probe = F.expr(
-            "get(_lo, _lww_partition) IS NOT NULL"
-            " AND _lww_offset >= get(_lo, _lww_partition)"
-            " AND _lww_offset <= get(_hi, _lww_partition)"
-            f" AND getbit(try_element_at(_bm, CAST(shiftright({gidx}, 6)"
-            f" AS int) + 1), pmod({gidx}, 64)) = 1")
-        winners = (candidates.crossJoin(F.broadcast(bm))
-                   .filter(probe)
-                   .drop("_bm", "_lo", "_hi", "_base"))
+    # explicit schema (skips footer-based inference: 109→18 ms measured)
+    bm = spark.read.schema(
+        "_bm array<bigint>, _lo array<bigint>, _hi array<bigint>, "
+        "_base array<bigint>").parquet(bm_path)
+    # partition-count-independent probe, built as ONE server-side-parsed
+    # SQL expression (chained Column ops cost ~2 ms of Py4J per call —
+    # a real slice of the per-micro-batch fixed cost). Semantics:
+    # `get` is 0-based and yields NULL for out-of-range/NULL indices, so
+    # unknown partitions fail the lo/hi bounds without any ANSI error
+    # (hi defaults to -1 for in-array but undeclared partitions);
+    # try_element_at (not element_at) so a corrupt batch's out-of-window
+    # bit index yields NULL→false instead of an ANSI index error if the
+    # optimizer ever reorders the conjuncts. AND short-circuits left to
+    # right, so the bit probe only runs on rows inside the window.
+    gidx = ("(_lww_offset + (get(_base, _lww_partition)"
+            " - get(_lo, _lww_partition)))")
+    probe = F.expr(
+        "get(_lo, _lww_partition) IS NOT NULL"
+        " AND _lww_offset >= get(_lo, _lww_partition)"
+        " AND _lww_offset <= get(_hi, _lww_partition)"
+        f" AND getbit(try_element_at(_bm, CAST(shiftright({gidx}, 6)"
+        f" AS int) + 1), pmod({gidx}, 64)) = 1")
+    winners = (candidates.crossJoin(F.broadcast(bm))
+               .filter(probe)
+               .drop("_bm", "_lo", "_hi", "_base"))
     return winners, lambda: shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 def _hwm_filter(batch_df: DataFrame, applied: dict[int, int]) -> DataFrame:
     """Exactly-once row filter: keep events strictly beyond the committed
-    per-partition high-water marks. For a bounded partition count this is a
-    literal codegen'd predicate (no broadcast, no join stage); beyond the cap
-    it falls back to a broadcast-joined lookup."""
+    per-partition high-water marks.
+
+    One predicate for every partition count: the marks ride as a
+    constant-folded ``map`` literal looked up with ``try_element_at``, so
+    the expression, its codegen and its Py4J build cost stay constant
+    however many partitions have committed. It is one ``F.expr`` over a
+    server-side-parsed SQL string, not a chain of Column operators: each
+    Column op is a Py4J round-trip (~2 ms), a per-micro-batch fixed cost.
+
+    A partition with no mark is always fresh. A NULL partition or a NULL
+    offset compares NULL, and ``coalesce`` keeps the row, so the
+    bookkeeping downstream sees and rejects it instead of it silently
+    vanishing here."""
     if not applied:
         return batch_df
-    if len(applied) <= _HWM_PREDICATE_CAP:
-        # one F.expr over a server-side-parsed SQL string, not a chain of
-        # Column operators: each Column op is a Py4J round-trip, and at ~2 ms
-        # per call the chained build cost ~240 ms of driver wall PER
-        # MICRO-BATCH (measured — the dominant slice of the per-trigger
-        # fixed cost the round-4 stream bench flagged)
-        pred = " OR ".join(
-            f"(partition = {int(p)} AND offset > {int(o)})"
-            for p, o in sorted(applied.items()))
-        members = " OR ".join(
-            f"partition = {int(p)}" for p in sorted(applied))
-        # events from partitions with no committed hwm are always fresh; a
-        # NULL partition must be kept too (pred / NOT members are NULL for
-        # it, and the broadcast-join path below keeps such rows via
-        # coalesce(_hwm,-1) — the two paths must agree) so the downstream
-        # unknown-partition guards see and reject it instead of it silently
-        # vanishing here
-        return batch_df.filter(F.expr(
-            f"({pred}) OR NOT ({members}) OR partition IS NULL"))
-    rows = [(int(p), int(o)) for p, o in applied.items()]
-    hwm = batch_df.sparkSession.createDataFrame(rows, "partition int, _hwm long")
-    return (
-        batch_df.join(F.broadcast(hwm), "partition", "left")
-        .filter(F.col("offset") > F.coalesce(F.col("_hwm"), F.lit(-1)))
-        .drop("_hwm")
-    )
+    parts = sorted(applied)
+    hwm = (f"map_from_arrays({_bigint_array_sql(parts)}, "
+           f"{_bigint_array_sql(applied[p] for p in parts)})")
+    return batch_df.filter(F.expr(
+        f"coalesce(offset > try_element_at({hwm}, partition), true)"))
 
 
 def apply_batch(
@@ -305,8 +294,8 @@ def apply_batch(
     sequences; ``changelog.py`` stamps ``dense_offsets: true``). With it the
     exactly-once bookkeeping is window arithmetic and a fully-stale batch is
     skipped without reading any data. The ranges are always verified before
-    the write: a batch holding rows OUTSIDE them (NULL partition, undeclared
-    partition, offset past the declared hi) or MISSING rows they claim
+    the write: a batch holding rows OUTSIDE them (NULL partition or offset,
+    undeclared partition, offset past the declared hi) or MISSING rows they claim
     (truncated/corrupt file) would otherwise advance ``applied_offsets`` past
     never-applied events — silent data loss. The locator kernel counts both
     inside its own aggregate; the agg kernel compares the ranges
@@ -314,8 +303,8 @@ def apply_batch(
     written.
 
     Without ``manifest_ranges`` a ≤P-row ``groupBy(partition)`` aggregate
-    records whatever partitions the batch holds; a NULL partition aborts
-    before the write (its offsets could never be recorded, so exactly-once
+    records whatever partitions the batch holds; a NULL partition or offset
+    aborts before the write (it could never be recorded, so exactly-once
     would break on redelivery).
 
     ``locator_driver_budget`` bounds the locator kernel's one deliberate
@@ -342,7 +331,6 @@ def apply_batch(
         )
     t0 = time.monotonic()
 
-    _prelude_t0 = time.monotonic()
     late_decode = decode_payload and "payload" in batch_df.columns
     data_fields = [f for f in batch_df.schema.fields if f.name not in META_COLS]
     if late_decode:
@@ -404,22 +392,25 @@ def apply_batch(
     if dedup_mode == "agg":
         # the single bookkeeping aggregate: per-source-partition ranges
         # (≤P rows) — with a manifest, its exact cross-check
-        with phase("ranges_aggregate"):
-            collected = (
-                fresh.groupBy("partition")
-                .agg(
-                    F.count("*").alias("events"),
-                    F.min("offset").alias("min_offset"),
-                    F.max("offset").alias("max_offset"),
-                )
-                .collect()
+        collected = (
+            fresh.groupBy("partition")
+            .agg(
+                F.count("*").alias("events"),
+                F.count("offset").alias("offsets"),
+                F.min("offset").alias("min_offset"),
+                F.max("offset").alias("max_offset"),
             )
-        n_null = sum(r["events"] for r in collected if r["partition"] is None)
-        if n_null:
-            raise RuntimeError(
-                f"batch {batch_id} holds {n_null} events with a NULL partition "
-                "— their offsets cannot be recorded, so exactly-once would "
-                "break on redelivery")
+            .collect()
+        )
+        for col, n_null in (
+                ("partition", sum(r["events"] for r in collected
+                                  if r["partition"] is None)),
+                ("offset", sum(r["events"] - r["offsets"] for r in collected))):
+            if n_null:
+                raise RuntimeError(
+                    f"batch {batch_id} holds {n_null} events with a NULL "
+                    f"{col} — their offsets cannot be recorded, so "
+                    "exactly-once would break on redelivery")
         observed = sorted(
             ({"partition": int(r["partition"]), "events": int(r["events"]),
               "min_offset": int(r["min_offset"]),
@@ -466,13 +457,6 @@ def apply_batch(
         "CAST(offset AS bigint) AS _lww_offset",
         "CAST(partition AS int) AS _lww_partition",
     )
-    # driver-side plan construction up to this point (schema merge, hwm
-    # filter, candidate projection) — pure Py4J/analysis work, no Spark job
-    # except the ranges aggregate; a per-micro-batch fixed cost worth watching
-    from mimic_iv_etl_spark.cdc.profiling import record as _record
-
-    _record("plan_prelude", time.monotonic() - _prelude_t0)
-
     # the locator staging dir must be removed on EVERY exit — including a
     # cross-check abort or any Spark error — or _staging/lww-bitmap-* dirs
     # leak (ADVICE r04)
@@ -483,7 +467,6 @@ def apply_batch(
                 candidates, table.key_cols, ranges, table.path)
         else:
             winners = lww_reduce(candidates, table.key_cols)
-        _wplan_t0 = time.monotonic()
         if late_decode:
             from mimic_iv_etl_spark.functions.textfns import decode_payload_json
 
@@ -499,15 +482,12 @@ def apply_batch(
 
             winners = winners.withColumn("text", normalize_text(F.col("text")))
         winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
-        _record("winners_plan", time.monotonic() - _wplan_t0)
-
-        with phase("append_delta"):
-            table.append_delta(
-                winners,
-                new_schema=merged if evolved else None,
-                summary={"applied_offsets": new_applied, "batch_id": batch_id},
-                write_salt=write_salt,
-            )
+        table.append_delta(
+            winners,
+            new_schema=merged if evolved else None,
+            summary={"applied_offsets": new_applied, "batch_id": batch_id},
+            write_salt=write_salt,
+        )
     finally:
         if locator_cleanup is not None:
             locator_cleanup()
@@ -530,20 +510,19 @@ def apply_batch(
         "lag_events": _lag(new_applied),
         "dedup_mode": dedup_mode,
     }
-    with phase("metrics_lineage"):
-        append_metrics(table.path, stats)
-        append_lineage(
-            table.path,
-            [
-                {
-                    "batch_id": batch_id,
-                    "partition": int(r["partition"]),
-                    "min_offset": int(r["min_offset"]),
-                    "max_offset": int(r["max_offset"]),
-                    "events": int(r["events"]),
-                    "snapshot_version": table.version,
-                }
-                for r in ranges
-            ],
-        )
+    append_metrics(table.path, stats)
+    append_lineage(
+        table.path,
+        [
+            {
+                "batch_id": batch_id,
+                "partition": int(r["partition"]),
+                "min_offset": int(r["min_offset"]),
+                "max_offset": int(r["max_offset"]),
+                "events": int(r["events"]),
+                "snapshot_version": table.version,
+            }
+            for r in ranges
+        ],
+    )
     return stats

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from mimic_iv_etl_spark.cdc.apply import apply_batch
 from mimic_iv_etl_spark.cdc.metrics import flush_sidecars
-from mimic_iv_etl_spark.cdc.profiling import phase
 from mimic_iv_etl_spark.lake.table import CommitConflict, LakeTable
 
 
@@ -160,22 +159,21 @@ def replay_log(
     meta = _manifest_tranches(log_dir)
     log_tail = _log_tail(log_dir)
     for tranche in _tranche_dirs(log_dir):
-        with phase("tranche_metadata"):
-            t_meta = meta.get(tranche) if meta is not None else None
-            part_offsets = None
-            if t_meta is not None:
-                lo, hi = int(t_meta["offset_lo"]), int(t_meta["offset_hi"])
-                if t_meta.get("dense_offsets") and "partition_offsets" in t_meta:
-                    # dense per-partition ranges → apply_batch does offset
-                    # bookkeeping as window arithmetic, verified inside the
-                    # batch's own dedup aggregate
-                    part_offsets = {
-                        int(p): (int(r[0]), int(r[1]))
-                        for p, r in t_meta["partition_offsets"].items()
-                    }
-            else:
-                lo, hi = _offset_bounds(tranche)
-            df = spark.read.schema(_tranche_schema(tranche)).parquet(tranche)
+        t_meta = meta.get(tranche) if meta is not None else None
+        part_offsets = None
+        if t_meta is not None:
+            lo, hi = int(t_meta["offset_lo"]), int(t_meta["offset_hi"])
+            if t_meta.get("dense_offsets") and "partition_offsets" in t_meta:
+                # dense per-partition ranges → apply_batch does offset
+                # bookkeeping as window arithmetic, verified inside the
+                # batch's own dedup aggregate
+                part_offsets = {
+                    int(p): (int(r[0]), int(r[1]))
+                    for p, r in t_meta["partition_offsets"].items()
+                }
+        else:
+            lo, hi = _offset_bounds(tranche)
+        df = spark.read.schema(_tranche_schema(tranche)).parquet(tranche)
         late_decode = decode_payload and "payload" in df.columns
         if late_decode:
             # the mandated ingest shape (input_hint): events arrive encoded.

@@ -57,7 +57,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mimic_iv_etl_spark.cdc.profiling import phase
 from mimic_iv_etl_spark.lake.merge import lww_reduce
 from mimic_iv_etl_spark.lake.schema import schemas_equal
 
@@ -586,51 +585,49 @@ class LakeTable:
             )
         else:
             aligned = aligned.repartition(n_buckets, F.col(BUCKET_COL))
-        with phase("stage_spark_write"):
-            aligned.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
-        with phase("stage_move_footers"):
-            # the per-file footer read + rename is driver-side IO (~1 ms per
-            # file locally, far more against an object store): serial it is
-            # O(≤n_buckets) per commit — negligible at 32 buckets but a
-            # 1–4 s/batch serial tax at the 1k–4k buckets a 100 TB table
-            # wants. IO-bound → a thread pool collapses it to ~max latency.
-            from concurrent.futures import ThreadPoolExecutor
+        aligned.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
+        # the per-file footer read + rename is driver-side IO (~1 ms per
+        # file locally, far more against an object store): serial it is
+        # O(≤n_buckets) per commit — negligible at 32 buckets but a
+        # 1–4 s/batch serial tax at the 1k–4k buckets a 100 TB table
+        # wants. IO-bound → a thread pool collapses it to ~max latency.
+        from concurrent.futures import ThreadPoolExecutor
 
-            moves: list[tuple[str, str, int]] = []
-            for d in sorted(os.listdir(stage)):
-                if not d.startswith(f"{BUCKET_COL}="):
-                    continue
-                b = int(d.split("=", 1)[1])
-                dest = os.path.join(self._data_dir, f"bucket={b}")
-                os.makedirs(dest, exist_ok=True)
-                for fn in sorted(os.listdir(os.path.join(stage, d))):
-                    if fn.endswith(".parquet"):
-                        moves.append((os.path.join(stage, d, fn), dest, b))
+        moves: list[tuple[str, str, int]] = []
+        for d in sorted(os.listdir(stage)):
+            if not d.startswith(f"{BUCKET_COL}="):
+                continue
+            b = int(d.split("=", 1)[1])
+            dest = os.path.join(self._data_dir, f"bucket={b}")
+            os.makedirs(dest, exist_ok=True)
+            for fn in sorted(os.listdir(os.path.join(stage, d))):
+                if fn.endswith(".parquet"):
+                    moves.append((os.path.join(stage, d, fn), dest, b))
 
-            def _move(job: tuple[str, str, int]) -> dict:
-                src, dest, b = job
-                abs_path = os.path.join(
-                    dest, f"part-{uuid.uuid4().hex}.parquet")
-                os.replace(src, abs_path)
-                md = pq.read_metadata(abs_path)
-                return {
-                    "path": os.path.relpath(abs_path, self.path),
-                    "bucket": b,
-                    "schema_id": schema_id,
-                    "kind": kind,
-                    "rows": md.num_rows,
-                    "has_tombstones": _has_tombstones(md),
-                    "stats": _entry_stats(md),
-                }
+        def _move(job: tuple[str, str, int]) -> dict:
+            src, dest, b = job
+            abs_path = os.path.join(
+                dest, f"part-{uuid.uuid4().hex}.parquet")
+            os.replace(src, abs_path)
+            md = pq.read_metadata(abs_path)
+            return {
+                "path": os.path.relpath(abs_path, self.path),
+                "bucket": b,
+                "schema_id": schema_id,
+                "kind": kind,
+                "rows": md.num_rows,
+                "has_tombstones": _has_tombstones(md),
+                "stats": _entry_stats(md),
+            }
 
-            if len(moves) <= 4:
-                new_entries = [_move(m) for m in moves]
-            else:
-                with ThreadPoolExecutor(max_workers=min(32, len(moves))) as ex:
-                    new_entries = list(ex.map(_move, moves))
-            # deterministic manifest order regardless of completion order
-            new_entries.sort(key=lambda e: (e["bucket"], e["path"]))
-            shutil.rmtree(stage, ignore_errors=True)
+        if len(moves) <= 4:
+            new_entries = [_move(m) for m in moves]
+        else:
+            with ThreadPoolExecutor(max_workers=min(32, len(moves))) as ex:
+                new_entries = list(ex.map(_move, moves))
+        # deterministic manifest order regardless of completion order
+        new_entries.sort(key=lambda e: (e["bucket"], e["path"]))
+        shutil.rmtree(stage, ignore_errors=True)
         return new_entries
 
     def _next_schema(
@@ -750,8 +747,7 @@ class LakeTable:
                 if k in self.snapshot:
                     snap[k] = self.snapshot[k]
             try:
-                with phase("snapshot_commit"):
-                    _write_snapshot(self._meta_dir, snap)
+                _write_snapshot(self._meta_dir, snap)
                 return self.refresh()
             except CommitConflict:
                 if rebase is None or attempt == _MAX_COMMIT_RETRIES:

@@ -73,24 +73,20 @@ def get_spark_session(
         # node adds a memory controller but shuffle still crosses a shared
         # network) — trading CPU for bytes raises measured 4→16-core replay
         # scaling from ~0.72 to ~0.86 and is the standard large-cluster choice
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"))
+        .config("spark.io.compression.codec", "zstd")
         # finer input splits: 48MB keeps scan-stage waves balanced at high
         # core counts (a 128MB-split scan of a 3GB tranche is only ~24 tasks
         # — 1.5 waves at 16 cores, a built-in 25% straggler tax)
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "48m"))
+        .config("spark.sql.files.maxPartitionBytes", "48m")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", "32g")
         # Throughput GC for batch ingest: G1 (the Java 17 default) trades
         # throughput for pause goals; this engine's hot path is allocation-
         # heavy string work (parquet string vectors, JSON parse) where G1's
         # concurrent marking contends with 32 mutator threads — interleaved
         # A/B at local[32] measured ParallelGC 15-40% faster on full replay.
         # Pause-insensitive by construction (micro-batch sink, no SLA reads).
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                               "-XX:+UseParallelGC"))
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
     )
     # Local-mode shuffle goes through spark.local.dir on ONE shared disk —

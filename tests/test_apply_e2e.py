@@ -177,12 +177,16 @@ def test_ranges_aggregate_mode_matches_oracle_and_skips_stale(
     assert model.transform(feats).groupBy("prediction").count().count() == 2
 
 
-@pytest.mark.parametrize("mode", ["locator", "agg"])
-def test_null_partition_aborts_before_write(spark, small_log, tmp_path, mode):
-    """A NULL source partition can never be recorded in applied_offsets, so
-    the batch must abort with an error naming it — before any write — on
-    both bookkeeping paths: the locator counters (with a manifest) and the
-    ranges aggregate (without one)."""
+@pytest.mark.parametrize("mode,null_col", [
+    (m, c) for c in ("partition", "offset") for m in ("locator", "agg")])
+def test_null_partition_aborts_before_write(spark, small_log, tmp_path, mode,
+                                            null_col):
+    """A NULL source partition or offset can never be recorded in
+    applied_offsets, so the batch must abort with an error naming it —
+    before any write — on both bookkeeping paths: the locator counters
+    (with a manifest) and the ranges aggregate (without one). The NULL
+    offset lands in a partition that already has a high-water mark, where
+    the exactly-once filter must pass it on rather than drop it."""
     import glob
 
     from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
@@ -190,23 +194,27 @@ def test_null_partition_aborts_before_write(spark, small_log, tmp_path, mode):
     d, spec, _ = small_log
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
     df = spark.read.parquet(tranche).drop("payload")
-    stray = (df.limit(1)
-             .withColumn("conv_id", F.lit("conv-null-partition"))
-             .withColumn("partition", F.lit(None).cast("int")))
-    batch = df.unionByName(stray)
-    manifest = None
-    if mode == "locator":
-        t_meta = _manifest_tranches(d)[tranche]
-        manifest = {int(p): (int(r[0]), int(r[1]))
-                    for p, r in t_meta["partition_offsets"].items()}
-    tp = str(tmp_path / f"t_nullpart_{mode}")
+    t_meta = _manifest_tranches(d)[tranche]
+    ranges = {int(p): (int(r[0]), int(r[1]))
+              for p, r in t_meta["partition_offsets"].items()}
+    tp = str(tmp_path / f"t_null_{null_col}_{mode}")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    v0 = tbl.version
-    with pytest.raises(RuntimeError, match="NULL partition"):
-        apply_batch(tbl, batch, batch_id=0, manifest_ranges=manifest)
+    if null_col == "offset":
+        # commit the first 900 offsets of every partition: each has an hwm
+        first = {p: (lo, min(hi, 899)) for p, (lo, hi) in ranges.items()}
+        apply_batch(tbl, df.filter(F.col("offset") < 900), batch_id=0,
+                    manifest_ranges=first if mode == "locator" else None)
+    stray = (df.limit(1)
+             .withColumn("conv_id", F.lit(f"conv-null-{null_col}"))
+             .withColumn(null_col, F.lit(None).cast(df.schema[null_col].dataType)))
+    batch = df.unionByName(stray)
+    v0, applied0 = tbl.version, tbl.applied_offsets
+    with pytest.raises(RuntimeError, match=f"NULL {null_col}"):
+        apply_batch(tbl, batch, batch_id=1,
+                    manifest_ranges=ranges if mode == "locator" else None)
     tbl2 = LakeTable(spark, tp)
     assert tbl2.version == v0
-    assert tbl2.applied_offsets == {}
+    assert tbl2.applied_offsets == applied0
     assert tbl2.vacuum(grace_seconds=0.0)["data_files"] == 0
 
 

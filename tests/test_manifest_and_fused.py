@@ -19,7 +19,6 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from mimic_iv_etl_spark.cdc import apply as apply_mod
 from mimic_iv_etl_spark.cdc.apply import apply_batch
 from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
                                               generate_change_log,
@@ -29,7 +28,8 @@ from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.cdc.replay import replay_log
 from mimic_iv_etl_spark.lake.merge import lww_reduce
 from mimic_iv_etl_spark.lake.table import LakeTable
-from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal
+from tests.util import (TRANSCRIPT_SCHEMA, _py4j_commands,
+                        assert_final_state_equal)
 
 
 def test_replay_uses_manifest_arithmetic_and_matches_oracle(
@@ -138,24 +138,48 @@ def test_locator_bit_budget_fallback():
         [{"partition": 0, "min_offset": 0, "max_offset": 1 << 37}])
 
 
-def test_hwm_literal_predicate_equals_join_path(spark, small_log, tmp_path,
-                                                monkeypatch):
-    """Exactly-once row filtering must behave identically through the literal
-    codegen predicate (≤cap partitions) and the broadcast-join fallback."""
-    d, spec, _ = small_log
+@pytest.mark.parametrize("n_partitions,min_marks", [(4, 4), (80, 65)],
+                         ids=["small_log", "80_partitions"])
+def test_hwm_filter_exactly_once_at_any_partition_count(
+        spark, small_log, tmp_path, n_partitions, min_marks):
+    """Exactly-once row filtering through the one hwm predicate, at 4
+    committed partitions and at more than 64: three overlapping batches
+    apply each event once and land oracle-equal state."""
+    d = small_log[0]
+    if n_partitions != 4:
+        d = str(tmp_path / "log_hwm")
+        generate_change_log(d, ChangeLogSpec(
+            n_events=8_000, n_convs=250, n_partitions=n_partitions, seed=13))
     log = spark.read.parquet(*sorted(glob.glob(f"{d}/tranche-*"))).drop("payload")
+    tbl = LakeTable.create(spark, str(tmp_path / "t_hwm"), TRANSCRIPT_SCHEMA,
+                           n_buckets=4)
+    apply_batch(tbl, log.filter(F.col("offset") < 900), batch_id=0)
+    assert len(tbl.applied_offsets) >= min_marks
+    fresh = log.filter((F.col("offset") >= 900) & (F.col("offset") < 1400)).count()
+    stats = apply_batch(tbl, log.filter(F.col("offset") < 1400), batch_id=1)
+    assert stats["events_applied"] == fresh > 0
+    apply_batch(tbl, log, batch_id=2)
+    assert_final_state_equal(tbl.read(), duckdb_final_state(d))
 
-    results = []
-    for cap in (64, 0):  # 0 forces the join path
-        monkeypatch.setattr(apply_mod, "_HWM_PREDICATE_CAP", cap)
-        tp = str(tmp_path / f"t_hwm_{cap}")
-        tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-        apply_batch(tbl, log.filter(F.col("offset") < 900), batch_id=0)
-        stats = apply_batch(tbl, log.filter(F.col("offset") < 1400), batch_id=1)
-        results.append(stats["events_applied"])
-        apply_batch(tbl, log, batch_id=2)
-        assert_final_state_equal(tbl.read(), duckdb_final_state(d))
-    assert results[0] == results[1] > 0
+
+def test_hwm_filter_builds_in_constant_py4j_calls(spark):
+    """The hwm filter is one predicate over a constant-folded map literal:
+    building it sends the same number of Py4J commands at 8 and at 512
+    committed partitions, plans no join, and keeps exactly the rows past
+    their partition's mark plus the NULLs the bookkeeping must reject."""
+    from mimic_iv_etl_spark.cdc.apply import _hwm_filter
+
+    rows = [(p, o) for p in (None, 0, 3, 7, 511, 512, 70_000)
+            for o in (None, -1, 9, 10, 11)]
+    df = spark.createDataFrame(rows, "partition int, offset bigint")
+    marks = {n: {p: 10 for p in range(n)} for n in (8, 512)}
+    small, wide = (_py4j_commands(spark, lambda m=m: _hwm_filter(df, m))
+                   for m in marks.values())
+    assert small == wide, (small, wide)
+    out = _hwm_filter(df, marks[512])
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert {tuple(r) for r in out.collect()} == {
+        (p, o) for p, o in rows if p not in marks[512] or o is None or o > 10}
 
 
 def test_upgrade_manifest_backfills_and_verifies_density(tmp_path):
@@ -332,10 +356,11 @@ def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
 
 
 def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
-    """ADVICE r04: beyond the 64-partition chained-predicate cap the
-    manifest validation must stay RANGE-exact (broadcast-joined lookup), not
-    degrade to membership-plus-count. Corruption scenario: one in-range row
-    missing and one out-of-range row added in the same declared partition —
+    """ADVICE r04: at 80 partitions (the name keeps the 64-partition cap an
+    earlier predicate had; no path depends on the partition count now) the
+    manifest validation must stay RANGE-exact, not degrade to
+    membership-plus-count. Corruption scenario: one in-range row missing
+    and one out-of-range row added in the same declared partition —
     n_total matches and partition membership passes, so a membership-only
     check would commit a desynced applied_offsets map. Exercised on the agg
     kernel, reached with a zero locator driver budget (no driver-side

@@ -15,6 +15,7 @@ from mimic_iv_etl_spark.functions import (
 from mimic_iv_etl_spark.operators import dedup, labeling, multimodal, relational
 from mimic_iv_etl_spark.operators import similarity, text, windows
 from mimic_iv_etl_spark.plans import QueryBuilder
+from tests.util import _py4j_commands
 
 SF = "/root/testdata/sf0.001"
 
@@ -300,37 +301,6 @@ def test_fused_paths_match_rowwise_apis(spark):
                dedup.simhash(df).select("doc_id", "simhash").collect()}
     fused = {(r["_id"], r["simhash"]) for r in dedup._simhash_by_id(df).collect()}
     assert fused == rowwise  # no empty docs here; fused drops token-less rows
-
-
-def _py4j_commands(spark, build) -> int:
-    """Py4J commands the calling thread sends while ``build()`` runs, with
-    the garbage collector paused so no JVM-reference release lands inside.
-    Only the calling thread counts: Py4J's finalizer thread sends its
-    memory-release commands whenever it runs, and those are not plan
-    construction."""
-    import gc
-    import threading
-
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    caller = threading.get_ident()
-    n = 0
-
-    def counted(*args, **kwargs):
-        nonlocal n
-        if threading.get_ident() == caller:
-            n += 1
-        return send(*args, **kwargs)
-
-    gc.collect()
-    gc.disable()
-    client.send_command = counted
-    try:
-        build()
-    finally:
-        del client.send_command
-        gc.enable()
-    return n
 
 
 def test_near_dup_plans_build_in_constant_py4j_calls(spark, docs):

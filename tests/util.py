@@ -49,3 +49,34 @@ def jobs_started(spark) -> int:
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _py4j_commands(spark, build) -> int:
+    """Py4J commands the calling thread sends while ``build()`` runs, with
+    the garbage collector paused so no JVM-reference release lands inside.
+    Only the calling thread counts: Py4J's finalizer thread sends its
+    memory-release commands whenever it runs, and those are not plan
+    construction."""
+    import gc
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    n = 0
+
+    def counted(*args, **kwargs):
+        nonlocal n
+        if threading.get_ident() == caller:
+            n += 1
+        return send(*args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        del client.send_command
+        gc.enable()
+    return n
