@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from mimic_iv_etl_spark import registry
-from tests.util import jobs_started
+from tests.util import _janino_compiles, jobs_started
 
 SF = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -154,6 +154,26 @@ def test_registry_build_starts_no_spark_job(spark, name):
         assert started > 0, f"{name} now builds lazily: drop it from the list"
     else:
         assert started == 0, f"{name}: {started} Spark job(s) while building"
+
+
+def test_warm_query_pass_compiles_nothing(spark):
+    """The generated-code cache holds a whole pass of the bench queries: run
+    after a first pass, the same 16 queries compile no Janino class. At
+    Spark's stock 100-entry cache the second pass recompiles ~210."""
+    import bench
+
+    base = os.path.join(os.path.dirname(SF), "sf0.001")
+
+    def one_pass():
+        for name in bench.BENCH_QUERIES:
+            df = registry.REGISTRY[name].fn(spark, base)
+            df.write.format("noop").mode("overwrite").save()
+
+    one_pass()
+    before = _janino_compiles(spark)
+    one_pass()
+    compiled = _janino_compiles(spark) - before
+    assert compiled == 0, f"warm pass compiled {compiled} classes"
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

@@ -8,7 +8,8 @@ from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.cdc.replay import replay_log
 from mimic_iv_etl_spark.cdc.stream import stream_log
 from mimic_iv_etl_spark.lake.table import LakeTable
-from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal
+from tests.util import (TRANSCRIPT_SCHEMA, _janino_compiles,
+                        assert_final_state_equal)
 
 
 def test_replay_full_log(spark, small_log, tmp_path):
@@ -35,6 +36,20 @@ def test_replay_resume_skips_applied_windows(spark, small_log, tmp_path):
     assert out["skipped_windows"] > 0
     assert LakeTable(spark, tp).version == v
     assert_final_state_equal(LakeTable(spark, tp).read(), duckdb_final_state(d))
+
+
+def test_warm_replay_compiles_nothing(spark, small_log, tmp_path):
+    """Per-batch code is batch-invariant (no batch's offsets or marks are
+    baked into generated code): once one replay has filled the code cache,
+    replaying the same log into fresh tables compiles no Janino class."""
+    d, _, _ = small_log
+    compiled = []
+    for i in range(3):
+        before = _janino_compiles(spark)
+        replay_log(spark, d, str(tmp_path / f"t{i}"), schema=TRANSCRIPT_SCHEMA,
+                   batch_offsets=500, n_buckets=8)
+        compiled.append(_janino_compiles(spark) - before)
+    assert compiled[1:] == [0, 0], compiled
 
 
 def test_replay_evolved_log_with_compaction(spark, evolved_log, tmp_path):

@@ -80,3 +80,11 @@ def _py4j_commands(spark, build) -> int:
         del client.send_command
         gc.enable()
     return n
+
+
+def _janino_compiles(spark) -> int:
+    """Generated-code classes Janino has compiled in this JVM so far (driver
+    and, in local mode, every task: they share one ``CodegenMetrics``). The
+    difference across a call is the number of cache misses it paid."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
