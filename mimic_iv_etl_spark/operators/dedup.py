@@ -192,12 +192,9 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
 
 def _minhash_hash_rows(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", n: int = 3) -> DataFrame:
-    """The shingle explode + double-hash pass shared by the signature and
-    verify stages: one ``(_id, _h1, _h2)`` row per shingle OCCURRENCE
-    (duplicates included — min aggregation ignores them; set consumers
-    dedupe). ``_h1 = xxhash64(shingle)`` is exactly the hash the hashed
-    verify uses, so a caller can materialize this frame once and derive
-    both the signatures and the verification shingle sets from it.
+    """The shingle explode + double-hash pass of the minhash signature: one
+    ``(_id, _h1, _h2)`` row per shingle OCCURRENCE (duplicates included —
+    min aggregation ignores them).
 
     Shape: explode a position SEQUENCE and build each shingle string with
     codegen'd ``concat_ws(slice(...))`` per exploded row — NOT
@@ -229,25 +226,18 @@ def _minhash_hash_rows(df: DataFrame, id_col: str = "doc_id",
 
 def minhash_band_buckets(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", n: int = 3, k: int = 32,
-                         bands: int = 8,
-                         hash_rows: DataFrame | None = None) -> DataFrame:
+                         bands: int = 8) -> DataFrame:
     """Fused text → (id, band, band_hash) minhash-LSH path, entirely inside
     whole-stage codegen: explode shingles (pipelined, never materialized),
     hash each shingle twice, derive the k functions with rotate/XOR, reduce
     with a map-side-combined ``min`` aggregate — the shuffle carries one
     k-long row per doc, O(docs) not O(shingles).
 
-    ``hash_rows`` (a prebuilt :func:`_minhash_hash_rows` frame, possibly
-    materialized) skips the explode+hash pass — the expensive part is the
-    interpreted shingle-string construction, which :func:`minhash_dedup`
-    shares with its verify stage this way.
-
     (Measured note, sf0.1 local[32]: the previous array-HOF signature ran
     interpreted — ``aggregate``/``transform`` are CodegenFallback — and per-
     element node count dominated; this agg shape cut minhash_near_dups from
     11.7s/28s to ~3s end-to-end.)"""
-    ex = (hash_rows if hash_rows is not None
-          else _minhash_hash_rows(df, id_col, text_col, n))
+    ex = _minhash_hash_rows(df, id_col, text_col, n)
     # k min aggregates in ONE server-parsed struct (still a HashAggregate:
     # k fixed-width long buffers; the struct is built after the final merge)
     mins = ", ".join(f"min({f}) AS m{i}" for i, f in
@@ -261,14 +251,16 @@ def minhash_band_buckets(df: DataFrame, id_col: str = "doc_id",
 def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   hashed: bool = False) -> DataFrame:
-    """Exact n-gram-shingle Jaccard for candidate ``pairs (id_a, id_b)``.
-    Joins the (small) candidate set back to the shingle arrays and computes
-    |∩| / |∪| with array intersection — verification cost is O(candidates).
+    """Exact n-gram-shingle Jaccard for candidate ``pairs (id_a, id_b)``:
+    |∩| / |∪| of the two docs' shingle sets, rounded to 6 places, 0.0 when
+    the union is empty or NULL (a NULL text). Inner joins: a pair naming an
+    id absent from ``df`` is dropped, a repeated pair comes out once per
+    occurrence. Set semantics: element order inside a set is irrelevant.
 
     ``hashed=True`` represents each shingle set as ``array<long>`` of
-    shingle ``xxhash64`` values instead of the raw strings: the broadcast
-    relation shrinks ~3× and the per-pair intersect/union hashes fixed
-    longs instead of rehashing ~15-char strings twice per pair (measured at
+    shingle ``xxhash64`` values instead of the raw strings: the joined
+    arrays shrink ~3× and the per-pair intersect/union hashes fixed longs
+    instead of rehashing ~15-char strings twice per pair (measured at
     sf1.0, 634k candidate pairs: join+verify 1.7s → 0.78s). Set
     cardinalities — and therefore every jaccard value — are unchanged
     unless two distinct shingles of ONE compared pair collide in 64 bits
@@ -277,73 +269,45 @@ def ngram_jaccard(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     The string path stays the default for callers that want pure
     string-set semantics.
 
-    The corpus is semi-join-pruned to docs that actually appear in a pair
-    BEFORE shingling, so the expensive shingle projection (and both join
-    scans) touch O(candidate docs), not O(corpus) — at 100 TB the verify
-    stage must never re-tokenize the whole table for a few thousand
-    survivors.
+    Lazy, one plan: the whole corpus is shingled once and joined to
+    ``pairs`` on ``id_a`` and again on ``id_b``. The shingle subtree does
+    not depend on ``pairs``, so the candidate generator (LSH banding, the
+    simhash band join) is read exactly once, nothing runs until the result
+    is acted on, and every block keeps its lineage. AQE picks the join
+    strategy: broadcast while the shingle sets fit under the session
+    threshold (at sf0.01 and sf0.1), a shuffle join past it. The cost is
+    shingling docs that are in no pair. At sf0.1 (5,000 docs, a few hundred
+    candidates) it still beats the eager verify pruned to candidate docs
+    that it replaced: ``minhash_near_dups`` 1.14 → 1.08 s,
+    ``simhash_near_dups`` 3.00 → 2.06 s (warm build + ``noop`` medians of 3
+    alternations, 4 cores). A corpus far larger than
+    its candidate set pays the whole-corpus shingle pass in full.
 
-    ``pairs`` is consumed FIVE times by this plan shape (id_a branch, id_b
-    branch, the pair join — and the pruned corpus, which transitively
-    re-derives the ids, is consumed twice), so a lazily-built candidate
-    generator (LSH banding: shingle explode → signature aggregate → bucket
-    self-join → distinct) would be recomputed five times end-to-end
-    (measured at sf1.0: minhash_near_dups 15–65s, plan with 12 parquet
-    scans / 31 exchanges). Materializing the candidate set once with
-    ``localCheckpoint`` (guide §3.3: truncate the plan when an intermediate
-    is reused) makes every consumer read the same computed rows — the
-    candidate set is small by construction (bucket-capped), and it is
-    recomputed fresh on every invocation, so nothing is cached across runs.
+    Two shapes were measured and rejected (same protocol at sf0.01, means
+    of 2 sessions; this shape: ngram_jaccard_pairs 2.27 s,
+    minhash_near_dups 0.99 s, simhash_near_dups 1.22 s):
 
-    This makes the function EAGER: calling it runs Spark jobs (the pair
-    candidates and the shingle sets are computed on the spot) before the
-    returned DataFrame is ever acted on, and so does :func:`minhash_dedup`,
-    which ends in it. ``localCheckpoint`` blocks live in executor storage
-    without lineage: if an executor holding one is lost before the result
-    is consumed, the plan cannot recompute the block and the action fails —
-    rebuild the DataFrame (call this function again). Streaming ``pairs``
-    skip both checkpoints and stay lazy."""
-    if not pairs.isStreaming:
-        pairs = pairs.localCheckpoint(eager=True)
-    ids = (pairs.selectExpr("id_a AS _cid")
-           .unionAll(pairs.selectExpr("id_b AS _cid"))
-           .distinct())
-    pruned = df.join(ids, df[id_col] == ids["_cid"], "leftsemi")
+    - keeping the semi-join that prunes the corpus to candidate ids reads
+      ``pairs`` again in the pruning branch, so the candidate generator
+      runs once per read (AQE initial plan: 12 scans, 36 exchanges):
+      2.59 / 1.74 / 2.22 s;
+    - one reader of ``pairs`` (stack both ids, join the corpus once,
+      regroup per pair with ``collect_list``) shuffles a shingle array per
+      pair side and needs a synthetic pair key to keep repeated pairs:
+      2.55 / 0.96 / 1.19 s, no faster for more code."""
     sets = (F.array_distinct(F.transform(_shingles(text_col, n),
                                          lambda s: F.xxhash64(s)))
             if hashed else F.array_distinct(_shingles(text_col, n)))
-    sh = pruned.select(F.col(id_col).alias("_id"), sets.alias("_sh"))
-    if not sh.isStreaming:
-        # consumed by both pair joins — shingle the candidate docs once
-        sh = sh.localCheckpoint(eager=True)
-    return _pair_jaccard(pairs, sh)
-
-
-def _pair_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
-    """|∩|/|∪| per ``(id_a, id_b)`` pair over per-doc shingle-set arrays
-    ``sh (_id, _sh)`` — the shared tail of the string/hashed/shared-hash
-    verify paths. Set semantics: element order inside ``_sh`` is irrelevant
-    (intersect/union/size are order-independent), so any set construction
-    (array_distinct or collect_set) yields identical jaccard values.
-
-    ``sh`` is explicitly broadcast: one row per CANDIDATE doc (the pruned
-    set, bounded by the caller's bucket caps — ~0.5 KB/doc with hashed
-    shingles), and a shuffle join here would move each doc's array once
-    per pair it appears in (~25× at sf1.0) through two exchanges+sorts —
-    measured 5.7s vs 3.6s medians before broadcasting. The hint makes the
-    plan independent of the session broadcast threshold."""
-    out = (
-        pairs.join(F.broadcast(sh.withColumnRenamed("_sh", "sh_a")),
-                   pairs.id_a == sh._id).drop("_id")
-        .join(F.broadcast(sh.withColumnRenamed("_sh", "sh_b").alias("s2")),
-              pairs.id_b == F.col("s2._id")).drop("_id")
-    )
+    sh = df.select(F.col(id_col).alias("_id"), sets.alias("_sh"))
     inter = "size(array_intersect(sh_a, sh_b))"
     union = "size(array_union(sh_a, sh_b))"
-    return out.selectExpr(
-        "id_a", "id_b",
-        f"round(CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END, 6) "
-        "AS jaccard",
+    return (
+        pairs.join(sh.selectExpr("_id AS id_a", "_sh AS sh_a"), "id_a")
+        .join(sh.selectExpr("_id AS id_b", "_sh AS sh_b"), "id_b")
+        .selectExpr(
+            "id_a", "id_b",
+            f"round(CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END, 6) "
+            "AS jaccard")
     )
 
 
@@ -352,14 +316,15 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
                   bands: int = 8, threshold: float = 0.8,
                   max_bucket: int | None = 1000) -> DataFrame:
     """End-to-end near-dup pair detection: minhash → LSH buckets (capped at
-    ``max_bucket`` rows per bucket) → verified Jaccard ≥ threshold.
+    ``max_bucket`` rows per bucket) → verified Jaccard ≥ threshold. One lazy
+    plan: the candidate pairs are read once by :func:`ngram_jaccard`, which
+    shingles the whole corpus for the verify (see there for the measured
+    cost and the rejected shapes).
 
     A shared-hash variant (materialize :func:`_minhash_hash_rows` once,
     derive signatures AND ``collect_set`` verify sets from it) was measured
-    and REJECTED at sf1.0: the verify's shingle pass is semi-join-pruned to
-    candidate docs (usually few), while the shared frame eagerly
-    materializes every shingle occurrence — interleaved A/B medians 4.9s vs
-    4.5s, with worse tails."""
+    and rejected at sf1.0: the shared frame materializes every shingle
+    occurrence — interleaved A/B medians 4.9s vs 4.5s, with worse tails."""
     buckets = minhash_band_buckets(df, id_col=id_col, text_col=text_col,
                                    n=n, k=k, bands=bands)
     cands = _bucket_pairs(buckets, ["band", "band_hash"], max_bucket)
@@ -450,7 +415,14 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     ~64k; less under boilerplate skew — but heavily-repeated text lands in
     over-cap buckets that are byte-near-identical, which is
     :func:`exact_dedup`'s job, pinned by the cap-vs-recall test). Past the
-    bound, shard the corpus or raise ``max_bucket``."""
+    bound, shard the corpus or raise ``max_bucket``.
+
+    As a candidate source for a Jaccard threshold, recall is exact only for
+    pairs within Hamming ``max_distance``: Hamming distance does not bound
+    Jaccard, and a short doc and its near-copy can have 2-gram Jaccard ≥ 0.5
+    yet sit further apart. The registry's ``simhash_near_dups`` (10 × 6-bit
+    bands, Hamming ≤ 9) is exact on the test corpora, but on perfbench's
+    seed-901 corpus it misses 1 of 33 all-pairs oracle pairs."""
     mask = (1 << band_bits) - 1
     split = ", ".join(f"shiftrightunsigned(simhash, {i * band_bits}) & {mask}"
                       for i in range(64 // band_bits))

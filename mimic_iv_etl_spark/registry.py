@@ -540,7 +540,11 @@ def q_simhash_near_dups(spark, sf):
     pigeonhole recall is EXACT for Hamming ≤ 9 — candidates then
     exact-verified by 2-gram Jaccard ≥ 0.5. Measured: every ≥0.5-Jaccard
     pair sits within Hamming 9 at sf0.001 AND sf0.01 (max 9 / 5), so the
-    result equals the all-pairs exact SQL oracle at both. A band_bits=4
+    result equals the all-pairs exact SQL oracle at both. That equality is
+    a property of these corpora, not of the method: recall is exact only
+    for pairs within Hamming 9, and a short doc and its near-copy can have
+    Jaccard ≥ 0.5 yet sit further apart — on perfbench's seed-901 corpus
+    this entry misses 1 of 33 oracle pairs. A band_bits=4
     variant was rejected: 16 bucket values per band collapse a 5k-doc
     corpus into ~300-row buckets — an O(n²/16) candidate blowup at bench
     scale (9.7s vs 2.7s).

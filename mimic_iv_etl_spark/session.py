@@ -59,10 +59,7 @@ def get_spark_session(
         # broadcast): a round-6 experiment with preferSortMergeJoin=false +
         # 512m SHJ local-map + 64m auto-broadcast measured a consistent net
         # LOSS on the join-bearing analytics (readmission 1.1-1.4s → 1.6s,
-        # minhash 3.6s → 4.7s at sf1.0) once the one join that genuinely
-        # needed a broadcast (the dedup verify's candidate shingle relation)
-        # got an explicit F.broadcast hint — deliberate per-join hints beat
-        # blanket strategy overrides here.
+        # minhash 3.6s → 4.7s at sf1.0).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")

@@ -686,19 +686,49 @@ def test_ivf_explicit_centroids_probe_all_equals_exact(spark):
 def test_ngram_jaccard_hashed_matches_string_path(spark):
     """The hashed (xxhash64 shingle-set) verify must produce the exact
     jaccard values of the string-set path — set cardinalities are unchanged
-    short of a 64-bit collision inside one compared pair."""
-    from pyspark.sql import functions as F
+    short of a 64-bit collision inside one compared pair. Both paths keep
+    the verify contract, checked against a Python oracle: inner joins (a
+    pair naming an id absent from the corpus is dropped, a repeated pair
+    comes out once per occurrence), ``(x, x)`` gives 1.0, and a doc with no
+    shingle set (NULL text) takes the ``ELSE 0.0`` branch."""
+    from collections import Counter
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"),
          (2, "alpha beta gamma delta epsilon eta"),
          (3, "totally different words over here"),
-         (4, "alpha beta"), (5, "")],
+         (4, "alpha beta"), (5, ""), (6, None)],
         "doc_id long, text string")
     pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (4, 5)], "id_a long, id_b long")
-    a = {(r["id_a"], r["id_b"]): r["jaccard"]
-         for r in dedup.ngram_jaccard(docs, pairs, n=2).collect()}
-    b = {(r["id_a"], r["id_b"]): r["jaccard"]
-         for r in dedup.ngram_jaccard(docs, pairs, n=2, hashed=True).collect()}
-    assert a == b and len(a) == 5
+        [(1, 2), (1, 3), (1, 4), (2, 3), (4, 5),
+         (1, 99), (1, 2), (3, 3), (5, 5), (4, 6), (6, 6)],
+        "id_a long, id_b long")
+
+    def shingles(text, n=2):
+        # mirrors operators.text._shingles: '' has no tokens and is one
+        # whole-text shingle, sub-n-token text is one shingle
+        if text is None:
+            return None
+        w = text.split()
+        if len(w) < n:
+            return {" ".join(w)}
+        return {" ".join(w[i:i + n]) for i in range(len(w) - n + 1)}
+
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    want = Counter()
+    for a, b in [tuple(r) for r in pairs.collect()]:
+        if a not in texts or b not in texts:
+            continue
+        sa, sb = shingles(texts[a]), shingles(texts[b])
+        union = len(sa | sb) if sa is not None and sb is not None else 0
+        want[(a, b, round(len(sa & sb) / union, 6) if union else 0.0)] += 1
+    assert want[(1, 2, 0.666667)] == 2 and want[(3, 3, 1.0)] == 1
+    assert want[(4, 6, 0.0)] == want[(6, 6, 0.0)] == 1
+    assert sum(want.values()) == 10
+
+    for hashed in (False, True):
+        got = Counter(
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in dedup.ngram_jaccard(docs, pairs, n=2,
+                                         hashed=hashed).collect())
+        assert got == want, hashed

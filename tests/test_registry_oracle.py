@@ -127,10 +127,6 @@ def test_scaled_features_moments_read_lineitem_unspread(spark, monkeypatch):
 # Entries whose construction runs Spark jobs, each with the reason. Every
 # other entry must build its DataFrame without starting a job.
 BUILD_JOBS_ALLOWED = {
-    "ngram_jaccard_pairs": "ngram_jaccard localCheckpoints the candidate "
-                           "pairs and shingle sets eagerly",
-    "minhash_near_dups": "ngram_jaccard verify (eager localCheckpoint)",
-    "simhash_near_dups": "ngram_jaccard verify (eager localCheckpoint)",
     "ivf_ann": "collects the pinned centroid vectors to the driver",
     "embedding_near_dups": "counts the corpus up front to refuse an "
                            "over-cap O(n²) cross join (max_rows)",
@@ -154,6 +150,20 @@ def test_registry_build_starts_no_spark_job(spark, name):
         assert started > 0, f"{name} now builds lazily: drop it from the list"
     else:
         assert started == 0, f"{name}: {started} Spark job(s) while building"
+
+
+@pytest.mark.parametrize(
+    "name", ["ngram_jaccard_pairs", "minhash_near_dups", "simhash_near_dups"])
+def test_near_dup_plans_keep_lineage_to_parquet(spark, name):
+    """The near-dup verify plans are lazy all the way down: no
+    lineage-truncated ``LogicalRDD`` (a checkpoint or a materialized
+    frame) anywhere in the logical plan, whose leaves are the parquet
+    scans, so a lost executor's blocks are recomputed from the files."""
+    df = registry.REGISTRY[name].fn(
+        spark, os.path.join(os.path.dirname(SF), "sf0.001"))
+    plan = df._jdf.queryExecution().logical().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert "Relation " in plan and "parquet" in plan, plan
 
 
 def test_warm_query_pass_compiles_nothing(spark):
