@@ -38,6 +38,8 @@ from mimic_iv_etl_spark.cdc.apply import apply_batch
 from mimic_iv_etl_spark.cdc.metrics import flush_sidecars
 from mimic_iv_etl_spark.lake.table import CommitConflict, LakeTable
 
+_FLUSH_SIDECARS_EVERY = 256  # applied batches between sidecar flushes
+
 
 def _tranche_dirs(log_dir: str) -> list[str]:
     out = sorted(glob.glob(os.path.join(log_dir, "tranche-*")))
@@ -120,22 +122,24 @@ def replay_log(
     batch_offsets: int = 100_000,
     n_buckets: int = 32,
     compact_every: int | None = None,
-    drop_payload: bool = True,
     write_salt: int = 1,
     auto_compact_deltas: int | None = None,
     decode_payload: bool = False,
     normalize: bool = False,
-    flush_sidecars_every: int | None = 256,
 ) -> dict:
     """Replay the whole log into the table at ``table_path`` (created with
     ``schema`` if absent). ``batch_offsets`` sets the per-partition offset
     width of each micro-batch. Returns aggregate throughput stats
     (apply-loop wall time only, fixture IO excluded — BASELINE.md protocol).
 
-    ``flush_sidecars_every`` folds the driver-local lineage/metrics JSONL
-    tails into cluster-durable parquet segments every K applied batches and
-    once at the end of the replay (one tiny Spark job per flush, amortized
-    off the apply hot path); ``None`` disables.
+    The driver-local lineage/metrics JSONL tails are folded into
+    cluster-durable parquet segments every ``_FLUSH_SIDECARS_EVERY`` applied
+    batches and once at the end of the replay (one tiny Spark job per flush,
+    amortized off the apply hot path).
+
+    ``decode_payload``/``normalize`` run on LWW winners only inside
+    ``apply_batch`` (LWW never reads ``text``, so the winners are the same
+    either way). The raw ``payload`` column is dropped unless decoded.
 
     When the log manifest carries dense per-partition offset ranges, each
     window's ranges go to ``apply_batch``, which then runs the packed-stamp
@@ -183,11 +187,7 @@ def replay_log(
             # parsed (at a 10:1 update ratio that is 90% less JSON work, the
             # apply path's dominant and worst-scaling CPU).
             df = df.drop("role", "text", "tool")
-        elif normalize:
-            from mimic_iv_etl_spark.functions import normalize_text
-
-            df = df.withColumn("text", normalize_text(F.col("text")))
-        if drop_payload and not late_decode and "payload" in df.columns:
+        elif "payload" in df.columns:
             df = df.drop("payload")
         start = lo
         while start <= hi:
@@ -211,7 +211,7 @@ def replay_log(
                 return apply_batch(table, batch, batch_id=batch_seq,
                                    write_salt=write_salt,
                                    decode_payload=late_decode,
-                                   normalize=normalize and late_decode,
+                                   normalize=normalize,
                                    manifest_ranges=window_ranges,
                                    log_tail=log_tail)
 
@@ -238,16 +238,14 @@ def replay_log(
                 table.compact()
             elif auto_compact_deltas:
                 table.maybe_compact(auto_compact_deltas)
-            if (flush_sidecars_every and n_batches
-                    and n_batches % flush_sidecars_every == 0):
+            if n_batches and n_batches % _FLUSH_SIDECARS_EVERY == 0:
                 flush_sidecars(spark, table.path)
             start = end
 
     secs = time.monotonic() - t0
     # final durability flush AFTER the throughput clock stops: sidecars are
     # best-effort observability (metrics.py), not part of the apply loop
-    if flush_sidecars_every:
-        flush_sidecars(spark, table.path)
+    flush_sidecars(spark, table.path)
     return {
         "events_applied": total_applied,
         "batches": n_batches,

@@ -111,7 +111,6 @@ def stream_tranche(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     on_batch: Callable[[int, dict], None] | None = None,
-    drop_payload: bool = True,
     decode_payload: bool = False,
     normalize: bool = False,
 ) -> None:
@@ -147,7 +146,7 @@ def stream_tranche(
     late_decode = decode_payload and "payload" in src.columns
     if late_decode:
         src = src.drop("role", "text", "tool")
-    elif drop_payload and "payload" in src.columns:
+    elif "payload" in src.columns:
         src = src.drop("payload")
 
     def _apply(batch_df, epoch_id: int) -> None:

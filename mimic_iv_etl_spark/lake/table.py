@@ -15,12 +15,16 @@ Commits are optimistic:
 the snapshot is written and fsynced to a hidden tmp file, then ``os.link``ed
 to its ``v{N}.json`` name, so a lost race surfaces as ``CommitConflict``
 (EEXIST) instead of silent corruption, and the name only ever appears with
-complete content. A crash *between* staging data files and linking the
-snapshot leaves only unreferenced orphans (the commit point is one atomic
-link) — this is the idempotent-commit foundation for the engine's
-exactly-once story (SURVEY.md §4.3 item 4). The metadata directory must be
-on a filesystem with hardlinks; without them every commit raises a clear
-``OSError``.
+complete content. Every commit kind — append, copy-on-write rewrite,
+rebucket, summary and clustering updates — goes through ONE retry loop
+(``LakeTable._commit``): refresh, rebase where the commit allows it, back
+off, retry; a writer that finally loses deletes its staged data files and
+new manifest segments before raising. A crash *between* staging data files
+and linking the snapshot leaves only unreferenced orphans (the commit point
+is one atomic link), reclaimed by ``vacuum`` — this is the idempotent-commit
+foundation for the engine's exactly-once story (SURVEY.md §4.3 item 4). The
+metadata directory must be on a filesystem with hardlinks; without them
+every commit raises a clear ``OSError``.
 
 Reads prune at bucket granularity (the file list is bucket-keyed) and handle
 per-file schema ids: files written before a schema evolution are read with
@@ -512,24 +516,9 @@ class LakeTable:
                       if e["path"] not in parent_files
                       and e.get("kind", "base") == "delta"]
             snap = parent_snap
-        target = self.internal_schema
-        by_schema: dict[str, list[str]] = {}
-        for e in added:
-            by_schema.setdefault(str(e["schema_id"]), []).append(
-                os.path.join(self.path, e["path"]))
-        parts = []
-        for sid, paths in sorted(by_schema.items()):
-            written = _internal_schema(
-                T.StructType.fromJson(self.snapshot["schemas"][sid]))
-            parts.append(_align(self.spark.read.schema(written).parquet(*paths),
-                                target))
-        if parts:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
+        out = self._assemble(added)
+        if added:
             out = lww_reduce(out, self.key_cols)
-        else:
-            out = self.spark.createDataFrame([], target)
         out = out.withColumn(
             "_change_type",
             F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")))
@@ -658,23 +647,24 @@ class LakeTable:
         to the same buckets must SURVIVE the rewrite — only the exact files
         this writer read and replaced are dropped. Raises CommitConflict if
         any replaced file is no longer referenced (a concurrent rewrite beat
-        us to it — our staged replacement is stale)."""
-        kept: list[str] = []
-        found: set[str] = set()
-        for m in self._base_manifests():
-            entries = _load_manifest(self._meta_dir, m)
-            keep = [e for e in entries if e["path"] not in replaced]
-            if len(keep) != len(entries):
-                found.update(e["path"] for e in entries if e["path"] in replaced)
-            if len(keep) == len(entries):
-                kept.append(m)
-            elif keep:
-                kept.append(_write_manifest(self._meta_dir, keep))
+        us to it — our staged replacement is stale); the check runs before
+        any segment is rewritten, so an abort leaves no new segment behind."""
+        segs = [(m, _load_manifest(self._meta_dir, m))
+                for m in self._base_manifests()]
+        found = {e["path"] for _, entries in segs for e in entries
+                 if e["path"] in replaced}
         if found != replaced:
             raise CommitConflict(
                 f"{len(replaced - found)} replaced file(s) no longer "
                 "referenced by the current snapshot (concurrent rewrite); "
                 "stale copy-on-write commit aborted")
+        kept: list[str] = []
+        for m, entries in segs:
+            keep = [e for e in entries if e["path"] not in replaced]
+            if len(keep) == len(entries):
+                kept.append(m)
+            elif keep:
+                kept.append(_write_manifest(self._meta_dir, keep))
         return kept
 
     def _rebase_guard(self, base: dict) -> None:
@@ -695,68 +685,84 @@ class LakeTable:
                 "keys); staged files cannot be rebased — restage against "
                 f"v{cur['version']}")
 
-    def _commit(
-        self,
-        manifests: list[str],
-        new_entries: list[dict],
-        schema_id: int,
-        schemas: dict,
-        summary: dict | None,
-        operation: str,
-        n_buckets: int | None = None,
-        rebase=None,
-    ) -> "LakeTable":
-        """Optimistic snapshot commit. ``rebase`` (zero-arg → base segment
-        list) is the concurrent-writer story: on a lost link race the
-        handle refreshes to the winner, revalidates layout invariants
-        (:meth:`_rebase_guard`), recomputes the base segments against the
-        winner's snapshot, and re-points the SAME already-written new-entry
-        segment — the staged data files are untouched, so ingest and
-        maintenance (compaction, tombstone expiry) interleave without either
-        redoing a Spark job. No ``rebase`` (full rewrites like
-        :meth:`rebucket`, pinned time-travel handles) → conflict raises."""
-        if self._pinned:
-            raise CommitConflict(
-                "time-travel handle is read-only (pinned snapshot)")
+    def _commit(self, summary: dict | None = None,
+                staged: list[dict] | None = None, rebase=None,
+                **props) -> "LakeTable":
+        """The one optimistic snapshot commit every writer goes through.
+
+        Each attempt copies the current snapshot, stamps version, parent and
+        ``created_ms``, points ``manifests`` at the base segments plus one new
+        segment holding ``staged``, merges ``summary`` (:func:`_merge_summary`)
+        and sets ``props`` (snapshot keys such as ``schema_id`` or
+        ``n_buckets``; ``None`` removes the key), then links it
+        (:func:`_write_snapshot`). A legacy inline ``files`` list is never
+        copied: its entries migrate into a segment (:meth:`_base_manifests`).
+
+        A lost link race refreshes to the winner and retries with jittered
+        backoff, up to ``_MAX_COMMIT_RETRIES``. A metadata-only commit
+        (``staged is None``) replays onto the winner's segments. A data
+        commit revalidates layout (:meth:`_rebase_guard`) and recomputes its
+        base segments with ``rebase`` (zero-arg → segment list, also the
+        first attempt's base), re-pointing the SAME new segment — the staged
+        data files are never rewritten, so ingest and maintenance interleave
+        without either redoing a Spark job. A data commit without ``rebase``
+        (:meth:`rebucket`'s full rewrite) aborts on its first conflict.
+
+        On a terminal CommitConflict, and only then, the staged data files
+        and every segment this commit wrote are deleted before re-raising:
+        no snapshot references them. Any other exception (a crash) leaves
+        them for :meth:`vacuum`, and nothing is deleted once the link
+        succeeded."""
         base_snap = self.snapshot
-        new_seg = (_write_manifest(self._meta_dir, new_entries)
-                   if new_entries else None)
-        for attempt in range(_MAX_COMMIT_RETRIES + 1):
-            all_m = manifests + [new_seg] if new_seg else list(manifests)
-            if len(all_m) > _MANIFEST_FOLD_THRESHOLD:
-                merged: list[dict] = []
-                for m in all_m:
-                    merged.extend(_load_manifest(self._meta_dir, m))
-                all_m = [_write_manifest(self._meta_dir, merged)]
-            new_summary = _merge_summary(self.summary, summary)
-            new_summary["operation"] = operation
-            snap = {
-                "version": self.version + 1,
-                "parent": self.version,
-                "created_ms": int(time.time() * 1000),
-                "schema_id": schema_id,
-                "schemas": schemas,
-                "n_buckets": self.n_buckets if n_buckets is None else n_buckets,
-                "key_cols": self.key_cols,
-                "bucket_by": self.snapshot["bucket_by"],
-                "manifests": all_m,
-                "summary": new_summary,
-            }
-            # table properties ride every commit (persistent clustering spec)
-            for k in ("cluster_by", "cluster_split"):
-                if k in self.snapshot:
-                    snap[k] = self.snapshot[k]
-            try:
-                _write_snapshot(self._meta_dir, snap)
-                return self.refresh()
-            except CommitConflict:
-                if rebase is None or attempt == _MAX_COMMIT_RETRIES:
-                    raise
+        ours: set[str] = set()  # segments no committed snapshot references
+        try:
+            if self._pinned:
+                raise CommitConflict(
+                    "time-travel handle is read-only (pinned snapshot)")
+            new = [_write_manifest(self._meta_dir, staged)] if staged else []
+            ours.update(new)
+            base = (self._base_manifests() if staged is None
+                    else rebase() if rebase else [])
+            for attempt in range(_MAX_COMMIT_RETRIES + 1):
+                snap = {k: v for k, v in self.snapshot.items() if k != "files"}
+                snap.update(version=self.version + 1, parent=self.version,
+                            created_ms=int(time.time() * 1000),
+                            manifests=base + new,
+                            summary=_merge_summary(self.summary, summary))
+                for k, v in props.items():
+                    if v is None:
+                        snap.pop(k, None)
+                    else:
+                        snap[k] = v
+                if len(snap["manifests"]) > _MANIFEST_FOLD_THRESHOLD:
+                    snap["manifests"] = [_write_manifest(
+                        self._meta_dir, _files_of(self._meta_dir, snap))]
+                ours |= {*base, *snap["manifests"]} - set(self.manifests)
+                try:
+                    _write_snapshot(self._meta_dir, snap)
+                    break
+                except CommitConflict:
+                    if (attempt == _MAX_COMMIT_RETRIES
+                            or (staged is not None and rebase is None)):
+                        raise
                 _commit_backoff(attempt)
                 self.refresh()  # load the winner, then replay onto it
-                self._rebase_guard(base_snap)
-                manifests = rebase()
-        raise AssertionError("unreachable")
+                if staged is None:
+                    base = self._base_manifests()
+                else:
+                    self._rebase_guard(base_snap)
+                    base = rebase()
+        except CommitConflict:
+            self.discard_staged(staged or [])
+            for m in ours:
+                path = os.path.join(self._meta_dir, m)
+                _MANIFEST_CACHE.pop(path, None)
+                try:
+                    os.remove(path)
+                except FileNotFoundError:
+                    pass
+            raise
+        return self.refresh()
 
     def stage_delta(
         self,
@@ -782,33 +788,28 @@ class LakeTable:
         schemas: dict,
         summary: dict | None = None,
     ) -> "LakeTable":
-        """Second half of :meth:`append_delta`: snapshot-commit staged files.
-        Metadata cost is O(batch): one new manifest segment holding exactly
-        the staged entries; existing segments are referenced by name.
+        """Second half of :meth:`append_delta`: snapshot-commit staged files
+        through :meth:`_commit`. Metadata cost is O(batch): one new manifest
+        segment holding exactly the staged entries; existing segments are
+        referenced by name.
 
         Concurrent-writer safe: an append that loses the snapshot race to a
         maintenance commit (compaction, tombstone expiry) rebases onto the
         winner — appends are always rebaseable while the table layout is
-        unchanged, so a streaming ingest never stops for maintenance.
+        unchanged, so a streaming ingest never stops for maintenance. An
+        unrebaseable loss (layout change, retries exhausted) raises
+        CommitConflict after the commit loop deleted the staged files.
         Concurrent INGEST writers (multi-source fan-in) are also sound when
         each stream owns a DISJOINT set of source-partition ids: the summary
         merge takes the per-partition max of ``applied_offsets``
         (:func:`_merge_summary`), so a stale loser never regresses another
         stream's high-water marks. Two streams sharing a partition id remain
         unsupported — they would interleave one offset sequence."""
-        try:
-            out = self._commit(
-                self._base_manifests(), entries, schema_id, schemas, summary,
-                "append_delta", rebase=self._base_manifests,
-            )
-        except CommitConflict:
-            # unrebaseable (layout change / retries exhausted): the staged
-            # files will never be referenced — reclaim now instead of
-            # waiting for vacuum's grace window
-            self.discard_staged(entries)
-            raise
+        self._commit(dict(summary or {}, operation="append_delta"),
+                     staged=entries, rebase=self._base_manifests,
+                     schema_id=schema_id, schemas=schemas)
         self.last_new_entries = entries
-        return out
+        return self
 
     def discard_staged(self, entries: list[dict]) -> None:
         """Drop files from an abandoned :meth:`stage_delta` (no snapshot ever
@@ -853,24 +854,21 @@ class LakeTable:
         survive (merge-on-read LWW re-reduces them over the new base, and LWW
         is order-insensitive under its total-order tiebreak, so
         ``LWW(base′ ∪ delta) == LWW(old ∪ delta)``). Losing to a concurrent
-        REWRITE of any replaced file aborts: the staged result folded state
-        that no longer exists."""
+        REWRITE of any replaced file aborts with CommitConflict: the staged
+        result folded state that no longer exists, so the commit loop
+        (:meth:`_commit`) deletes it before raising."""
         replaced = {
             e["path"] for e in self.files if e["bucket"] in touched_buckets
         }
         public, schema_id, schemas = self._next_schema(new_schema)
         entries = self._stage_write(state_df, public, schema_id, "base",
                                     cluster_by=cluster_by, split=split)
-        try:
-            out = self._commit(self._kept_manifests(replaced), entries,
-                               schema_id, schemas, summary,
-                               "overwrite_buckets",
-                               rebase=lambda: self._kept_manifests(replaced))
-        except CommitConflict:
-            self.discard_staged(entries)  # lost rewrite: result is stale
-            raise
+        self._commit(dict(summary or {}, operation="overwrite_buckets"),
+                     staged=entries,
+                     rebase=lambda: self._kept_manifests(replaced),
+                     schema_id=schema_id, schemas=schemas)
         self.last_new_entries = entries
-        return out
+        return self
 
     def compact(self, buckets: set[int] | None = None,
                 cluster_by: list[str] | None = None,
@@ -916,7 +914,9 @@ class LakeTable:
         concurrent readers keep a consistent old snapshot and the next CDC
         batch routes by the new count via :meth:`bucket_expr`. Tombstones are
         preserved. Old files become unreferenced history, reclaimed by
-        :meth:`expire_snapshots` + :meth:`vacuum`."""
+        :meth:`expire_snapshots` + :meth:`vacuum`. A full rewrite cannot
+        rebase: losing the commit race raises CommitConflict, and the
+        rewrite is deleted before the raise (re-plan from a fresh handle)."""
         if n_buckets < 1:
             raise ValueError("n_buckets must be >= 1")
         if n_buckets == self.n_buckets:
@@ -925,10 +925,10 @@ class LakeTable:
             F.xxhash64(F.col(self.snapshot["bucket_by"])), F.lit(n_buckets)
         ).cast("int")
         state = self.read(internal=True).withColumn(BUCKET_COL, new_expr)
-        public, schema_id, schemas = self._next_schema(None)
-        entries = self._stage_write(state, public, schema_id, "base",
+        entries = self._stage_write(state, self.schema,
+                                    self.snapshot["schema_id"], "base",
                                     n_buckets=n_buckets)
-        return self._commit([], entries, schema_id, schemas, None, "rebucket",
+        return self._commit({"operation": "rebucket"}, staged=entries,
                             n_buckets=n_buckets)
 
     def expire_tombstones(self, older_than_ts: str) -> "LakeTable":
@@ -1036,9 +1036,7 @@ class LakeTable:
         """Metadata-only commit (e.g. marking a batch applied with zero rows).
         Nothing is staged, so a lost race simply replays the summary update
         onto the winner's snapshot."""
-        return self._metadata_commit(
-            lambda snap: snap.__setitem__(
-                "summary", _merge_summary(snap["summary"], summary)))
+        return self._commit(summary)
 
     def set_clustering(self, cluster_by: list[str] | None,
                        split: int = 4) -> "LakeTable":
@@ -1055,44 +1053,14 @@ class LakeTable:
                        if c not in {f.name for f in self.schema.fields}]
             if missing:
                 raise ValueError(f"cluster columns not in schema: {missing}")
-
-        def mutate(snap: dict) -> None:
-            if cluster_by is None:
-                snap.pop("cluster_by", None)
-                snap.pop("cluster_split", None)
-            else:
-                snap["cluster_by"] = list(cluster_by)
-                snap["cluster_split"] = int(split)
-
-        return self._metadata_commit(mutate)
+            return self._commit(cluster_by=list(cluster_by),
+                                cluster_split=int(split))
+        return self._commit(cluster_by=None, cluster_split=None)
 
     @property
     def clustering(self) -> tuple[list[str], int] | None:
         spec = self.snapshot.get("cluster_by")
         return (spec, int(self.snapshot.get("cluster_split", 1))) if spec else None
-
-    def _metadata_commit(self, mutate) -> "LakeTable":
-        """Data-free snapshot commit: copy the current snapshot, apply
-        ``mutate(snap)``, CAS-write. A lost race replays the mutation onto
-        the winner (no staged files, so every conflict is rebaseable)."""
-        if self._pinned:
-            raise CommitConflict(
-                "time-travel handle is read-only (pinned snapshot)")
-        for attempt in range(_MAX_COMMIT_RETRIES + 1):
-            snap = dict(self.snapshot)
-            snap["version"] = self.version + 1
-            snap["parent"] = self.version
-            snap["created_ms"] = int(time.time() * 1000)
-            mutate(snap)
-            try:
-                _write_snapshot(self._meta_dir, snap)
-                return self.refresh()
-            except CommitConflict:
-                if attempt == _MAX_COMMIT_RETRIES:
-                    raise
-                _commit_backoff(attempt)
-                self.refresh()
-        raise AssertionError("unreachable")
 
 
 def _merge_summary(current: dict, update: dict | None) -> dict:

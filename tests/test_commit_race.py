@@ -156,6 +156,62 @@ def test_conflicting_rewrites_abort(spark, tmp_path):
     assert referenced_now <= on_disk
 
 
+@pytest.mark.parametrize("race", ["append_vs_rebucket", "compact_vs_compact",
+                                  "rebucket_vs_append", "pinned_append"])
+def test_terminal_conflict_leaves_no_orphans(spark, tmp_path, race):
+    """Every data commit that finally loses its race (layout change under an
+    append, a rewrite of already-rewritten files, a full rewrite from a stale
+    handle, an append from a read-only time-travel handle) raises
+    CommitConflict, leaves the winner's table as it was, and deletes its
+    staged data files and its new manifest segment at once: nothing it
+    wrote waits for vacuum's grace window."""
+    import glob
+    import json
+    import os
+
+    path = str(tmp_path / f"t_{race}")
+    winner = _mk_table(spark, path)
+    loser = LakeTable(spark, path)
+    late = [("cL", 0, "user", "late", None, TS, False, 600, 0)]
+    if race == "append_vs_rebucket":
+        winner.rebucket(8)
+        staged = _rows(spark, loser, late)  # bucketed for n_buckets=4
+        lose = lambda: loser.append_delta(staged)  # noqa: E731
+    elif race == "compact_vs_compact":
+        winner.compact()
+        lose = loser.compact
+    elif race == "pinned_append":
+        loser = winner.at_version(winner.version)
+        staged = _rows(spark, loser, late)
+        lose = lambda: loser.append_delta(staged)  # noqa: E731
+    else:
+        winner.append_delta(_rows(spark, winner, late))
+        lose = lambda: loser.rebucket(8)  # noqa: E731
+    want = _state(winner)
+
+    with pytest.raises(CommitConflict):
+        lose()
+
+    fresh = LakeTable(spark, path)
+    assert fresh.version == winner.version
+    assert fresh.n_buckets == winner.n_buckets
+    assert _state(fresh) == want
+    meta = os.path.join(path, "metadata")
+    snaps = []
+    for p in glob.glob(os.path.join(meta, "v*.json")):
+        with open(p) as f:
+            snaps.append(json.load(f))
+    referenced = {e["path"] for v in range(fresh.version + 1)
+                  for e in fresh.at_version(v).files}
+    on_disk = {os.path.relpath(p, path) for p in
+               glob.glob(os.path.join(path, "data", "bucket=*", "*.parquet"))}
+    assert on_disk - referenced == set(), "loser left orphan data files"
+    segments = {os.path.basename(p)
+                for p in glob.glob(os.path.join(meta, "m-*.json"))}
+    live = {m for s in snaps for m in s["manifests"]}
+    assert segments - live == set(), "loser left orphan manifest segments"
+
+
 def test_rebase_guard_rejects_layout_change(spark, tmp_path):
     """A concurrent partition evolution (rebucket) makes staged files
     unrebaseable: their _bucket column was computed with the old bucket

@@ -1,5 +1,7 @@
 """Full mandated pipeline e2e: encoded events → JSON decode → vectorized NFC
-normalization → LWW replay == an independently-normalizing DuckDB oracle."""
+normalization → LWW replay == an independently-normalizing DuckDB oracle.
+Without payload decode the raw text columns are normalized the same way:
+both shapes normalize LWW winners only, inside ``apply_batch``."""
 
 from __future__ import annotations
 
@@ -7,6 +9,7 @@ import glob
 
 import duckdb
 import pandas as pd
+import pytest
 
 from mimic_iv_etl_spark.cdc.replay import replay_log
 from mimic_iv_etl_spark.lake.table import LakeTable
@@ -35,10 +38,12 @@ def _oracle_normalized(log_dir: str) -> pd.DataFrame:
     ).df()
 
 
-def test_decode_normalize_replay_matches_normalizing_oracle(spark, small_log, tmp_path):
+@pytest.mark.parametrize("decode_payload", [True, False])
+def test_decode_normalize_replay_matches_normalizing_oracle(spark, small_log, tmp_path,
+                                                            decode_payload):
     d, spec, _ = small_log
     tp = str(tmp_path / "t_dn")
     out = replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA, batch_offsets=2_000,
-                     n_buckets=8, decode_payload=True, normalize=True)
+                     n_buckets=8, decode_payload=decode_payload, normalize=True)
     assert out["events_applied"] == spec.n_events
     assert_final_state_equal(LakeTable(spark, tp).read(), _oracle_normalized(d))
