@@ -39,11 +39,13 @@ Offset-range bookkeeping rides an aggregate the batch already runs:
 Either way the driver never sees data rows (contrast: the reference collects
 key lists to the driver, ``ml_readmission_risk.ipynb`` cells 14/21/31,
 SURVEY.md §2.12).
+
+Which raw columns a batch contributes is decided here alone
+(:func:`raw_columns`), for both ingest drivers.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame
@@ -56,10 +58,26 @@ from mimic_iv_etl_spark.lake.schema import merge_schemas, schemas_equal
 from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
 
 META_COLS = ("op", "offset", "partition", "payload")
+# the columns a decoded JSON payload supplies (textfns.PAYLOAD_SCHEMA)
+DECODED_COLS = ("role", "text", "tool")
 
 # Arrow bytes per locator row on the driver: p, o and the two manifest
 # counters, 8 B each after the pandas conversion
 _LOCATOR_ROW_BYTES = 32
+
+
+def raw_columns(columns: list[str], decode_payload: bool) -> list[str]:
+    """The raw change-log columns a batch contributes — the one decision
+    :func:`apply_batch` makes about its input. When ``decode_payload`` and
+    the log carries a JSON ``payload``, the payload stands in for the raw
+    role/text/tool (decoded from the winners only); otherwise the payload
+    is left out. Column pruning then keeps whatever is left out from ever
+    being scanned — except through ``foreachBatch``, whose micro-batch
+    DataFrame is an opaque RDD scan, so the stream projects its source to
+    these columns itself."""
+    drop = (set(DECODED_COLS) if decode_payload and "payload" in columns
+            else {"payload"})
+    return [c for c in columns if c not in drop]
 
 
 def _bigint_array_sql(values) -> str:
@@ -86,10 +104,8 @@ def _locator_supported(ranges: list[dict]) -> bool:
 
 
 def _locator_winners(candidates: DataFrame, key_cols: list[str],
-                     ranges: list[dict], table_path: str):
-    """LWW winners WITHOUT a wide aggregate or a wide shuffle — returns
-    ``(winners_df, cleanup_fn)``; call ``cleanup_fn()`` once the job that
-    consumes ``winners_df`` has run.
+                     ranges: list[dict]) -> DataFrame:
+    """LWW winners WITHOUT a wide aggregate or a wide shuffle.
 
     1. Winner locators ``(partition, offset)`` per key via the packed-stamp
        HashAggregate (`lake/merge.py::lww_winner_locators`) — the scan is
@@ -108,9 +124,10 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
     3. Because the WAL contract makes per-partition offsets DENSE, the
        locator set becomes an EXACT bitmap (1 bit per in-window offset — no
        hashing, no false positives). The bitmap — plus per-partition
-       ``(lo, hi, base)`` lookup arrays indexed by partition id — ships as a
-       1-row ``array<bigint>`` parquet under the table's ``_staging`` dir
-       (shared storage, so cluster executors can read it), broadcast onto
+       ``(lo, hi, base)`` lookup arrays indexed by partition id — becomes a
+       1-row ``array<bigint>`` DataFrame built from an in-memory Arrow table
+       (a ``LocalRelation``: nothing is written, so nothing needs cleaning
+       up and executors need no shared storage to get it), broadcast onto
        the wide scan, and probed with ``F.get`` + ``element_at`` +
        ``getbit`` — a PURE-JVM codegen'd filter whose expression size is
        CONSTANT in the partition count (the first cut chained one ``when()``
@@ -130,12 +147,8 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
     — the quantity ``apply_batch`` pre-checks against
     ``locator_driver_budget``.
     """
-    import shutil
-    import uuid
-
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     by_p = {}
     total_bits = 0
@@ -179,28 +192,12 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
                      np.uint64(1) << (gidx & 63).astype(np.uint64))
     words = words_arr.view(np.int64)
 
-    stage_dir = os.path.join(table_path, "_staging",
-                             f"lww-bitmap-{uuid.uuid4().hex}")
-    os.makedirs(stage_dir, exist_ok=True)
-    try:
-        bm_path = os.path.join(stage_dir, "bitmap.parquet")
-        pq.write_table(
-            pa.table({
-                "_bm": pa.array([words], type=pa.list_(pa.int64())),
-                "_lo": pa.array([lo_arr], type=pa.list_(pa.int64())),
-                "_hi": pa.array([hi_arr], type=pa.list_(pa.int64())),
-                "_base": pa.array([base_arr], type=pa.list_(pa.int64())),
-            }),
-            bm_path)
-    except BaseException:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise
-
-    spark = candidates.sparkSession
-    # explicit schema (skips footer-based inference: 109→18 ms measured)
-    bm = spark.read.schema(
-        "_bm array<bigint>, _lo array<bigint>, _hi array<bigint>, "
-        "_base array<bigint>").parquet(bm_path)
+    bm = candidates.sparkSession.createDataFrame(pa.table({
+        "_bm": pa.array([words], type=pa.list_(pa.int64())),
+        "_lo": pa.array([lo_arr], type=pa.list_(pa.int64())),
+        "_hi": pa.array([hi_arr], type=pa.list_(pa.int64())),
+        "_base": pa.array([base_arr], type=pa.list_(pa.int64())),
+    }))
     # partition-count-independent probe, built as ONE server-side-parsed
     # SQL expression (chained Column ops cost ~2 ms of Py4J per call —
     # a real slice of the per-micro-batch fixed cost). Semantics:
@@ -219,10 +216,9 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
         " AND _lww_offset <= get(_hi, _lww_partition)"
         f" AND getbit(try_element_at(_bm, CAST(shiftright({gidx}, 6)"
         f" AS int) + 1), pmod({gidx}, 64)) = 1")
-    winners = (candidates.crossJoin(F.broadcast(bm))
-               .filter(probe)
-               .drop("_bm", "_lo", "_hi", "_base"))
-    return winners, lambda: shutil.rmtree(stage_dir, ignore_errors=True)
+    return (candidates.crossJoin(F.broadcast(bm))
+            .filter(probe)
+            .drop("_bm", "_lo", "_hi", "_base"))
 
 
 def _hwm_filter(batch_df: DataFrame, applied: dict[int, int]) -> DataFrame:
@@ -273,7 +269,9 @@ def apply_batch(
     ``(ts, offset, partition)`` alone, so decoding losers is pure waste. At a
     typical change-log update ratio (≥10 events/key) this removes >90% of the
     JSON-parse work, which is the apply path's dominant CPU (and its worst
-    scaler: allocation-heavy parsing contends at high core counts).
+    scaler: allocation-heavy parsing contends at high core counts). The
+    batch's raw role/text/tool are then ignored, and without decoding its
+    ``payload`` is (:func:`raw_columns`), so callers pass the log as read.
     ``normalize=True`` likewise NFC-normalizes winner text only.
 
     The LWW kernel is chosen from the batch, and ``stats["dedup_mode"]``
@@ -331,15 +329,16 @@ def apply_batch(
         )
     t0 = time.monotonic()
 
-    late_decode = decode_payload and "payload" in batch_df.columns
-    data_fields = [f for f in batch_df.schema.fields if f.name not in META_COLS]
+    have = raw_columns(batch_df.columns, decode_payload)
+    late_decode = "payload" in have
+    data_fields = [f for f in batch_df.schema.fields
+                   if f.name in have and f.name not in META_COLS]
     if late_decode:
         # decoded columns materialize post-dedup; declare them in the batch
         # schema so evolution/merge sees the final shape
         from mimic_iv_etl_spark.functions.textfns import PAYLOAD_SCHEMA
 
-        have = {f.name for f in data_fields}
-        data_fields += [f for f in PAYLOAD_SCHEMA.fields if f.name not in have]
+        data_fields += PAYLOAD_SCHEMA.fields
     batch_data_schema = type(table.schema)(data_fields)
     merged = merge_schemas(table.schema, batch_data_schema)
     evolved = not schemas_equal(merged, table.schema)
@@ -440,8 +439,7 @@ def apply_batch(
 
     # -- internal candidate rows: data cols aligned to merged schema + stamps
     # (selectExpr over SQL strings — one Py4J call instead of ~5 per column)
-    have = set(batch_df.columns)
-    decode_names = {"role", "text", "tool"} if late_decode else set()
+    decode_names = set(DECODED_COLS) if late_decode else set()
     data_exprs = [
         (f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
          if f.name in have
@@ -457,40 +455,27 @@ def apply_batch(
         "CAST(offset AS bigint) AS _lww_offset",
         "CAST(partition AS int) AS _lww_partition",
     )
-    # the locator staging dir must be removed on EVERY exit — including a
-    # cross-check abort or any Spark error — or _staging/lww-bitmap-* dirs
-    # leak (ADVICE r04)
-    locator_cleanup = None
-    try:
-        if dedup_mode == "locator":
-            winners, locator_cleanup = _locator_winners(
-                candidates, table.key_cols, ranges, table.path)
-        else:
-            winners = lww_reduce(candidates, table.key_cols)
-        if late_decode:
-            from mimic_iv_etl_spark.functions.textfns import decode_payload_json
+    if dedup_mode == "locator":
+        winners = _locator_winners(candidates, table.key_cols, ranges)
+    else:
+        winners = lww_reduce(candidates, table.key_cols)
+    if late_decode:
+        from mimic_iv_etl_spark.functions.textfns import decode_payload_json
 
-            winners = (
-                decode_payload_json(winners)
-                .withColumnRenamed("role_decoded", "role")
-                .withColumnRenamed("text_decoded", "text")
-                .withColumnRenamed("tool_decoded", "tool")
-                .drop("payload")
-            )
-        if normalize and "text" in winners.columns:
-            from mimic_iv_etl_spark.functions.textfns import normalize_text
+        winners = decode_payload_json(winners).selectExpr(
+            *(f"`{c}`" for c in winners.columns if c != "payload"),
+            *(f"{c}_decoded AS {c}" for c in DECODED_COLS))
+    if normalize and "text" in winners.columns:
+        from mimic_iv_etl_spark.functions.textfns import normalize_text
 
-            winners = winners.withColumn("text", normalize_text(F.col("text")))
-        winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
-        table.append_delta(
-            winners,
-            new_schema=merged if evolved else None,
-            summary={"applied_offsets": new_applied, "batch_id": batch_id},
-            write_salt=write_salt,
-        )
-    finally:
-        if locator_cleanup is not None:
-            locator_cleanup()
+        winners = winners.withColumn("text", normalize_text(F.col("text")))
+    winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
+    table.append_delta(
+        winners,
+        new_schema=merged if evolved else None,
+        summary={"applied_offsets": new_applied, "batch_id": batch_id},
+        write_salt=write_salt,
+    )
 
     new_files = table.last_new_entries
     n_winners = sum(e.get("rows", 0) for e in new_files)

@@ -1,4 +1,5 @@
-"""Deterministic seeded change-log generator (FIXTURES.md F2/F3).
+"""The change log: its deterministic seeded generator (FIXTURES.md F2/F3)
+and the one reader of its on-disk layout.
 
 The reference's "change stream" story is full re-extraction of filtered
 snapshots (``sample_data_generator.py:22-60``); this generator produces the
@@ -10,10 +11,16 @@ columns, int→long widening).
 
 Pure numpy + pyarrow: generating 10^7 events takes seconds and never touches
 Spark, so benchmarks measure the engine, not the fixture.
+
+Layout: ``tranche-<id>/part-*.parquet`` plus ``manifest.json``, which is
+written (:func:`generate_change_log`), backfilled (:func:`upgrade_manifest`)
+and read (:func:`read_manifest`) only here, so replay and stream interpret
+it identically, fallbacks for an absent or older manifest included.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from dataclasses import dataclass, field
@@ -61,6 +68,19 @@ class ChangeLogSpec:
 
 def _conv_ids(idx: np.ndarray) -> np.ndarray:
     return np.char.add("conv-", np.char.zfill(idx.astype("U6"), 6))
+
+
+def _partition_ranges(off: np.ndarray, part: np.ndarray
+                      ) -> tuple[dict[str, list[int]], bool]:
+    """Per-source-partition ``[lo, hi]`` offset ranges as the manifest
+    stores them, and whether all are dense (``count == hi - lo + 1``)."""
+    ranges, dense = {}, True
+    for p in np.unique(part):
+        o = off[part == p]
+        lo, hi = int(o.min()), int(o.max())
+        dense = dense and hi - lo + 1 == len(o)
+        ranges[str(int(p))] = [lo, hi]
+    return ranges, dense
 
 
 def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict:
@@ -182,8 +202,7 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
         step = -(-tbl.num_rows // k)
         files = []
         file_offsets: dict[str, dict[str, list[int]]] = {}
-        t_off_all = offset[sl]
-        t_part_all = partition[sl]
+        t_off, t_part = offset[sl], partition[sl]
         for i in range(k):
             chunk = tbl.slice(i * step, step)
             if chunk.num_rows == 0:
@@ -201,13 +220,9 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
             # (maxFilesPerTrigger), so these ranges let foreachBatch run the
             # same locator kernel + arithmetic offset bookkeeping as batch
             # replay (VERDICT r03 item 2).
-            f_off = t_off_all[i * step:i * step + step]
-            f_part = t_part_all[i * step:i * step + step]
-            file_offsets[os.path.basename(path)] = {
-                str(p): [int(f_off[f_part == p].min()),
-                         int(f_off[f_part == p].max())]
-                for p in np.unique(f_part)
-            }
+            file_offsets[os.path.basename(path)] = _partition_ranges(
+                t_off[i * step:i * step + step],
+                t_part[i * step:i * step + step])[0]
         # offset bounds + source-partition universe recorded at write time:
         # the replay driver reads them from this manifest instead of sweeping
         # every parquet footer per run — at 10^10 events the footer sweep is
@@ -216,13 +231,7 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
         # gapless per-partition sequence by construction — the WAL contract),
         # which lets the apply path do its exactly-once offset bookkeeping by
         # pure window arithmetic instead of any per-row runtime aggregation.
-        t_off = offset[sl]
-        t_part = partition[sl]
-        t_parts = sorted(int(p) for p in np.unique(t_part))
-        part_offsets = {
-            str(p): [int(t_off[t_part == p].min()), int(t_off[t_part == p].max())]
-            for p in t_parts
-        }
+        part_offsets = _partition_ranges(t_off, t_part)[0]
         manifest["tranches"].append(
             {
                 "id": t_id,
@@ -231,7 +240,7 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
                 "files": files,
                 "offset_lo": int(t_off.min()) if len(t_off) else 0,
                 "offset_hi": int(t_off.max()) if len(t_off) else -1,
-                "partitions": t_parts,
+                "partitions": [int(p) for p in part_offsets],
                 "partition_offsets": part_offsets,
                 "dense_offsets": True,
                 "file_offsets": file_offsets,
@@ -251,8 +260,6 @@ def upgrade_manifest(log_dir: str) -> dict:
     bookkeeping) and at file grain (``file_offsets``, gates the streaming
     path's per-micro-batch locator ranges) — so neither fast path can be
     enabled on a gappy log by accident. Idempotent."""
-    import glob as _glob
-
     import pyarrow.dataset as ds
 
     with open(os.path.join(log_dir, "manifest.json")) as f:
@@ -262,7 +269,7 @@ def upgrade_manifest(log_dir: str) -> dict:
         if "partition_offsets" in t and "file_offsets" in t:
             continue
         t_dir = os.path.join(log_dir, f"tranche-{t['id']}")
-        files = sorted(_glob.glob(os.path.join(t_dir, "*.parquet")))
+        files = sorted(glob.glob(os.path.join(t_dir, "*.parquet")))
         file_offsets: dict[str, dict[str, list[int]]] = {}
         files_dense = True
         offs, parts_arr = [], []
@@ -272,26 +279,15 @@ def upgrade_manifest(log_dir: str) -> dict:
             f_part = tbl["partition"].to_numpy()
             offs.append(f_off)
             parts_arr.append(f_part)
-            fo: dict[str, list[int]] = {}
-            for p in np.unique(f_part):
-                m = f_part == p
-                lo, hi, n = int(f_off[m].min()), int(f_off[m].max()), int(m.sum())
-                files_dense = files_dense and (hi - lo + 1 == n)
-                fo[str(int(p))] = [lo, hi]
+            fo, f_dense = _partition_ranges(f_off, f_part)
+            files_dense = files_dense and f_dense
             file_offsets[os.path.basename(fp)] = fo
         off = np.concatenate(offs) if offs else np.array([], dtype=np.int64)
         part = np.concatenate(parts_arr) if parts_arr else np.array([], dtype=np.int32)
-        parts = sorted(int(p) for p in np.unique(part))
-        part_offsets: dict[str, list[int]] = {}
-        dense = True
-        for p in parts:
-            m = part == p
-            lo, hi, n = int(off[m].min()), int(off[m].max()), int(m.sum())
-            dense = dense and (hi - lo + 1 == n)
-            part_offsets[str(p)] = [lo, hi]
+        part_offsets, dense = _partition_ranges(off, part)
         t["offset_lo"] = int(off.min()) if len(off) else 0
         t["offset_hi"] = int(off.max()) if len(off) else -1
-        t["partitions"] = parts
+        t["partitions"] = [int(p) for p in part_offsets]
         t["partition_offsets"] = part_offsets
         t["dense_offsets"] = dense
         # file_offsets are only usable when every file's per-partition offset
@@ -306,3 +302,101 @@ def upgrade_manifest(log_dir: str) -> dict:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, os.path.join(log_dir, "manifest.json"))
     return manifest
+
+
+@dataclass(frozen=True)
+class Tranche:
+    """One tranche's offset bounds and its DENSE per-partition ``(lo, hi)``
+    offset ranges, whole (``partition_offsets``, replay's windows) and per
+    parquet file basename (``file_offsets``, the stream's micro-batches).
+    A range map is None when the manifest does not vouch for density: the
+    apply path then runs its ranges aggregate and the ``agg`` kernel."""
+
+    offset_lo: int
+    offset_hi: int
+    partition_offsets: dict[int, tuple[int, int]] | None
+    file_offsets: dict[str, dict[int, tuple[int, int]]] | None
+
+
+class LogManifest(dict):
+    """Tranche dir → :class:`Tranche` in log order, plus ``tail``: each
+    source partition's final offset in the log (the ``lag_events`` metric),
+    None unless every tranche records its partition ranges."""
+
+    def __init__(self, tranches: dict[str, Tranche],
+                 tail: dict[int, int] | None):
+        super().__init__(tranches)
+        self.tail = tail
+
+
+def _tranche_dirs(log_dir: str) -> list[str]:
+    out = sorted(glob.glob(os.path.join(log_dir, "tranche-*")))
+    if not out:
+        raise FileNotFoundError(f"no tranches under {log_dir}")
+    return out
+
+
+def _tranche_schema(tranche_dir: str):
+    """Spark schema of a tranche from ONE parquet footer read with pyarrow,
+    instead of a Spark schema-inference job per tranche per run. Tranche
+    files share one schema (each is written from a single arrow table)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = sorted(glob.glob(os.path.join(tranche_dir, "*.parquet")))
+    if not files:
+        raise FileNotFoundError(f"no parquet files in {tranche_dir}")
+    return from_arrow_schema(pq.read_schema(files[0]),
+                             prefer_timestamp_ntz=True)
+
+
+def _offset_bounds(tranche_dir: str) -> tuple[int, int]:
+    """(min, max) offset across the tranche, from parquet footer stats only."""
+    lo, hi = None, None
+    for f in sorted(glob.glob(os.path.join(tranche_dir, "*.parquet"))):
+        md = pq.read_metadata(f)
+        idx = md.schema.names.index("offset")
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is None:
+                continue
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    if lo is None:
+        raise ValueError(f"no offset stats in {tranche_dir}")
+    return int(lo), int(hi)
+
+
+def _int_ranges(ranges: dict[str, list[int]]) -> dict[int, tuple[int, int]]:
+    return {int(p): (int(r[0]), int(r[1])) for p, r in ranges.items()}
+
+
+def read_manifest(log_dir: str) -> LogManifest:
+    """Every ``tranche-*`` dir of the log (FileNotFoundError when there is
+    none) with its :class:`Tranche`, and the log tail — O(tranches) driver
+    time, where a parquet-footer sweep is O(files) per run. A tranche the
+    manifest does not record (absent or older manifest) gets footer-swept
+    bounds and no ranges; ranges are only returned under ``dense_offsets``."""
+    path = os.path.join(log_dir, "manifest.json")
+    recorded: dict[str, dict] = {}
+    if os.path.exists(path):
+        with open(path) as f:
+            for t in json.load(f).get("tranches", []):
+                recorded[os.path.join(log_dir, f"tranche-{t['id']}")] = t
+    tranches: dict[str, Tranche] = {}
+    tail: dict[int, int] | None = {}
+    for d in _tranche_dirs(log_dir):
+        t = recorded.get(d, {})
+        dense = bool(t.get("dense_offsets"))
+        parts, files = t.get("partition_offsets"), t.get("file_offsets")
+        tranches[d] = Tranche(
+            *((int(t["offset_lo"]), int(t["offset_hi"])) if "offset_lo" in t
+              else _offset_bounds(d)),
+            _int_ranges(parts) if dense and parts is not None else None,
+            ({name: _int_ranges(r) for name, r in files.items()}
+             if dense and files else None))
+        if parts is None:
+            tail = None
+        elif tail is not None:
+            for p, (_, hi) in _int_ranges(parts).items():
+                tail[p] = max(tail.get(p, -1), hi)
+    return LogManifest(tranches, tail or None)

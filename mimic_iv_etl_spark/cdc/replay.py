@@ -2,12 +2,14 @@
 
 Replays a change log (directory of ``tranche-*/part-*.parquet``, see
 ``changelog.py``) through :func:`apply_batch` in per-source-partition offset
-order — the engine-side equivalent of tailing a binlog/WAL.
+order — the engine-side equivalent of tailing a binlog/WAL. What sets it
+apart from the streaming shell (``stream.py``) is only how batches are cut:
+here, fixed per-partition offset windows.
 
-Replay metadata (offset bounds, dense per-partition ranges, tranche
-schema) comes from the log's ``manifest.json``
-plus ONE pyarrow footer read per tranche; the O(files) parquet-footer sweep
-and Spark's schema-inference job are fallbacks for manifests written by
+Replay metadata (offset bounds, dense per-partition ranges, log tail) comes
+from one :func:`~mimic_iv_etl_spark.cdc.changelog.read_manifest` call per
+log, plus ONE pyarrow footer read per tranche for its schema; the
+O(files) parquet-footer sweep is the fallback for manifests written by
 older generators (``upgrade_manifest`` backfills those in place). At
 10^10-event scale this keeps the fixed pre-batch driver time O(tranches).
 
@@ -21,97 +23,53 @@ without touching data, partially-applied windows are re-filtered row-level by
 Tranches are processed sequentially, each read with its own written schema —
 so a schema-evolution point mid-log reaches the table exactly when the first
 evolved batch does, not retroactively.
+
+The streaming shell shares this module's table open-or-create
+(:func:`open_table`) and layout-conflict reapply (:func:`apply_retrying`).
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
 import time
+from collections.abc import Callable
 
-import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mimic_iv_etl_spark.cdc.apply import apply_batch
+from mimic_iv_etl_spark.cdc.changelog import _tranche_schema, read_manifest
 from mimic_iv_etl_spark.cdc.metrics import flush_sidecars
 from mimic_iv_etl_spark.lake.table import CommitConflict, LakeTable
 
 _FLUSH_SIDECARS_EVERY = 256  # applied batches between sidecar flushes
 
 
-def _tranche_dirs(log_dir: str) -> list[str]:
-    out = sorted(glob.glob(os.path.join(log_dir, "tranche-*")))
-    if not out:
-        raise FileNotFoundError(f"no tranches under {log_dir}")
-    return out
+def open_table(spark, table_path: str, schema, n_buckets: int) -> LakeTable:
+    """The table an ingest driver writes: opened when it exists, else
+    created with ``schema`` and ``n_buckets``."""
+    if LakeTable.exists(table_path):
+        return LakeTable(spark, table_path)
+    if schema is None:
+        raise ValueError("schema required to create a new table")
+    return LakeTable.create(spark, table_path, schema, n_buckets=n_buckets)
 
 
-def _manifest_tranches(log_dir: str) -> dict[str, dict] | None:
-    """Per-tranche metadata (offset bounds, source-partition universe) from the
-    log's ``manifest.json``, keyed by tranche dir path. The manifest is written
-    once at log-write time (``changelog.py``), so replay startup is O(tranches)
-    driver time instead of an O(files) parquet-footer sweep per run — at
-    10^10-event scale the footer sweep is the fixed pre-batch overhead that
-    Amdahl-caps scaling (VERDICT r02 item 4). Returns None (footer fallback)
-    when the manifest is absent or predates the offset-bounds fields."""
-    path = os.path.join(log_dir, "manifest.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        manifest = json.load(f)
-    out: dict[str, dict] = {}
-    for t in manifest.get("tranches", []):
-        if "offset_lo" not in t or "partitions" not in t:
-            return None
-        out[os.path.join(log_dir, f"tranche-{t['id']}")] = t
-    return out or None
+def apply_retrying(table: LakeTable,
+                   apply_once: Callable[[], dict]) -> tuple[dict, int]:
+    """Run one batch through the driver's ``apply_once`` closure (its call
+    of :func:`apply_batch`); returns ``(stats, layout_retries)``.
 
-
-def _log_tail(log_dir: str) -> dict[int, int] | None:
-    """Per-source-partition FINAL offset of the whole log, from the manifest
-    (max of the per-tranche dense ranges). Powers the per-batch
-    ``lag_events`` metric — Σ max(0, tail − applied hwm) — at zero runtime
-    cost. None when the manifest is absent or pre-offset-bounds."""
-    meta = _manifest_tranches(log_dir)
-    if meta is None:
-        return None
-    tail: dict[int, int] = {}
-    for t in meta.values():
-        for p, r in t.get("partition_offsets", {}).items():
-            p = int(p)
-            tail[p] = max(tail.get(p, -1), int(r[1]))
-    return tail or None
-
-
-def _tranche_schema(tranche_dir: str):
-    """Spark schema of a tranche from ONE parquet footer read driver-side with
-    pyarrow — replaces Spark's schema-inference job (a full JVM job scheduling
-    round-trip per tranche per run; pure fixed overhead in the replay loop).
-    Tranche files share one schema by construction (``changelog.py`` writes
-    each tranche from a single arrow table)."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    first = sorted(glob.glob(os.path.join(tranche_dir, "*.parquet")))[0]
-    return from_arrow_schema(pq.read_schema(first), prefer_timestamp_ntz=True)
-
-
-def _offset_bounds(tranche_dir: str) -> tuple[int, int]:
-    """(min, max) offset across the tranche, from parquet footer stats only."""
-    lo, hi = None, None
-    for f in sorted(glob.glob(os.path.join(tranche_dir, "*.parquet"))):
-        md = pq.read_metadata(f)
-        idx = md.schema.names.index("offset")
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None:
-                continue
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    if lo is None:
-        raise ValueError(f"no offset stats in {tranche_dir}")
-    return int(lo), int(hi)
+    Online partition/schema evolution: a concurrent writer that changes the
+    table layout mid-batch makes the staged winners' bucket routing stale,
+    and the commit rebase refuses them with CommitConflict. Offsets only
+    commit on success, so re-running the batch against the refreshed handle
+    is idempotent — the winners re-stage with the NEW layout and ingest
+    continues with zero downtime (one batch's work re-paid)."""
+    try:
+        return apply_once(), 0
+    except CommitConflict:
+        table.refresh()
+        return apply_once(), 1
 
 
 def replay_log(
@@ -121,7 +79,6 @@ def replay_log(
     schema=None,
     batch_offsets: int = 100_000,
     n_buckets: int = 32,
-    compact_every: int | None = None,
     write_salt: int = 1,
     auto_compact_deltas: int | None = None,
     decode_payload: bool = False,
@@ -132,6 +89,9 @@ def replay_log(
     width of each micro-batch. Returns aggregate throughput stats
     (apply-loop wall time only, fixture IO excluded — BASELINE.md protocol).
 
+    ``auto_compact_deltas`` compacts, after each batch, the buckets holding
+    more than that many delta files (:meth:`LakeTable.maybe_compact`).
+
     The driver-local lineage/metrics JSONL tails are folded into
     cluster-durable parquet segments every ``_FLUSH_SIDECARS_EVERY`` applied
     batches and once at the end of the replay (one tiny Spark job per flush,
@@ -139,19 +99,16 @@ def replay_log(
 
     ``decode_payload``/``normalize`` run on LWW winners only inside
     ``apply_batch`` (LWW never reads ``text``, so the winners are the same
-    either way). The raw ``payload`` column is dropped unless decoded.
+    either way); it also decides which raw columns each batch contributes,
+    and column pruning keeps the rest out of the scan.
 
     When the log manifest carries dense per-partition offset ranges, each
     window's ranges go to ``apply_batch``, which then runs the packed-stamp
     ``locator`` LWW kernel (verified inside its aggregate); without them it
     runs the ``agg`` kernel.
     """
-    if LakeTable.exists(table_path):
-        table = LakeTable(spark, table_path)
-    else:
-        if schema is None:
-            raise ValueError("schema required to create a new table")
-        table = LakeTable.create(spark, table_path, schema, n_buckets=n_buckets)
+    log = read_manifest(log_dir)
+    table = open_table(spark, table_path, schema, n_buckets)
 
     total_applied = 0
     n_batches = 0
@@ -160,83 +117,46 @@ def replay_log(
     batch_seq = 0
     t0 = time.monotonic()
 
-    meta = _manifest_tranches(log_dir)
-    log_tail = _log_tail(log_dir)
-    for tranche in _tranche_dirs(log_dir):
-        t_meta = meta.get(tranche) if meta is not None else None
-        part_offsets = None
-        if t_meta is not None:
-            lo, hi = int(t_meta["offset_lo"]), int(t_meta["offset_hi"])
-            if t_meta.get("dense_offsets") and "partition_offsets" in t_meta:
-                # dense per-partition ranges → apply_batch does offset
-                # bookkeeping as window arithmetic, verified inside the
-                # batch's own dedup aggregate
-                part_offsets = {
-                    int(p): (int(r[0]), int(r[1]))
-                    for p, r in t_meta["partition_offsets"].items()
-                }
-        else:
-            lo, hi = _offset_bounds(tranche)
+    for tranche, meta in log.items():
         df = spark.read.schema(_tranche_schema(tranche)).parquet(tranche)
-        late_decode = decode_payload and "payload" in df.columns
-        if late_decode:
-            # the mandated ingest shape (input_hint): events arrive encoded.
-            # The raw columns are dropped here; apply_batch reconstructs them
-            # from the JSON payload AFTER LWW dedup — winners are chosen by
-            # (ts, offset, partition) alone, so only winner payloads are ever
-            # parsed (at a 10:1 update ratio that is 90% less JSON work, the
-            # apply path's dominant and worst-scaling CPU).
-            df = df.drop("role", "text", "tool")
-        elif "payload" in df.columns:
-            df = df.drop("payload")
-        start = lo
-        while start <= hi:
+        start = meta.offset_lo
+        while start <= meta.offset_hi:
             end = start + batch_offsets  # exclusive
             # checkpoint resume: skip windows fully below every high-water mark
             applied = table.applied_offsets
-            if applied and len(applied) > 0 and end - 1 <= min(applied.values()):
+            if applied and end - 1 <= min(applied.values()):
                 n_skipped_windows += 1
                 start = end
                 continue
             batch = df.filter((F.col("offset") >= start) & (F.col("offset") < end))
             window_ranges = None
-            if part_offsets is not None:
-                # dense ranges ∩ this offset window, per source partition
+            if meta.partition_offsets is not None:
+                # dense ranges ∩ this offset window, per source partition:
+                # apply_batch does the offset bookkeeping as window
+                # arithmetic, verified inside the batch's own dedup aggregate
                 window_ranges = {}
-                for p, (p_lo, p_hi) in part_offsets.items():
+                for p, (p_lo, p_hi) in meta.partition_offsets.items():
                     w_lo, w_hi = max(p_lo, start), min(p_hi, end - 1)
                     if w_lo <= w_hi:
                         window_ranges[p] = (w_lo, w_hi)
+
             def _apply_once():
                 return apply_batch(table, batch, batch_id=batch_seq,
                                    write_salt=write_salt,
-                                   decode_payload=late_decode,
+                                   decode_payload=decode_payload,
                                    normalize=normalize,
                                    manifest_ranges=window_ranges,
-                                   log_tail=log_tail)
+                                   log_tail=log.tail)
 
-            try:
-                stats = _apply_once()
-            except CommitConflict:
-                # online partition/schema evolution: a concurrent writer
-                # changed the table layout mid-batch, so the staged winners
-                # were bucketed with a stale layout and the commit rebase
-                # refused them. Offsets only commit on success, so re-running
-                # the batch against the refreshed handle is idempotent — the
-                # winners re-stage with the NEW bucket function and ingest
-                # continues with zero downtime (one batch's work re-paid).
-                table.refresh()
-                n_layout_retries += 1
-                stats = _apply_once()
+            stats, retries = apply_retrying(table, _apply_once)
+            n_layout_retries += retries
             batch_seq += 1
             total_applied += stats["events_applied"]
             if stats["skipped"]:
                 n_skipped_windows += 1
             else:
                 n_batches += 1
-            if compact_every and n_batches and n_batches % compact_every == 0:
-                table.compact()
-            elif auto_compact_deltas:
+            if auto_compact_deltas:
                 table.maybe_compact(auto_compact_deltas)
             if n_batches and n_batches % _FLUSH_SIDECARS_EVERY == 0:
                 flush_sidecars(spark, table.path)

@@ -5,6 +5,14 @@ change log (file source here; Kafka-shaped in design — both deliver
 per-source-partition offset order), ``foreachBatch(apply_batch)`` as the
 exactly-once MERGE sink, offsets checkpointed via ``checkpointLocation``.
 
+It shares every ingest step with batch replay (``replay.py``) except how
+batches are cut — here, ``maxFilesPerTrigger`` whole files per micro-batch:
+the log is read once by :func:`~mimic_iv_etl_spark.cdc.changelog.read_manifest`
+(each tranche gets its entry; each micro-batch's dense offset ranges come
+from the entry's per-file ranges); the table open-or-create and the
+layout-conflict reapply are ``replay.py``'s, the raw column choice
+``apply.py``'s.
+
 Two independent layers make restart exactly-once:
 - Spark's streaming checkpoint replays unacknowledged source batches;
 - the table's ``applied_offsets`` snapshot summary turns any re-delivered
@@ -14,41 +22,17 @@ Two independent layers make restart exactly-once:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from mimic_iv_etl_spark.cdc.apply import apply_batch
-from mimic_iv_etl_spark.lake.table import CommitConflict, LakeTable
-
-
-def _tranche_file_offsets(tranche_dir: str) -> dict[str, dict[int, tuple[int, int]]] | None:
-    """Per-FILE dense offset ranges for a tranche, from the log manifest
-    (``changelog.py`` stamps them at write time; ``upgrade_manifest`` backfills
-    and density-verifies older logs). Keyed by file basename. None when the
-    manifest is absent, predates the field, or the log failed the per-file
-    density check — the streaming path then falls back to the ranges
-    aggregate bookkeeping and the ``agg`` LWW kernel."""
-    log_dir = os.path.dirname(tranche_dir.rstrip("/"))
-    path = os.path.join(log_dir, "manifest.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        manifest = json.load(f)
-    base = os.path.basename(tranche_dir.rstrip("/"))
-    for t in manifest.get("tranches", []):
-        if f"tranche-{t['id']}" == base:
-            fo = t.get("file_offsets")
-            if not fo or not t.get("dense_offsets"):
-                return None
-            return {
-                name: {int(p): (int(r[0]), int(r[1])) for p, r in po.items()}
-                for name, po in fo.items()
-            }
-    return None
+from mimic_iv_etl_spark.cdc.apply import apply_batch, raw_columns
+from mimic_iv_etl_spark.cdc.changelog import (Tranche, _tranche_schema,
+                                              read_manifest)
+from mimic_iv_etl_spark.cdc.replay import apply_retrying, open_table
+from mimic_iv_etl_spark.lake.table import LakeTable
 
 
 def _batch_files(checkpoint_dir: str, epoch_id: int) -> set[str] | None:
@@ -107,6 +91,8 @@ def _batch_ranges(names: set[str] | None,
 def stream_tranche(
     spark: SparkSession,
     tranche_dir: str,
+    meta: Tranche,
+    log_tail: dict[int, int] | None,
     table: LakeTable,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
@@ -114,63 +100,48 @@ def stream_tranche(
     decode_payload: bool = False,
     normalize: bool = False,
 ) -> None:
-    """Stream one log tranche (single fixed schema) into ``table`` with an
-    ``availableNow`` trigger; returns when the tranche is fully applied.
+    """Stream one log tranche (single fixed schema; ``meta`` is its
+    :func:`read_manifest` entry, ``log_tail`` the log's) into ``table`` with
+    an ``availableNow`` trigger; returns when the tranche is fully applied.
 
     ``decode_payload``/``normalize`` run on LWW winners only inside
     ``apply_batch`` (the encoded-ingest shape).
 
     Mirrors batch replay: each micro-batch's dense per-partition offset
     ranges are looked up from the manifest's per-file ranges
-    (``_batch_ranges``), so foreachBatch runs the same locator LWW kernel + arithmetic offset bookkeeping as ``replay_log`` —
-    no SortAggregate, no extra job on the hot path. Batches whose files
-    aren't manifest-covered fall back to the ≤P-row ranges aggregate for
-    their bookkeeping and the ``agg`` kernel.
+    (``_batch_ranges``), so foreachBatch runs the same locator LWW kernel +
+    arithmetic offset bookkeeping as ``replay_log`` — no SortAggregate, no
+    extra job on the hot path. Batches whose files aren't manifest-covered
+    fall back to the ≤P-row ranges aggregate for their bookkeeping and the
+    ``agg`` kernel.
 
     ``on_batch(epoch_id, stats)`` is a test hook (e.g. to crash mid-stream).
     """
-    from mimic_iv_etl_spark.cdc.replay import _log_tail, _tranche_schema
-
-    file_offsets = _tranche_file_offsets(tranche_dir)
-    log_tail = _log_tail(os.path.dirname(tranche_dir.rstrip("/")))
-    if not glob.glob(os.path.join(tranche_dir, "*.parquet")):
-        raise FileNotFoundError(tranche_dir)
-    schema = _tranche_schema(tranche_dir)
-
     src = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_tranche_schema(tranche_dir))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .option("latestFirst", "false")  # preserve per-partition offset order
         .parquet(tranche_dir)
     )
-    late_decode = decode_payload and "payload" in src.columns
-    if late_decode:
-        src = src.drop("role", "text", "tool")
-    elif "payload" in src.columns:
-        src = src.drop("payload")
+    # foreachBatch hands each micro-batch over as an opaque RDD scan, so
+    # column pruning cannot reach back into this source: project it to the
+    # raw columns apply_batch will use
+    src = src.select(*raw_columns(src.columns, decode_payload))
 
     def _apply(batch_df, epoch_id: int) -> None:
         ranges = None
-        if file_offsets:
+        if meta.file_offsets:
             ranges = _batch_ranges(_batch_files(checkpoint_dir, epoch_id),
-                                   file_offsets)
+                                   meta.file_offsets)
+
         def _apply_once():
             return apply_batch(table, batch_df, batch_id=epoch_id,
-                               decode_payload=late_decode,
+                               decode_payload=decode_payload,
                                normalize=normalize,
                                manifest_ranges=ranges,
                                log_tail=log_tail)
 
-        try:
-            stats = _apply_once()
-        except CommitConflict:
-            # online layout evolution under live ingest (mirrors replay_log):
-            # a concurrent rebucket made the staged winners' bucket routing
-            # stale; offsets only commit on success, so refreshing and
-            # re-applying the micro-batch is idempotent and the stream
-            # continues against the new layout.
-            table.refresh()
-            stats = _apply_once()
+        stats, _ = apply_retrying(table, _apply_once)
         if on_batch is not None:
             on_batch(epoch_id, stats)
 
@@ -197,18 +168,17 @@ def stream_log(
 ) -> LakeTable:
     """Stream every tranche of the log in order (one streaming query per
     tranche, each with its own checkpoint — schema evolution happens at the
-    tranche boundary, exactly as in batch replay)."""
-    if LakeTable.exists(table_path):
-        table = LakeTable(spark, table_path)
-    else:
-        if schema is None:
-            raise ValueError("schema required to create a new table")
-        table = LakeTable.create(spark, table_path, schema, n_buckets=n_buckets)
-    for tranche in sorted(glob.glob(os.path.join(log_dir, "tranche-*"))):
+    tranche boundary, exactly as in batch replay). A log with no tranche
+    raises FileNotFoundError before any table is opened."""
+    log = read_manifest(log_dir)
+    table = open_table(spark, table_path, schema, n_buckets)
+    for tranche, meta in log.items():
         ckpt = os.path.join(checkpoint_root, os.path.basename(tranche))
         stream_tranche(
             spark,
             tranche,
+            meta,
+            log.tail,
             table,
             ckpt,
             max_files_per_trigger=max_files_per_trigger,

@@ -133,6 +133,17 @@ def _write_manifest(meta_dir: str, entries: list[dict]) -> str:
     return name
 
 
+def _remove_segments(meta_dir: str, names) -> None:
+    """Delete manifest segments that no committed snapshot references."""
+    for m in names:
+        path = os.path.join(meta_dir, m)
+        _MANIFEST_CACHE.pop(path, None)
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass
+
+
 def _load_manifest(meta_dir: str, name: str) -> list[dict]:
     path = os.path.join(meta_dir, name)
     if path not in _MANIFEST_CACHE:
@@ -711,8 +722,10 @@ class LakeTable:
         On a terminal CommitConflict, and only then, the staged data files
         and every segment this commit wrote are deleted before re-raising:
         no snapshot references them. Any other exception (a crash) leaves
-        them for :meth:`vacuum`, and nothing is deleted once the link
-        succeeded."""
+        them for :meth:`vacuum`. Once the link succeeded, only the segments
+        that earlier, lost attempts wrote and the committed snapshot does
+        not list are deleted (a copy-on-write rebase rewrites the touched
+        segments on every attempt); no snapshot ever referenced them."""
         base_snap = self.snapshot
         ours: set[str] = set()  # segments no committed snapshot references
         try:
@@ -754,14 +767,9 @@ class LakeTable:
                     base = rebase()
         except CommitConflict:
             self.discard_staged(staged or [])
-            for m in ours:
-                path = os.path.join(self._meta_dir, m)
-                _MANIFEST_CACHE.pop(path, None)
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
+            _remove_segments(self._meta_dir, ours)
             raise
+        _remove_segments(self._meta_dir, ours - set(snap["manifests"]))
         return self.refresh()
 
     def stage_delta(

@@ -844,7 +844,7 @@ def q_payload_decode(spark, sf):
     """U3 (input_hint mandate): vectorized JSON payload decode — JVM from_json
     and the Arrow pandas-UDF path must agree; returns the decoded columns.
     Oracle: DuckDB json_extract_string over the same generated log."""
-    from mimic_iv_etl_spark.cdc.replay import _tranche_schema
+    from mimic_iv_etl_spark.cdc.changelog import _tranche_schema
     from mimic_iv_etl_spark.functions import decode_payload_json
 
     tranche = os.path.join(_ensure_decode_log(), "tranche-0")

@@ -5,7 +5,7 @@ Cluster usage (north rule: ``spark-submit --py-files`` at N and 4N executors):
     zip -r mimic_iv_etl_spark.zip mimic_iv_etl_spark
     spark-submit --py-files mimic_iv_etl_spark.zip scripts/run_replay.py \
         --log-dir /path/to/changelog --table /path/to/table \
-        [--batch-offsets 1000000] [--buckets 256] [--compact-every 8]
+        [--batch-offsets 1000000] [--buckets 256] [--auto-compact-deltas 8]
 
 Sandbox usage (local mode): plain ``python scripts/run_replay.py ...`` —
 the session helper builds ``local[$SPARK_GRAFT_CPUS]``.
@@ -35,7 +35,8 @@ def main() -> None:
     p.add_argument("--table", required=True)
     p.add_argument("--batch-offsets", type=int, default=1_000_000)
     p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--compact-every", type=int, default=None)
+    p.add_argument("--auto-compact-deltas", type=int, default=None,
+                   help="compact buckets holding more delta files than this")
     p.add_argument("--decode-payload", action="store_true",
                    help="events arrive JSON-encoded; decode winners post-LWW")
     p.add_argument("--normalize", action="store_true",
@@ -69,7 +70,7 @@ def main() -> None:
         schema=schema,
         batch_offsets=args.batch_offsets,
         n_buckets=args.buckets,
-        compact_every=args.compact_every,
+        auto_compact_deltas=args.auto_compact_deltas,
         decode_payload=args.decode_payload,
         normalize=args.normalize,
     )

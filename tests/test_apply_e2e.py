@@ -189,14 +189,12 @@ def test_null_partition_aborts_before_write(spark, small_log, tmp_path, mode,
     the exactly-once filter must pass it on rather than drop it."""
     import glob
 
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d, spec, _ = small_log
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
     df = spark.read.parquet(tranche).drop("payload")
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     tp = str(tmp_path / f"t_null_{null_col}_{mode}")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     if null_col == "offset":

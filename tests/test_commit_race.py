@@ -212,6 +212,39 @@ def test_terminal_conflict_leaves_no_orphans(spark, tmp_path, race):
     assert segments - live == set(), "loser left orphan manifest segments"
 
 
+def test_rebased_rewrite_leaves_no_superseded_segments(spark, tmp_path):
+    """A copy-on-write commit that wins after a rebase rewrites the touched
+    segments on every attempt; once its link succeeds the rewrites of the
+    lost attempts are deleted, so every manifest segment on disk is
+    referenced by some snapshot, and the rebased state is the winner's."""
+    import glob
+    import json
+    import os
+
+    path = str(tmp_path / "t_seg")
+    winner = _mk_table(spark, path)
+    stale = LakeTable(spark, path)
+    b = min(e["bucket"] for e in stale.files)
+    winner.append_delta(_rows(spark, winner, [
+        ("cS", 1, "user", "appended", None, TS, False, 700, 0)]),
+        summary={"applied_offsets": {"0": 700}})
+    want = _state(winner)
+
+    stale.compact(buckets={b})  # loses v2, rebases onto the append
+
+    fresh = LakeTable(spark, path)
+    assert fresh.version == winner.version + 1
+    assert _state(fresh) == want
+    meta = os.path.join(path, "metadata")
+    live = set()
+    for p in glob.glob(os.path.join(meta, "v*.json")):
+        with open(p) as f:
+            live |= set(json.load(f)["manifests"])
+    segments = {os.path.basename(p)
+                for p in glob.glob(os.path.join(meta, "m-*.json"))}
+    assert segments - live == set(), "superseded rebase segments left"
+
+
 def test_rebase_guard_rejects_layout_change(spark, tmp_path):
     """A concurrent partition evolution (rebucket) makes staged files
     unrebaseable: their _bucket column was computed with the old bucket

@@ -97,17 +97,15 @@ def test_locator_resume_with_different_windows(spark, small_log, tmp_path):
     state, so the locator bitmap must be built from hwm-clipped ranges and
     the hwm row filter must agree with it exactly — any drift double-applies
     or drops rows and the oracle equality below fails."""
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d, spec, _ = small_log
     tp = str(tmp_path / "t_rewin")
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
     # first pass: one locator batch covering only offsets [0, 1100) — the
     # table is left mid-window relative to the 700-wide replay below
     window0 = {}
-    for p, (lo, hi) in ((int(p), (int(r[0]), int(r[1])))
-                        for p, r in t_meta["partition_offsets"].items()):
+    for p, (lo, hi) in read_manifest(d)[tranche].partition_offsets.items():
         if lo < 1100:
             window0[p] = (lo, min(hi, 1099))
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
@@ -249,13 +247,11 @@ def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
     (winner locators + offset bitmap) exceeds the configured budget must
     degrade to the agg kernel — same oracle-exact final state — instead of
     risking a driver OOM."""
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d, spec, _ = small_log
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_budget")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
@@ -276,7 +272,7 @@ def test_locator_handles_more_than_64_partitions(spark, tmp_path):
     the final state must match the independent DuckDB oracle."""
     from mimic_iv_etl_spark.cdc.apply import (_locator_supported,
                                               _locator_winners)
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     many = [{"partition": p, "min_offset": 0, "max_offset": 10}
             for p in range(300)]
@@ -286,9 +282,7 @@ def test_locator_handles_more_than_64_partitions(spark, tmp_path):
     spec = ChangeLogSpec(n_events=8_000, n_convs=250, n_partitions=80, seed=11)
     generate_change_log(d, spec)
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     assert len(ranges) == 80
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_manyparts")
@@ -307,16 +301,12 @@ def test_locator_handles_more_than_64_partitions(spark, tmp_path):
         (F.col("op") == "D").alias("_deleted"),
         F.col("offset").cast("long").alias("_lww_offset"),
         F.col("partition").cast("int").alias("_lww_partition"))
-    winners, cleanup = _locator_winners(
-        cand, ["conv_id", "turn_idx"], rlist, tp)
-    try:
-        plan = winners._jdf.queryExecution().executedPlan().toString()
-        assert "Broadcast" in plan, plan
-        assert plan.count("CASE WHEN") < 5, "per-partition when() chain is back"
-        # exactly one winner per key present in the batch (deletes included)
-        assert winners.count() == df.select("conv_id", "turn_idx").distinct().count()
-    finally:
-        cleanup()
+    winners = _locator_winners(cand, ["conv_id", "turn_idx"], rlist)
+    plan = winners._jdf.queryExecution().executedPlan().toString()
+    assert "Broadcast" in plan, plan
+    assert plan.count("CASE WHEN") < 5, "per-partition when() chain is back"
+    # exactly one winner per key present in the batch (deletes included)
+    assert winners.count() == df.select("conv_id", "turn_idx").distinct().count()
 
 
 def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
@@ -325,13 +315,11 @@ def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
     not contain (truncated/corrupt file) must abort BEFORE commit — silently
     advancing applied_offsets past never-applied events is undetectable data
     loss. Staged files are discarded; the table stays untouched."""
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d, spec, _ = small_log
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     p0 = min(ranges)
     ranges[p0] = (ranges[p0][0], ranges[p0][1] + 500)  # 500 phantom offsets
     df = spark.read.parquet(tranche).drop("payload")
@@ -365,15 +353,13 @@ def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
     check would commit a desynced applied_offsets map. Exercised on the agg
     kernel, reached with a zero locator driver budget (no driver-side
     winner cross-check to catch it instead)."""
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d = str(tmp_path / "log_valcap")
     spec = ChangeLogSpec(n_events=8_000, n_convs=250, n_partitions=80, seed=13)
     generate_change_log(d, spec)
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     assert len(ranges) > 64
     p0 = min(ranges)
     lo0, hi0 = ranges[p0]
@@ -397,13 +383,11 @@ def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
                                                             tmp_path):
     """Rows from a partition absent from manifest_ranges must abort, not be
     silently dropped (locator) or applied-but-unrecorded (agg)."""
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d, spec, _ = small_log
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     del ranges[max(ranges)]  # data still holds this partition's rows
     df = spark.read.parquet(tranche).drop("payload")
     # the default budget selects locator; a zero budget forces agg
@@ -439,6 +423,50 @@ def test_upgrade_manifest_backfills_file_offsets(spark, tmp_path):
     mtime = os.path.getmtime(mpath)
     upgrade_manifest(d)
     assert os.path.getmtime(mpath) == mtime
+
+
+def test_read_manifest_agrees_with_writer_and_upgrader(tmp_path):
+    """The generator, the upgrader and the one reader agree on the log:
+    read_manifest returns the same tranche bounds, dense partition ranges,
+    per-file ranges and log tail for the manifest as written and for the
+    same manifest stripped of those fields and backfilled by
+    upgrade_manifest. The stripped manifest reads as the footer fallback:
+    footer-swept bounds, no ranges, no tail."""
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
+
+    d = str(tmp_path / "log_reader")
+    generate_change_log(d, ChangeLogSpec(n_events=3_000, n_convs=120,
+                                         n_partitions=3, seed=21,
+                                         evolve_at=0.5))
+    written = read_manifest(d)
+    assert len(written) == 2 and written.tail
+    for t in written.values():
+        assert t.partition_offsets and t.file_offsets
+    assert written.tail == {
+        p: max(t.partition_offsets[p][1] for t in written.values()
+               if p in t.partition_offsets)
+        for p in range(3)}
+
+    mpath = os.path.join(d, "manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    for t in manifest["tranches"]:
+        for k in ("offset_lo", "offset_hi", "partitions", "partition_offsets",
+                  "dense_offsets", "file_offsets"):
+            t.pop(k)
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    stripped = read_manifest(d)
+    assert stripped.tail is None
+    for tranche, t in stripped.items():
+        assert (t.offset_lo, t.offset_hi) == (written[tranche].offset_lo,
+                                              written[tranche].offset_hi)
+        assert t.partition_offsets is None and t.file_offsets is None
+
+    upgrade_manifest(d)
+    upgraded = read_manifest(d)
+    assert dict(upgraded) == dict(written)
+    assert upgraded.tail == written.tail
 
 
 def test_lag_metric_drains_to_zero(spark, small_log, tmp_path):

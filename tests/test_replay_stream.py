@@ -56,7 +56,7 @@ def test_replay_evolved_log_with_compaction(spark, evolved_log, tmp_path):
     d, spec, _ = evolved_log
     tp = str(tmp_path / "t3")
     out = replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA,
-                     batch_offsets=400, n_buckets=8, compact_every=2)
+                     batch_offsets=400, n_buckets=8, auto_compact_deltas=2)
     assert out["events_applied"] == spec.n_events
     tbl = LakeTable(spark, tp)
     assert [f.name for f in tbl.schema.fields][-2:] == ["tool_version", "latency_ms"]
@@ -238,7 +238,7 @@ def test_tranche_schema_matches_spark_inference(spark, evolved_log):
     import glob
     import os
 
-    from mimic_iv_etl_spark.cdc.replay import _tranche_schema
+    from mimic_iv_etl_spark.cdc.changelog import _tranche_schema
 
     d, _, _ = evolved_log
     tranches = sorted(glob.glob(os.path.join(d, "tranche-*")))
@@ -247,3 +247,74 @@ def test_tranche_schema_matches_spark_inference(spark, evolved_log):
         schema = _tranche_schema(t)
         assert "payload" in schema.fieldNames()
         assert schema == spark.read.parquet(t).schema, t
+
+
+def test_stream_log_on_empty_log_raises(spark, tmp_path):
+    """Both drivers list a log's tranches with the same reader, so a
+    directory holding no tranche fails loudly in the stream too, instead of
+    streaming nothing into a freshly created table."""
+    empty = tmp_path / "log_empty"
+    empty.mkdir()
+    tp = str(tmp_path / "t_empty")
+    with pytest.raises(FileNotFoundError):
+        stream_log(spark, str(empty), tp, str(tmp_path / "ckpt_empty"),
+                   schema=TRANSCRIPT_SCHEMA, n_buckets=4)
+    assert not LakeTable.exists(tp)
+
+
+def _log_scan_schemas(spark, log_dir, run) -> list[str]:
+    """``ReadSchema`` of every parquet scan over ``log_dir`` in the SQL
+    executions ``run()`` starts — the micro-batch plans a stream runs as
+    well as the plans ``append_delta`` writes."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = {store.executionsList().apply(i).executionId()
+            for i in range(store.executionsList().size())}
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() in seen:
+            continue
+        for node in e.physicalPlanDescription().split("\n\n"):
+            if "Scan parquet" in node and log_dir in node:
+                out += [ln.split(":", 1)[1] for ln in node.splitlines()
+                        if ln.startswith("ReadSchema:")]
+    return out
+
+
+@pytest.mark.parametrize("driver", ["replay", "stream"])
+@pytest.mark.parametrize("decode", [False, True])
+def test_ingest_scans_only_the_columns_apply_uses(spark, tmp_path, driver,
+                                                  decode):
+    """apply_batch alone decides which raw columns a batch contributes:
+    without decoding the JSON payload is never scanned, and with decoding
+    the raw text is never scanned — on replay through column pruning, on
+    the stream through its source projection (foreachBatch cuts pruning)."""
+    from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
+                                                  generate_change_log)
+
+    d = str(tmp_path / "log_cols")
+    generate_change_log(d, ChangeLogSpec(n_events=1_500, n_convs=80,
+                                         n_partitions=2, seed=17,
+                                         files_per_tranche=2))
+    tp = str(tmp_path / "t_cols")
+    if driver == "replay":
+        run = lambda: replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA,  # noqa: E731
+                                 batch_offsets=500, n_buckets=4,
+                                 decode_payload=decode)
+    else:
+        run = lambda: stream_log(spark, d, tp, str(tmp_path / "ckpt_cols"),  # noqa: E731
+                                 schema=TRANSCRIPT_SCHEMA, n_buckets=4,
+                                 decode_payload=decode)
+    schemas = _log_scan_schemas(spark, d, run)
+    assert schemas, "no parquet scan of the log found"
+    for rs in schemas:
+        if decode:
+            assert "text:" not in rs, rs
+        else:
+            assert "payload:" not in rs, rs
+    assert any(("payload:" in rs) == decode for rs in schemas), schemas
+    assert_final_state_equal(LakeTable(spark, tp).read(), duckdb_final_state(d))

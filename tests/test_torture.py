@@ -135,13 +135,11 @@ def test_manifest_tamper_never_commits_wrong_state(spark, small_log, tmp_path,
     commit (leaving the table untouched) or — when the manifest is honest —
     commit exactly the oracle state. A silently-wrong committed state is
     never acceptable: applied_offsets desync is undetectable data loss."""
-    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+    from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d, spec, _ = small_log
     tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
-    t_meta = _manifest_tranches(d)[tranche]
-    ranges = {int(p): (int(r[0]), int(r[1]))
-              for p, r in t_meta["partition_offsets"].items()}
+    ranges = read_manifest(d)[tranche].partition_offsets
     if tamper == "extend_hi":
         p = min(ranges)
         ranges[p] = (ranges[p][0], ranges[p][1] + 123)
