@@ -72,9 +72,7 @@ def raw_columns(columns: list[str], decode_payload: bool) -> list[str]:
     the log carries a JSON ``payload``, the payload stands in for the raw
     role/text/tool (decoded from the winners only); otherwise the payload
     is left out. Column pruning then keeps whatever is left out from ever
-    being scanned — except through ``foreachBatch``, whose micro-batch
-    DataFrame is an opaque RDD scan, so the stream projects its source to
-    these columns itself."""
+    being scanned."""
     drop = (set(DECODED_COLS) if decode_payload and "payload" in columns
             else {"payload"})
     return [c for c in columns if c not in drop]

@@ -6,12 +6,13 @@ per-source-partition offset order), ``foreachBatch(apply_batch)`` as the
 exactly-once MERGE sink, offsets checkpointed via ``checkpointLocation``.
 
 It shares every ingest step with batch replay (``replay.py``) except how
-batches are cut — here, ``maxFilesPerTrigger`` whole files per micro-batch:
-the log is read once by :func:`~mimic_iv_etl_spark.cdc.changelog.read_manifest`
-(each tranche gets its entry; each micro-batch's dense offset ranges come
-from the entry's per-file ranges); the table open-or-create and the
-layout-conflict reapply are ``replay.py``'s, the raw column choice
-``apply.py``'s.
+batches are cut — here, ``maxFilesPerTrigger`` whole files per micro-batch,
+each read as a plain parquet scan of the files the source's checkpoint log
+names: the log is read once by
+:func:`~mimic_iv_etl_spark.cdc.changelog.read_manifest` (each tranche gets
+its entry; each micro-batch's dense offset ranges come from the entry's
+per-file ranges); the table open-or-create and the layout-conflict reapply
+are ``replay.py``'s, the raw column choice ``apply.py``'s.
 
 Two independent layers make restart exactly-once:
 - Spark's streaming checkpoint replays unacknowledged source batches;
@@ -25,18 +26,19 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 
-from mimic_iv_etl_spark.cdc.apply import apply_batch, raw_columns
+from mimic_iv_etl_spark.cdc.apply import apply_batch
 from mimic_iv_etl_spark.cdc.changelog import (Tranche, _tranche_schema,
                                               read_manifest)
 from mimic_iv_etl_spark.cdc.replay import apply_retrying, open_table
 from mimic_iv_etl_spark.lake.table import LakeTable
 
 
-def _batch_files(checkpoint_dir: str, epoch_id: int) -> set[str] | None:
-    """Basenames of the files in one micro-batch, from the file-stream
+def _batch_files(checkpoint_dir: str, epoch_id: int) -> list[str] | None:
+    """Paths of the files in one micro-batch, from the file-stream
     source's own checkpoint log (``<ckpt>/sources/0/<batchId>`` — Spark's
     FileStreamSourceLog format: a ``v1`` header then one JSON entry per file
     with its ``batchId``; every ``compactInterval``-th batch is written as
@@ -44,7 +46,7 @@ def _batch_files(checkpoint_dir: str, epoch_id: int) -> set[str] | None:
     authoritative batch↔file mapping — the foreachBatch DataFrame's
     ``inputFiles()`` is empty for streaming relations."""
     src = os.path.join(checkpoint_dir, "sources", "0")
-    names: set[str] = set()
+    paths: list[str] = []
     for path in (os.path.join(src, str(epoch_id)),
                  os.path.join(src, f"{epoch_id}.compact")):
         if not os.path.exists(path):
@@ -56,8 +58,8 @@ def _batch_files(checkpoint_dir: str, epoch_id: int) -> set[str] | None:
                     continue
                 e = json.loads(line)
                 if int(e.get("batchId", -1)) == epoch_id:
-                    names.add(os.path.basename(e["path"]))
-        return names or None
+                    paths.append(unquote(e["path"]))  # a URL-encoded URI
+        return sorted(paths) or None
     return None
 
 
@@ -107,32 +109,37 @@ def stream_tranche(
     ``decode_payload``/``normalize`` run on LWW winners only inside
     ``apply_batch`` (the encoded-ingest shape).
 
-    Mirrors batch replay: each micro-batch's dense per-partition offset
-    ranges are looked up from the manifest's per-file ranges
-    (``_batch_ranges``), so foreachBatch runs the same locator LWW kernel +
-    arithmetic offset bookkeeping as ``replay_log`` — no SortAggregate, no
-    extra job on the hot path. Batches whose files aren't manifest-covered
-    fall back to the ≤P-row ranges aggregate for their bookkeeping and the
-    ``agg`` kernel.
+    Mirrors batch replay: each micro-batch is a plain parquet scan of the
+    files the source's checkpoint log names (``_batch_files``), so column
+    pruning reaches every ``apply_batch`` job as it does replay's; the
+    DataFrame foreachBatch hands over (an opaque RDD scan) is left unused
+    and runs no job. A micro-batch the log does not name raises
+    RuntimeError before anything is written. Its dense per-partition offset
+    ranges come from the manifest's per-file ranges (``_batch_ranges``), so
+    it runs replay's locator LWW kernel + arithmetic offset bookkeeping — no
+    SortAggregate, no extra job on the hot path. Batches whose files aren't
+    manifest-covered fall back to the ≤P-row ranges aggregate for their
+    bookkeeping and the ``agg`` kernel.
 
     ``on_batch(epoch_id, stats)`` is a test hook (e.g. to crash mid-stream).
     """
+    schema = _tranche_schema(tranche_dir)
     src = (
-        spark.readStream.schema(_tranche_schema(tranche_dir))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .option("latestFirst", "false")  # preserve per-partition offset order
         .parquet(tranche_dir)
     )
-    # foreachBatch hands each micro-batch over as an opaque RDD scan, so
-    # column pruning cannot reach back into this source: project it to the
-    # raw columns apply_batch will use
-    src = src.select(*raw_columns(src.columns, decode_payload))
 
-    def _apply(batch_df, epoch_id: int) -> None:
-        ranges = None
-        if meta.file_offsets:
-            ranges = _batch_ranges(_batch_files(checkpoint_dir, epoch_id),
-                                   meta.file_offsets)
+    def _apply(_, epoch_id: int) -> None:
+        files = _batch_files(checkpoint_dir, epoch_id)
+        if files is None:
+            raise RuntimeError(
+                f"micro-batch {epoch_id} of {tranche_dir} has no entry in the "
+                f"source log under {checkpoint_dir}")
+        batch_df = spark.read.schema(schema).parquet(*files)
+        ranges = _batch_ranges({os.path.basename(f) for f in files},
+                               meta.file_offsets)
 
         def _apply_once():
             return apply_batch(table, batch_df, batch_id=epoch_id,

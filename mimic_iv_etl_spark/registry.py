@@ -27,14 +27,12 @@ from mimic_iv_etl_spark.operators import dedup, labeling, relational, similarity
 from mimic_iv_etl_spark.plans import QueryBuilder
 
 
-# Hash-spread key per table (a unique-ish id, so the spread is deterministic,
-# uniform and pays no sort — round-robin repartition would local-sort its
-# input first, see SPARK-23207 / guide §2.5).
-_SPREAD_KEYS = {
-    "events": "event_id", "documents": "doc_id", "embeddings": "vec_id",
-    "lineitem": "l_orderkey", "orders": "o_orderkey",
-    "customer": "c_custkey", "part": "p_partkey", "supplier": "s_suppkey",
-}
+# The tables whose reads are spread, each by its id (unique, so the hash
+# spread is deterministic, uniform and pays no sort — round-robin
+# repartition would local-sort its input first, see SPARK-23207 / guide
+# §2.5). Only the text and vector tables: their operators do heavy per-row
+# work, which is what a spread buys; see ``_t``.
+_SPREAD_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
 def _scan_footer(path: str) -> tuple[StructType, int, int]:
@@ -73,31 +71,27 @@ def _scan_footer(path: str) -> tuple[StructType, int, int]:
 _SPREAD_MAX_BYTES = 512 << 20
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       spread_key: str | list[str] | None = None,
-       spread: bool = True) -> DataFrame:
-    """Read a testdata table, spreading unsplittable-but-compute-heavy inputs.
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read a testdata table; spread the text and vector tables when their
+    file cannot feed every core.
 
-    The driver testdata ships one parquet file per table with ONE row group
-    (lineitem: 6), so every scan stage — including the map side of the first
-    shuffle and any partial aggregation — runs on ≤ a handful of cores no
-    matter what ``maxPartitionBytes`` says (guide §2.5 "input skew: one huge
-    unsplittable file … repartition immediately after the read"). When the
-    achievable scan parallelism is below the core count and the table is
-    small enough that the extra exchange is cheap, hash-repartition on the
-    table's id so all downstream per-row work runs wide. Scale-adaptive by
-    construction: a production-size table has many row groups (units ≥
-    cores) or exceeds the byte guard, and the read stays shuffle-free.
-
-    ``spread_key`` overrides the hash key. Queries that round
-    partition-order-sensitive double aggregates (avg/stddev of quantized
-    doubles) MUST spread by their GROUP key: every group then lives whole in
-    one partition, and with a single upstream map task (the single-row-group
-    case that triggers spreading at gate SFs) the per-group row order — and
-    therefore every float64 partial sum — is exactly the sequential order
-    the oracle's single-threaded scan uses, so the rounded results stay
-    bit-identical (verified: an id-hash spread flipped group_stats
-    value_mean 58.5557→58.5558 at sf0.01; the group-key spread does not).
+    A scan task starts only at a row-group boundary, and the testdata ships
+    each table (sf0.001–sf0.1) as one parquet file of one row group, so a
+    scan stage — with whatever per-row work is fused into it — runs on one
+    core whatever ``maxPartitionBytes`` says. Whether to pay a
+    hash-repartition to widen it is a fixed property of the table
+    (:data:`_SPREAD_KEYS`), not of the query. The documents and embeddings
+    operators (tokenizing, shingling, hashing, dot products) do enough work
+    per row that the spread pays: at sf0.1 on 4 cores, dropping it slowed
+    quality_score +78%, cosine_topk +30%, token_count +14% and minhash +9%.
+    The relational tables are plain scans: their queries either collapse
+    rows in a map-side partial aggregate or start with an exchange of their
+    own, and without the spread 12 of the 16 bench queries ran faster or
+    equal (latest_per_key −22%, order_revenue −14%) for a pass at parity.
+    A plain scan also keeps every float64 sum in the single-task row order
+    the oracle's sequential scan uses. The spread applies only while the
+    table has fewer row groups than cores and is under
+    :data:`_SPREAD_MAX_BYTES`, so a production-size read stays shuffle-free.
 
     The footer read (:func:`_scan_footer`) also yields the schema, so no
     read runs Spark's schema-inference job. When pyarrow cannot open the
@@ -111,13 +105,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
         return spark.read.parquet(path)
     df = spark.read.schema(schema).parquet(path)
     cpus = spark.sparkContext.defaultParallelism
-    if spread and units < cpus and nbytes < _SPREAD_MAX_BYTES:
-        key = spread_key if spread_key is not None else _SPREAD_KEYS.get(name)
-        if key is not None:
-            cols = [F.col(k) for k in (key if isinstance(key, list) else [key])]
-            df = df.repartition(cpus, *cols)
-        else:
-            df = df.repartition(cpus)
+    key = _SPREAD_KEYS.get(name)
+    if key is not None and units < cpus and nbytes < _SPREAD_MAX_BYTES:
+        df = df.repartition(cpus, F.col(key))
     return df
 
 
@@ -209,12 +199,8 @@ class Entry:
 # --------------------------------------------------------------------------
 
 def q_frequency(spark, sf):
-    """A1 — analysis_utils.py:34-39. No spread: the map-side partial count
-    collapses the table to a handful of rows before any exchange — an
-    up-front repartition would shuffle every input row instead (measured
-    0.22s → 0.6s at sf1.0)."""
-    return relational.item_frequency(
-        _t(spark, sf, "events", spread=False), "event_type")
+    """A1 — analysis_utils.py:34-39."""
+    return relational.item_frequency(_t(spark, sf, "events"), "event_type")
 
 
 def q_user_activity_stats(spark, sf):
@@ -236,11 +222,9 @@ def q_user_activity_stats(spark, sf):
 
 
 def q_group_stats(spark, sf):
-    """A5 — feature_engineering.py:131-151 (exact percentile, fixed imports).
-    Spread by the GROUP key (see ``_t``): value_mean/value_stddev round
-    float64 sums whose order must match the oracle's sequential scan."""
-    out = relational.group_statistics(
-        _t(spark, sf, "events", spread_key="user_id"), ["user_id"], "value")
+    """A5 — feature_engineering.py:131-151 (exact percentile, fixed imports)."""
+    out = relational.group_statistics(_t(spark, sf, "events"), ["user_id"],
+                                      "value")
     return out.select(
         "user_id",
         F.round("value_mean", 4).alias("value_mean"),
@@ -272,15 +256,9 @@ def q_event_windows(spark, sf):
     window operators chain over the same (key, order) spec, so Catalyst
     plans ONE exchange + sort for both — the merged entry is also the better
     plan shape. Merged from the r1–r3 entries ``cumulative_prior_count``/
-    ``within_timeframe`` (driver 50-pair gate budget, VERDICT r03 item 1).
-
-    Spread by the WINDOW key: the spread exchange then satisfies the
-    window's required distribution (no second exchange) while the
-    shuffle-write still leaves the unsplittable scan early — A/B at sf0.1:
-    no-spread 0.38 / id-spread 0.36 / user_id-spread 0.20s; flat at sf1."""
+    ``within_timeframe`` (driver 50-pair gate budget, VERDICT r03 item 1)."""
     out = windows.cumulative_prior_count(
-        _t(spark, sf, "events", spread_key="user_id"), ["user_id"],
-        ["ts", "event_id"]
+        _t(spark, sf, "events"), ["user_id"], ["ts", "event_id"]
     )
     out = windows.event_within_timeframe(
         out, ["user_id"], "ts", ["ts", "event_id"], days=7
@@ -290,26 +268,16 @@ def q_event_windows(spark, sf):
 
 
 def q_latest_per_key(spark, sf):
-    """J7/W4 — feature_engineering.py:238-240 (the LWW kernel). Spread by
-    the GROUP key (same rationale as q_lww_state; A/B ties no-spread at
-    both SFs and beats the id-spread)."""
+    """J7/W4 — feature_engineering.py:238-240 (the LWW kernel)."""
     out = windows.latest_record_per_key(
-        _t(spark, sf, "events", spread_key="user_id"), ["user_id"],
-        ["ts", "event_id"]
+        _t(spark, sf, "events"), ["user_id"], ["ts", "event_id"]
     )
     return out.select("user_id", "event_id", "event_type", "value", "ts")
 
 
 def q_lww_state(spark, sf):
-    """CDC LWW dedup kernel on a composite key — SURVEY.md §4.3 item 2.
-    Spread by the GROUP key: the max_by kernel's string-bearing buffer
-    plans SortAggregate, whose partial sort ran single-core on the
-    unsplittable scan; group-key spread makes the spread exchange satisfy
-    the agg's distribution (one exchange total, 32-way complete agg) —
-    A/B: 1.74→0.83s at sf1.0, 0.26→0.22s at sf0.1."""
-    out = lww_reduce(_t(spark, sf, "events",
-                        spread_key=["user_id", "event_type"]),
-                     ["user_id", "event_type"],
+    """CDC LWW dedup kernel on a composite key — SURVEY.md §4.3 item 2."""
+    out = lww_reduce(_t(spark, sf, "events"), ["user_id", "event_type"],
                      stamp_cols=("ts", "event_id"))
     return out.select("user_id", "event_type", "event_id", "value", "ts")
 
@@ -400,11 +368,6 @@ def q_string_match(spark, sf):
 def q_tpch_q1(spark, sf):
     """Pricing summary (guide: common OLAP pattern; exercises partial agg).
 
-    No spread: avg_disc rounds a float64 sum whose order must match the
-    oracle's sequential scan, and a group-key spread (6 groups) measured
-    slower than the unspread plan (6 fat shuffle partitions of the full
-    table vs map-side partial aggregation).
-
     DECIMAL(18,6) casts, not (28,6): identical digits — the cast rounds the
     double at scale 6 either way and every value fits 12 integer digits —
     but precision ≤ 18 keeps the per-row Decimal in its compact long
@@ -413,7 +376,7 @@ def q_tpch_q1(spark, sf):
     sf1.0; sums remain exact and order-independent, which is the point of
     decimal accumulation (double sums differ in the last bits between
     engines and between shuffle plans)."""
-    li = _t(spark, sf, "lineitem", spread=False).filter(
+    li = _t(spark, sf, "lineitem").filter(
         F.col("l_shipdate") <= "1998-09-02")
     dec = "decimal(18,6)"
     return li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -430,13 +393,11 @@ def q_tpch_q1(spark, sf):
 
 
 def q_order_revenue(spark, sf):
-    """Join-heavy revenue rollup (orders ⋈ lineitem ⋈ customer). No spread:
-    the join exchanges already parallelize everything past the scan, and an
-    up-front repartition measured 1.5s → 2.7s at sf1.0."""
-    li = _t(spark, sf, "lineitem", spread=False)
-    o = _t(spark, sf, "orders", spread=False).filter(
+    """Join-heavy revenue rollup (orders ⋈ lineitem ⋈ customer)."""
+    li = _t(spark, sf, "lineitem")
+    o = _t(spark, sf, "orders").filter(
         F.col("o_orderdate") < "1997-01-01")
-    c = _t(spark, sf, "customer", spread=False).filter(
+    c = _t(spark, sf, "customer").filter(
         F.col("c_mktsegment") == "BUILDING")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -460,10 +421,7 @@ def q_correlation(spark, sf):
     F.corr aggregate)."""
     from mimic_iv_etl_spark.compat.ml_utils import MLUtils
 
-    # no spread: corr is ONE global group of float64 moment sums — any
-    # repartition reorders the merge and risks a rounding flip vs the
-    # oracle's sequential scan (there is no group key to spread by)
-    return MLUtils(_t(spark, sf, "lineitem", spread=False)).correlation_features(
+    return MLUtils(_t(spark, sf, "lineitem")).correlation_features(
         ["l_quantity", "l_extendedprice", "l_discount"]
     )
 
@@ -474,10 +432,7 @@ def q_scaled_features(spark, sf):
     full toPandas)."""
     from mimic_iv_etl_spark.compat.ml_utils import scale_features
 
-    # no spread, as in q_correlation: the moments are ONE global group of
-    # float64 sums, and a repartition reorders their merge — the rounded
-    # z-scores could flip vs the oracle's sequential scan
-    out = scale_features(_t(spark, sf, "lineitem", spread=False),
+    out = scale_features(_t(spark, sf, "lineitem"),
                          ["l_quantity", "l_extendedprice"], round_to=6)
     return out.select("l_orderkey", "l_linenumber", "l_quantity_z",
                       "l_extendedprice_z")
@@ -765,25 +720,21 @@ def q_readmission_pipeline(spark, sf):
     demographic flags) re-expressed over the testdata star schema, composing
     the individually-gated operators END-TO-END. Pins operator composition
     (column collisions, null propagation across stages), which the piecewise
-    entries cannot (VERDICT r01 'What's missing' item 1).
-
-    No spread (see ``_t``): the pipeline's own semi-join/window exchanges
-    parallelize everything past the scans, and up-front repartitions
-    measured 1.8–2.1s vs 1.46–1.63s without (same-session A/B at sf1.0)."""
-    dim = relational.string_match(_t(spark, sf, "part", spread=False),
-                                  "p_name", "red", "contains")
+    entries cannot (VERDICT r01 'What's missing' item 1)."""
+    dim = relational.string_match(_t(spark, sf, "part"), "p_name", "red",
+                                  "contains")
     qual = relational.semi_join_keys(
-        _t(spark, sf, "lineitem", spread=False),
+        _t(spark, sf, "lineitem"),
         dim.select(F.col("p_partkey").alias("l_partkey")), ["l_partkey"],
     ).select(F.col("l_orderkey").alias("o_orderkey"))
-    o = relational.semi_join_keys(_t(spark, sf, "orders", spread=False), qual,
+    o = relational.semi_join_keys(_t(spark, sf, "orders"), qual,
                                   ["o_orderkey"])
     o = labeling.conditional_feature(o, "o_totalprice > 100000", "high_value")
     o = windows.cumulative_prior_count(
         o, ["o_custkey"], ["o_orderdate", "o_orderkey"], alias="prior_orders")
     o = windows.event_within_timeframe(
         o, ["o_custkey"], "o_orderdate", ["o_orderdate", "o_orderkey"], days=30)
-    cust = _t(spark, sf, "customer", spread=False).select(
+    cust = _t(spark, sf, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment", "c_acctbal")
     m = relational.left_merge(o, cust, ["o_custkey"])
     m = labeling.conditional_feature(m, "c_mktsegment = 'BUILDING'", "building_flag")

@@ -200,15 +200,31 @@ def test_footer_schema_matches_spark_inference(spark, sf):
 def test_t_without_footer_falls_back_to_inference_unspread(spark, monkeypatch):
     """When pyarrow cannot read the footer (a non-local filesystem), ``_t``
     reads with Spark's inference and never spreads: same rows and schema
-    as the footer-schema read, and no repartition in the plan."""
-    want = registry._t(spark, SF, "events")
+    as the footer-schema read, and no repartition in the plan — also for
+    documents, a table whose footer-read scan does spread."""
+    want = {t: registry._t(spark, SF, t) for t in ("events", "documents")}
 
     def unreadable(path):
         raise OSError(f"cannot open {path}")
 
     monkeypatch.setattr(registry, "_scan_footer", unreadable)
-    got = registry._t(spark, SF, "events")
-    assert got.schema == want.schema
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    plan = got._jdf.queryExecution().analyzed().toString()
-    assert "RepartitionByExpression" not in plan, plan
+    for t, w in want.items():
+        got = registry._t(spark, SF, t)
+        assert got.schema == w.schema, t
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, w.collect()))
+        plan = got._jdf.queryExecution().analyzed().toString()
+        assert "RepartitionByExpression" not in plan, plan
+
+
+def test_t_spreads_only_text_and_vector_tables(spark, monkeypatch):
+    """Spread is a property of the table: with every footer reporting one
+    row group and no bytes (so every read qualifies), only the documents
+    and embeddings reads carry a repartition; every relational read stays
+    a plain scan."""
+    footer = registry._scan_footer
+    monkeypatch.setattr(registry, "_scan_footer",
+                        lambda path: (footer(path)[0], 1, 0))
+    for t in TABLES:
+        plan = registry._t(spark, SF, t)._jdf.queryExecution().analyzed()
+        spread = "RepartitionByExpression" in plan.toString()
+        assert spread == (t in ("documents", "embeddings")), (t, plan)

@@ -262,10 +262,35 @@ def test_stream_log_on_empty_log_raises(spark, tmp_path):
     assert not LakeTable.exists(tp)
 
 
+def test_stream_batch_without_source_log_entry_raises(spark, small_log,
+                                                      tmp_path, monkeypatch):
+    """A micro-batch whose files the source's checkpoint log does not name
+    cannot be read as a plain scan: the stream raises before anything is
+    written, and the table keeps its version and applied offsets."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    import mimic_iv_etl_spark.cdc.stream as stream_mod
+    from mimic_iv_etl_spark.cdc.replay import open_table
+
+    d, _, _ = small_log
+    tp = str(tmp_path / "t_nolog")
+    table = open_table(spark, tp, TRANSCRIPT_SCHEMA, 4)
+    v, applied = table.version, table.applied_offsets
+    monkeypatch.setattr(stream_mod, "_batch_files", lambda ckpt, epoch: None)
+    with pytest.raises(StreamingQueryException,
+                       match="no entry in the source log"):
+        stream_log(spark, d, tp, str(tmp_path / "ckpt_nolog"))
+    after = LakeTable(spark, tp)
+    assert after.version == v
+    assert after.applied_offsets == applied
+
+
 def _log_scan_schemas(spark, log_dir, run) -> list[str]:
     """``ReadSchema`` of every parquet scan over ``log_dir`` in the SQL
-    executions ``run()`` starts — the micro-batch plans a stream runs as
-    well as the plans ``append_delta`` writes."""
+    executions ``run()`` starts that ran a job — the scans a batch reads
+    as well as the plans ``append_delta`` writes. A stream's own
+    micro-batch execution plans a full-schema scan of its source but, its
+    DataFrame unused, runs no job and reads nothing, so it is skipped."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     seen = {store.executionsList().apply(i).executionId()
@@ -276,7 +301,7 @@ def _log_scan_schemas(spark, log_dir, run) -> list[str]:
     out = []
     for i in range(execs.size()):
         e = execs.apply(i)
-        if e.executionId() in seen:
+        if e.executionId() in seen or e.jobs().size() == 0:
             continue
         for node in e.physicalPlanDescription().split("\n\n"):
             if "Scan parquet" in node and log_dir in node:
@@ -291,8 +316,10 @@ def test_ingest_scans_only_the_columns_apply_uses(spark, tmp_path, driver,
                                                   decode):
     """apply_batch alone decides which raw columns a batch contributes:
     without decoding the JSON payload is never scanned, and with decoding
-    the raw text is never scanned — on replay through column pruning, on
-    the stream through its source projection (foreachBatch cuts pruning)."""
+    the raw text is never scanned — through column pruning on both drivers,
+    since the stream reads each micro-batch's files as a plain scan. The
+    locator aggregate's scan reads the keys, the stamp and the source
+    coordinates only."""
     from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
                                                   generate_change_log)
 
@@ -317,4 +344,7 @@ def test_ingest_scans_only_the_columns_apply_uses(spark, tmp_path, driver,
         else:
             assert "payload:" not in rs, rs
     assert any(("payload:" in rs) == decode for rs in schemas), schemas
+    cols = [[f.split(":")[0] for f in rs.strip()[len("struct<"):-1].split(",")]
+            for rs in schemas]
+    assert ["conv_id", "turn_idx", "ts", "offset", "partition"] in cols, schemas
     assert_final_state_equal(LakeTable(spark, tp).read(), duckdb_final_state(d))
