@@ -5,13 +5,8 @@ SQL LOWER/LIKE. The engine's mandate (BASELINE.json input_hint) is that any
 text normalization / event decoding runs **vectorized** — Arrow-batched
 pandas UDFs — never row-at-a-time Python.
 
-Two payload-decode paths, fastest first:
-
-- ``decode_payload_json`` — ``F.from_json``: pure JVM, whole-stage codegen;
-  the default.
-- ``decode_payload_pandas`` — an Arrow-batched ``pandas_udf`` doing the same
-  decode in pandas; exists to exercise/benchmark the vectorized-UDF path and
-  as the template for decoders ``from_json`` can't express.
+``decode_payload_json`` decodes the change-event payload with
+``F.from_json``: pure JVM, whole-stage codegen.
 
 ``normalize_text`` needs Python because Spark has no Unicode-NFC builtin;
 ``unicodedata.normalize`` is applied per Arrow batch via ``pd.Series.map``
@@ -24,7 +19,7 @@ import re
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,34 +67,4 @@ def decode_payload_json(df: DataFrame, payload_col: str = "payload",
     out = df
     for f in schema.fields:
         out = out.withColumn(f"{f.name}_decoded", decoded[f.name])
-    return out
-
-
-def make_pandas_json_decoder(field: str) -> Column:
-    """Arrow-batched JSON field extractor (template for custom decoders)."""
-
-    @F.pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        import json
-
-        def _get(x):
-            if x is None:
-                return None
-            try:
-                return json.loads(x).get(field)
-            except (ValueError, AttributeError):
-                return None
-
-        return s.map(_get)
-
-    return _decode
-
-
-def decode_payload_pandas(df: DataFrame, payload_col: str = "payload",
-                          fields: tuple[str, ...] = ("role", "text", "tool")) -> DataFrame:
-    """Same decode as :func:`decode_payload_json` but through the vectorized
-    pandas-UDF path (one Arrow round trip, batch-at-a-time Python)."""
-    out = df
-    for f in fields:
-        out = out.withColumn(f"{f}_decoded", make_pandas_json_decoder(f)(F.col(payload_col)))
     return out

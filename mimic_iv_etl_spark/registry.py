@@ -131,11 +131,13 @@ def _events_rows(sf_dir: str) -> int:
     return pq.read_metadata(os.path.join(sf_dir, "events.parquet")).num_rows
 
 
-def _cdc_fixture(sf_dir: str) -> tuple[str, str, int]:
-    """(log_dir, table_dir, n_events) for the replay fixture at this sf."""
+def _cdc_fixture() -> tuple[str, str, int]:
+    """(log_dir, table_dir, n_events) of the replay fixture. Sized from the
+    gate sf only, whatever sf dir a CDC query is called with, so the query
+    and its oracle (built once at import) read one log at every sf."""
     import tempfile
 
-    n = max(5_000, _events_rows(sf_dir))
+    n = max(5_000, _events_rows(_GATE_SF))
     work = os.path.join(tempfile.gettempdir(), f"spark_graft_cdc_n{n}_s42_e80")
     return os.path.join(work, "log"), os.path.join(work, "table"), n
 
@@ -181,7 +183,7 @@ def _ensure_gate_fixtures() -> None:
     """Materialize every generated fixture an oracle reads, at the gate sf.
     Called from oracle_sql() so the DuckDB side never depends on the Spark
     queries having run first."""
-    log_dir, _, n = _cdc_fixture(_GATE_SF)
+    log_dir, _, n = _cdc_fixture()
     _ensure_cdc_log(log_dir, n)
     _ensure_decode_log()
     _ensure_media()
@@ -520,8 +522,6 @@ def q_simhash_near_dups(spark, sf):
 
 def q_cosine_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
-    # dim known for the testdata embeddings → unrolled codegen'd dot product
-    # (similarity._dot) instead of the interpreted HOF fold; bit-identical
     return similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5,
                                   dim=_EMB_DIM)
 
@@ -543,8 +543,8 @@ def q_embedding_near_dups(spark, sf):
                                           dim=_EMB_DIM)
 
 
-# Explicit LSH hyperplanes for the gate entry: deterministic seeded normals,
-# rounded so the SAME literal values embed into the DuckDB oracle SQL — the
+# The LSH gate entry's hyperplanes (similarity.hyperplanes: seeded normals,
+# rounded so the SAME literal values embed into the DuckDB oracle SQL) — the
 # oracle independently recomputes signatures, buckets, and bucket-local
 # top-k (VERDICT r03 item 7). 6 planes × the testdata's 64-dim embeddings.
 #
@@ -557,21 +557,13 @@ def q_embedding_near_dups(spark, sf):
 # test_registry_oracle.py::test_ann_oracle_tie_margins_clear_epsilon.
 _LSH_N_PLANES, _EMB_DIM = 6, 64
 
-
-def _lsh_planes() -> list[list[float]]:
-    import numpy as np
-
-    arr = np.random.default_rng(42).standard_normal((_LSH_N_PLANES, _EMB_DIM))
-    return [[round(float(x), 6) for x in row] for row in arr]
-
-
 _IVF_N_LISTS, _IVF_N_PROBE = 8, 2
 _IVF_CENTROID_IDS = list(range(100, 100 + _IVF_N_LISTS))
 
 
 def q_lsh_ann(spark, sf):
-    """LSH-bucketed approximate top-k with a DERIVED oracle: explicit
-    literal hyperplanes make the bucketing portable, so DuckDB reproduces
+    """LSH-bucketed approximate top-k with a DERIVED oracle: the literal
+    hyperplanes make the bucketing portable, so DuckDB reproduces
     the exact candidate buckets from the same plane literals and the
     bucket-local top-k matches row-for-row (the approximation is in WHICH
     pairs are compared — deterministic given the planes — not in the
@@ -579,7 +571,7 @@ def q_lsh_ann(spark, sf):
     emb = _t(spark, sf, "embeddings")
     return similarity.lsh_bucketed_topk(
         emb, emb.filter(F.col("vec_id") < 20), k=5,
-        n_planes=_LSH_N_PLANES, planes=_lsh_planes(), dim=_EMB_DIM)
+        n_planes=_LSH_N_PLANES, dim=_EMB_DIM)
 
 
 def q_ivf_ann(spark, sf):
@@ -600,8 +592,8 @@ def q_ivf_ann(spark, sf):
 
 def q_cdc_replay(spark, sf):
     """Full engine: seeded change log → replay (LWW dedup, exactly-once,
-    schema evolution) → final transcript state. Log size scales with sf dir
-    (events table rows) so the driver exercises real work at each sf.
+    schema evolution) → final transcript state. The log is sized from the
+    gate sf (:func:`_cdc_fixture`), not from ``sf``.
 
     Oracle: the same window SQL as ``cdc/oracle.py::duckdb_final_state`` over
     the raw log — a zero-shared-code final-state recomputation (the engine's
@@ -614,7 +606,7 @@ def q_cdc_replay(spark, sf):
     from mimic_iv_etl_spark.lake.table import LakeTable
     from pyspark.sql import types as T
 
-    log_dir, table_dir, n = _cdc_fixture(sf)
+    log_dir, table_dir, n = _cdc_fixture()
     _ensure_cdc_log(log_dir, n)
     schema = T.StructType([
         T.StructField("conv_id", T.StringType(), False),
@@ -634,7 +626,7 @@ def _cdc_oracle_sql() -> str:
     (ts, offset, partition), deletes drop the key — verbatim the semantics of
     ``cdc/oracle.py::duckdb_final_state`` (cross-checked against a per-row
     Python fold in tests), inlined over the deterministic gate log path."""
-    log_dir, _, _ = _cdc_fixture(_GATE_SF)
+    log_dir, _, _ = _cdc_fixture()
     glob_path = os.path.join(log_dir, "tranche-*", "*.parquet")
     return f"""
         WITH ranked AS (
@@ -659,12 +651,12 @@ def q_cdc_changes(spark, sf):
     from mimic_iv_etl_spark.lake.table import LakeTable
 
     q_cdc_replay(spark, sf)  # idempotent: resumes/no-ops when complete
-    _, table_dir, _ = _cdc_fixture(sf)
+    _, table_dir, _ = _cdc_fixture()
     return LakeTable(spark, table_dir).changes(0)
 
 
 def _cdc_changes_oracle_sql() -> str:
-    log_dir, _, _ = _cdc_fixture(_GATE_SF)
+    log_dir, _, _ = _cdc_fixture()
     glob_path = os.path.join(log_dir, "tranche-*", "*.parquet")
     return f"""
         WITH ranked AS (
@@ -989,7 +981,7 @@ def _lsh_ann_oracle_sql() -> str:
     literals as ``q_lsh_ann``, joins on the bucket, and takes the
     bucket-local top-k — independent end-to-end reproduction of the
     approximate index, not just of the final scores."""
-    planes = _lsh_planes()
+    planes = similarity.hyperplanes(_LSH_N_PLANES, _EMB_DIM)
 
     def lit(row: list[float]) -> str:
         return "[" + ",".join(repr(x) for x in row) + "]"

@@ -5,17 +5,14 @@ from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
-from mimic_iv_etl_spark.functions import (
-    decode_payload_json,
-    decode_payload_pandas,
-    normalize_text,
-)
+from mimic_iv_etl_spark.functions import decode_payload_json, normalize_text
 from mimic_iv_etl_spark.operators import dedup, labeling, multimodal, relational
 from mimic_iv_etl_spark.operators import similarity, text, windows
 from mimic_iv_etl_spark.plans import QueryBuilder
-from tests.util import _py4j_commands
+from tests.util import _py4j_commands, jobs_started
 
 SF = "/root/testdata/sf0.001"
 
@@ -441,7 +438,7 @@ def test_simhash_near_dups(spark):
 def test_cosine_topk_matches_duckdb(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = emb.limit(5)
-    got = similarity.cosine_topk(emb, q, k=3)
+    got = similarity.cosine_topk(emb, q, k=3, dim=64)
     assert got.groupBy("query_id").count().agg(F.max("count")).collect()[0][0] <= 3
     con = duckdb.connect()
     con.execute(f"CREATE VIEW e AS SELECT * FROM '{SF}/embeddings.parquet'")
@@ -460,7 +457,8 @@ def test_cosine_topk_matches_duckdb(spark):
 
 def test_lsh_bucketed_topk_runs_and_is_subset_quality(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    out = similarity.lsh_bucketed_topk(emb, emb.limit(20), k=5, n_planes=6)
+    out = similarity.lsh_bucketed_topk(emb, emb.limit(20), k=5, n_planes=6,
+                                       dim=64)
     assert out.count() >= 0  # approximate: may miss; must not error
     assert set(out.columns) == {"query_id", "neighbor_id", "cosine"}
 
@@ -469,8 +467,8 @@ def test_ivf_topk_recall_against_exact(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
     exact = {(r["query_id"], r["neighbor_id"])
-             for r in similarity.cosine_topk(emb, q, k=5).collect()}
-    approx = similarity.ivf_topk(emb, q, k=5, n_lists=8, n_probe=4)
+             for r in similarity.cosine_topk(emb, q, k=5, dim=64).collect()}
+    approx = similarity.ivf_topk(emb, q, k=5, n_lists=8, n_probe=4, dim=64)
     rows = approx.collect()
     assert all(r["query_id"] < 10 for r in rows)
     got = {(r["query_id"], r["neighbor_id"]) for r in rows}
@@ -478,14 +476,69 @@ def test_ivf_topk_recall_against_exact(spark):
     assert len(got & exact) / len(exact) >= 0.5
     # determinism across runs (seeded centroids)
     again = {(r["query_id"], r["neighbor_id"])
-             for r in similarity.ivf_topk(emb, q, k=5, n_lists=8, n_probe=4).collect()}
+             for r in similarity.ivf_topk(emb, q, k=5, n_lists=8, n_probe=4,
+                                          dim=64).collect()}
     assert got == again
 
 
 def test_embedding_near_dups(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(100)
-    out = similarity.embedding_near_dups(emb, threshold=0.99)
+    out = similarity.embedding_near_dups(emb, threshold=0.99, dim=64)
     assert all(r["id_a"] < r["id_b"] for r in out.collect())
+
+
+def test_wrong_width_vectors_fail_loudly(spark):
+    """A ``dim`` that does not match the vectors raises, naming ``dim``,
+    instead of scoring truncated vectors (or NULL products past the end)."""
+    emb = spark.range(0, 20).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") * (i + 1) % 7 - 3).cast("float")
+                  for i in range(4)]).alias("embedding"))
+    q = emb.filter(F.col("vec_id") < 3)
+    builds = [
+        lambda d: similarity.cosine_topk(emb, q, k=3, dim=d),
+        lambda d: similarity.lsh_bucketed_topk(emb, q, k=3, n_planes=2, dim=d),
+        lambda d: similarity.ivf_topk(emb, q, k=3, n_lists=2, n_probe=1, dim=d),
+        lambda d: similarity.embedding_near_dups(emb, threshold=0.0, dim=d),
+        lambda d: similarity.hyperplane_signature(emb, n_planes=2, dim=d),
+    ]
+    for build in builds:
+        with pytest.raises(SparkRuntimeException, match="dim=3"):
+            build(3).collect()
+    with pytest.raises(SparkRuntimeException, match="dim=5"):
+        builds[0](5).collect()
+
+
+@pytest.mark.parametrize("op", ["cosine_topk", "lsh_bucketed_topk", "ivf_topk",
+                                "embedding_near_dups", "hyperplane_signature"])
+def test_similarity_plans_build_lazily_in_constant_py4j_calls(spark, op):
+    """Every dot product and norm is SQL text over column names: the plan
+    holds no ``aggregate``/``zip_with``/``transform`` fold (interpreted, one
+    lambda call per element), builds in a fixed number of Py4J calls
+    whatever ``dim`` is, and starts no Spark job."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 5)
+    build = {
+        "cosine_topk": lambda d: similarity.cosine_topk(emb, q, k=3, dim=d),
+        "lsh_bucketed_topk": lambda d: similarity.lsh_bucketed_topk(
+            emb, q, k=3, n_planes=6, dim=d),
+        "ivf_topk": lambda d: similarity.ivf_topk(
+            emb, q, k=3, n_lists=8, n_probe=2, dim=d),
+        "embedding_near_dups": lambda d: similarity.embedding_near_dups(
+            emb, dim=d),
+        "hyperplane_signature": lambda d: similarity.hyperplane_signature(
+            emb, n_planes=6, dim=d),
+    }[op]
+    build(16)
+    narrow = _py4j_commands(spark, lambda: build(16))
+    wide = _py4j_commands(spark, lambda: build(64))
+    assert abs(wide - narrow) <= 10, (narrow, wide)
+    before = jobs_started(spark)
+    df = build(64)
+    assert jobs_started(spark) == before, f"{op} started a job while building"
+    plan = df._jdf.queryExecution().analyzed().toString()
+    for fold in ("aggregate(", "zip_with(", "transform("):
+        assert fold not in plan, plan
 
 
 # --------------------------------------------------------------- multimodal
@@ -620,12 +673,11 @@ def test_multimodal_plumbing(spark):
 def test_payload_decoders_agree(spark, small_log):
     d, _, _ = small_log
     df = spark.read.parquet(f"{d}/tranche-0").limit(500)
-    jvm = decode_payload_json(df).select("offset", "partition", "text_decoded", "role_decoded")
-    pdu = decode_payload_pandas(df).select("offset", "partition", "text_decoded", "role_decoded")
-    assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, pdu.collect()))
     # decoded payload reproduces the raw columns
     chk = decode_payload_json(df).filter(
         ~(F.col("text_decoded").eqNullSafe(F.col("text")))
+        | ~(F.col("role_decoded").eqNullSafe(F.col("role")))
+        | ~(F.col("tool_decoded").eqNullSafe(F.col("tool")))
     )
     assert chk.count() == 0
 
@@ -639,34 +691,39 @@ def test_normalize_text_nfc(spark):
 
 def test_embedding_near_dups_guards_large_corpus(spark):
     """VERDICT r03 item 6: the exact O(n²) kernel must refuse a corpus past
-    max_rows instead of silently launching a quadratic cross join."""
+    max_rows instead of silently launching a quadratic cross join. The cap
+    is part of the plan, so the refusal comes at the first action."""
     emb = spark.range(0, 50).select(
         F.col("id").alias("vec_id"),
         F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"))
-    with pytest.raises(ValueError, match="max_rows"):
-        similarity.embedding_near_dups(emb, max_rows=10)
+    over = similarity.embedding_near_dups(emb, max_rows=10, dim=2)
+    with pytest.raises(SparkRuntimeException, match="max_rows=10"):
+        over.collect()
     # under the cap (or explicitly uncapped) it runs
-    assert similarity.embedding_near_dups(emb, threshold=0.5,
-                                          max_rows=None).count() > 0
+    for cap in (50, None):
+        assert similarity.embedding_near_dups(emb, threshold=0.5, max_rows=cap,
+                                              dim=2).count() == 50 * 49 // 2
 
 
-def test_explicit_planes_match_default_semantics(spark):
-    """hyperplane_signature(planes=...) buckets by sign(v·h) exactly like the
-    xxhash64-derived path — same downstream join semantics, portable values."""
+def test_hyperplane_signature_matches_helper_planes(spark):
+    """hyperplane_signature sets bit p exactly when v·h_p > 0 for the planes
+    similarity.hyperplanes hands out — the literals another engine's SQL
+    holds to rebuild the same buckets."""
     emb = spark.range(0, 40).select(
         F.col("id").alias("vec_id"),
         F.array(*[(F.col("id") * (i + 1) % 7 - 3).cast("float")
                   for i in range(4)]).alias("embedding"))
-    planes = [[1.0, 0.0, 0.0, 0.0], [0.5, -0.5, 0.25, -1.0]]
-    sig = similarity.hyperplane_signature(emb, n_planes=2, planes=planes)
+    planes = similarity.hyperplanes(3, 4, seed=7)
+    assert planes == similarity.hyperplanes(3, 4, seed=7)
+    assert all(x == round(x, 6) for pl in planes for x in pl)
+    sig = similarity.hyperplane_signature(emb, n_planes=3, seed=7, dim=4)
     rows = sig.collect()
     for r in rows:
         v = [float(x) for x in r["embedding"]]
         want = sum(1 << p for p, pl in enumerate(planes)
                    if sum(a * b for a, b in zip(v, pl)) > 0)
         assert r["lsh_sig"] == want
-    with pytest.raises(ValueError, match="planes"):
-        similarity.hyperplane_signature(emb, n_planes=3, planes=planes)
+    assert len({r["lsh_sig"] for r in rows}) > 1
 
 
 def test_ivf_explicit_centroids_probe_all_equals_exact(spark):
@@ -678,8 +735,9 @@ def test_ivf_explicit_centroids_probe_all_equals_exact(spark):
     q = emb.filter(F.col("vec_id") < 5)
     ids = [r[0] for r in emb.select("vec_id").orderBy("vec_id").limit(4).collect()]
     approx = {tuple(r) for r in similarity.ivf_topk(
-        emb, q, k=3, n_lists=4, n_probe=4, centroid_ids=ids).collect()}
-    exact = {tuple(r) for r in similarity.cosine_topk(emb, q, k=3).collect()}
+        emb, q, k=3, n_lists=4, n_probe=4, centroid_ids=ids, dim=64).collect()}
+    exact = {tuple(r) for r in similarity.cosine_topk(emb, q, k=3,
+                                                      dim=64).collect()}
     assert approx == exact
 
 

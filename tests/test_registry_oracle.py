@@ -51,6 +51,19 @@ def test_query_matches_oracle(spark, name):
                                   obj=name)
 
 
+def test_cdc_queries_read_the_oracle_log_at_any_sf(spark):
+    """The CDC oracles are built once, for the gate sf; the queries must
+    read that same change log whatever sf dir they are called with, so the
+    registry matches its oracles at sf0.001 too."""
+    base = os.path.join(os.path.dirname(SF), "sf0.001")
+    for name in ("cdc_replay", "cdc_changes"):
+        got = _canon(registry.REGISTRY[name].fn(spark, base).toPandas())
+        want = _canon(_duck_run(registry.oracle_sql()[name]))
+        assert len(got) == len(want), f"{name}: rows {len(got)} != {len(want)}"
+        pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                      check_exact=True, obj=name)
+
+
 def test_no_rows_only_entries_remain():
     """Since round 4 every entry carries an oracle (derived constructions
     for the hash/ANN family) — a rows-only entry would silently weaken the
@@ -69,7 +82,9 @@ def test_ann_oracle_tie_margins_clear_epsilon():
     unlucky near-tie can ever flip the gate spuriously."""
     import numpy as np
 
-    from mimic_iv_etl_spark.registry import _IVF_CENTROID_IDS, _lsh_planes
+    from mimic_iv_etl_spark.operators.similarity import hyperplanes
+    from mimic_iv_etl_spark.registry import (_EMB_DIM, _IVF_CENTROID_IDS,
+                                             _LSH_N_PLANES)
 
     eps = 1e-9
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
@@ -80,7 +95,7 @@ def test_ann_oracle_tie_margins_clear_epsilon():
         V = np.array(emb["embedding"].tolist(), dtype=np.float64)
         ids = emb["vec_id"].to_numpy()
         # (a) signature dot signs
-        P = np.array(_lsh_planes(), dtype=np.float64)
+        P = np.array(hyperplanes(_LSH_N_PLANES, _EMB_DIM), dtype=np.float64)
         assert np.abs(V @ P.T).min() > eps, sf
         # (b) cell-assignment and probe-rank gaps (exact ties are fine —
         # both engines break them on the centroid id deterministically)
@@ -127,9 +142,6 @@ def test_scaled_features_moments_read_lineitem_unspread(spark, monkeypatch):
 # Entries whose construction runs Spark jobs, each with the reason. Every
 # other entry must build its DataFrame without starting a job.
 BUILD_JOBS_ALLOWED = {
-    "ivf_ann": "collects the pinned centroid vectors to the driver",
-    "embedding_near_dups": "counts the corpus up front to refuse an "
-                           "over-cap O(n²) cross join (max_rows)",
     "csv_roundtrip": "writes the CSV it then reads back",
 }
 
