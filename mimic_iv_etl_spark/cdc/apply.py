@@ -55,7 +55,7 @@ from mimic_iv_etl_spark.cdc.metrics import append_lineage, append_metrics
 from mimic_iv_etl_spark.lake.merge import (PACK_MAX_OFFSET, PACK_MAX_PARTITION,
                                            lww_reduce, lww_winner_locators)
 from mimic_iv_etl_spark.lake.schema import merge_schemas, schemas_equal
-from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
+from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable, select_sql
 
 META_COLS = ("op", "offset", "partition", "payload")
 # the columns a decoded JSON payload supplies (textfns.PAYLOAD_SCHEMA)
@@ -136,7 +136,11 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
        every wide row behind the Python round-trip (ArrowEvalPython row
        queue) and stage metrics showed 58% of executor time in GC — the JVM
        probe removes Python from the wide path entirely, so only winner
-       rows ever reach the decode/normalize UDFs.
+       rows ever reach the decode/normalize UDFs. The broadcast is the
+       write's extra short job (13–21 ms, one task): its
+       ``BroadcastExchange`` collects the ``LocalRelation`` before the
+       write's stages run — broadcast-crossJoining such a frame onto a
+       ``noop`` write makes it 2 jobs instead of 1.
     4. The filter passes exactly one row per key, so no further reduce runs.
 
     Driver memory peak ≈ winner locators (``_LOCATOR_ROW_BYTES``/winner) +
@@ -436,7 +440,7 @@ def apply_batch(
         new_applied[p] = max(int(new_applied.get(p, -1)), int(r["max_offset"]))
 
     # -- internal candidate rows: data cols aligned to merged schema + stamps
-    # (selectExpr over SQL strings — one Py4J call instead of ~5 per column)
+    # (SQL strings in a fixed number of Py4J calls at any column count)
     decode_names = set(DECODED_COLS) if late_decode else set()
     data_exprs = [
         (f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
@@ -447,12 +451,12 @@ def apply_batch(
     ]
     if late_decode:
         data_exprs.append("`payload`")
-    candidates = fresh.selectExpr(
+    candidates = select_sql(fresh, [
         *data_exprs,
         "(op = 'D') AS _deleted",
         "CAST(offset AS bigint) AS _lww_offset",
         "CAST(partition AS int) AS _lww_partition",
-    )
+    ])
     if dedup_mode == "locator":
         winners = _locator_winners(candidates, table.key_cols, ranges)
     else:

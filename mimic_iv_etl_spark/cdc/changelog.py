@@ -203,6 +203,7 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
         files = []
         file_offsets: dict[str, dict[str, list[int]]] = {}
         t_off, t_part = offset[sl], partition[sl]
+        prev_ms = -1
         for i in range(k):
             chunk = tbl.slice(i * step, step)
             if chunk.num_rows == 0:
@@ -212,6 +213,14 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
             # file caps Spark's scan parallelism at nfiles regardless of cores
             pq.write_table(chunk, path, row_group_size=65536,
                            compression=spec.compression)
+            # the stream source takes files in modification-time order at
+            # millisecond resolution, and ties keep directory-listing order
+            # (part-00001 can come first), so two files written in the same
+            # millisecond could be streamed out of arrival order: stamp each
+            # file at least 1 ms after the previous one
+            ms = max(os.stat(path).st_mtime_ns // 1_000_000, prev_ms + 1)
+            os.utime(path, ns=(ms * 1_000_000, ms * 1_000_000))
+            prev_ms = ms
             files.append(path)
             # per-FILE dense offset ranges: each file is a contiguous
             # arrival-order slice, and per-partition offsets increment by one

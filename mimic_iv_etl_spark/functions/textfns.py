@@ -6,7 +6,7 @@ text normalization / event decoding runs **vectorized** — Arrow-batched
 pandas UDFs — never row-at-a-time Python.
 
 ``decode_payload_json`` decodes the change-event payload with
-``F.from_json``: pure JVM, whole-stage codegen.
+``from_json``: pure JVM, whole-stage codegen.
 
 ``normalize_text`` needs Python because Spark has no Unicode-NFC builtin;
 ``unicodedata.normalize`` is applied per Arrow batch via ``pd.Series.map``
@@ -62,9 +62,8 @@ def normalize_text(s: pd.Series) -> pd.Series:
 
 def decode_payload_json(df: DataFrame, payload_col: str = "payload",
                         schema: T.StructType = PAYLOAD_SCHEMA) -> DataFrame:
-    """Decode the JSON change-event payload into typed columns, JVM-side."""
-    decoded = F.from_json(F.col(payload_col), schema)
-    out = df
-    for f in schema.fields:
-        out = out.withColumn(f"{f.name}_decoded", decoded[f.name])
-    return out
+    """Decode the JSON change-event payload into typed ``<field>_decoded``
+    columns, JVM-side: one server-parsed ``from_json`` projection."""
+    decoded = f"from_json(`{payload_col}`, '{schema.simpleString()}')"
+    return df.selectExpr("*", *(f"{decoded}.`{f.name}` AS `{f.name}_decoded`"
+                                for f in schema.fields))

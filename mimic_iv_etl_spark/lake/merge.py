@@ -66,23 +66,23 @@ PACK_TS_SHIFT = 1 << 52
 PACK_OFF_SHIFT = 1 << 16
 PACK_MAX_OFFSET = 1 << 36
 PACK_MAX_PARTITION = 1 << 16
+_DEC_TS_SHIFT = f"CAST({PACK_TS_SHIFT}L AS decimal(38,0))"
 
 
 def lww_pack_stamp(
     ts_col: str = "ts",
     offset_col: str = "_lww_offset",
     partition_col: str = "_lww_partition",
-) -> F.Column:
+) -> str:
     """The LWW stamp ``(ts, offset, partition)`` packed into one
-    DECIMAL(38,0), order-preserving. NULL ts sorts below every real ts (same
-    as struct comparison in the ``max_by`` kernel)."""
-    micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    micros = F.coalesce(micros, F.lit(-(1 << 62)))
-    return (
-        micros.cast("decimal(38,0)") * F.lit(PACK_TS_SHIFT).cast("decimal(38,0)")
-        + (F.col(offset_col) * PACK_OFF_SHIFT + F.col(partition_col)).cast(
-            "decimal(38,0)")
-    )
+    DECIMAL(38,0), order-preserving, as a SQL expression string. NULL ts
+    sorts below every real ts (same as struct comparison in the ``max_by``
+    kernel)."""
+    micros = (f"coalesce(unix_micros(CAST(`{ts_col}` AS timestamp)), "
+              f"{-(1 << 62)}L)")
+    return (f"CAST({micros} AS decimal(38,0)) * {_DEC_TS_SHIFT}"
+            f" + CAST(`{offset_col}` * {PACK_OFF_SHIFT} + `{partition_col}`"
+            " AS decimal(38,0))")
 
 
 def lww_winner_locators(
@@ -100,18 +100,14 @@ def lww_winner_locators(
     reads ONLY the key/stamp columns (payloads are column-pruned out of the
     scan) and its aggregation buffer is one 16-byte decimal and two longs, so
     a change batch is reduced without sorting and without a single payload
-    byte on the wire."""
-    keys = list(key_cols)
+    byte on the wire. One ``agg`` of server-parsed SQL and one
+    ``selectExpr``: the build costs the same few Py4J calls at any table
+    width."""
     pack = lww_pack_stamp(ts_col, offset_col, partition_col)
-    low = F.pmod(F.col("_w"), F.lit(PACK_TS_SHIFT).cast("decimal(38,0)")).cast("long")
     return (
-        df.groupBy(*keys)
-        .agg(F.max(pack).alias("_w"), F.count(F.lit(1)).alias("n"),
-             F.expr(f"count_if({outside})").alias("n_out"))
-        .select(low.alias("_low"), "n", "n_out")
-        .select(
-            F.col("_low").bitwiseAND(F.lit(PACK_OFF_SHIFT - 1)).cast("int").alias("p"),
-            F.shiftright(F.col("_low"), 16).alias("o"),
-            "n", "n_out",
-        )
+        df.groupBy(*key_cols)
+        .agg(F.expr(f"CAST(pmod(max({pack}), {_DEC_TS_SHIFT}) AS bigint) AS _low"),
+             F.expr("count(1) AS n"), F.expr(f"count_if({outside}) AS n_out"))
+        .selectExpr(f"CAST(_low & {PACK_OFF_SHIFT - 1} AS int) AS p",
+                    "shiftright(_low, 16) AS o", "n", "n_out")
     )

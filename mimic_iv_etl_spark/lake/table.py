@@ -341,7 +341,7 @@ class LakeTable:
     def bucket_expr(self, col: str | None = None) -> F.Column:
         """The bucket routing expression — MUST be identical on write and read."""
         c = col or self.snapshot["bucket_by"]
-        return F.pmod(F.xxhash64(F.col(c)), F.lit(self.n_buckets)).cast("int")
+        return F.expr(f"CAST(pmod(xxhash64(`{c}`), {self.n_buckets}) AS int)")
 
     def read(self, buckets: set[int] | None = None, internal: bool = False,
              pre_filter: F.Column | None = None) -> DataFrame:
@@ -547,17 +547,16 @@ class LakeTable:
         into ``data/bucket=N/``. Returns the new file entries. The snapshot
         referencing them is written separately — the atomic commit point."""
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-        aligned = _align(
-            state_df.select(BUCKET_COL, *[f.name for f in _internal_schema(public).fields]),
-            T.StructType(
-                [T.StructField(BUCKET_COL, T.IntegerType(), False)]
-                + list(_internal_schema(public).fields)
-            ),
-        )
-        # co-locate each bucket in one task before partitionBy: file count per
-        # commit is exactly ≤ n_buckets instead of tasks × buckets tiny files
+        aligned = _align(state_df, T.StructType(
+            [T.StructField(BUCKET_COL, T.IntegerType(), False)]
+            + list(_internal_schema(public).fields)), fill=False)
+        # one writer task per bucket, by construction: repartitionById sends
+        # bucket b to task b (a hash repartition on the bucket NUMBER
+        # collides — buckets 0-3 land in 2 of 4 tasks, 32 buckets in 18 of
+        # 32 — and runs the write at about half its parallelism). So a commit
+        # writes ≤ n_buckets files instead of tasks × buckets tiny ones
         # (file explosion is the classic MoR ingest killer at scale).
-        # write_salt > 1 splits a bucket across that many writer tasks — the
+        # write_salt > 1 gives each bucket that many writer tasks — the
         # north rule's salted-key splitting applied to hot-conversation
         # buckets (salt hashes all key columns; the bucket itself derives
         # from ``bucket_by`` alone, so rows of one conversation still land
@@ -577,14 +576,13 @@ class LakeTable:
                 parts, F.col(BUCKET_COL), *[F.col(c) for c in cluster_by]
             ).sortWithinPartitions(BUCKET_COL, *cluster_by)
         elif write_salt > 1:
-            salt_col = F.pmod(
-                F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(write_salt)
-            )
-            aligned = aligned.repartition(
-                n_buckets * write_salt, F.col(BUCKET_COL), salt_col
-            )
+            keys = ", ".join(f"`{c}`" for c in self.key_cols)
+            aligned = aligned.repartitionById(
+                n_buckets * write_salt, F.expr(
+                    f"{BUCKET_COL} * {write_salt}"
+                    f" + CAST(pmod(xxhash64({keys}), {write_salt}) AS int)"))
         else:
-            aligned = aligned.repartition(n_buckets, F.col(BUCKET_COL))
+            aligned = aligned.repartitionById(n_buckets, BUCKET_COL)
         aligned.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
         # the per-file footer read + rename is driver-side IO (~1 ms per
         # file locally, far more against an object store): serial it is
@@ -1146,19 +1144,37 @@ def _has_tombstones(md) -> bool:
     return False
 
 
-def _align(df: DataFrame, target: T.StructType) -> DataFrame:
+def _align(df: DataFrame, target: T.StructType, fill: bool = True) -> DataFrame:
     """Project ``df`` (written schema) onto ``target``: add missing columns as
-    NULL, cast widened columns. Pure projection — no shuffle."""
+    NULL (``fill=False``: raise instead), cast widened columns, drop the
+    rest. Pure projection — no shuffle — built with :func:`select_sql`, so
+    its Py4J cost does not grow with the column count."""
     have = {f.name: f.dataType for f in df.schema.fields}
+    missing = [f.name for f in target.fields if f.name not in have]
+    if missing and not fill:
+        raise ValueError(f"columns {missing} are missing from the data to write")
     cols = []
     for f in target.fields:
         if f.name not in have:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            cols.append(f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
         elif have[f.name] != f.dataType:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+            cols.append(f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`")
         else:
-            cols.append(F.col(f.name))
-    return df.select(*cols)
+            cols.append(f"`{f.name}`")
+    return select_sql(df, cols)
+
+
+def select_sql(df: DataFrame, exprs: list[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a fixed number of Py4J calls. PySpark
+    ships a list argument to the JVM one element per call, so a wide
+    ``selectExpr`` costs a round trip per column; packing the expressions
+    into ONE ``struct(...)`` string and expanding it costs two one-string
+    ``selectExpr`` calls (12 Py4J commands) at any width. The optimizer collapses the two projections and folds each
+    ``struct(...).field`` back to its expression (``CollapseProject`` +
+    ``SimplifyExtractValueOps``), so the optimized plan is the flat
+    projection."""
+    return (df.selectExpr(f"struct({', '.join(exprs)}) AS `_select_sql`")
+            .selectExpr("`_select_sql`.*"))
 
 
 def _write_snapshot(meta_dir: str, snap: dict) -> None:

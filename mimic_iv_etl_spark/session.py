@@ -84,6 +84,14 @@ def get_spark_session(
         # is batch-invariant: a small-log replay compiles 40 classes once and
         # 0 on every replay after it. Local-mode tasks share this JVM's cache.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # No per-call Python call-site capture. With it on (PySpark's
+        # default), every `F.col` and Column method call walks the Python
+        # stack and adds ~5 Py4J round trips (active
+        # session, conf read, origin set and clear): a warm apply_batch on
+        # the Column-built agg kernel sends 537 Py4J commands with it and
+        # 227 without. Errors keep their class, SQLSTATE and message; only
+        # the Python file:line in the DataFrame query context is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "32g")
         # Throughput GC for batch ingest: G1 (the Java 17 default) trades

@@ -245,3 +245,60 @@ def test_flush_sidecars_leaves_live_claims_alone(spark, tmp_path):
     assert not os.path.exists(live_claim)
     got = read_metrics(spark, tdir).toPandas()
     assert len(got) == 1 and int(got["batch_id"][0]) == 1
+
+
+def _warm_apply_py4j(spark, small_log, path, extra_cols: int = 0,
+                     kernel: str = "locator") -> int:
+    """Py4J commands the calling thread sends for one ``apply_batch``
+    (offsets 400-799 of small_log) on a table that has already applied
+    offsets < 400. ``extra_cols`` adds nullable string data columns the
+    batch does not carry; ``kernel="agg"`` passes no manifest ranges."""
+    from pyspark.sql import types as T
+
+    from tests.util import _py4j_commands
+
+    d, _, manifest = small_log
+    (tranche,) = manifest["tranches"]
+    schema = T.StructType(TRANSCRIPT_SCHEMA.fields + [
+        T.StructField(f"x{i}", T.StringType(), True) for i in range(extra_cols)])
+    LakeTable.create(spark, path, schema, n_buckets=8)
+    log = _load_log(spark, d).drop("payload")
+    for i, hi in enumerate((400, 800)):
+        batch = log.filter(F.col("offset") < hi)
+        ranges = {int(p): (int(lo), min(int(h), hi - 1))
+                  for p, (lo, h) in tranche["partition_offsets"].items()}
+        n = _py4j_commands(spark, lambda: apply_batch(
+            LakeTable(spark, path), batch, batch_id=i,
+            manifest_ranges=ranges if kernel == "locator" else None))
+    assert LakeTable(spark, path).applied_offsets == {
+        p: min(h, 799) for p, (_, h) in ranges.items()}
+    return n
+
+
+def test_apply_plan_builds_in_few_py4j_calls(spark, small_log, tmp_path):
+    """A warm ``apply_batch`` builds its plans in a small, fixed number of
+    Py4J commands: 145 here, against 704 when every Column node was its own
+    round trip and PySpark captured the Python call site around each one.
+    The count does not grow with the table's width (30 data columns cost
+    what 6 do; that build used to grow by ~19 commands per column). The
+    ``agg`` kernel still builds Column chains (``lww_reduce``); there,
+    turning PySpark's call-site capture back on takes the same batch from
+    227 to 537 commands."""
+    import pyspark.errors.utils as perr
+
+    n6 = _warm_apply_py4j(spark, small_log, str(tmp_path / "t6"))
+    assert n6 <= 704 // 2, n6
+    n30 = _warm_apply_py4j(spark, small_log, str(tmp_path / "t30"), extra_cols=24)
+    assert abs(n30 - n6) <= 10, (n6, n30)
+
+    # a static conf, which PySpark reads once per process into this cache
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    n_agg = _warm_apply_py4j(spark, small_log, str(tmp_path / "ta"), kernel="agg")
+    perr._enable_debugging_cache = True
+    try:
+        n_capture = _warm_apply_py4j(spark, small_log, str(tmp_path / "tc"),
+                                     kernel="agg")
+    finally:
+        perr._enable_debugging_cache = None
+    assert not perr.is_debugging_enabled()
+    assert n_capture >= 1.5 * n_agg, (n_agg, n_capture)

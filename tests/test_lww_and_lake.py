@@ -351,3 +351,63 @@ def test_bucket_by_must_be_a_key_column(spark, tmp_path):
     t2.refresh()
     with pytest.raises(ValueError, match="read_keys requires"):
         t2.read_keys(["c0"])
+
+
+def _task_outputs(spark, first_job: int) -> list[int]:
+    """``recordsWritten`` of every task that wrote rows, over the stages of
+    the jobs started after job id ``first_job``, from the status store."""
+    from tests.util import jobs_started
+
+    sc = spark.sparkContext
+    last = jobs_started(spark)  # also drains the listener bus
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for j in range(first_job + 1, last + 1):
+        for sid in sc.statusTracker().getJobInfo(j).stageIds:
+            tasks = store.taskList(sid, 0, 1 << 30)
+            for i in range(tasks.size()):
+                m = tasks.apply(i).taskMetrics()
+                n = m.get().outputMetrics().recordsWritten() if m.isDefined() else 0
+                if n:
+                    out.append(n)
+    return out
+
+
+@pytest.mark.parametrize("n_buckets,write_salt", [(4, 1), (32, 1), (4, 4)])
+def test_one_writer_task_per_bucket(spark, tmp_path, n_buckets, write_salt):
+    """The write stage gives each bucket (each bucket × salt slot) its own
+    task, so a commit touching every bucket writes from exactly that many
+    tasks, one file each. A hash repartition on the bucket number put
+    buckets 0-3 into 2 of 4 tasks. With ``write_salt`` the hot bucket is
+    split into exactly ``write_salt`` files and no bucket gets more."""
+    from tests.util import jobs_started
+
+    tbl = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+                           n_buckets=n_buckets)
+    # 500 conversations × 4 turns touch every bucket; one hot conversation
+    # carries 400 distinct turns
+    df = spark.range(2_400).selectExpr(
+        "IF(id < 2000, concat('c', CAST(id % 500 AS string)), 'hot') AS conv_id",
+        "CAST(IF(id < 2000, id DIV 500, id) AS int) AS turn_idx",
+        "'user' AS role", "'x' AS text", "CAST(NULL AS string) AS tool",
+        "TIMESTAMP_NTZ'2026-01-01 00:00:00' AS ts", "false AS _deleted",
+        "id AS _lww_offset", "0 AS _lww_partition")
+    j0 = jobs_started(spark)
+    tbl.append_delta(_internal(df, tbl), write_salt=write_salt)
+    written = _task_outputs(spark, j0)
+
+    new = tbl.last_new_entries
+    assert {e["bucket"] for e in new} == set(range(n_buckets))
+    per_bucket: dict[int, int] = {}
+    for e in new:
+        per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + 1
+    # one file per task with output: the tasks' row counts are the files'
+    assert sorted(written) == sorted(e["rows"] for e in new)
+    if write_salt == 1:
+        assert len(written) == n_buckets
+        assert set(per_bucket.values()) == {1}
+    else:
+        hot = (spark.createDataFrame([("hot",)], "conv_id string")
+               .select(tbl.bucket_expr().alias("b")).collect()[0]["b"])
+        assert per_bucket[hot] == write_salt
+        assert max(per_bucket.values()) == write_salt

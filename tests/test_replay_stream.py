@@ -348,3 +348,27 @@ def test_ingest_scans_only_the_columns_apply_uses(spark, tmp_path, driver,
             for rs in schemas]
     assert ["conv_id", "turn_idx", "ts", "offset", "partition"] in cols, schemas
     assert_final_state_equal(LakeTable(spark, tp).read(), duckdb_final_state(d))
+
+
+def test_change_log_files_carry_arrival_order_mtimes(tmp_path):
+    """The stream source takes a tranche's files in millisecond-mtime order,
+    and ties keep directory-listing order, in which part-00001 can come
+    before part-00000. Streamed that way, part-00000 reads as already
+    applied and is skipped (forcing equal mtimes on a 2-file log left 468
+    of 743 rows). The generator stamps every file at least 1 ms after the
+    one before it."""
+    import glob
+    import os
+
+    from mimic_iv_etl_spark.cdc.changelog import ChangeLogSpec, generate_change_log
+
+    d = str(tmp_path / "log")
+    generate_change_log(d, ChangeLogSpec(n_events=2_000, n_convs=50,
+                                         n_partitions=2, seed=3, evolve_at=0.5,
+                                         files_per_tranche=8))
+    tranches = sorted(glob.glob(os.path.join(d, "tranche-*")))
+    assert len(tranches) == 2
+    for t in tranches:
+        ms = [os.stat(f).st_mtime_ns // 1_000_000
+              for f in sorted(glob.glob(os.path.join(t, "part-*.parquet")))]
+        assert len(ms) == 8 and all(a < b for a, b in zip(ms, ms[1:])), ms
