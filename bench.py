@@ -94,12 +94,6 @@ def main() -> None:
                 files_per_tranche=CPUS,
             ),
         )
-    else:
-        # a log cached by an older round lacks the dense-range manifest
-        # fields the arithmetic offset-bookkeeping path reads — backfill
-        from mimic_iv_etl_spark.cdc.changelog import upgrade_manifest
-
-        upgrade_manifest(log_dir)
     table_dir = os.path.join(tempfile.gettempdir(), f"bench_cdc_table_{os.getpid()}")
     shutil.rmtree(table_dir, ignore_errors=True)
     schema = T.StructType(

@@ -5,8 +5,8 @@ or Structured Streaming ``foreachBatch``). Dataflow per batch:
 
 1. **Exactly-once filter** — drop events whose ``(partition, offset)`` is at
    or below the table's committed ``applied_offsets`` (snapshot summary). A
-   replayed/duplicated batch reduces to a metadata-only no-op commit, so
-   foreachBatch retries and checkpoint restarts are idempotent.
+   replayed/duplicated batch commits nothing, so foreachBatch retries and
+   checkpoint restarts are idempotent.
 2. **Schema evolution** — merge the batch's data schema into the table schema
    (union-by-name, int→long/float→double widening) *before* apply
    (SURVEY.md §4.3 item 5).
@@ -251,7 +251,6 @@ def apply_batch(
     table: LakeTable,
     batch_df: DataFrame,
     batch_id: int,
-    commit_noop: bool = False,
     write_salt: int = 1,
     decode_payload: bool = False,
     normalize: bool = False,
@@ -262,9 +261,8 @@ def apply_batch(
     """Apply one micro-batch of change events to ``table``. Returns stats.
 
     A fully-stale batch (every event at or below the committed high-water
-    marks — duplicate delivery / replay after restart) applies nothing; with
-    ``commit_noop=True`` it still writes a metadata-only snapshot carrying the
-    batch id (epoch audit trail), otherwise the table is left untouched.
+    marks — duplicate delivery / replay after restart) applies nothing and
+    leaves the table untouched.
 
     ``decode_payload=True`` decodes the JSON ``payload`` column into
     role/text/tool **after** LWW dedup — the winner per key is chosen by
@@ -348,8 +346,6 @@ def apply_batch(
     applied = table.applied_offsets
 
     def _skipped_stats() -> dict:
-        if commit_noop:
-            table.commit_summary({"batch_id": batch_id, "operation": "noop_batch"})
         stats = {
             "batch_id": batch_id,
             "events_in": 0,

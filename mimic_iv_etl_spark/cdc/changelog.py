@@ -9,13 +9,13 @@ hot-key skew, timestamp ties, late (out-of-order) arrivals, payload JSON, and
 a mid-log schema-evolution tranche (added ``tool_version``/``latency_ms``
 columns, int→long widening).
 
-Pure numpy + pyarrow: generating 10^7 events takes seconds and never touches
+Pure numpy + pyarrow: generating 10^7 events takes seconds and never runs
 Spark, so benchmarks measure the engine, not the fixture.
 
 Layout: ``tranche-<id>/part-*.parquet`` plus ``manifest.json``, which is
-written (:func:`generate_change_log`), backfilled (:func:`upgrade_manifest`)
-and read (:func:`read_manifest`) only here, so replay and stream interpret
-it identically, fallbacks for an absent or older manifest included.
+written (:func:`generate_change_log`) and read (:func:`read_manifest`) only
+here, so replay and stream interpret it identically, the fallback for a
+tranche the manifest does not record included.
 """
 
 from __future__ import annotations
@@ -28,6 +28,21 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import types as T
+
+# The lake-table schema of the transcript the log's events build, keyed on
+# (conv_id, turn_idx); the evolved tranche's extra columns join it through
+# schema evolution. ts is NTZ: Spark 4 reads the log's naive parquet
+# timestamps as NTZ, and DuckDB's TIMESTAMP matches it, so engine and oracle
+# compare bit-exact.
+TRANSCRIPT_SCHEMA = T.StructType([
+    T.StructField("conv_id", T.StringType(), False),
+    T.StructField("turn_idx", T.IntegerType(), False),
+    T.StructField("role", T.StringType(), True),
+    T.StructField("text", T.StringType(), True),
+    T.StructField("tool", T.StringType(), True),
+    T.StructField("ts", T.TimestampNTZType(), False),
+])
 
 ROLES = np.array(["user", "assistant", "system", "tool"])
 TOOLS = np.array(["search", "bash", "browser", "editor", "none"])
@@ -71,16 +86,14 @@ def _conv_ids(idx: np.ndarray) -> np.ndarray:
 
 
 def _partition_ranges(off: np.ndarray, part: np.ndarray
-                      ) -> tuple[dict[str, list[int]], bool]:
+                      ) -> dict[str, list[int]]:
     """Per-source-partition ``[lo, hi]`` offset ranges as the manifest
-    stores them, and whether all are dense (``count == hi - lo + 1``)."""
-    ranges, dense = {}, True
+    stores them."""
+    ranges = {}
     for p in np.unique(part):
         o = off[part == p]
-        lo, hi = int(o.min()), int(o.max())
-        dense = dense and hi - lo + 1 == len(o)
-        ranges[str(int(p))] = [lo, hi]
-    return ranges, dense
+        ranges[str(int(p))] = [int(o.min()), int(o.max())]
+    return ranges
 
 
 def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict:
@@ -231,7 +244,7 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
             # replay (VERDICT r03 item 2).
             file_offsets[os.path.basename(path)] = _partition_ranges(
                 t_off[i * step:i * step + step],
-                t_part[i * step:i * step + step])[0]
+                t_part[i * step:i * step + step])
         # offset bounds + source-partition universe recorded at write time:
         # the replay driver reads them from this manifest instead of sweeping
         # every parquet footer per run — at 10^10 events the footer sweep is
@@ -240,7 +253,7 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
         # gapless per-partition sequence by construction — the WAL contract),
         # which lets the apply path do its exactly-once offset bookkeeping by
         # pure window arithmetic instead of any per-row runtime aggregation.
-        part_offsets = _partition_ranges(t_off, t_part)[0]
+        part_offsets = _partition_ranges(t_off, t_part)
         manifest["tranches"].append(
             {
                 "id": t_id,
@@ -257,59 +270,6 @@ def generate_change_log(out_dir: str, spec: ChangeLogSpec | None = None) -> dict
         )
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
-    return manifest
-
-
-def upgrade_manifest(log_dir: str) -> dict:
-    """Backfill offset-bounds / partition-universe / per-file-range fields on
-    a manifest written by an older generator version, by scanning only the
-    (offset, partition) columns of each tranche. Density (``count == hi - lo
-    + 1`` per partition) is VERIFIED from the data, not assumed — both at
-    tranche grain (``dense_offsets``, gates the arithmetic exactly-once
-    bookkeeping) and at file grain (``file_offsets``, gates the streaming
-    path's per-micro-batch locator ranges) — so neither fast path can be
-    enabled on a gappy log by accident. Idempotent."""
-    import pyarrow.dataset as ds
-
-    with open(os.path.join(log_dir, "manifest.json")) as f:
-        manifest = json.load(f)
-    changed = False
-    for t in manifest.get("tranches", []):
-        if "partition_offsets" in t and "file_offsets" in t:
-            continue
-        t_dir = os.path.join(log_dir, f"tranche-{t['id']}")
-        files = sorted(glob.glob(os.path.join(t_dir, "*.parquet")))
-        file_offsets: dict[str, dict[str, list[int]]] = {}
-        files_dense = True
-        offs, parts_arr = [], []
-        for fp in files:
-            tbl = ds.dataset([fp]).to_table(columns=["offset", "partition"])
-            f_off = tbl["offset"].to_numpy()
-            f_part = tbl["partition"].to_numpy()
-            offs.append(f_off)
-            parts_arr.append(f_part)
-            fo, f_dense = _partition_ranges(f_off, f_part)
-            files_dense = files_dense and f_dense
-            file_offsets[os.path.basename(fp)] = fo
-        off = np.concatenate(offs) if offs else np.array([], dtype=np.int64)
-        part = np.concatenate(parts_arr) if parts_arr else np.array([], dtype=np.int32)
-        part_offsets, dense = _partition_ranges(off, part)
-        t["offset_lo"] = int(off.min()) if len(off) else 0
-        t["offset_hi"] = int(off.max()) if len(off) else -1
-        t["partitions"] = [int(p) for p in part_offsets]
-        t["partition_offsets"] = part_offsets
-        t["dense_offsets"] = dense
-        # file_offsets are only usable when every file's per-partition offset
-        # set is itself dense (the streaming path derives micro-batch ranges
-        # from them) — verified, never assumed; null marks "checked, gappy"
-        # so idempotent re-runs don't rescan
-        t["file_offsets"] = file_offsets if files_dense else None
-        changed = True
-    if changed:
-        tmp = os.path.join(log_dir, ".manifest.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, os.path.join(log_dir, "manifest.json"))
     return manifest
 
 
@@ -383,7 +343,7 @@ def read_manifest(log_dir: str) -> LogManifest:
     """Every ``tranche-*`` dir of the log (FileNotFoundError when there is
     none) with its :class:`Tranche`, and the log tail — O(tranches) driver
     time, where a parquet-footer sweep is O(files) per run. A tranche the
-    manifest does not record (absent or older manifest) gets footer-swept
+    manifest does not record (or a log without a manifest) gets footer-swept
     bounds and no ranges; ranges are only returned under ``dense_offsets``."""
     path = os.path.join(log_dir, "manifest.json")
     recorded: dict[str, dict] = {}

@@ -104,7 +104,7 @@ def _arrow_schema(schema: T.StructType):
     ])
 
 
-def flush_sidecars(spark: SparkSession, table_path: str) -> None:
+def flush_sidecars(table_path: str) -> None:
     """Maintenance: fold the driver-local JSONL tails into parquet segments
     under ``<sidecar>/flushed/`` — the cluster-durable "table sink" for
     lineage/metrics (VERDICT r01 scale note: per-batch ``open(...,'a')`` is
@@ -116,8 +116,7 @@ def flush_sidecars(spark: SparkSession, table_path: str) -> None:
     flusher claims the tail with a unique rename, writes a uniquely-named
     segment atomically (tmp + rename — no shared ``_temporary`` dir to
     race on), and sweeps crash-leftover claims. Reads see the union of
-    flushed segments and the live tail; ``spark`` is unused (kept for API
-    stability)."""
+    flushed segments and the live tail."""
     import glob as _glob
     import time
     import uuid

@@ -9,9 +9,9 @@ here, fixed per-partition offset windows.
 Replay metadata (offset bounds, dense per-partition ranges, log tail) comes
 from one :func:`~mimic_iv_etl_spark.cdc.changelog.read_manifest` call per
 log, plus ONE pyarrow footer read per tranche for its schema; the
-O(files) parquet-footer sweep is the fallback for manifests written by
-older generators (``upgrade_manifest`` backfills those in place). At
-10^10-event scale this keeps the fixed pre-batch driver time O(tranches).
+O(files) parquet-footer sweep is the fallback for tranches the manifest
+does not record. At 10^10-event scale this keeps the fixed pre-batch
+driver time O(tranches).
 
 Delivery contract (the binlog/Kafka contract): events of one source
 partition arrive in non-decreasing offset order across batches. Under that
@@ -159,13 +159,13 @@ def replay_log(
             if auto_compact_deltas:
                 table.maybe_compact(auto_compact_deltas)
             if n_batches and n_batches % _FLUSH_SIDECARS_EVERY == 0:
-                flush_sidecars(spark, table.path)
+                flush_sidecars(table.path)
             start = end
 
     secs = time.monotonic() - t0
     # final durability flush AFTER the throughput clock stops: sidecars are
     # best-effort observability (metrics.py), not part of the apply loop
-    flush_sidecars(spark, table.path)
+    flush_sidecars(table.path)
     return {
         "events_applied": total_applied,
         "batches": n_batches,

@@ -90,6 +90,33 @@ def _batch_ranges(names: set[str] | None,
     return merged
 
 
+def _check_in_order(ranges: dict[int, tuple[int, int]],
+                    applied: dict[int, int],
+                    first: dict[int, tuple[int, int]] | None,
+                    where: str) -> None:
+    """Raise RuntimeError unless each partition's range in a micro-batch
+    starts at or below the next offset the table expects: the committed
+    mark + 1, or the tranche's first offset for a partition with no mark.
+    A batch that starts past it was delivered out of offset order (the file
+    source orders files by modification time), and applying it would move
+    the mark past offsets not yet applied — later batches holding them
+    would then be skipped as already applied. A redelivered batch starts
+    at or below its mark and passes."""
+    for p, (lo, _) in sorted(ranges.items()):
+        if p in applied:
+            want = applied[p] + 1
+        elif first and p in first:
+            want = first[p][0]
+        else:
+            continue  # no mark and no recorded start to check against
+        if lo > want:
+            raise RuntimeError(
+                f"{where} starts source partition {p} at offset {lo}, but "
+                f"the next offset to apply is {want}: its files arrived out "
+                "of offset order, and applying it would lose offsets "
+                f"{want}..{lo - 1}")
+
+
 def stream_tranche(
     spark: SparkSession,
     tranche_dir: str,
@@ -117,9 +144,13 @@ def stream_tranche(
     RuntimeError before anything is written. Its dense per-partition offset
     ranges come from the manifest's per-file ranges (``_batch_ranges``), so
     it runs replay's locator LWW kernel + arithmetic offset bookkeeping — no
-    SortAggregate, no extra job on the hot path. Batches whose files aren't
-    manifest-covered fall back to the ≤P-row ranges aggregate for their
-    bookkeeping and the ``agg`` kernel.
+    SortAggregate, no extra job on the hot path. The same ranges are
+    checked against the table's marks before anything is written
+    (``_check_in_order``): a batch whose files the source delivered out of
+    offset order raises RuntimeError instead of being applied. Batches whose
+    files aren't manifest-covered fall back to the ≤P-row ranges aggregate
+    for their bookkeeping and the ``agg`` kernel, and cannot be checked for
+    order: their ranges are only known once applied.
 
     ``on_batch(epoch_id, stats)`` is a test hook (e.g. to crash mid-stream).
     """
@@ -140,6 +171,10 @@ def stream_tranche(
         batch_df = spark.read.schema(schema).parquet(*files)
         ranges = _batch_ranges({os.path.basename(f) for f in files},
                                meta.file_offsets)
+        if ranges is not None:
+            _check_in_order(ranges, table.applied_offsets,
+                            meta.partition_offsets,
+                            f"micro-batch {epoch_id} of {tranche_dir}")
 
         def _apply_once():
             return apply_batch(table, batch_df, batch_id=epoch_id,
@@ -198,5 +233,5 @@ def stream_log(
         # per-batch hot path)
         from mimic_iv_etl_spark.cdc.metrics import flush_sidecars
 
-        flush_sidecars(spark, table.path)
+        flush_sidecars(table.path)
     return table

@@ -63,7 +63,13 @@ def normalize_text(s: pd.Series) -> pd.Series:
 def decode_payload_json(df: DataFrame, payload_col: str = "payload",
                         schema: T.StructType = PAYLOAD_SCHEMA) -> DataFrame:
     """Decode the JSON change-event payload into typed ``<field>_decoded``
-    columns, JVM-side: one server-parsed ``from_json`` projection."""
+    columns, JVM-side, parsing each payload once: the struct gets its own
+    projection (``_p``) and the fields are read from it. Read straight off
+    ``from_json(...)``, ``OptimizeCsvJsonExprs`` would split it into one
+    single-field ``from_json`` per field; ``CollapseProject`` does not inline
+    a non-cheap producer that is read more than once."""
     decoded = f"from_json(`{payload_col}`, '{schema.simpleString()}')"
-    return df.selectExpr("*", *(f"{decoded}.`{f.name}` AS `{f.name}_decoded`"
-                                for f in schema.fields))
+    return (df.selectExpr("*", f"{decoded} AS `_p`")
+            .selectExpr("*", *(f"`_p`.`{f.name}` AS `{f.name}_decoded`"
+                               for f in schema.fields))
+            .drop("_p"))

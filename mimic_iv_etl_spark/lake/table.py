@@ -107,8 +107,7 @@ def _commit_backoff(attempt: int) -> None:
 # tens of MB of driver JSON per batch; segments make commit metadata cost
 # independent of table size). Copy-on-write commits rewrite only the
 # segments that reference replaced files. Segments are immutable, so they
-# are process-cached; snapshots written by older versions (inline "files")
-# remain readable forever.
+# are process-cached.
 # --------------------------------------------------------------------------
 
 _MANIFEST_CACHE: dict[str, list[dict]] = {}
@@ -152,15 +151,25 @@ def _load_manifest(meta_dir: str, name: str) -> list[dict]:
     return _MANIFEST_CACHE[path]
 
 
+def _read_snapshot(meta_dir: str, version: int) -> dict:
+    """Load snapshot ``v{version}.json`` — the one reader of that file.
+    A snapshot without a ``manifests`` list is not a layout this table
+    writes, so it raises ValueError naming the file."""
+    path = os.path.join(meta_dir, f"v{version}.json")
+    with open(path) as f:
+        snap = json.load(f)
+    if not isinstance(snap, dict) or "manifests" not in snap:
+        raise ValueError(f"{path} is not a snapshot of this table format: "
+                         "it has no 'manifests' list")
+    return snap
+
+
 def _files_of(meta_dir: str, snap: dict) -> list[dict]:
-    """Full file list of a snapshot dict — concatenated manifest segments,
-    or the inline ``files`` list for snapshots written by older versions."""
-    if "manifests" in snap:
-        out: list[dict] = []
-        for m in snap["manifests"]:
-            out.extend(_load_manifest(meta_dir, m))
-        return out
-    return snap["files"]
+    """Full file list of a snapshot dict: its manifest segments, concatenated."""
+    out: list[dict] = []
+    for m in snap["manifests"]:
+        out.extend(_load_manifest(meta_dir, m))
+    return out
 
 
 def _internal_schema(public: T.StructType) -> T.StructType:
@@ -242,8 +251,7 @@ class LakeTable:
         while os.path.exists(os.path.join(self._meta_dir,
                                           f"v{version + 1}.json")):
             version += 1
-        with open(os.path.join(self._meta_dir, f"v{version}.json")) as f:
-            self.snapshot = json.load(f)
+        self.snapshot = _read_snapshot(self._meta_dir, version)
         return self
 
     def at_version(self, version: int) -> "LakeTable":
@@ -256,8 +264,7 @@ class LakeTable:
         other._meta_dir = self._meta_dir
         other._data_dir = self._data_dir
         other._pinned = True
-        with open(os.path.join(self._meta_dir, f"v{version}.json")) as f:
-            other.snapshot = json.load(f)
+        other.snapshot = _read_snapshot(self._meta_dir, version)
         return other
 
     @property
@@ -267,15 +274,14 @@ class LakeTable:
 
     @property
     def manifests(self) -> list[str]:
-        """The snapshot's manifest segment names (empty for legacy inline
-        snapshots — their entries migrate into a segment at the next commit)."""
-        return list(self.snapshot.get("manifests", []))
+        """The snapshot's manifest segment names."""
+        return list(self.snapshot["manifests"])
 
     def delta_file_counts(self) -> dict[int, int]:
         """Delta files per bucket (compaction-policy input)."""
         out: dict[int, int] = {}
         for e in self.files:
-            if e.get("kind", "base") == "delta":
+            if e["kind"] == "delta":
                 out[e["bucket"]] = out.get(e["bucket"], 0) + 1
         return out
 
@@ -329,19 +335,22 @@ class LakeTable:
             v = snap["parent"]
             if v is None:
                 break
-            parent_path = os.path.join(self._meta_dir, f"v{v}.json")
-            if not os.path.exists(parent_path):  # expired via expire_snapshots
+            try:
+                snap = _read_snapshot(self._meta_dir, v)
+            except FileNotFoundError:  # expired via expire_snapshots
                 break
-            with open(parent_path) as f:
-                snap = json.load(f)
         return out
 
     # ------------------------------------------------------------------ read
 
-    def bucket_expr(self, col: str | None = None) -> F.Column:
-        """The bucket routing expression — MUST be identical on write and read."""
+    def bucket_expr(self, col: str | None = None,
+                    n_buckets: int | None = None) -> F.Column:
+        """The bucket routing expression — MUST be identical on write and
+        read. ``n_buckets`` defaults to the table's; :meth:`rebucket` passes
+        the new count."""
         c = col or self.snapshot["bucket_by"]
-        return F.expr(f"CAST(pmod(xxhash64(`{c}`), {self.n_buckets}) AS int)")
+        n = self.n_buckets if n_buckets is None else n_buckets
+        return F.expr(f"CAST(pmod(xxhash64(`{c}`), {n}) AS int)")
 
     def read(self, buckets: set[int] | None = None, internal: bool = False,
              pre_filter: F.Column | None = None) -> DataFrame:
@@ -361,7 +370,7 @@ class LakeTable:
         files = self.files
         if buckets is not None:
             files = [e for e in files if e["bucket"] in buckets]
-        has_delta = any(e.get("kind", "base") == "delta" for e in files)
+        has_delta = any(e["kind"] == "delta" for e in files)
         out = self._assemble(files)
         if pre_filter is not None:
             out = out.filter(pre_filter)
@@ -412,7 +421,7 @@ class LakeTable:
         to ``read().filter(...)``: LWW first, range predicate second."""
         pred = F.col(col).between(F.lit(lo), F.lit(hi))
         files = self.files
-        if any(e.get("kind", "base") == "delta" for e in files):
+        if any(e["kind"] == "delta" for e in files):
             return self.read(internal=internal).filter(pred)
         kept = self._prune_by_stats(files, col, lo, hi)
         out = self._assemble(kept).filter(pred)
@@ -423,7 +432,7 @@ class LakeTable:
     @staticmethod
     def _prune_by_stats(files: list[dict], col: str, lo, hi) -> list[dict]:
         """Entries whose ``col`` stats overlap [lo, hi]; entries without
-        stats for ``col`` (old manifests, stats-less types) are kept —
+        stats for ``col`` (types parquet keeps no min/max for) are kept —
         absence of evidence never skips data."""
         def _canon(b):
             # manifest stats are naive-UTC isoformat strings; a tz-AWARE
@@ -515,17 +524,17 @@ class LakeTable:
         snap = self.at_version(to_version).snapshot
         while snap["version"] > from_version:
             parent = snap["parent"]
-            parent_path = os.path.join(self._meta_dir, f"v{parent}.json")
-            if not os.path.exists(parent_path):
+            try:
+                parent_snap = _read_snapshot(self._meta_dir, parent)
+            except FileNotFoundError:
                 raise ValueError(
-                    f"snapshot v{parent} expired — cannot diff below it")
-            with open(parent_path) as f:
-                parent_snap = json.load(f)
+                    f"snapshot v{parent} expired — cannot diff below it"
+                ) from None
             parent_files = {e["path"]
                             for e in _files_of(self._meta_dir, parent_snap)}
             added += [e for e in _files_of(self._meta_dir, snap)
                       if e["path"] not in parent_files
-                      and e.get("kind", "base") == "delta"]
+                      and e["kind"] == "delta"]
             snap = parent_snap
         out = self._assemble(added)
         if added:
@@ -639,14 +648,6 @@ class LakeTable:
             schemas[str(schema_id)] = json.loads(new_schema.json())
         return public, schema_id, schemas
 
-    def _base_manifests(self) -> list[str]:
-        """Current segment list; a legacy inline-``files`` snapshot migrates
-        its entries into one fresh segment here (next commit references it)."""
-        if "manifests" in self.snapshot:
-            return list(self.snapshot["manifests"])
-        inline = self.snapshot.get("files", [])
-        return [_write_manifest(self._meta_dir, inline)] if inline else []
-
     def _kept_manifests(self, replaced: set[str]) -> list[str]:
         """Segments with every entry whose path is in ``replaced`` removed:
         untouched segments are kept by NAME (no rewrite); touched ones are
@@ -659,7 +660,7 @@ class LakeTable:
         us to it — our staged replacement is stale); the check runs before
         any segment is rewritten, so an abort leaves no new segment behind."""
         segs = [(m, _load_manifest(self._meta_dir, m))
-                for m in self._base_manifests()]
+                for m in self.manifests]
         found = {e["path"] for _, entries in segs for e in entries
                  if e["path"] in replaced}
         if found != replaced:
@@ -704,8 +705,7 @@ class LakeTable:
         segment holding ``staged``, merges ``summary`` (:func:`_merge_summary`)
         and sets ``props`` (snapshot keys such as ``schema_id`` or
         ``n_buckets``; ``None`` removes the key), then links it
-        (:func:`_write_snapshot`). A legacy inline ``files`` list is never
-        copied: its entries migrate into a segment (:meth:`_base_manifests`).
+        (:func:`_write_snapshot`).
 
         A lost link race refreshes to the winner and retries with jittered
         backoff, up to ``_MAX_COMMIT_RETRIES``. A metadata-only commit
@@ -732,10 +732,10 @@ class LakeTable:
                     "time-travel handle is read-only (pinned snapshot)")
             new = [_write_manifest(self._meta_dir, staged)] if staged else []
             ours.update(new)
-            base = (self._base_manifests() if staged is None
+            base = (self.manifests if staged is None
                     else rebase() if rebase else [])
             for attempt in range(_MAX_COMMIT_RETRIES + 1):
-                snap = {k: v for k, v in self.snapshot.items() if k != "files"}
+                snap = dict(self.snapshot)
                 snap.update(version=self.version + 1, parent=self.version,
                             created_ms=int(time.time() * 1000),
                             manifests=base + new,
@@ -759,7 +759,7 @@ class LakeTable:
                 _commit_backoff(attempt)
                 self.refresh()  # load the winner, then replay onto it
                 if staged is None:
-                    base = self._base_manifests()
+                    base = self.manifests
                 else:
                     self._rebase_guard(base_snap)
                     base = rebase()
@@ -812,7 +812,7 @@ class LakeTable:
         stream's high-water marks. Two streams sharing a partition id remain
         unsupported — they would interleave one offset sequence."""
         self._commit(dict(summary or {}, operation="append_delta"),
-                     staged=entries, rebase=self._base_manifests,
+                     staged=entries, rebase=lambda: self.manifests,
                      schema_id=schema_id, schemas=schemas)
         self.last_new_entries = entries
         return self
@@ -897,7 +897,7 @@ class LakeTable:
         if not explicit and self.clustering is not None:
             cluster_by, split = self.clustering
         delta_buckets = {
-            e["bucket"] for e in self.files if e.get("kind", "base") == "delta"
+            e["bucket"] for e in self.files if e["kind"] == "delta"
         }
         pool = ({e["bucket"] for e in self.files} if explicit
                 else delta_buckets)
@@ -927,10 +927,8 @@ class LakeTable:
             raise ValueError("n_buckets must be >= 1")
         if n_buckets == self.n_buckets:
             return self
-        new_expr = F.pmod(
-            F.xxhash64(F.col(self.snapshot["bucket_by"])), F.lit(n_buckets)
-        ).cast("int")
-        state = self.read(internal=True).withColumn(BUCKET_COL, new_expr)
+        state = self.read(internal=True).withColumn(
+            BUCKET_COL, self.bucket_expr(n_buckets=n_buckets))
         entries = self._stage_write(state, self.schema,
                                     self.snapshot["schema_id"], "base",
                                     n_buckets=n_buckets)
@@ -946,12 +944,8 @@ class LakeTable:
         per file at write time from the parquet ``_deleted`` column statistics
         (footer metadata, no data IO). At table scale this is the difference
         between a maintenance pass costing O(deleted keys' buckets) and a full
-        table rewrite (VERDICT r01 scale note). Entries from snapshots
-        predating the tracking default to conservative rewrite."""
-        tomb_buckets = {
-            e["bucket"] for e in self.files
-            if e.get("has_tombstones", True)
-        }
+        table rewrite (VERDICT r01 scale note)."""
+        tomb_buckets = {e["bucket"] for e in self.files if e["has_tombstones"]}
         if not tomb_buckets:
             return self
         state = self.read(buckets=tomb_buckets, internal=True).filter(
@@ -995,9 +989,8 @@ class LakeTable:
         live_manifests: set[str] = set()
         for fn in os.listdir(self._meta_dir):
             if fn.startswith("v") and fn.endswith(".json"):
-                with open(os.path.join(self._meta_dir, fn)) as f:
-                    snap = json.load(f)
-                live_manifests |= set(snap.get("manifests", []))
+                snap = _read_snapshot(self._meta_dir, int(fn[1:-5]))
+                live_manifests |= set(snap["manifests"])
                 referenced |= {e["path"]
                                for e in _files_of(self._meta_dir, snap)}
             elif fn.startswith(".v") and fn.endswith(".tmp"):

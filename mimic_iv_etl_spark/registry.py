@@ -602,21 +602,13 @@ def q_cdc_replay(spark, sf):
     idempotently from the table's committed ``applied_offsets`` (no-op when
     complete), so a crashed prior run self-heals instead of serving a partial
     table."""
+    from mimic_iv_etl_spark.cdc.changelog import TRANSCRIPT_SCHEMA
     from mimic_iv_etl_spark.cdc.replay import replay_log
     from mimic_iv_etl_spark.lake.table import LakeTable
-    from pyspark.sql import types as T
 
     log_dir, table_dir, n = _cdc_fixture()
     _ensure_cdc_log(log_dir, n)
-    schema = T.StructType([
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampNTZType(), False),
-    ])
-    replay_log(spark, log_dir, table_dir, schema=schema,
+    replay_log(spark, log_dir, table_dir, schema=TRANSCRIPT_SCHEMA,
                batch_offsets=max(2_000, n // 4), n_buckets=16)
     return LakeTable(spark, table_dir).read()
 

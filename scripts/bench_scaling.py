@@ -3,7 +3,8 @@ N to 4N executors; sandbox stand-in: local[8] vs local[32] on identical input).
 
 Each measurement runs in its OWN subprocess (one JVM per parallelism level —
 Spark can't resize local[N] in-process), replaying the same pre-generated
-change log. Results land in BENCH/BASELINE.md.
+change log. The report is written to BENCH/SCALING.md (replaced on each run)
+and printed as one JSON line.
 
 Measurement-model note: each level is ``taskset``-pinned to exactly its core
 count. In local[N], pandas-UDF Python workers run OUTSIDE the N task threads,
@@ -13,11 +14,12 @@ measured an impossible local[8] > local[32]).
 
 Noise protocol: the sandbox VM shares a host whose deliverable CPU swings by
 up to ~10× for minutes at a time (measured: the same leg ranged 32k→620k
-events/sec across runs). Defenses: a 32-way spin probe calibrates host
-quietness; a rep is ACCEPTED only when pre- AND post-rep calibration are
-≥85% of observed peak capacity; levels alternate between attempts; the best
-accepted rep per level is reported (external contention is strictly
-one-sided noise — it only ever slows).
+events/sec across runs). Defenses: a spin probe with one worker per core of
+the level, pinned to that level's cores, calibrates host quietness; a rep is
+ACCEPTED only when pre- AND post-rep calibration are ≥85% of that level's
+observed peak; levels alternate between attempts; the best rep per level is
+reported (external contention is strictly one-sided noise — it only ever
+slows), next to the median of the accepted reps.
 
 Usage:
     python scripts/bench_scaling.py                 # orchestrate both levels
@@ -76,9 +78,9 @@ def ensure_log() -> None:
 def measure(cpus: int) -> dict:
     import shutil
 
+    from mimic_iv_etl_spark.cdc.changelog import TRANSCRIPT_SCHEMA
     from mimic_iv_etl_spark.cdc.replay import replay_log
     from mimic_iv_etl_spark.session import get_spark_session
-    from pyspark.sql import types as T
 
     # 2× cores: reduce-stage task skew (hash variance over few fat tasks)
     # costs a built-in straggler tax when partitions == cores; two waves of
@@ -86,16 +88,6 @@ def measure(cpus: int) -> dict:
     spark = get_spark_session(
         app_name=f"scaling-{cpus}", master=f"local[{cpus}]",
         shuffle_partitions=2 * cpus,
-    )
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("role", T.StringType(), True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("tool", T.StringType(), True),
-            T.StructField("ts", T.TimestampNTZType(), False),
-        ]
     )
     runs = []
     n_timed = int(sys.argv[3]) if len(sys.argv) > 3 else REPS
@@ -111,7 +103,7 @@ def measure(cpus: int) -> dict:
             spark,
             log_dir(),
             table_dir,
-            schema=schema,
+            schema=TRANSCRIPT_SCHEMA,
             batch_offsets=BATCH_OFFSETS,
             n_buckets=cpus,
             decode_payload=True,
@@ -132,14 +124,16 @@ def _burn(secs: float) -> int:
     return x
 
 
-def spin_calibration(workers: int = 32, secs: float = 1.0) -> float:
-    """Aggregate spin iterations/sec across ``workers`` processes — a pure-CPU
-    probe of how much of the advertised core count the host is actually
-    giving this VM right now."""
+def spin_calibration(cpus: int, secs: float = 1.0) -> float:
+    """Aggregate spin iterations/sec of ``cpus`` processes pinned to the
+    first ``cpus`` cores — the cores a ``cpus``-level rep runs on — a
+    pure-CPU probe of how much of them the host is actually giving this VM
+    right now."""
     import multiprocessing as mp
 
-    with mp.Pool(workers) as p:
-        return sum(p.map(_burn, [secs] * workers)) / secs
+    with mp.Pool(cpus, initializer=os.sched_setaffinity,
+                 initargs=(0, range(cpus))) as p:
+        return sum(p.map(_burn, [secs] * cpus)) / secs
 
 
 def pinned_cpu_ratio(lo: int, hi: int, secs: float = 1.5, reps: int = 3) -> float:
@@ -295,34 +289,50 @@ def _run_level(cpus: int) -> dict:
     return json.loads(line[-1])
 
 
+def level_stats(accepted: list[dict], rejected: list[dict]) -> dict:
+    """One level's rep counts and median events/sec, over its accepted reps
+    and over all of them (None when there are none)."""
+    import statistics
+
+    def _median(reps: list[dict]) -> float | None:
+        return (statistics.median(r["events_per_sec"] for r in reps)
+                if reps else None)
+
+    return {"n_accepted": len(accepted), "n_rejected": len(rejected),
+            "median_accepted": _median(accepted),
+            "median_all": _median(accepted + rejected)}
+
+
 def orchestrate() -> None:
     ensure_log()
     accepted: dict[int, list[dict]] = {c: [] for c in LEVELS}
     rejected: dict[int, list[dict]] = {c: [] for c in LEVELS}
-    capacity = max(spin_calibration() for _ in range(3))
-    calib: list[float] = []
+    # the spin gate runs at each level's own pinned core count, so each
+    # level is judged against its own peak
+    capacity = {c: max(spin_calibration(c) for _ in range(3)) for c in LEVELS}
+    calib: list[tuple[int, float]] = []  # (level, pre-rep Miter/s)
     t_start = time.monotonic()
     turn = 0
     while (time.monotonic() - t_start) < MAX_WALL_MIN * 60 and any(
         len(accepted[c]) < TARGET_ACCEPTED for c in LEVELS
     ):
-        pre = spin_calibration()
-        capacity = max(capacity, pre)
-        if pre < QUIET_FRACTION * capacity:
-            time.sleep(20)  # noisy host epoch — wait, don't waste the window
-            continue
         # next level still needing accepted reps (alternate when both do)
         pending = [c for c in LEVELS if len(accepted[c]) < TARGET_ACCEPTED]
         cpus = pending[turn % len(pending)]
+        pre = spin_calibration(cpus)
+        capacity[cpus] = max(capacity[cpus], pre)
+        if pre < QUIET_FRACTION * capacity[cpus]:
+            time.sleep(20)  # noisy host epoch — wait, don't waste the window
+            continue
         turn += 1
         r = _run_level(cpus)
-        post = spin_calibration()
-        capacity = max(capacity, post)
+        post = spin_calibration(cpus)
+        capacity[cpus] = max(capacity[cpus], post)
         r["calib_pre_miters"] = round(pre / 1e6, 1)
         r["calib_post_miters"] = round(post / 1e6, 1)
-        ok = post >= QUIET_FRACTION * capacity
+        ok = post >= QUIET_FRACTION * capacity[cpus]
         (accepted if ok else rejected)[cpus].append(r)
-        calib.append(round(pre / 1e6, 1))
+        calib.append((cpus, round(pre / 1e6, 1)))
     results = {}
     degraded = []
     stats = {}
@@ -341,15 +351,8 @@ def orchestrate() -> None:
         # the best-of headline, and it is called out explicitly whenever a
         # leg's winner came from a calibration-REJECTED rep — the criterion
         # number must never silently rest on gate-failing runs.
-        eps_all = sorted(r["events_per_sec"] for r in pool)
-        eps_acc = sorted(r["events_per_sec"] for r in accepted[c])
-        stats[c] = {
-            "n_accepted": len(accepted[c]),
-            "n_rejected": len(rejected[c]),
-            "median_accepted": eps_acc[len(eps_acc) // 2] if eps_acc else None,
-            "median_all": eps_all[len(eps_all) // 2] if eps_all else None,
-            "winner_was_rejected": results[c] not in accepted[c],
-        }
+        stats[c] = {**level_stats(accepted[c], rejected[c]),
+                    "winner_was_rejected": results[c] not in accepted[c]}
 
     lo, hi = LEVELS
     eff = (results[hi]["events_per_sec"] / results[lo]["events_per_sec"]) / (hi / lo)
@@ -362,14 +365,9 @@ def orchestrate() -> None:
     scan = scan_count_probe(lo, hi)
     eff_norm = (results[hi]["events_per_sec"] / results[lo]["events_per_sec"]) / cpu_ratio
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # SCALING_OUT_MD redirects the report — used by one-off disclosure runs
-    # at non-published pairs (e.g. 8→32) so they don't clobber the published
-    # table; their numbers get folded into BENCH/BASELINE.md by hand
-    md = os.environ.get("SCALING_OUT_MD",
-                        os.path.join(REPO, "BENCH", "BASELINE.md"))
-    with open(md, "w") as f:
+    with open(os.path.join(REPO, "BENCH", "SCALING.md"), "w") as f:
         f.write(
-            "# BENCH/BASELINE — CDC replay throughput & scaling efficiency\n\n"
+            "# BENCH/SCALING — CDC replay throughput & scaling efficiency\n\n"
             f"Input: deterministic seeded change log, {N_EVENTS:,} events, 8 source\n"
             "partitions, seed 42 (identical files at both levels). Workload: the\n"
             "full mandated pipeline — JSON payload decode (from_json), vectorized\n"
@@ -381,9 +379,10 @@ def orchestrate() -> None:
             "N task threads, so an unpinned small leg silently uses ~2N vCPUs\n"
             "and breaks the N-core-machine emulation. The sandbox shares a\n"
             "host whose deliverable CPU swings up to ~10× for minutes at a\n"
-            "time (measured via a 32-way spin probe), so reps are only\n"
-            f"ACCEPTED when pre- and post-rep calibration show ≥{QUIET_FRACTION:.0%} of peak\n"
-            "capacity; levels alternate, one discarded warmup precedes each\n"
+            "time (measured via a spin probe pinned to the level's cores),\n"
+            "so reps are only ACCEPTED when pre- and post-rep calibration\n"
+            f"show ≥{QUIET_FRACTION:.0%} of the level's peak capacity; levels\n"
+            "alternate, one discarded warmup precedes each\n"
             "timed rep, and the best accepted rep per level is reported\n"
             "(external contention is one-sided noise). Shuffle partitions =\n"
             "core count, shuffle dirs on tmpfs (a shared single disk\n"
@@ -392,7 +391,7 @@ def orchestrate() -> None:
             "per BASELINE.md protocol.\n"
             f"Accepted reps per level: { {c: len(accepted[c]) for c in LEVELS} };\n"
             f"degraded (no accepted rep, best attempt shown): {degraded or 'none'};\n"
-            f"pre-rep calibrations seen (Miter/s): {calib}.\n\n"
+            f"pre-rep calibrations seen (level, Miter/s): {calib}.\n\n"
             "| config | events | seconds | events/sec (best) | median ev/s "
             "(accepted) | reps acc/rej | winner from rejected rep? |\n"
             "|---|---|---|---|---|---|\n"
@@ -453,7 +452,8 @@ def orchestrate() -> None:
                       "efficiency_cpu_normalized": round(eff_norm, 4),
                       "accepted": accepted, "rejected": rejected,
                       "degraded_levels": degraded,
-                      "capacity_miters": round(capacity / 1e6, 1)}))
+                      "capacity_miters": {c: round(v / 1e6, 1)
+                                          for c, v in capacity.items()}}))
 
 
 if __name__ == "__main__":

@@ -25,8 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     from pyspark.sql import SparkSession
-    from pyspark.sql import types as T
 
+    from mimic_iv_etl_spark.cdc.changelog import TRANSCRIPT_SCHEMA
     from mimic_iv_etl_spark.cdc.replay import replay_log
     from mimic_iv_etl_spark.session import get_spark_session
 
@@ -53,21 +53,11 @@ def main() -> None:
     elif spark is None:
         spark = get_spark_session("cdc-replay")
 
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("role", T.StringType(), True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("tool", T.StringType(), True),
-            T.StructField("ts", T.TimestampNTZType(), False),
-        ]
-    )
     out = replay_log(
         spark,
         args.log_dir,
         args.table,
-        schema=schema,
+        schema=TRANSCRIPT_SCHEMA,
         batch_offsets=args.batch_offsets,
         n_buckets=args.buckets,
         auto_compact_deltas=args.auto_compact_deltas,

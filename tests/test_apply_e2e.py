@@ -79,14 +79,14 @@ def test_multi_batch_replay_matches_oracle(spark, small_log, tmp_path):
     # not change what reads return, and the JSONL tail restarts fresh
     from mimic_iv_etl_spark.cdc.metrics import append_metrics, flush_sidecars
 
-    flush_sidecars(spark, tbl.path)
+    flush_sidecars(tbl.path)
     assert read_lineage(spark, tbl.path).count() == len(lin)
     assert read_metrics(spark, tbl.path).count() == len(met)
     append_metrics(tbl.path, {"batch_id": 99, "events_in": 0, "events_applied": 0,
                               "winners": 0, "seconds": 0.1, "events_per_sec": 0.0,
                               "touched_buckets": 0, "skipped": True})
     assert read_metrics(spark, tbl.path).count() == len(met) + 1  # union of both
-    flush_sidecars(spark, tbl.path)
+    flush_sidecars(tbl.path)
     assert read_metrics(spark, tbl.path).count() == len(met) + 1
 
 
@@ -104,11 +104,6 @@ def test_reapply_is_idempotent_noop(spark, small_log, tmp_path):
     stats = apply_batch(tbl, batches[1], batch_id=99)
     assert stats["skipped"] and stats["events_applied"] == 0
     assert tbl.version == v  # table untouched
-    assert [e["path"] for e in tbl.files] == files_before
-
-    # with commit_noop=True the epoch is recorded as a metadata-only commit
-    stats = apply_batch(tbl, batches[1], batch_id=100, commit_noop=True)
-    assert stats["skipped"] and tbl.version == v + 1
     assert [e["path"] for e in tbl.files] == files_before
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
 
@@ -236,12 +231,12 @@ def test_flush_sidecars_leaves_live_claims_alone(spark, tmp_path):
     # simulate a concurrent flusher mid-flush: a freshly-claimed tail
     live_claim = jsonl + ".flushing-livelive"
     os.replace(jsonl, live_claim)
-    flush_sidecars(spark, tdir)
+    flush_sidecars(tdir)
     assert os.path.exists(live_claim), "live claim must not be stolen"
     # age it past the grace window → a later sweep reclaims it
     old = time.time() - 120
     os.utime(live_claim, (old, old))
-    flush_sidecars(spark, tdir)
+    flush_sidecars(tdir)
     assert not os.path.exists(live_claim)
     got = read_metrics(spark, tdir).toPandas()
     assert len(got) == 1 and int(got["batch_id"][0]) == 1

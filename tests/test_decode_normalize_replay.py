@@ -47,3 +47,23 @@ def test_decode_normalize_replay_matches_normalizing_oracle(spark, small_log, tm
                      n_buckets=8, decode_payload=decode_payload, normalize=True)
     assert out["events_applied"] == spec.n_events
     assert_final_state_equal(LakeTable(spark, tp).read(), _oracle_normalized(d))
+
+
+def test_payload_is_parsed_once_per_row(spark, small_log):
+    """decode_payload_json parses each payload once: its optimized plan
+    holds a single ``from_json``. Selecting the three fields straight off
+    ``from_json(...)`` let the optimizer split it into one single-field
+    ``from_json`` per field, three parses per row. Rows are unchanged."""
+    from pyspark.sql import functions as F
+
+    from mimic_iv_etl_spark.functions import decode_payload_json
+
+    d, _, _ = small_log
+    out = decode_payload_json(spark.read.parquet(f"{d}/tranche-0"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    assert out.columns[-3:] == ["role_decoded", "text_decoded", "tool_decoded"]
+    assert out.filter(
+        ~F.col("text_decoded").eqNullSafe(F.col("text"))
+        | ~F.col("role_decoded").eqNullSafe(F.col("role"))
+        | ~F.col("tool_decoded").eqNullSafe(F.col("tool"))).count() == 0

@@ -261,10 +261,12 @@ def test_manifest_segments_make_commits_o_batch(spark, tmp_path):
     """Iceberg-style manifest segments: an append commit writes ONE new
     segment holding exactly its staged entries and references prior segments
     by name — snapshot JSON size is O(segments), not O(total files). A
-    legacy snapshot with an inline `files` list stays readable and migrates
-    at its next commit; vacuum GCs segments no retained snapshot references."""
+    snapshot without a `manifests` list (an inline `files` list instead) is
+    refused with a ValueError naming the file; vacuum GCs segments no
+    retained snapshot references."""
     import json
     import os
+    import re
 
     from mimic_iv_etl_spark.lake.table import _files_of
 
@@ -296,29 +298,36 @@ def test_manifest_segments_make_commits_o_batch(spark, tmp_path):
     assert len(tbl.manifests) == 1
     assert all(e["kind"] == "base" for e in tbl.files)
 
-    # legacy inline-format snapshot: rewrite current snapshot to inline form
+    # an inline-format snapshot is not a layout this table writes: every
+    # reader of v{N}.json refuses it, naming the file
     vpath = os.path.join(meta, f"v{tbl.version}.json")
     with open(vpath) as f:
-        snap = json.load(f)
+        written = f.read()
+    snap = json.loads(written)
     snap["files"] = _files_of(meta, snap)
     del snap["manifests"]
     with open(vpath, "w") as f:
         json.dump(snap, f)
+    for read in (tbl.refresh, lambda: LakeTable(spark, path),
+                 lambda: tbl.at_version(tbl.version)):
+        with pytest.raises(ValueError, match=re.escape(vpath)):
+            read()
+    with open(vpath, "w") as f:
+        f.write(written)
     tbl.refresh()
-    legacy_files = {e["path"] for e in tbl.files}
-    assert len(legacy_files) > 0  # legacy read works
-    # next commit migrates the inline list into a segment
+    compacted_files = {e["path"] for e in tbl.files}
+    assert len(compacted_files) > 0
     rows = [("cX", 9, "user", "new", None, TS, False, 999, 0)]
     tbl.append_delta(_internal(spark.createDataFrame(rows, schema), tbl),
                      summary={"applied_offsets": {"0": 999}})
     assert len(tbl.manifests) == 2
-    assert {e["path"] for e in tbl.files} > legacy_files
+    assert {e["path"] for e in tbl.files} > compacted_files
 
     # vacuum GCs segments orphaned by snapshot expiry (grace 0)
     tbl.expire_snapshots(keep_last=1)
     removed = tbl.vacuum(grace_seconds=0.0)
     assert removed["manifests"] >= 1
-    assert {e["path"] for e in tbl.files} > legacy_files  # table intact
+    assert {e["path"] for e in tbl.files} > compacted_files  # table intact
     assert tbl.read().count() > 0
 
 

@@ -1,6 +1,6 @@
 """Round-3 apply-path mechanics: manifest-driven arithmetic offset
 bookkeeping, the locator LWW kernel and its fallback to agg, the
-literal-predicate exactly-once filter, manifest backfill, and sidecar
+literal-predicate exactly-once filter, the manifest reader, and sidecar
 auto-flush.
 
 All end-state assertions go through the independent DuckDB oracle
@@ -14,15 +14,11 @@ import glob
 import json
 import os
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from mimic_iv_etl_spark.cdc.apply import apply_batch
-from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
-                                              generate_change_log,
-                                              upgrade_manifest)
+from mimic_iv_etl_spark.cdc.changelog import ChangeLogSpec, generate_change_log
 from mimic_iv_etl_spark.cdc.metrics import read_lineage, read_metrics
 from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.cdc.replay import replay_log
@@ -178,55 +174,6 @@ def test_hwm_filter_builds_in_constant_py4j_calls(spark):
     assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
     assert {tuple(r) for r in out.collect()} == {
         (p, o) for p, o in rows if p not in marks[512] or o is None or o > 10}
-
-
-def test_upgrade_manifest_backfills_and_verifies_density(tmp_path):
-    d = str(tmp_path / "log_up")
-    spec = ChangeLogSpec(n_events=3_000, n_convs=100, n_partitions=3, seed=5)
-    original = generate_change_log(d, spec)
-    # strip the new fields, as an older generator would have written it
-    mpath = os.path.join(d, "manifest.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    for t in m["tranches"]:
-        for k in ("offset_lo", "offset_hi", "partitions", "partition_offsets",
-                  "dense_offsets"):
-            t.pop(k)
-    with open(mpath, "w") as f:
-        json.dump(m, f)
-
-    upgraded = upgrade_manifest(d)
-    for t_new, t_orig in zip(upgraded["tranches"], original["tranches"]):
-        for k in ("offset_lo", "offset_hi", "partitions", "partition_offsets",
-                  "dense_offsets"):
-            assert t_new[k] == t_orig[k]
-    assert all(t["dense_offsets"] for t in upgraded["tranches"])
-
-
-def test_upgrade_manifest_detects_gappy_offsets(tmp_path):
-    """A log whose offsets have gaps must NOT be stamped dense — the
-    arithmetic bookkeeping path would otherwise record never-delivered
-    offsets as applied."""
-    d = str(tmp_path / "log_gap")
-    t_dir = os.path.join(d, "tranche-0")
-    os.makedirs(t_dir)
-    tbl = pa.table({
-        "op": ["I", "I", "I"],
-        "conv_id": ["c1", "c2", "c3"],
-        "turn_idx": pa.array([0, 1, 2], pa.int32()),
-        "text": ["a", "b", "c"],
-        "ts": pa.array([1, 2, 3], pa.timestamp("us")),
-        "offset": pa.array([0, 1, 5], pa.int64()),  # gap: 2..4 missing
-        "partition": pa.array([0, 0, 0], pa.int32()),
-    })
-    pq.write_table(tbl, os.path.join(t_dir, "part-00000.parquet"))
-    with open(os.path.join(d, "manifest.json"), "w") as f:
-        json.dump({"tranches": [{"id": 0, "evolved": False, "rows": 3,
-                                 "files": []}], "n_events": 3,
-                   "n_partitions": 1}, f)
-    up = upgrade_manifest(d)
-    assert up["tranches"][0]["dense_offsets"] is False
-    assert up["tranches"][0]["partition_offsets"]["0"] == [0, 5]
 
 
 def test_replay_autoflushes_sidecars(spark, small_log, tmp_path):
@@ -401,37 +348,11 @@ def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
         assert tbl2.read().count() == 0
 
 
-def test_upgrade_manifest_backfills_file_offsets(spark, tmp_path):
-    """upgrade_manifest must (idempotently) backfill per-file dense ranges on
-    logs written before the field existed, verifying density per file."""
-    d = str(tmp_path / "log_up")
-    generate_change_log(d, ChangeLogSpec(n_events=2_000, n_convs=100,
-                                         n_partitions=3, seed=5))
-    mpath = os.path.join(d, "manifest.json")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    for t in manifest["tranches"]:
-        written = t.pop("file_offsets")
-        t.pop("partition_offsets")
-    with open(mpath, "w") as f:
-        json.dump(manifest, f)
-
-    up = upgrade_manifest(d)
-    t0 = up["tranches"][0]
-    assert t0["dense_offsets"] and t0["file_offsets"] == written
-    # idempotent: second run rewrites nothing
-    mtime = os.path.getmtime(mpath)
-    upgrade_manifest(d)
-    assert os.path.getmtime(mpath) == mtime
-
-
-def test_read_manifest_agrees_with_writer_and_upgrader(tmp_path):
-    """The generator, the upgrader and the one reader agree on the log:
-    read_manifest returns the same tranche bounds, dense partition ranges,
-    per-file ranges and log tail for the manifest as written and for the
-    same manifest stripped of those fields and backfilled by
-    upgrade_manifest. The stripped manifest reads as the footer fallback:
-    footer-swept bounds, no ranges, no tail."""
+def test_read_manifest_agrees_with_writer_and_footer_fallback(tmp_path):
+    """The generator and the one reader agree on the log: read_manifest
+    returns the tranche bounds, dense partition ranges, per-file ranges and
+    log tail the generator wrote. The same manifest stripped of those fields
+    reads as the footer fallback: footer-swept bounds, no ranges, no tail."""
     from mimic_iv_etl_spark.cdc.changelog import read_manifest
 
     d = str(tmp_path / "log_reader")
@@ -462,11 +383,6 @@ def test_read_manifest_agrees_with_writer_and_upgrader(tmp_path):
         assert (t.offset_lo, t.offset_hi) == (written[tranche].offset_lo,
                                               written[tranche].offset_hi)
         assert t.partition_offsets is None and t.file_offsets is None
-
-    upgrade_manifest(d)
-    upgraded = read_manifest(d)
-    assert dict(upgraded) == dict(written)
-    assert upgraded.tail == written.tail
 
 
 def test_lag_metric_drains_to_zero(spark, small_log, tmp_path):

@@ -285,6 +285,39 @@ def test_stream_batch_without_source_log_entry_raises(spark, small_log,
     assert after.applied_offsets == applied
 
 
+def test_stream_out_of_order_batch_raises(spark, tmp_path):
+    """A micro-batch whose files the source takes out of offset order
+    raises before anything is written. With part-00001 stamped 10 ms before
+    part-00000, the stream takes part-00001 first; applied, it would move
+    the marks past part-00000's offsets, which would then be skipped as
+    already applied (the table ended with 466 of the oracle's 730 rows, no
+    error). The table keeps its version and applied offsets."""
+    import os
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
+                                                  generate_change_log)
+    from mimic_iv_etl_spark.cdc.replay import open_table
+
+    d = str(tmp_path / "log_ooo")
+    generate_change_log(d, ChangeLogSpec(n_events=1_500, n_convs=80,
+                                         n_partitions=2, seed=17,
+                                         files_per_tranche=2))
+    first, second = (os.path.join(d, "tranche-0", f"part-0000{i}.parquet")
+                     for i in (0, 1))
+    ns = os.stat(first).st_mtime_ns
+    os.utime(second, ns=(ns - 10_000_000, ns - 10_000_000))
+    tp = str(tmp_path / "t_ooo")
+    table = open_table(spark, tp, TRANSCRIPT_SCHEMA, 4)
+    v, applied = table.version, table.applied_offsets
+    with pytest.raises(StreamingQueryException, match="out of offset order"):
+        stream_log(spark, d, tp, str(tmp_path / "ckpt_ooo"))
+    after = LakeTable(spark, tp)
+    assert after.version == v
+    assert after.applied_offsets == applied
+
+
 def _log_scan_schemas(spark, log_dir, run) -> list[str]:
     """``ReadSchema`` of every parquet scan over ``log_dir`` in the SQL
     executions ``run()`` starts that ran a job — the scans a batch reads

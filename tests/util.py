@@ -4,20 +4,8 @@ from __future__ import annotations
 
 import pandas as pd
 import pandas.testing as pdt
-from pyspark.sql import types as T
 
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        # NTZ: matches parquet naive timestamps (Spark 4 reads them as NTZ)
-        # and DuckDB's TIMESTAMP, so engine/oracle compare bit-exact.
-        T.StructField("ts", T.TimestampNTZType(), False),
-    ]
-)
+from mimic_iv_etl_spark.cdc.changelog import TRANSCRIPT_SCHEMA  # noqa: F401
 
 
 def normalize_pdf(df: pd.DataFrame) -> pd.DataFrame:
