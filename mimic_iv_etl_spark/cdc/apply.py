@@ -64,6 +64,7 @@ DECODED_COLS = ("role", "text", "tool")
 # Arrow bytes per locator row on the driver: p, o and the two manifest
 # counters, 8 B each after the pandas conversion
 _LOCATOR_ROW_BYTES = 32
+_LOCATOR_DRIVER_BUDGET = 512 << 20  # driver bytes; past it the agg kernel runs
 
 
 def raw_columns(columns: list[str], decode_payload: bool) -> list[str]:
@@ -147,7 +148,7 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
     the PACKED bitmap (window_bits/8 — built packed via ``bitwise_or.at``,
     never unpacked to byte-per-bit) + 3 lookup arrays (≤ 8 B × 2^16 each)
     — the quantity ``apply_batch`` pre-checks against
-    ``locator_driver_budget``.
+    ``_LOCATOR_DRIVER_BUDGET``.
     """
     import numpy as np
     import pyarrow as pa
@@ -255,7 +256,6 @@ def apply_batch(
     decode_payload: bool = False,
     normalize: bool = False,
     manifest_ranges: dict[int, tuple[int, int]] | None = None,
-    locator_driver_budget: int = 512 << 20,
     log_tail: dict[int, int] | None = None,
 ) -> dict:
     """Apply one micro-batch of change events to ``table``. Returns stats.
@@ -276,7 +276,7 @@ def apply_batch(
 
     The LWW kernel is chosen from the batch, and ``stats["dedup_mode"]``
     records which one ran. With ``manifest_ranges`` inside the packed
-    stamp's bit budget and ``locator_driver_budget``, the ``locator`` kernel
+    stamp's bit budget and ``_LOCATOR_DRIVER_BUDGET``, the ``locator`` kernel
     determines each key's winning row by a narrow packed-stamp HashAggregate
     and then fetches exactly those rows through an exact dense-offset bitmap
     probe — no sort, no wide aggregate, no payload bytes on any shuffle (see
@@ -305,10 +305,10 @@ def apply_batch(
     aborts before the write (it could never be recorded, so exactly-once
     would break on redelivery).
 
-    ``locator_driver_budget`` bounds the locator kernel's one deliberate
-    driver round-trip (winner locators + offset bitmap). The pre-flight
-    bound ``events_in_window × _LOCATOR_ROW_BYTES + window_bits / 8`` is
-    checked against it; a batch over budget (misconfigured huge
+    ``_LOCATOR_DRIVER_BUDGET`` (512 MB) bounds the locator kernel's one
+    deliberate driver round-trip (winner locators + offset bitmap). The
+    pre-flight bound ``events_in_window × _LOCATOR_ROW_BYTES + window_bits /
+    8`` is checked against it; a batch over budget (misconfigured huge
     ``batch_offsets``) runs the ``agg`` kernel instead of OOMing the
     driver.
 
@@ -384,7 +384,7 @@ def apply_batch(
     window = sum(r["events"] for r in ranges) if ranges else 0
     dedup_mode = ("locator" if ranges and _locator_supported(ranges)
                   and window * _LOCATOR_ROW_BYTES + window // 8
-                  <= locator_driver_budget else "agg")
+                  <= _LOCATOR_DRIVER_BUDGET else "agg")
 
     if dedup_mode == "agg":
         # the single bookkeeping aggregate: per-source-partition ranges

@@ -627,11 +627,8 @@ class LakeTable:
                 "stats": _entry_stats(md),
             }
 
-        if len(moves) <= 4:
-            new_entries = [_move(m) for m in moves]
-        else:
-            with ThreadPoolExecutor(max_workers=min(32, len(moves))) as ex:
-                new_entries = list(ex.map(_move, moves))
+        with ThreadPoolExecutor(max_workers=min(32, len(moves) or 1)) as ex:
+            new_entries = list(ex.map(_move, moves))
         # deterministic manifest order regardless of completion order
         new_entries.sort(key=lambda e: (e["bucket"], e["path"]))
         shutil.rmtree(stage, ignore_errors=True)

@@ -22,10 +22,11 @@ def get_spark_session(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) for
-    sandbox runs; on a real cluster pass ``None`` master via spark-submit and
-    this only sets confs. ``shuffle_partitions`` defaults to the core count —
-    the stock 200 is wrong at both ends (pyspark_guide: partition sizing).
+    ``master=None`` leaves ``spark.master`` to the launcher: spark-submit's
+    ``--master``, or PySpark's own ``local[*]`` under plain ``python``.
+    ``shuffle_partitions=None`` sizes shuffles to the session's
+    ``defaultParallelism`` (its total executor cores) — the stock 200 is
+    wrong at both ends (pyspark_guide: partition sizing).
     """
     # Python workers import package-level functions referenced by pandas-UDF
     # closures by name (cloudpickle serializes module functions by reference);
@@ -39,15 +40,8 @@ def get_spark_session(
             pkg_parent + (os.pathsep + existing if existing else "")
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         # Coalescing shrinks our deliberately core-count-sized shuffles down
         # to a handful of fat partitions (64MB advisory) and serializes the
@@ -114,9 +108,15 @@ def get_spark_session(
         builder = builder.config("spark.local.dir", local_dir)
     if master:
         builder = builder.master(master)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions",
+                                 str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -7,10 +7,12 @@ Cluster usage (north rule: ``spark-submit --py-files`` at N and 4N executors):
         --log-dir /path/to/changelog --table /path/to/table \
         [--batch-offsets 1000000] [--buckets 256] [--auto-compact-deltas 8]
 
-Sandbox usage (local mode): plain ``python scripts/run_replay.py ...`` —
-the session helper builds ``local[$SPARK_GRAFT_CPUS]``.
+The master comes from the launcher (``--master``; plain ``python
+scripts/run_replay.py ...`` runs PySpark's ``local[*]``) and every other
+conf from ``get_spark_session``.
 
-Prints one JSON line with events applied, seconds, events/sec.
+Prints one JSON line with events applied, seconds, events/sec and the
+session it ran on (master, parallelism, shuffle partitions, time zone).
 """
 
 from __future__ import annotations
@@ -24,8 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from mimic_iv_etl_spark.cdc.changelog import TRANSCRIPT_SCHEMA
     from mimic_iv_etl_spark.cdc.replay import replay_log
     from mimic_iv_etl_spark.session import get_spark_session
@@ -43,28 +43,33 @@ def main() -> None:
                    help="NFC-normalize winner text (Arrow pandas UDF)")
     args = p.parse_args()
 
-    # under spark-submit, --master/--conf arrive via SparkConf defaults — use
-    # them untouched; standalone invocation builds the tuned local session
-    from pyspark import SparkConf
-
-    spark = SparkSession.getActiveSession()
-    if spark is None and SparkConf().contains("spark.master"):
-        spark = SparkSession.builder.getOrCreate()
-    elif spark is None:
-        spark = get_spark_session("cdc-replay")
-
-    out = replay_log(
-        spark,
-        args.log_dir,
-        args.table,
-        schema=TRANSCRIPT_SCHEMA,
-        batch_offsets=args.batch_offsets,
-        n_buckets=args.buckets,
-        auto_compact_deltas=args.auto_compact_deltas,
-        decode_payload=args.decode_payload,
-        normalize=args.normalize,
-    )
-    print(json.dumps(out))
+    spark = get_spark_session("cdc-replay")
+    # stop before the interpreter exits, on success or error: otherwise the
+    # JVM's shutdown hooks race a standalone worker still relaunching
+    # executors
+    try:
+        out = replay_log(
+            spark,
+            args.log_dir,
+            args.table,
+            schema=TRANSCRIPT_SCHEMA,
+            batch_offsets=args.batch_offsets,
+            n_buckets=args.buckets,
+            auto_compact_deltas=args.auto_compact_deltas,
+            decode_payload=args.decode_payload,
+            normalize=args.normalize,
+        )
+        sc = spark.sparkContext
+        out["session"] = {
+            "master": sc.master,
+            "default_parallelism": sc.defaultParallelism,
+            "shuffle_partitions": int(
+                spark.conf.get("spark.sql.shuffle.partitions")),
+            "time_zone": spark.conf.get("spark.sql.session.timeZone"),
+        }
+        print(json.dumps(out))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

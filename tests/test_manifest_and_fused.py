@@ -17,6 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+import mimic_iv_etl_spark.cdc.apply as apply_mod
 from mimic_iv_etl_spark.cdc.apply import apply_batch
 from mimic_iv_etl_spark.cdc.changelog import ChangeLogSpec, generate_change_log
 from mimic_iv_etl_spark.cdc.metrics import read_lineage, read_metrics
@@ -189,9 +190,10 @@ def test_replay_autoflushes_sidecars(spark, small_log, tmp_path):
     assert not os.path.exists(os.path.join(tp, "_metrics", "metrics.jsonl"))
 
 
-def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
+def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path,
+                                                 monkeypatch):
     """VERDICT r03 item 5: a batch whose estimated locator driver transfer
-    (winner locators + offset bitmap) exceeds the configured budget must
+    (winner locators + offset bitmap) exceeds the driver budget must
     degrade to the agg kernel — same oracle-exact final state — instead of
     risking a driver OOM."""
     from mimic_iv_etl_spark.cdc.changelog import read_manifest
@@ -202,8 +204,8 @@ def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_budget")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    stats = apply_batch(tbl, df, batch_id=0,
-                        manifest_ranges=ranges, locator_driver_budget=1024)
+    monkeypatch.setattr(apply_mod, "_LOCATOR_DRIVER_BUDGET", 1024)
+    stats = apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
     assert stats["dedup_mode"] == "agg"
     assert stats["events_applied"] == spec.n_events
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -279,18 +281,20 @@ def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
     assert tbl2.version == v0
     assert tbl2.applied_offsets == {}
     assert tbl2.read().count() == 0
-    # ADVICE r04: the abort path must not leak the locator staging dir, and
+    # ADVICE r04: the abort path must not leak a staging dir, and
     # must leave no session-global listener state (Spark's lazily-built
     # observation manager stays unset) — otherwise later jobs capturing the
     # session die with NotSerializableException
-    assert not glob.glob(os.path.join(tp, "_staging", "lww-bitmap-*"))
+    staging = os.path.join(tp, "_staging")
+    assert not os.path.isdir(staging) or not os.listdir(staging)
     jss = spark._jsparkSession  # noqa: SLF001
     fld = jss.getClass().getDeclaredField("observationManager")
     fld.setAccessible(True)
     assert fld.get(jss) is None
 
 
-def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
+def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path,
+                                                            monkeypatch):
     """ADVICE r04: at 80 partitions (the name keeps the 64-partition cap an
     earlier predicate had; no path depends on the partition count now) the
     manifest validation must stay RANGE-exact, not degrade to
@@ -318,16 +322,17 @@ def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
     assert bad.count() == df.count()  # counts cancel — the trap
     tp = str(tmp_path / "t_valcap")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
+    monkeypatch.setattr(apply_mod, "_LOCATOR_DRIVER_BUDGET", 0)
     with pytest.raises(RuntimeError, match="cross-check"):
-        apply_batch(tbl, bad, batch_id=0, manifest_ranges=ranges,
-                    locator_driver_budget=0)
+        apply_batch(tbl, bad, batch_id=0, manifest_ranges=ranges)
     tbl2 = LakeTable(spark, tp)
     assert tbl2.applied_offsets == {}
     assert tbl2.read().count() == 0
 
 
 def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
-                                                            tmp_path):
+                                                            tmp_path,
+                                                            monkeypatch):
     """Rows from a partition absent from manifest_ranges must abort, not be
     silently dropped (locator) or applied-but-unrecorded (agg)."""
     from mimic_iv_etl_spark.cdc.changelog import read_manifest
@@ -338,11 +343,13 @@ def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
     del ranges[max(ranges)]  # data still holds this partition's rows
     df = spark.read.parquet(tranche).drop("payload")
     # the default budget selects locator; a zero budget forces agg
-    for mode, kw in (("locator", {}), ("agg", {"locator_driver_budget": 0})):
+    for mode in ("locator", "agg"):
+        if mode == "agg":
+            monkeypatch.setattr(apply_mod, "_LOCATOR_DRIVER_BUDGET", 0)
         tp = str(tmp_path / f"t_val_undecl_{mode}")
         tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
         with pytest.raises(RuntimeError, match="cross-check"):
-            apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges, **kw)
+            apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
         tbl2 = LakeTable(spark, tp)
         assert tbl2.applied_offsets == {}
         assert tbl2.read().count() == 0
