@@ -69,28 +69,18 @@ PACK_MAX_PARTITION = 1 << 16
 _DEC_TS_SHIFT = f"CAST({PACK_TS_SHIFT}L AS decimal(38,0))"
 
 
-def lww_pack_stamp(
-    ts_col: str = "ts",
-    offset_col: str = "_lww_offset",
-    partition_col: str = "_lww_partition",
-) -> str:
-    """The LWW stamp ``(ts, offset, partition)`` packed into one
-    DECIMAL(38,0), order-preserving, as a SQL expression string. NULL ts
-    sorts below every real ts (same as struct comparison in the ``max_by``
-    kernel)."""
-    micros = (f"coalesce(unix_micros(CAST(`{ts_col}` AS timestamp)), "
-              f"{-(1 << 62)}L)")
-    return (f"CAST({micros} AS decimal(38,0)) * {_DEC_TS_SHIFT}"
-            f" + CAST(`{offset_col}` * {PACK_OFF_SHIFT} + `{partition_col}`"
-            " AS decimal(38,0))")
+# The LWW stamp ``(ts, offset, partition)`` packed into one DECIMAL(38,0),
+# order-preserving, as a SQL expression string. NULL ts sorts below every
+# real ts (same as struct comparison in the ``max_by`` kernel).
+_PACKED_STAMP = (
+    f"CAST(coalesce(unix_micros(CAST(`ts` AS timestamp)), {-(1 << 62)}L)"
+    f" AS decimal(38,0)) * {_DEC_TS_SHIFT} + CAST(`_lww_offset`"
+    f" * {PACK_OFF_SHIFT} + `_lww_partition` AS decimal(38,0))")
 
 
 def lww_winner_locators(
     df: DataFrame,
     key_cols: Sequence[str],
-    ts_col: str = "ts",
-    offset_col: str = "_lww_offset",
-    partition_col: str = "_lww_partition",
     outside: str = "false",
 ) -> DataFrame:
     """Per-key winner LOCATOR ``(p, o)`` — the source coordinates of the LWW
@@ -103,10 +93,10 @@ def lww_winner_locators(
     byte on the wire. One ``agg`` of server-parsed SQL and one
     ``selectExpr``: the build costs the same few Py4J calls at any table
     width."""
-    pack = lww_pack_stamp(ts_col, offset_col, partition_col)
     return (
         df.groupBy(*key_cols)
-        .agg(F.expr(f"CAST(pmod(max({pack}), {_DEC_TS_SHIFT}) AS bigint) AS _low"),
+        .agg(F.expr(f"CAST(pmod(max({_PACKED_STAMP}), {_DEC_TS_SHIFT}) AS bigint)"
+                    " AS _low"),
              F.expr("count(1) AS n"), F.expr(f"count_if({outside}) AS n_out"))
         .selectExpr(f"CAST(_low & {PACK_OFF_SHIFT - 1} AS int) AS p",
                     "shiftright(_low, 16) AS o", "n", "n_out")

@@ -627,7 +627,7 @@ class LakeTable:
                 "stats": _entry_stats(md),
             }
 
-        with ThreadPoolExecutor(max_workers=min(32, len(moves) or 1)) as ex:
+        with ThreadPoolExecutor(max_workers=32) as ex:
             new_entries = list(ex.map(_move, moves))
         # deterministic manifest order regardless of completion order
         new_entries.sort(key=lambda e: (e["bucket"], e["path"]))

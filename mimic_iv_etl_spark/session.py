@@ -24,9 +24,9 @@ def get_spark_session(
 
     ``master=None`` leaves ``spark.master`` to the launcher: spark-submit's
     ``--master``, or PySpark's own ``local[*]`` under plain ``python``.
-    ``shuffle_partitions=None`` sizes shuffles to the session's
-    ``defaultParallelism`` (its total executor cores) — the stock 200 is
-    wrong at both ends (pyspark_guide: partition sizing).
+    ``shuffle_partitions=None`` keeps the launcher's or ``extra_conf``'s
+    value, else uses one per core (the stock 200 is wrong at both ends).
+    Under spark-submit, driver memory and GC options go to the launcher.
     """
     # Python workers import package-level functions referenced by pandas-UDF
     # closures by name (cloudpickle serializes module functions by reference);
@@ -108,15 +108,29 @@ def get_spark_session(
         builder = builder.config("spark.local.dir", local_dir)
     if master:
         builder = builder.master(master)
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions",
-                                 str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
+    key = "spark.sql.shuffle.partitions"
+    conf = {} if shuffle_partitions is None else {key: str(shuffle_partitions)}
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if shuffle_partitions is None:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(spark.sparkContext.defaultParallelism))
+    if key not in conf and not spark.sparkContext.getConf().contains(key):
+        _size_shuffles(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
+
+def _size_shuffles(spark: SparkSession) -> None:
+    """One shuffle partition per core of the job. ``getOrCreate`` waits for
+    executors on YARN and Kubernetes but not on a standalone master, where a
+    fresh session's ``defaultParallelism`` reads its floor of 2: there the
+    master URL or ``--total-executor-cores`` gives the size, or nothing."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    if sc.master.startswith("local-cluster["):
+        workers, per_worker, _ = sc.master[len("local-cluster["):-1].split(",")
+        cores = int(workers) * int(per_worker)
+    elif sc.master.startswith("spark://"):
+        cores = int(sc.getConf().get("spark.cores.max", "0"))
+    if cores:
+        spark.conf.set("spark.sql.shuffle.partitions", str(cores))

@@ -3,13 +3,15 @@
 Cluster usage (north rule: ``spark-submit --py-files`` at N and 4N executors):
 
     zip -r mimic_iv_etl_spark.zip mimic_iv_etl_spark
-    spark-submit --py-files mimic_iv_etl_spark.zip scripts/run_replay.py \
+    spark-submit --py-files mimic_iv_etl_spark.zip \
+        --driver-memory 8g --driver-java-options -XX:+UseParallelGC \
+        scripts/run_replay.py \
         --log-dir /path/to/changelog --table /path/to/table \
         [--batch-offsets 1000000] [--buckets 256] [--auto-compact-deltas 8]
 
-The master comes from the launcher (``--master``; plain ``python
-scripts/run_replay.py ...`` runs PySpark's ``local[*]``) and every other
-conf from ``get_spark_session``.
+The master and the driver JVM's settings come from the launcher
+(``--master``; plain ``python scripts/run_replay.py ...`` runs PySpark's
+``local[*]``), the session and SQL confs from ``get_spark_session``.
 
 Prints one JSON line with events applied, seconds, events/sec and the
 session it ran on (master, parallelism, shuffle partitions, time zone).
@@ -23,6 +25,19 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def session_report(spark) -> dict:
+    """The session a job ran on: master, parallelism, shuffle partitions and
+    time zone."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")),
+        "time_zone": spark.conf.get("spark.sql.session.timeZone"),
+    }
 
 
 def main() -> None:
@@ -59,14 +74,7 @@ def main() -> None:
             decode_payload=args.decode_payload,
             normalize=args.normalize,
         )
-        sc = spark.sparkContext
-        out["session"] = {
-            "master": sc.master,
-            "default_parallelism": sc.defaultParallelism,
-            "shuffle_partitions": int(
-                spark.conf.get("spark.sql.shuffle.partitions")),
-            "time_zone": spark.conf.get("spark.sql.session.timeZone"),
-        }
+        out["session"] = session_report(spark)
         print(json.dumps(out))
     finally:
         spark.stop()

@@ -21,6 +21,10 @@ def spark():
         app_name="mimic_iv_etl_spark-tests",
         master=f"local[{TEST_CPUS}]",
         shuffle_partitions=int(TEST_CPUS),
+        # get_spark_session's 32g driver heap is for full-size local runs;
+        # under ParallelGC a whole suite grows this JVM past 13 GB of RSS,
+        # which leaves no room for the spark-submit test's executor JVMs
+        extra_conf={"spark.driver.memory": "4g"},
     )
     yield spark
 

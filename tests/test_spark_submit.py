@@ -1,13 +1,14 @@
 """The deployment path end to end: the packaged engine under
-``spark-submit --py-files`` on a two-executor ``local-cluster``, run from a
-directory outside the repo so every engine import resolves from the zip.
+``spark-submit --py-files`` on a three-executor ``local-cluster``, run from
+a directory outside the repo so every engine import resolves from the zip.
 
 Both ingest drivers run with payload decode and NFC normalize on:
 ``scripts/run_replay.py`` and a small ``stream_log`` driver. Each must run
 on the launcher's master with the confs ``get_spark_session`` sets, land the
-DuckDB oracle's final state, and leave no JVM running once it exits. Two
+DuckDB oracle's final state, and leave no JVM running once it exits. Three
 executor JVMs make every broadcast, closure and Python worker cross a
-process boundary, which ``local[N]`` never does."""
+process boundary, which ``local[N]`` never does; with three, the session's
+shuffle partitions cannot match the scheduler's floor of 2 by chance."""
 
 from __future__ import annotations
 
@@ -19,36 +20,34 @@ import subprocess
 import time
 import unicodedata
 import zipfile
+from types import SimpleNamespace
 
+import pytest
 from pyspark.find_spark_home import _find_spark_home
 
 from mimic_iv_etl_spark.cdc.changelog import ChangeLogSpec, generate_change_log
 from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.lake.table import LakeTable
+from mimic_iv_etl_spark.session import _size_shuffles
 from tests.util import assert_final_state_equal
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MASTER = "local-cluster[2,1,1024]"
-SESSION = {"master": MASTER, "default_parallelism": 2,
-           "shuffle_partitions": 2, "time_zone": "UTC"}
+MASTER = "local-cluster[3,1,1024]"
+SESSION = {"master": MASTER, "default_parallelism": 3,
+           "shuffle_partitions": 3, "time_zone": "UTC"}
 
 STREAM_DRIVER = """
 import json, sys
 from mimic_iv_etl_spark.cdc.changelog import TRANSCRIPT_SCHEMA
 from mimic_iv_etl_spark.cdc.stream import stream_log
 from mimic_iv_etl_spark.session import get_spark_session
+from run_replay import session_report
 
 log_dir, table, checkpoint = sys.argv[1:]
 spark = get_spark_session("cdc-stream")
 stream_log(spark, log_dir, table, checkpoint, schema=TRANSCRIPT_SCHEMA,
            n_buckets=8, decode_payload=True, normalize=True)
-sc = spark.sparkContext
-print(json.dumps({"session": {
-    "master": sc.master,
-    "default_parallelism": sc.defaultParallelism,
-    "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
-    "time_zone": spark.conf.get("spark.sql.session.timeZone"),
-}}))
+print(json.dumps({"session": session_report(spark)}))
 spark.stop()
 """
 
@@ -81,14 +80,16 @@ def _processes_naming(path: str) -> list[str]:
     return found
 
 
-def _submit(home: str, work: str, *argv: str) -> dict:
+def _submit(home: str, work: str, *argv: str,
+            conf: tuple[str, ...] = ()) -> dict:
     """Run one spark-submit job from ``work`` and return its JSON line."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_HOME"] = home
     t0 = time.monotonic()
     proc = subprocess.run(
         [os.path.join(home, "bin", "spark-submit"), "--master", MASTER,
-         "--py-files", "mimic_iv_etl_spark.zip", *argv],
+         "--py-files", "mimic_iv_etl_spark.zip",
+         *(a for c in conf for a in ("--conf", c)), *argv],
         cwd=work, env=env, capture_output=True, text=True, timeout=900)
     print(f"spark-submit {argv[0]}: {time.monotonic() - t0:.1f} s")
     assert proc.returncode == 0, proc.stderr[-5000:]
@@ -114,10 +115,12 @@ def test_spark_submit_local_cluster_matches_oracle(spark, tmp_path):
     generate_change_log(log, spec)
     home = _spark_home(work)
 
+    # a shuffle-partition count the launcher passes is kept
     streamed = _submit(home, work, "stream_driver.py", log,
                        os.path.join(work, "t_stream"),
-                       os.path.join(work, "ckpt"))
-    assert streamed["session"] == SESSION
+                       os.path.join(work, "ckpt"),
+                       conf=("spark.sql.shuffle.partitions=5",))
+    assert streamed["session"] == {**SESSION, "shuffle_partitions": 5}
     replayed = _submit(home, work, "run_replay.py", "--log-dir", log,
                        "--table", os.path.join(work, "t_replay"),
                        "--batch-offsets", "2000", "--buckets", "8",
@@ -132,3 +135,25 @@ def test_spark_submit_local_cluster_matches_oracle(spark, tmp_path):
     for table in ("t_stream", "t_replay"):
         assert_final_state_equal(
             LakeTable(spark, os.path.join(work, table)).read(), want)
+
+
+@pytest.mark.parametrize("master, conf, partitions", [
+    ("local-cluster[4, 2, 1024]", {}, "8"),
+    # a standalone master: the launcher's core cap, or Spark's default
+    ("spark://host:7077", {"spark.cores.max": "12"}, "12"),
+    ("spark://host:7077", {}, None),
+    # YARN and Kubernetes wait for executors, so defaultParallelism holds
+    ("yarn", {}, "6"),
+    ("local[4]", {}, "6"),
+])
+def test_shuffle_partitions_follow_planned_cores(master, conf, partitions):
+    """The sizes the two-job test above cannot reach: a fresh standalone
+    session reads ``defaultParallelism`` before executors register, so
+    ``_size_shuffles`` must not take it there."""
+    sql_conf = {}
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(master=master, defaultParallelism=6,
+                                     getConf=lambda: conf),
+        conf=SimpleNamespace(set=sql_conf.__setitem__))
+    _size_shuffles(spark)
+    assert sql_conf.get("spark.sql.shuffle.partitions") == partitions
